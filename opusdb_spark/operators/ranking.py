@@ -161,30 +161,6 @@ def ntile_from_rank(rank: Column, total: Column, n: int) -> Column:
     )
 
 
-def with_global_ntile(
-    df: DataFrame,
-    order_cols: list[Column],
-    split_col: Column,
-    *,
-    descending: bool,
-    n: int,
-    out: str,
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Add exact ``NTILE(n) OVER (ORDER BY order_cols)`` as ``out``."""
-    ranked = with_global_rank(
-        df,
-        order_cols,
-        split_col,
-        descending=descending,
-        out="_gr",
-        n_buckets=n_buckets,
-    )
-    return ranked.withColumn(
-        out, ntile_from_rank(F.col("_gr"), F.col("_total"), n)
-    ).drop("_gr", "_total")
-
-
 def with_global_ntiles(
     df: DataFrame,
     specs: list[tuple[str, list[Column], Column, bool]],

@@ -15,35 +15,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode
     )
-
-
-def executed_plan_str(df: DataFrame) -> str:
-    """Final (post-AQE) physical plan; runs the query if needed before
-    reading it, since AQE finalizes the plan only at execution."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def read_schema_line(df: DataFrame) -> str:
-    """The parquet ReadSchema line — what actually gets read off disk."""
-    lines = [l for l in explain_str(df).splitlines() if "ReadSchema" in l]
-    return lines[0] if lines else ""
-
-
-def pushed_filters(df: DataFrame) -> str:
-    lines = [l for l in explain_str(df).splitlines() if "PushedFilters" in l]
-    return lines[0] if lines else ""
-
-
-def n_shuffles(df: DataFrame) -> int:
-    return explain_str(df, "simple").count("Exchange")
-
-
-def has_all_pairs_join(df: DataFrame) -> bool:
-    """True if the plan contains an all-pairs join — CartesianProduct
-    or BroadcastNestedLoopJoin, the O(n²) cliff every bucketed operator
-    in this repo is designed to avoid. Note a BNLJ against a 1-row
-    side (e.g. attaching a scalar norm) is benign despite flagging
-    here — inspect explain_str() before acting on a True."""
-    p = explain_str(df, "simple")
-    return "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p

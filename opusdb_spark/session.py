@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime confs every query path needs, applied defensively to *any*
 # session handed to us (the driver owns the session in `entry()`).
 RUNTIME_CONFS = {
@@ -140,6 +142,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # Python workers fork from the repo's daemon, which stops every
+        # task from re-reading pyspark.zip's directory (pyworker.py).
+        # The repo root on the workers' path makes it importable from
+        # any cwd.
+        .config("spark.python.daemon.module", "opusdb_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -12,6 +12,7 @@ import os
 import shutil
 import uuid
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -318,6 +319,94 @@ def test_session_timeout_matches_batch_sessionizer(spark):
         .collect()
     }
     assert closed <= batch, sorted(closed - batch)[:3]
+
+
+def test_session_timeout_matches_oracle_at_edges(spark, tmp_path):
+    """stream_session_timeout equals its registry oracle, run unchanged
+    in DuckDB, on a hand-built log whose sessions sit on every edge of
+    the contract: the 30-min gap (inclusive merge, split at +1 us), a
+    user's final session against the final watermark (equal, 1 ms
+    past, and sub-ms offsets on both sides of equality, where the
+    watermark's millisecond floor decides), and a non-last session
+    that only an event inside the final 10-min delay closes. A native
+    `session_window` rewrite fails here: it emits at watermark
+    equality and never emits that last case."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opusdb_spark.registry import oracle_sql
+    from opusdb_spark.streaming import jobs
+
+    us, ms, minute = 1, 1_000, 60_000_000
+    gap = 30 * minute
+    t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    # the max event carries a sub-ms tail that the watermark floors
+    # away: final watermark w = t0 + 9h50m exactly
+    t_max = t0 + 600 * minute + 999 * us
+    w = t0 + 590 * minute
+    events = [
+        (1, t0), (1, t0 + gap), (1, t0 + 180 * minute),  # gap == 30 min
+        (2, t0), (2, t0 + gap + 1 * us), (2, t0 + 180 * minute),  # +1 us
+        (3, t0 + 60 * minute), (3, w - gap),  # wm == last + 30 min
+        (4, t0 + 60 * minute), (4, w - gap - 1 * ms),  # 1 ms past
+        (5, t0 + 60 * minute), (5, w - gap + 999 * us),  # sub-ms, above
+        (6, t0 + 60 * minute), (6, w - gap - 1 * us),  # sub-ms, below
+        # 9h25m never times out (w < 9h55m); only the 9h56m event,
+        # inside the final delay, closes it
+        (7, t0 + 565 * minute), (7, t0 + 596 * minute),
+        (8, t_max),
+    ]
+    name = f"sessedge_{uuid.uuid4().hex[:8]}"
+    sf_dir = tmp_path / name
+    sf_dir.mkdir()
+    n = len(events)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array([t for _, t in events], pa.timestamp("us")),
+                "user_id": pa.array([u for u, _ in events], pa.int64()),
+                "event_type": ["view"] * n,
+                "value": [1.0] * n,
+                "props": ["{}"] * n,
+            }
+        ),
+        str(sf_dir / "events.parquet"),
+    )
+    try:
+        got = sorted(
+            tuple(r)
+            for r in jobs.session_timeout_totals(spark, str(sf_dir)).collect()
+        )
+        # the watermark must advance between micro-batches
+        assert jobs.events_stream_n_batches(spark, str(sf_dir)) > 1
+    finally:
+        for d in (f"stream_events_split_{name}", f"ckpt_sesstimeout_{name}"):
+            shutil.rmtree(os.path.join(_SCRATCH, d), ignore_errors=True)
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    want = sorted(con.execute(oracle_sql()["stream_session_timeout"]).fetchall())
+    con.close()
+    assert got == want
+    # and the edges resolve as described, not merely identically:
+    # users 3 and 5 keep their final session open, 8 emits nothing
+    def one(u, t):
+        return (u, t, t, 1)
+
+    assert want == sorted(
+        [
+            (1, t0, t0 + gap, 2), one(1, t0 + 180 * minute),
+            one(2, t0), one(2, t0 + gap + 1 * us), one(2, t0 + 180 * minute),
+            one(3, t0 + 60 * minute),
+            one(4, t0 + 60 * minute), one(4, w - gap - 1 * ms),
+            one(5, t0 + 60 * minute),
+            one(6, t0 + 60 * minute), one(6, w - gap - 1 * us),
+            one(7, t0 + 565 * minute),
+        ]
+    )
 
 
 def test_stream_funnel_matches_restartable_reference(spark):
