@@ -6,16 +6,16 @@ the WHOLE corpus on every probe — fine at test scale, not runnable at
 store does:
 
   <index_dir>/
-    marker.json      build fingerprint (source stat + hyperparams) —
-                     the build is skipped when it matches (idempotent)
-    centroids.json   IVF coarse-quantizer model (n_cells × dim floats)
-    by_id/           (id, vec) range-partitioned + sorted by id, so a
-                     probe-vector fetch by id is a min/max-stat-pruned
-                     parquet read, not a full scan
-    lsh/             (id, vec) partitioned by (table_id, bucket) — one
-                     copy per hash table (L× storage for zero-join
-                     probes; a production variant stores PQ codes)
-    ivf/             (id, vec) partitioned by cell (1× storage)
+    _fingerprint.json  build fingerprint (source stat + hyperparams) —
+                       the build is skipped when it matches (idempotent)
+    centroids.json     IVF coarse-quantizer model (n_cells × dim floats)
+    by_id/             (id, vec) range-partitioned + sorted by id, so a
+                       probe-vector fetch by id is a min/max-stat-pruned
+                       parquet read, not a full scan
+    lsh/               (id, vec) partitioned by (table_id, bucket) — one
+                       copy per hash table (L× storage for zero-join
+                       probes; a production variant stores PQ codes)
+    ivf/               (id, vec) partitioned by cell (1× storage)
 
 Probes collect only MODEL-SIZED data driver-side (the probe vector, its
 L bucket ids, its n_probe cell ids — a handful of rows), then read the
@@ -33,7 +33,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -50,10 +49,7 @@ from opusdb_spark.operators.similarity import (
     lsh_buckets_np,
     lsh_signatures_arrow,
 )
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch"
-)
+from opusdb_spark.sources import formats
 
 # Product quantization (Jégou, Douze, Schmid — TPAMI 2011): PQ_M
 # subspaces × PQ_KS centroids each. With KS=16 every code is 4 bits, so
@@ -73,7 +69,7 @@ def index_dir_for(sf_dir: str) -> str:
     two corpora sharing a basename must not share an index)."""
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, f"ann_index_{base}_{tag}")
+    return formats.scratch_path(f"ann_index_{base}_{tag}")
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -81,12 +77,10 @@ def _parquet_num_rows(path: str) -> int:
     data read, no Spark job; used to size the LSH bucket space."""
     import pyarrow.parquet as pq
 
-    from opusdb_spark.sources.formats import list_store_files
-
     if os.path.isdir(path):
         return sum(
             pq.read_metadata(f).num_rows
-            for f, _ in list_store_files(path, recursive=False)
+            for f, _ in formats.list_store_files(path, recursive=False)
         )
     return pq.read_metadata(path).num_rows
 
@@ -108,19 +102,14 @@ def source_fingerprint(sf_dir: str) -> dict:
     # the per-part (name, size) listing too
     parts: list | None = None
     if os.path.isdir(src):
-        from opusdb_spark.sources.formats import (
-            list_store_files,
-            stat_mtime_ns,
-        )
-
         # lists, NOT tuples: the marker round-trips through JSON, which
         # has no tuple type — a tuple here would make json.load(marker)
         # != fingerprint on EVERY call for directory-form sources, i.e.
         # a silent full index rebuild per probe (caught by the r8 scale
         # probe: 17 s "probes" that were 14 s of rebuild writes)
         parts = [
-            [os.path.basename(p), s, stat_mtime_ns(p)]
-            for p, s in list_store_files(src, recursive=False)
+            [os.path.basename(p), s, formats.stat_mtime_ns(p)]
+            for p, s in formats.list_store_files(src, recursive=False)
         ]
     return {
         "source": os.path.abspath(src),
@@ -154,32 +143,27 @@ def ensure_index(
 
     Ingest-once / query-many: the organizing shuffles (bucket
     assignment, cell assignment, range partitioning) are paid here,
-    not per probe.
+    not per probe. formats.ensure_written stages the multi-store build
+    and publishes it atomically, so a build that dies midway leaves the
+    previous index serving.
     """
-    marker = os.path.join(index_dir, "marker.json")
-    # normalize through JSON before comparing (tuples→lists): a
-    # non-JSON-stable fingerprint would otherwise never match its own
-    # stored marker — a silent full rebuild per probe (r8 scale probe)
-    fingerprint = json.loads(json.dumps(fingerprint))
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                if json.load(f) == fingerprint:
-                    return index_dir
-        except (json.JSONDecodeError, OSError):
-            pass
-    # Build into a staging dir and swap at the END: deleting the old
-    # index first would leave NO usable index if the multi-store build
-    # dies midway (and a concurrent probe would see a markerless,
-    # partially-written store). The swap is two renames — the old
-    # index keeps serving until the new one is complete. (read_store's
-    # handle cache keys on the marker mtime, so the swap invalidates
-    # stale handles automatically.)
-    build_dir = index_dir + ".build"
-    shutil.rmtree(build_dir, ignore_errors=True)
-    os.makedirs(build_dir, exist_ok=True)
-    final_dir, index_dir = index_dir, build_dir
+    return formats.ensure_written(
+        index_dir,
+        fingerprint,
+        lambda p: _build_index(spark, emb, p, fingerprint, id_col, vec_col),
+    )
 
+
+def _build_index(
+    spark: SparkSession,
+    emb: DataFrame,
+    index_dir: str,
+    fingerprint: dict,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """Write every index store under `index_dir` (ensure_written's
+    staging dir, never the published index)."""
     base = emb.select(id_col, vec_col)
 
     # by_id: range-partitioned + sorted so id-equality probes prune via
@@ -292,44 +276,6 @@ def ensure_index(
         .parquet(os.path.join(index_dir, "pq"))
     )
 
-    # marker is written INSIDE the staging dir (build-complete flag),
-    # then the finished build replaces the old index
-    with open(os.path.join(index_dir, "marker.json"), "w") as f:
-        json.dump(fingerprint, f)
-    shutil.rmtree(final_dir, ignore_errors=True)
-    os.rename(index_dir, final_dir)
-    return final_dir
-
-
-_READ_CACHE: dict[tuple, "DataFrame"] = {}
-
-
-def read_index_store(spark: SparkSession, index_dir: str, sub: str) -> DataFrame:
-    """`spark.read.parquet` over an index sub-store, with the resolved
-    DataFrame handle cached per (session, path, build). Re-reading a
-    2048-directory partitioned store re-runs partition discovery at
-    PLAN time — ~0.5 s of driver-side listing per read.parquet() call,
-    paid by every probe — while the store itself is immutable between
-    rebuilds. Cache key includes the Spark application id (a handle
-    from a stopped session is unusable) and the marker's mtime (a
-    rebuild rewrites the marker last, invalidating stale handles)."""
-    from opusdb_spark.sources.formats import stat_mtime_ns
-
-    marker = os.path.join(index_dir, "marker.json")
-    try:
-        build_tag = stat_mtime_ns(marker)
-    except OSError:
-        build_tag = 0
-    key = (os.path.abspath(index_dir), sub)
-    tag = (spark.sparkContext.applicationId, build_tag)
-    hit = _READ_CACHE.get(key)
-    if hit is not None and hit[0] == tag:
-        return hit[1]
-    df = spark.read.parquet(os.path.join(index_dir, sub))
-    _READ_CACHE[key] = (tag, df)  # replaces any stale session/build
-    # handle for this store; size is bounded by #stores (≤4 per corpus)
-    return df
-
 
 def load_centroids(index_dir: str) -> np.ndarray:
     with open(os.path.join(index_dir, "centroids.json")) as f:
@@ -343,7 +289,7 @@ def fetch_vector(
     single-row read (the only per-probe driver collect, and it is one
     row; a serving deployment would have the query vector in hand)."""
     row = (
-        read_index_store(spark, index_dir, "by_id")
+        formats.read_store(spark, os.path.join(index_dir, "by_id"))
         .filter(F.col(id_col) == probe_id)
         .first()
     )
@@ -393,8 +339,8 @@ def _exact_topk_pooled(
     the final top-k orders on the exact value. So the only BigDecimal
     arithmetic runs on a pool-sized input, never the probed cells —
     at sf1 the IVF candidate set is ~1/4 of the corpus and the three
-    64-term decimal folds per row dominated the probe (measured
-    2025-08, scripts/ab_ivf.py).
+    64-term decimal folds per row dominated the probe (interleaved A/B
+    in commit 13e4f2e, OPTIMIZATION_r13.md).
 
     Safety is similarity.cosine_topk's adjudicated margin argument
     verbatim: float32 component products are exact in double, so
@@ -449,17 +395,15 @@ def index_bits(index_dir: str | None) -> int:
     recall collapse nobody can."""
     if index_dir:
         try:
-            with open(os.path.join(index_dir, "marker.json")) as f:
+            with open(os.path.join(index_dir, "_fingerprint.json")) as f:
                 return int(
                     json.load(f).get("bits_per_table", BITS_PER_TABLE)
                 )
         except (OSError, json.JSONDecodeError, ValueError) as e:
-            from opusdb_spark.sources.formats import list_store_files
-
-            if list_store_files(os.path.join(index_dir, "lsh")):
+            if formats.list_store_files(os.path.join(index_dir, "lsh")):
                 raise RuntimeError(
                     f"ANN index at {index_dir} has data but an "
-                    f"unreadable marker.json ({e!r}); rebuild the "
+                    f"unreadable _fingerprint.json ({e!r}); rebuild the "
                     "index rather than probing with default plane "
                     "count"
                 ) from e
@@ -497,7 +441,7 @@ def stored_buckets(
     for in-corpus probes; out-of-corpus vectors fall back to
     _probe_buckets (one signature evaluation)."""
     rows = (
-        read_index_store(spark, index_dir, "sigs")
+        formats.read_store(spark, os.path.join(index_dir, "sigs"))
         .filter(F.col(id_col) == probe_id)
         .collect()
     )
@@ -530,7 +474,7 @@ def lsh_probe(
         c = (F.col("table_id") == t) & (F.col("bucket") == b)
         cond = c if cond is None else (cond | c)
     cands = (
-        read_index_store(spark, index_dir, "lsh")
+        formats.read_store(spark, os.path.join(index_dir, "lsh"))
         .filter(cond)
         .select(id_col, vec_col)
         .dropDuplicates([id_col])
@@ -568,7 +512,7 @@ def ivf_probe(
     vn = v / (np.linalg.norm(v) + 1e-12)
     cells = [int(c) for c in np.argsort(-(cn @ vn))[:n_probe]]
     cands = (
-        read_index_store(spark, index_dir, "ivf")
+        formats.read_store(spark, os.path.join(index_dir, "ivf"))
         .filter(F.col("cell").isin(cells))
         .select(id_col, vec_col)
     )
@@ -690,7 +634,9 @@ def ivfpq_probe(
     vn = v / (np.linalg.norm(v) + 1e-12)
     cells = [int(c) for c in np.argsort(-(cn @ vn))[:n_probe]]
 
-    pq = read_index_store(spark, index_dir, "pq").filter(F.col("cell").isin(cells))
+    pq = formats.read_store(spark, os.path.join(index_dir, "pq")).filter(
+        F.col("cell").isin(cells)
+    )
     if exclude_id is not None:
         pq = pq.filter(F.col(id_col) != exclude_id)
     adc = None
@@ -719,7 +665,7 @@ def ivfpq_probe(
         # return an empty k-shaped frame instead of building a
         # zero-arg create_map / empty isin, which fail at analysis
         return (
-            read_index_store(spark, index_dir, "by_id")
+            formats.read_store(spark, os.path.join(index_dir, "by_id"))
             .select(
                 id_col,
                 F.lit(None).cast("double").alias("cosine"),
@@ -728,7 +674,7 @@ def ivfpq_probe(
             .limit(0)
         )
     exact = (
-        read_index_store(spark, index_dir, "by_id")
+        formats.read_store(spark, os.path.join(index_dir, "by_id"))
         .filter(F.col(id_col).isin(list(pool)))
         .select(
             id_col, _score_against(vec_col, probe_vec).alias("cosine")

@@ -53,7 +53,6 @@ from __future__ import annotations
 
 import json
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -182,102 +181,29 @@ def merge_partials(partials: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-# Writer-owned version sidecar (VERDICT r12 ask #1): the rollup store
-# is refreshed IN PLACE (dynamic partition overwrite), so it could
-# never ride the directory-stat handle memo — an in-place partition
-# refresh may leave the top-level stat unchanged and a stat-keyed memo
-# would serve the pre-refresh file listing. Instead of deriving
-# invalidation from filesystem behavior, every writer (build/refresh/
-# backfill) BUMPS this sidecar after its data commit, and read_rollup
-# memoizes its handle keyed on the sidecar value. The value is
-# (counter, time_ns nonce), not a bare counter: scratch_sink clears
-# the store directory between query runs, a bare counter would restart
-# at 1 and collide with the previous build's memo entry — whose cached
-# handle pins the OLD part-file names — while the nonce makes every
-# bump globally fresh. A store with no sidecar (external writer) falls
-# back to an unmemoized read.
-_VERSION_MARKER = "_store_version.json"
-
-
-def _bump_store_version(path: str) -> None:
-    """Record a new store version AFTER a data commit. Same torn-window
-    contract as the batch marker: a crash between data commit and bump
-    leaves the sidecar stale, but a restart starts a fresh session
-    (empty memo) and within the crashed session the exception already
-    aborted the query."""
-    import time
-
-    marker = os.path.join(path, _VERSION_MARKER)
-    try:
-        with open(marker) as f:
-            v = int(json.load(f)["v"])
-    except (OSError, ValueError, KeyError):
-        v = 0
-    with open(marker, "w") as f:
-        json.dump({"v": v + 1, "nonce": time.time_ns()}, f)
-
-
-def store_version(path: str) -> tuple | None:
-    """(counter, nonce) of the store's version sidecar, None if absent."""
-    try:
-        with open(os.path.join(path, _VERSION_MARKER)) as f:
-            d = json.load(f)
-        return (int(d["v"]), int(d["nonce"]))
-    except (OSError, ValueError, KeyError):
-        return None
-
-
-_ROLLUP_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def build_rollup(events: DataFrame, path: str, grain: str = "day") -> None:
     """Full (re)build: one pass over raw events, partitioned out by
     the grain bucket."""
     _partial_agg(events, grain).write.partitionBy(
         _bucket_col(grain)
     ).mode("overwrite").parquet(path)
-    _bump_store_version(path)
 
 
 def read_rollup(
     spark: SparkSession, path: str, grain: str = "day"
 ) -> DataFrame:
-    # Handle-memoized by EXPLICIT writer-bumped version (sidecar
-    # above), not by directory stat: in-place partition refreshes are
-    # invisible to the top-level stat but every writer bumps the
-    # sidecar, so a refreshed store always misses the memo. Removes
-    # the footer-read job (~100 ms scheduler floor at sf1) that every
-    # rollup read previously paid — the r12 verdict's attribution for
-    # the events_rollup_incremental above-spread delta.
-    ver = store_version(path)
-    if ver is None:
-        return _read_rollup_fresh(spark, path, grain)
-    cache = _ROLLUP_CACHE.setdefault(spark, {})
-    key = (os.path.abspath(path), grain)
-    hit = cache.get(key)
-    if hit is not None and hit[0] == ver:
-        return hit[1]
-    roll = _read_rollup_fresh(spark, path, grain)
-    cache[key] = (ver, roll)
-    return roll
+    """The rollup store through formats.read_store (memoized; an
+    in-place partition refresh changes the stat tag), with the grain
+    bucket column cast to its contract type."""
+    from opusdb_spark.sources import formats
 
-
-def _read_rollup_fresh(
-    spark: SparkSession, path: str, grain: str
-) -> DataFrame:
-    roll = spark.read.parquet(path)
+    roll = formats.read_store(spark, path)
     if grain == "day":
         # partition-value inference yields DateType for yyyy-MM-dd
         # dirs; cast defensively so the contract doesn't depend on
         # the inference conf
-        roll = roll.withColumn("day", F.col("day").cast("date"))
-    else:
-        roll = roll.withColumn(
-            "bucket_ts", F.col("bucket_ts").cast("timestamp")
-        )
-    return roll
+        return roll.withColumn("day", F.col("day").cast("date"))
+    return roll.withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
 
 
 def _store_exists(path: str) -> bool:
@@ -341,7 +267,6 @@ def refresh_rollup(
         # bootstrap: first batch against an empty store — the delta's
         # partials ARE the store for its buckets
         part.write.partitionBy(bcol).mode("overwrite").parquet(path)
-        _bump_store_version(path)
     else:
         old = read_rollup(spark, path, grain).filter(
             F.col(bcol).isin(buckets)
@@ -395,7 +320,6 @@ def refresh_rollup(
             spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
         ):
             merged.write.partitionBy(bcol).mode("overwrite").parquet(path)
-        _bump_store_version(path)
 
     if batch_id is not None:
         with open(os.path.join(path, _BATCH_MARKER), "w") as f:
@@ -475,4 +399,3 @@ def backfill_rollup(
                 os.path.join(path, f"day={d.isoformat()}"),
                 ignore_errors=True,
             )
-    _bump_store_version(path)

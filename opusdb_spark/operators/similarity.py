@@ -225,7 +225,7 @@ def lsh_buckets_np(
     matmul against the plane matrix — the vectorized signature kernel
     shared by the index build (Arrow batches) and driver-side probes.
     `bits_per_table` MUST match the index build's (stored in its
-    marker.json) or probe buckets won't match stored ones.
+    _fingerprint.json) or probe buckets won't match stored ones.
     """
     import numpy as np
 

@@ -2050,10 +2050,10 @@ def llm_embedding_neardup(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    idx = _ann_index(spark, sf_dir)
-    from opusdb_spark.operators.ann_index import read_index_store
+    from opusdb_spark.sources.formats import read_store
 
-    bucketed = read_index_store(spark, idx, "lsh").select(
+    idx = _ann_index(spark, sf_dir)
+    bucketed = read_store(spark, os.path.join(idx, "lsh")).select(
         "vec_id", "embedding", "sig_all", "table_id", "bucket"
     )
 

@@ -112,34 +112,31 @@ def _load() -> None:
 # rows-only query (err == "no_oracle") that ran and reported a row
 # count. Harmless if the consumer sorts or completes the full sweep.
 
-# Round 13: queries whose PLANS were rewritten this round -> jump the
-# queue. Kept deliberately SHORT (the r10-r12 discipline that drained
-# the stale backlog) so the driver's ~50-key sweep budget keeps the
-# rotation turning through the r5-era cohort (VERDICT r12 ask #3:
-# re-verdict >=30 of the 31 keys now at r5; oldest >= r7 after this
-# round — 9 tier-1 keys + 31 r5 + 6 r6 fits a 50-key budget with
-# room for the r7 head). The optimization rewrites below were all
-# proven value-identical locally (exceptAll/hash A-B + oracle parity
-# at sf0.01 and sf0.001) but their physical plans are new, so the
-# driver verdict should land on the new code first. The r13 decode
-# rewires (multimodal_* LUT Huffman + Arrow byte cap) are rows-only
-# keys verified by bit-level vector + hypothesis tests; they keep
-# their r12 clean verdicts and do not spend tier-1 slots.
+# Queries whose store READ PATH changed most recently -> jump the
+# queue. Kept deliberately SHORT so the driver's ~50-key sweep budget
+# keeps the rotation turning through the stale cohort. These keys now
+# read their stores through the one formats.read_store memo (the
+# rollup store's version sidecar and the ANN index's private handle
+# cache are gone), and ensure_written publishes their stores
+# atomically; values are unchanged by construction, and a fresh
+# verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
-    # plan rewrites (optimization round 13)
-    "sub_correlated",            # correlated agg -> window over partkey
-    "dq_schema_drift",           # ts range pushdown + narrow-key distincts
-    "llm_decontaminate",         # posexplode gram stream + shared gh exchange
-    "llm_substring_dedup",       # posexplode span stream
-    "llm_boilerplate_strip",     # posexplode segment stream
-    "llm_quality_classifier_score",  # single-pass features via doc_id window
-    "llm_winnowing_overlap",     # array-domain pair generation, 1 store scan
-    "emb_covariance",            # chained codegen Generates, no pos mapping
-    # read-path rewires (inherited r13 commits): values unchanged by
-    # construction, store reads now memoized (read_store / the
-    # writer-bumped version sidecar) — a fresh verdict confirms it
-    "agg_kmv_set_ops",
+    # rollup store: read_rollup = read_store + grain cast
+    "events_rollup_daily",
+    "events_rollup_distinct_users",
+    "events_rollup_quantiles",
+    "events_rollup_cascade",
+    "events_rollup_backfill",
     "events_rollup_incremental",
+    "stream_rollup_maintain",
+    # ANN index: ensure_index = ensure_written; probes via read_store
+    "llm_simsearch_lsh",
+    "llm_simsearch_ivf",
+    "llm_simsearch_ivfpq",
+    "llm_ann_recall_eval",
+    "llm_pq_recall_eval",
+    "llm_pq_compression",
+    "llm_embedding_neardup",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

@@ -11,7 +11,6 @@ from opusdb_spark.sources.formats import (  # noqa: F401
     ensure_written,
     read_csv,
     read_json,
-    read_parquet,
     read_store,
     scratch_path,
     scratch_sink,

@@ -43,31 +43,61 @@ def scratch_path(name: str) -> str:
     return path
 
 
+_MARKER = "_fingerprint.json"
+
+
+def _sweep_dead_staging(path: str) -> None:
+    """Remove staging dirs of `path` left by build processes that died,
+    so a killed build's partial output is reclaimed by the next build."""
+    parent, base = os.path.split(path)
+    prefix = base + ".tmp-"
+    for name in os.listdir(parent or "."):
+        pid = name[len(prefix):]
+        if not (name.startswith(prefix) and pid.isdigit()):
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except OSError:
+            pass  # alive, owned by another user
+
+
 def ensure_written(path: str, fingerprint: dict, write_fn) -> str:
-    """Idempotent materialization: run `write_fn(path)` only when the
+    """Idempotent, atomic materialization: run `write_fn` only when the
     stored fingerprint differs. This is the ingest/query split — a
     100 TB layout is organized ONCE at ingest, never inside a query —
     so repeated query invocations don't pay a table rewrite.
+
+    The build goes to a sibling staging dir (`<path>.tmp-<pid>`, same
+    filesystem), the marker is written inside it, and only then is the
+    staging dir swapped into place (old dir removed, staging renamed).
+    A killed build therefore leaves the previous store or no store,
+    never a partial one, and every published build is a new inode
+    that read_store's stat tag cannot miss. `write_fn(p)` must write
+    only under the `p` it is given.
     """
     import json
 
-    marker = os.path.join(path, "_fingerprint.json")
     # normalize through JSON before comparing: the stored side has
     # round-tripped (tuples→lists, int keys→str), and comparing the
-    # raw dict against it would silently rebuild on EVERY call — the
-    # exact bug the r8 scale probe caught in the ANN index marker
+    # raw dict against it would silently rebuild on EVERY call
     fingerprint = json.loads(json.dumps(fingerprint))
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                if json.load(f) == fingerprint:
-                    return path
-        except (json.JSONDecodeError, OSError):
-            pass
-    shutil.rmtree(path, ignore_errors=True)
-    write_fn(path)
-    with open(marker, "w") as f:
+    path = os.path.normpath(path)
+    try:
+        with open(os.path.join(path, _MARKER)) as f:
+            if json.load(f) == fingerprint:
+                return path
+    except (OSError, ValueError):
+        pass
+    _sweep_dead_staging(path)
+    staging = f"{path}.tmp-{os.getpid()}"
+    shutil.rmtree(staging, ignore_errors=True)
+    write_fn(staging)
+    with open(os.path.join(staging, _MARKER), "w") as f:
         json.dump(fingerprint, f)
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(staging, path)
     return path
 
 
@@ -186,13 +216,6 @@ def effective_max_split_bytes(spark: SparkSession, sizes: list[int]) -> int:
     return min(max_pb, max(open_cost, total // par))
 
 
-def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def store_stat_tag(path: str) -> tuple | None:
     """Invalidation tag for a memoized read handle, or None when the
     path does not exist.
@@ -231,37 +254,30 @@ def store_stat_tag(path: str) -> tuple | None:
     return (st.st_mtime_ns, st.st_size, st.st_ino, hash(tuple(children)))
 
 
-# Same memo as tables._TABLE_CACHE, for write-once ingest-ARTIFACT
-# stores (signature/fingerprint stores, graph edges, mv partials): every
-# schema-inferring spark.read.parquet launches one footer-read job —
-# 55-130 ms of scheduler floor on this VM — and the store-backed
-# queries re-read their store on every build. Keyed per live session,
-# then by (abspath, mtime_ns, size): a rebuilt store (ensure_written
-# rewrites bump the directory mtime) can never serve a stale listing,
-# and a sink read back in the same query sees its fresh bytes because
-# the just-written directory has a new stat. Plans are unchanged —
-# the memo returns the same logical scan a fresh read would.
+# The one DataFrame-handle memo: every schema-inferring
+# spark.read.parquet launches one footer-read job (55-130 ms of
+# scheduler floor), and store-backed queries and register_views re-read
+# their inputs on every build. Keyed per live session (weak: a stopped
+# session's entries die with it), then by absolute path with
+# store_stat_tag as a replace-on-change tag: a rebuilt or rewritten
+# store can never serve a stale listing, and the memo is bounded by the
+# number of distinct paths. Plans are unchanged — the memo returns the
+# same logical scan a fresh read would.
 _STORE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized `spark.read.parquet` for immutable-once-written stores.
-
-    Stores refreshed IN PLACE (dynamic partition overwrite) should
-    still prefer an EXPLICIT version channel (read_rollup's sidecar
-    counter) — the store_stat_tag child scan does catch a partition
-    refresh (the rewritten partition dir's own mtime changes), but a
-    writer-owned counter states the invalidation contract rather than
-    deriving it from filesystem behavior."""
+    """Memoized `spark.read.parquet`, the one handle memo: tables.table,
+    the ingest-store readers, the ANN probes and read_rollup (an
+    in-place-refreshed store) all read through it. Invalidation is
+    store_stat_tag: a rebuild (new inode), a same-tick rewrite (child
+    stats) and a dynamic-partition refresh (the `day=X` dir is
+    replaced and `_SUCCESS` rewritten) all miss the memo."""
     tag = store_stat_tag(path)
     if tag is None:
         return spark.read.parquet(path)  # surface the read error as-is
-    # keyed by PATH with the stat as a replace-on-change tag (the
-    # ann_index.read_index_store convention): a rebuilt store evicts
-    # its predecessor instead of pinning dead handles for the
-    # session's lifetime — the cache is bounded by #distinct paths
     cache = _STORE_CACHE.setdefault(spark, {})
     key = os.path.abspath(path)
     hit = cache.get(key)

@@ -38,7 +38,6 @@ from opusdb_spark.sources.formats import (
     stat_fingerprint,
 )
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
 
 def _events_source_shape(sf_dir: str) -> tuple[StructType, str]:
     """(stream schema, ts select-expr) matched to the parquet's actual
@@ -136,9 +135,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(target):
         src_dir = target
     else:
-        link_dir = os.path.join(
-            _SCRATCH,
-            f"stream_events_{os.path.basename(os.path.normpath(sf_dir))}",
+        link_dir = scratch_path(
+            f"stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
         )
         os.makedirs(link_dir, exist_ok=True)
         link = os.path.join(link_dir, "events.parquet")

@@ -13,9 +13,6 @@ pushdown (verified in tests/test_plans.py). Loaders never collect.
 
 from __future__ import annotations
 
-import os
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,50 +39,18 @@ _EVENTS_TS_EXPR = (
 )
 
 
-# DataFrame-handle memo, keyed per live session (weak: a stopped
-# session's entries die with it) then by (abspath, store_stat_tag) so a
-# rewritten store — ensure_written rebuilds bump the directory mtime —
-# can never serve a stale file listing. Why this exists (r12, the
-# VERDICT r11 TPC-H-drift investigation): every `spark.read.parquet`
-# launches one footer/schema-read JOB even for a path read a moment
-# ago, and on this VM a job costs 55-130 ms of scheduler floor
-# depending on the window. register_views pays that 10× per call, so
-# each sf0.1 TPC-H query ran ~10 overhead jobs + ~2-10 real ones —
-# the measured r8→r11 "drift" (15.09→19.48 s on byte-identical plans)
-# was exactly (number of jobs) × (that round's per-job floor). Reusing
-# the resolved handle removes the footer jobs; the query plan below it
-# is unchanged (same logical scan), so oracle parity and plan pins are
-# untouched. At cluster scale this is also just correct practice: one
-# schema resolution per table, not one per query.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table with normalized schema."""
-    from opusdb_spark.sources.formats import store_stat_tag
+    """Load one testdata table with normalized schema.
+
+    The handle comes from formats.read_store (memoized, so a repeat
+    call over an unchanged file launches no footer-read job); this
+    function adds only the events `ts` adaptation."""
+    from opusdb_spark.sources import formats
 
     apply_runtime_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    # content-derived tag (ADVICE r12): mtime_ns+size+ino for the
-    # single-file testdata tables, plus a child-stat fingerprint when
-    # a table is a parquet DIRECTORY — invalidation no longer depends
-    # on filesystem timestamp granularity
-    tag = store_stat_tag(path)  # None -> nonexistent (read error below)
-    # keyed by PATH with the stat as a replace-on-change tag: a
-    # rewritten table evicts its predecessor's handle instead of
-    # pinning it for the session's lifetime (bounded by #tables)
-    cache = _TABLE_CACHE.setdefault(spark, {})
-    key = os.path.abspath(path)
-    hit = cache.get(key)
-    if tag is not None and hit is not None and hit[0] == tag:
-        return hit[1]
-    df = spark.read.parquet(path)
+    df = formats.read_store(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(_EVENTS_TS_EXPR))
-    if tag is not None:
-        cache[key] = (tag, df)
     return df
 
 

@@ -1045,13 +1045,13 @@ def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
     the pre-r13 formulation that decimal-folds EVERY candidate — the
     equivalence the pool-margin adjudication promises, checked on the
     real corpus including the cosine doubles."""
+    import os
+
     from pyspark.sql import functions as _F
 
     from opusdb_spark.operators import ann_index
-    from opusdb_spark.operators.ann_index import (
-        _score_against,
-        read_index_store,
-    )
+    from opusdb_spark.operators.ann_index import _score_against
+    from opusdb_spark.sources.formats import read_store
     from opusdb_spark.tables import table
 
     emb = table(spark, SF, "embeddings")
@@ -1069,7 +1069,7 @@ def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
     vn = v / (np.linalg.norm(v) + 1e-12)
     cells = [int(c) for c in np.argsort(-(cn @ vn))[: similarity.N_PROBE]]
     full = (
-        read_index_store(spark, idx, "ivf")
+        read_store(spark, os.path.join(idx, "ivf"))
         .filter(_F.col("cell").isin(cells))
         .filter(_F.col("vec_id") != 0)
         .select("vec_id", _score_against("embedding", vec).alias("cosine"))
@@ -2430,7 +2430,7 @@ def test_list_store_files_contract(tmp_path):
     (root / "sub").mkdir(parents=True)
     (root / "b.parquet").write_bytes(b"x" * 10)
     (root / "a.parquet").write_bytes(b"x" * 20)
-    (root / "_marker.json").write_bytes(b"{}")
+    (root / "_fingerprint.json").write_bytes(b"{}")
     (root / "sub" / "c.parquet").write_bytes(b"x" * 5)
 
     flat = list_store_files(str(root), recursive=False)
@@ -2920,20 +2920,17 @@ def test_delete_vectors_sidecar_invalidates_on_store_rebuild(spark):
     assert got == expect
 
 
-# -------------------------- handle-memo staleness regression (r13)
-# VERDICT r12 ask #4: the in-place-refresh hazard was guarded only by
-# a comment ("do not route the rollup store through read_store"). The
-# r13 design replaces the convention with a writer-owned version
-# sidecar; these tests FAIL if any future change lets a memoized
-# handle serve a pre-refresh file listing.
+# -------------------------- handle-memo staleness regression
+# The rollup store is refreshed IN PLACE (dynamic partition overwrite)
+# yet read through the one read_store memo; these tests FAIL if any
+# future change lets a memoized handle serve a pre-refresh listing.
 
 
 def test_rollup_memo_sees_in_place_refresh(spark, tmp_path):
-    """read_rollup is handle-memoized by the writer-bumped version
-    sidecar. Every maintenance mode (refresh fold, backfill replace,
-    clear-and-rebuild) must invalidate the memo in the SAME session —
-    a stale hit here is a silent wrong answer, the exact bug class the
-    r12 comment warned about."""
+    """read_rollup is handle-memoized through read_store. Every
+    maintenance mode (refresh fold, backfill replace, clear-and-
+    rebuild) must invalidate the memo in the SAME session — a stale hit
+    here is a silent wrong answer."""
     import shutil
     from datetime import date, datetime
 
@@ -2956,8 +2953,6 @@ def test_rollup_memo_sees_in_place_refresh(spark, tmp_path):
         ]
     )
     rollup.build_rollup(base, store)
-    v1 = rollup.store_version(store)
-    assert v1 is not None, "build_rollup must write the version sidecar"
 
     def day_counts():
         return {
@@ -2969,18 +2964,19 @@ def test_rollup_memo_sees_in_place_refresh(spark, tmp_path):
         }
 
     assert day_counts() == {"2024-01-01": 2, "2024-01-02": 2}
-    # unchanged version -> the SAME resolved handle (no footer re-read)
-    assert rollup.read_rollup(spark, store) is rollup.read_rollup(
-        spark, store
+    # unchanged store -> the memoized handle: no footer-read job
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup_memo_probe", "repeat read_rollup")
+    rollup.read_rollup(spark, store)
+    sc.setJobGroup("idle", "idle")
+    assert sc.statusTracker().getJobIdsForGroup("rollup_memo_probe") == [], (
+        "repeat read_rollup on an unchanged store launched jobs"
     )
 
-    # in-place fold: dynamic partition overwrite of day 2 only — the
-    # top-level directory stat may not change, the sidecar MUST
+    # in-place fold: dynamic partition overwrite of day 2 only
     rollup.refresh_rollup(
         spark, store, ev([(datetime(2024, 1, 2, 6), "a", 9.0, 99)])
     )
-    v2 = rollup.store_version(store)
-    assert v2 is not None and v2 != v1, "refresh_rollup must bump"
     assert day_counts() == {"2024-01-01": 2, "2024-01-02": 3}, (
         "read_rollup served a pre-refresh listing after an in-place "
         "partition fold"
@@ -2993,32 +2989,24 @@ def test_rollup_memo_sees_in_place_refresh(spark, tmp_path):
         ev([(datetime(2024, 1, 1, 3), "a", 5.0, 5)]),
         [date(2024, 1, 1)],
     )
-    v3 = rollup.store_version(store)
-    assert v3 is not None and v3 != v2, "backfill_rollup must bump"
     assert day_counts() == {"2024-01-01": 1, "2024-01-02": 3}
 
-    # clear-and-rebuild (the scratch_sink lifecycle): the counter
-    # restarts, so only the nonce distinguishes the rebuilt store from
-    # the memoized pre-clear handle — which pins now-deleted part-file
-    # names and would throw (or worse, silently read nothing) if served
+    # clear-and-rebuild (the scratch_sink lifecycle): the memoized
+    # pre-clear handle pins now-deleted part-file names and would
+    # throw (or worse, silently read nothing) if served
     shutil.rmtree(store)
     rollup.build_rollup(
         ev([(datetime(2024, 1, 7, 0), "b", 1.0, 1)]), store
-    )
-    v4 = rollup.store_version(store)
-    assert v4 is not None and v4 != v3 and v4[0] == v1[0], (
-        "rebuild restarts the counter; the nonce must still differ"
     )
     assert day_counts() == {"2024-01-07": 1}, (
         "read_rollup served a handle from before the store was cleared"
     )
 
 
-def test_rollup_read_without_sidecar_is_unmemoized(spark, tmp_path):
-    """A rollup store written by an external writer (no sidecar) must
-    fall back to a fresh read every time — never a memo hit keyed on
-    a missing version."""
-    import os
+def test_rollup_read_sees_foreign_in_place_rewrite(spark, tmp_path):
+    """A rollup store rewritten in place by an external writer (not
+    through build/refresh/backfill) must be seen by the next read in
+    the same session."""
     from datetime import datetime
 
     from pyspark.sql import functions as F
@@ -3033,10 +3021,9 @@ def test_rollup_read_without_sidecar_is_unmemoized(spark, tmp_path):
     rollup._partial_agg(ev).write.partitionBy("day").mode(
         "overwrite"
     ).parquet(store)
-    assert rollup.store_version(store) is None
     r1 = rollup.read_rollup(spark, store)
     assert r1.agg(F.sum("n_events")).first()[0] == 1
-    # foreign in-place rewrite with no bump: next read must see it
+    # foreign in-place rewrite: next read must see it
     ev2 = spark.createDataFrame(
         [
             (datetime(2024, 3, 1, 0), "a", 1.0, 1),
@@ -3047,12 +3034,40 @@ def test_rollup_read_without_sidecar_is_unmemoized(spark, tmp_path):
     rollup._partial_agg(ev2).write.partitionBy("day").mode(
         "overwrite"
     ).parquet(store)
-    assert not os.path.exists(
-        os.path.join(store, rollup._VERSION_MARKER)
-    )
     assert (
         rollup.read_rollup(spark, store).agg(F.sum("n_events")).first()[0]
         == 2
+    )
+
+
+def test_ann_rebuild_is_seen_by_sub_store_reads(spark, tmp_path):
+    """An index rebuilt under a different fingerprint in the SAME
+    session must be what the next sub-store read sees — never the
+    memoized handle of the previous build."""
+    import os
+
+    from opusdb_spark.operators import ann_index
+    from opusdb_spark.sources.formats import read_store
+    from opusdb_spark.tables import table
+
+    def emb(n):
+        return table(spark, SF, "embeddings").filter(F.col("vec_id") < n)
+
+    idx = str(tmp_path / "ann")
+    fp = {**ann_index.source_fingerprint(SF), "rows": 400}
+    ann_index.ensure_index(spark, emb(400), idx, fp)
+    by_id = os.path.join(idx, "by_id")
+    assert read_store(spark, by_id).count() == 400
+    assert ann_index.fetch_vector(spark, idx, 350)
+
+    ann_index.ensure_index(spark, emb(300), idx, {**fp, "rows": 300})
+    assert read_store(spark, by_id).count() == 300, (
+        "sub-store read served the previous build"
+    )
+    with pytest.raises(KeyError):
+        ann_index.fetch_vector(spark, idx, 350)
+    assert not [n for n in os.listdir(tmp_path) if ".tmp-" in n], (
+        "rebuild left its staging dir behind"
     )
 
 

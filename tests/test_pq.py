@@ -15,6 +15,7 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from opusdb_spark.operators import ann_index, similarity
+from opusdb_spark.sources.formats import read_store
 from opusdb_spark.tables import table
 from tests.conftest import SF_SMALL
 
@@ -58,10 +59,10 @@ def test_pq_codes_match_numpy_reference(spark):
     books = ann_index.load_codebooks(idx)
     d = books.shape[2]
     rows = (
-        ann_index.read_index_store(spark, idx, "pq")
+        read_store(spark, os.path.join(idx, "pq"))
         .filter(F.col("vec_id") < 5)
         .join(
-            ann_index.read_index_store(spark, idx, "by_id").filter(
+            read_store(spark, os.path.join(idx, "by_id")).filter(
                 F.col("vec_id") < 5
             ),
             "vec_id",
@@ -110,7 +111,7 @@ def test_ivfpq_scans_stay_pruned(spark):
 
     idx = _index(spark)
     p = (
-        ann_index.read_index_store(spark, idx, "pq")
+        read_store(spark, os.path.join(idx, "pq"))
         .filter(F.col("cell").isin([0, 1]))
         ._jdf.queryExecution()
         .executedPlan()
@@ -119,7 +120,7 @@ def test_ivfpq_scans_stay_pruned(spark):
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", p.replace("\n", " "))
     assert m and "cell" in m.group(1), "pq candidate scan not pruned"
     p2 = (
-        ann_index.read_index_store(spark, idx, "by_id")
+        read_store(spark, os.path.join(idx, "by_id"))
         .filter(F.col("vec_id").isin([1, 2, 3]))
         ._jdf.queryExecution()
         .executedPlan()
