@@ -134,6 +134,18 @@ def retain(
     )
 
 
+def _at_next_write_point(
+    versions: DataFrame, rows: DataFrame, version: str
+) -> DataFrame:
+    """`versions` plus `rows` stamped with ONE new write point,
+    max(existing) + 1 (1 on an empty history) — the single WRITE_POINT
+    bump per committing transaction (stm.clj:42-43). The next point is
+    a one-row aggregate broadcast-crossjoined onto `rows`."""
+    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
+    stamped = rows.crossJoin(F.broadcast(nxt)).withColumnRenamed("_wp", version)
+    return versions.unionByName(stamped.select(*versions.columns))
+
+
 def append_versions(
     versions: DataFrame,
     updates: DataFrame,
@@ -148,11 +160,7 @@ def append_versions(
     Returns the new versions DataFrame; writing it (or just the new
     rows, mode="append") is the commit, atomic per Spark job.
     """
-    next_wp = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = updates.crossJoin(F.broadcast(next_wp)).withColumnRenamed(
-        "_wp", version
-    )
-    return versions.unionByName(stamped.select(*versions.columns))
+    return _at_next_write_point(versions, updates, version)
 
 
 def read_own_writes(
@@ -171,9 +179,7 @@ def read_own_writes(
     (anyone holding only `versions`) still see the committed state,
     because nothing here mutates or publishes.
     """
-    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = pending.crossJoin(F.broadcast(nxt)).withColumnRenamed("_wp", version)
-    return latest(versions.unionByName(stamped.select(*versions.columns)), key, version)
+    return latest(_at_next_write_point(versions, pending, version), key, version)
 
 
 def merge(
@@ -206,14 +212,8 @@ def merge(
     """
     if "_deleted" not in versions.columns:
         versions = versions.withColumn("_deleted", F.lit(False))
-    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = (
-        changes.withColumn("_deleted", F.col("_op") == "delete")
-        .drop("_op")
-        .crossJoin(F.broadcast(nxt))
-        .withColumnRenamed("_wp", version)
-    )
-    return versions.unionByName(stamped.select(*versions.columns))
+    rows = changes.withColumn("_deleted", F.col("_op") == "delete").drop("_op")
+    return _at_next_write_point(versions, rows, version)
 
 
 def conservation(

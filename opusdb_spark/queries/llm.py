@@ -2960,7 +2960,7 @@ def llm_substring_dedup(spark, sf_dir):
     # per span dominated the pass. Generate(posexplode) and the
     # projection both run inside WholeStageCodegen (sf1 span stream
     # via noop sink: 1.12 → 0.67 s; stream bit-identical — count +
-    # bit_xor(xxhash64(doc_id, h)) match, scripts/ab_substring.py).
+    # bit_xor(xxhash64(doc_id, h)) match, OPTIMIZATION_r13.md:156).
     # Positions past n−K drop before hashing, so docs shorter than K
     # tokens vanish exactly as the old WHEN guard dropped them.
     toks = F.split(F.col("text"), " ")
@@ -3115,7 +3115,7 @@ def emb_covariance(spark, sf_dir):
     array-transform() build was CodegenFallback, interpreted per
     element like every higher-order function, and A/B-measured slower:
     sf0.1 best 1.23 → 0.93 s, sf1 5.09 → 4.60 s, new shape ahead in
-    every interleaved round — scripts/ab_cov.py). No self-join of the
+    every interleaved round — OPTIMIZATION_r13.md:210). No self-join of the
     exploded table (the oracle's join formulation would shuffle n·dim
     rows): only dim² partial aggregates cross after map-side combine,
     keyed directly on (i, j), which also retires the old pos→(i, j)

@@ -147,8 +147,8 @@ def stream_session(spark, sf_dir):
 def stream_stateful_running(spark, sf_dir):
     """Per-user running total — the batch shape of a per-key stateful
     operator (per-batch state anchor: lifecycle hooks events.clj:8-27).
-    The true-streaming twin (applyInPandasWithState) is
-    stream_stateful_true."""
+    The true-streaming twin (a native streaming groupBy().agg() over
+    the state store) is stream_stateful_true."""
     ev = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -339,14 +339,15 @@ def stream_dedup_true(spark, sf_dir):
 
 @register(
     "stream_stateful_true",
-    # Hash-oracled since r11 (the r10 verdict ask): the state carries
-    # exact integer micros (floor(v·1e6 + 0.5) per event — see
-    # streaming/jobs.py stateful_running_totals), so the running total
-    # is batch-split-independent, and the single-file availableNow
-    # replay (the dedup_true/join_true single-batch premise) emits
-    # each user exactly once with the full-log totals — which this
-    # batch SQL recomputes with the identical micros fold (HUGEINT
-    # sum, one int→double conversion, one division).
+    # Hash-oracled since r11 (the r10 verdict ask): the native
+    # streaming aggregation sums exact integer micros (floor(v·1e6 +
+    # 0.5) per event — see streaming/jobs.py stateful_running_totals),
+    # so the running total is batch-split-independent, and the
+    # single-file availableNow replay (the dedup_true/join_true
+    # single-batch premise) emits each user exactly once in update
+    # mode with the full-log totals — which this batch SQL recomputes
+    # with the identical micros fold (integer sum, one int→double
+    # conversion, one division).
     oracle="""
         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
                CAST(SUM(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT))
@@ -356,10 +357,10 @@ def stream_dedup_true(spark, sf_dir):
     tags=("streaming", "stateful"),
 )
 def stream_stateful_true(spark, sf_dir):
-    """TRUE streaming per-user totals via applyInPandasWithState, the
-    arbitrary-state operator path; integer-micros accumulator makes
-    the emitted totals hash-replayable by batch SQL (see oracle
-    note)."""
+    """TRUE streaming per-user totals via a native streaming
+    aggregation (count + integer-micros sum kept in the JVM state
+    store); the integer-micros accumulator makes the emitted totals
+    hash-replayable by batch SQL (see oracle note)."""
     return stream_jobs.stateful_running_totals(spark, sf_dir)
 
 

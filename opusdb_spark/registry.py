@@ -112,14 +112,16 @@ def _load() -> None:
 # rows-only query (err == "no_oracle") that ran and reported a row
 # count. Harmless if the consumer sorts or completes the full sweep.
 
-# Queries whose store READ PATH changed most recently -> jump the
-# queue. Kept deliberately SHORT so the driver's ~50-key sweep budget
-# keeps the rotation turning through the stale cohort. These keys now
-# read their stores through the one formats.read_store memo (the
-# rollup store's version sidecar and the ANN index's private handle
-# cache are gone), and ensure_written publishes their stores
-# atomically; values are unchanged by construction, and a fresh
-# verdict confirms it.
+# Queries whose plan or store READ PATH changed since the last verdict
+# round -> jump the queue. Kept deliberately SHORT so the driver's
+# ~50-key sweep budget keeps the rotation turning through the stale
+# cohort. The rollup and ANN keys now read their stores through the
+# one formats.read_store memo (the rollup store's version sidecar and
+# the ANN index's private handle cache are gone), and ensure_written
+# publishes their stores atomically; stream_stateful_true is now a
+# native streaming aggregation instead of applyInPandasWithState.
+# Values are unchanged by construction, and a fresh verdict confirms
+# it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -137,6 +139,8 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "llm_pq_recall_eval",
     "llm_pq_compression",
     "llm_embedding_neardup",
+    # per-user totals: native groupBy().agg() state store
+    "stream_stateful_true",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

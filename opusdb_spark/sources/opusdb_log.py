@@ -51,34 +51,43 @@ DEFAULT_BLOCK_SIZE = 400
 
 
 # --------------------------------------------------------- writer
-def write_log(
-    path: str, records: list[bytes], block_size: int = DEFAULT_BLOCK_SIZE
-) -> None:
-    """Append `records` to a fresh log file exactly like the reference's
-    append!/flush! (log_mgr.clj:46-66): backward fill, int32 length
-    prefix, boundary int at offset 0, new block when the record plus
-    both ints no longer fits."""
-    blocks: list[bytearray] = []
+def _empty_block(block_size: int) -> bytearray:
+    """A fresh block: boundary = block_size (log_mgr.clj:54-57)."""
+    b = bytearray(block_size)
+    struct.pack_into(">i", b, 0, block_size)
+    return b
 
-    def new_block() -> bytearray:
-        b = bytearray(block_size)
-        struct.pack_into(">i", b, 0, block_size)
-        blocks.append(b)
-        return b
 
-    cur = new_block()
+def _fill(
+    cur: bytearray, records: list[bytes], block_size: int
+) -> list[bytearray]:
+    """Backward-fill `records` into block `cur` exactly like the
+    reference's append! (log_mgr.clj:46-66): int32 length prefix,
+    boundary int at offset 0, a new block when the record plus both
+    ints no longer fits. Returns `cur` and every block it opened."""
+    blocks = [cur]
     for rec in records:
         need = len(rec) + 4
         pos = struct.unpack_from(">i", cur, 0)[0]
         # reference guard: `(< pos (+ bytes-needed 4))` — must leave
         # room for the record AND the 4-byte boundary slot
         if pos < need + 4:
-            cur = new_block()
+            cur = _empty_block(block_size)
+            blocks.append(cur)
             pos = block_size
         nxt = pos - need
         struct.pack_into(">i", cur, nxt, len(rec))
         cur[nxt + 4 : nxt + 4 + len(rec)] = rec
         struct.pack_into(">i", cur, 0, nxt)
+    return blocks
+
+
+def write_log(
+    path: str, records: list[bytes], block_size: int = DEFAULT_BLOCK_SIZE
+) -> None:
+    """Write `records` to a fresh log file exactly like the reference's
+    append!/flush! (log_mgr.clj:46-66), starting from one empty block."""
+    blocks = _fill(_empty_block(block_size), records, block_size)
     with open(path, "wb") as f:
         for b in blocks:
             f.write(b)
@@ -92,28 +101,10 @@ def append_log(
     resume backward fill from its boundary). Byte-for-byte equivalent
     to having written all records in one session, which the tests pin."""
     with open(path, "rb") as f:
-        data = bytearray(f.read())
+        data = f.read()
     n_blocks = len(data) // block_size
     last = bytearray(data[(n_blocks - 1) * block_size :])
-    blocks: list[bytearray] = [last]
-
-    def new_block() -> bytearray:
-        b = bytearray(block_size)
-        struct.pack_into(">i", b, 0, block_size)
-        blocks.append(b)
-        return b
-
-    cur = last
-    for rec in records:
-        need = len(rec) + 4
-        pos = struct.unpack_from(">i", cur, 0)[0]
-        if pos < need + 4:
-            cur = new_block()
-            pos = block_size
-        nxt = pos - need
-        struct.pack_into(">i", cur, nxt, len(rec))
-        cur[nxt + 4 : nxt + 4 + len(rec)] = rec
-        struct.pack_into(">i", cur, 0, nxt)
+    blocks = _fill(last, records, block_size)
     with open(path, "r+b") as f:
         f.seek((n_blocks - 1) * block_size)
         for b in blocks:
@@ -133,6 +124,24 @@ def read_block(block: bytes, block_size: int) -> list[tuple[int, bytes]]:
 
 
 # ------------------------------------------------- Spark DataSource
+def _parse_options(options) -> tuple[str, int]:
+    """(path, block_size) from the reader/writer options; `path` is
+    required."""
+    path = options.get("path")
+    if not path:
+        raise ValueError("opusdb_log requires a path")
+    return path, int(options.get("block_size", str(DEFAULT_BLOCK_SIZE)))
+
+
+def _log_files(path: str) -> list[str]:
+    """The `*.log` files of a directory (sorted), or `path` itself."""
+    if os.path.isdir(path):
+        return sorted(
+            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".log")
+        )
+    return [path]
+
+
 class _BlockPartition(InputPartition):
     def __init__(self, path: str, index: int, block_size: int):
         self.path = path
@@ -142,23 +151,14 @@ class _BlockPartition(InputPartition):
 
 class OpusdbLogReader(DataSourceReader):
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("opusdb_log requires a path")
-        self.block_size = int(
-            options.get("block_size", str(DEFAULT_BLOCK_SIZE))
-        )
+        self.path, self.block_size = _parse_options(options)
 
     def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".log")
-            )
-        return [self.path]
+        return _log_files(self.path)
 
     def partitions(self):
+        # a missing path fails here (getsize): a batch scan of a log
+        # that is not there is an error, not an empty table
         parts = []
         for path in self._files():
             n_blocks = os.path.getsize(path) // self.block_size
@@ -192,12 +192,7 @@ class OpusdbLogWriter(DataSourceWriter):
     carry a `record` binary (or string) column."""
 
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("opusdb_log requires a path")
-        self.block_size = int(
-            options.get("block_size", str(DEFAULT_BLOCK_SIZE))
-        )
+        self.path, self.block_size = _parse_options(options)
         # Job-unique tag baked into every attempt's temp name: the
         # writer is built ONCE on the driver per write job and
         # serialized to tasks, so all of this job's attempts share it —
@@ -315,21 +310,11 @@ class OpusdbLogStreamReader(SimpleDataSourceStreamReader):
     (log_mgr.clj:15-32) — replication/tailing without record markers."""
 
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("opusdb_log requires a path")
-        self.block_size = int(
-            options.get("block_size", str(DEFAULT_BLOCK_SIZE))
-        )
+        self.path, self.block_size = _parse_options(options)
 
     def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".log")
-            )
-        return [self.path] if os.path.exists(self.path) else []
+        # a log not created yet is an empty stream, not an error
+        return _log_files(self.path) if os.path.exists(self.path) else []
 
     def initialOffset(self) -> dict:
         return {}

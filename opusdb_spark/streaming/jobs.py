@@ -94,50 +94,53 @@ def _events_source_shape(sf_dir: str) -> tuple[StructType, str]:
     return schema, ts_expr
 
 
-def _fresh_memory_sink(spark: SparkSession, prefix: str) -> str:
-    """Unique memory-sink table name, dropping THIS prefix's views from
-    earlier invocations in the same session. A memory sink's rows live
-    in the driver JVM until the view is dropped, so repeated
-    invocations (bench warm+timed runs, the test suite, a long driver
-    session) would otherwise pin one result-sized table per run — the
-    session-lifetime accumulation class the handle memos deliberately
-    avoid. Safe because every caller materializes its result before
-    the next invocation starts (driver collect / bench count), and the
-    uuid suffix keeps concurrent queries on distinct names."""
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith(prefix + "_"):
-            try:
-                spark.catalog.dropTempView(t.name)
-            except Exception:
-                pass  # concurrent drop: the goal state is already met
-    return f"{prefix}_{uuid.uuid4().hex[:8]}"
+_N_SPLIT_FILES = 4  # ts-range part files = micro-batches of a batched replay
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tag(sf_dir: str) -> str:
+    """The corpus name (sf dir basename) that keys per-corpus scratch
+    paths: symlink dir, split store, sinks and checkpoints."""
+    return os.path.basename(os.path.normpath(sf_dir))
+
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, batched: bool = False
+) -> DataFrame:
     """events.parquet as a file-source stream with proper event-time ts.
 
     Event time must be TimestampType (not NTZ) for watermarks; session
     timezone is pinned to UTC by session.py so wall-clock values match
     the batch/NTZ path.
+
+    `batched=False` replays the whole log as ONE availableNow
+    micro-batch (the single-batch premise of the dedup/join/stateful
+    oracles). `batched=True` replays the ts-range split one file per
+    trigger — a MULTI-BATCH stream, required by append-mode watermark
+    semantics (see _events_split_dir).
     """
     apply_runtime_confs(spark)
-    # FileStreamSource needs a *directory*. The driver's testdata ships
-    # events.parquet as a single FILE (exposed through a scratch
-    # symlink dir — testdata itself is read-only); the bench/probe
-    # scaled corpora ship it as a Spark-written DIRECTORY of part
-    # files, which is already a valid source directory — stream it in
-    # place (a symlink to a directory inside the link dir lists zero
-    # FILES, so the availableNow replay would silently emit zero
-    # batches — the r11 probe caught exactly that on bench_sf1; the
-    # default trigger still takes every part file in ONE batch, so the
-    # single-batch oracles' premise is unchanged).
+    schema, ts_expr = _events_source_shape(sf_dir)
+    reader = spark.readStream.schema(schema).format("parquet")
     target = f"{sf_dir}/events.parquet"
-    if os.path.isdir(target):
+    if batched:
+        reader = reader.option("maxFilesPerTrigger", "1")
+        src_dir = _events_split_dir(spark, sf_dir)
+    elif os.path.isdir(target):
+        # FileStreamSource needs a *directory*. The bench/probe scaled
+        # corpora ship events.parquet as a Spark-written DIRECTORY of
+        # part files, which is already a valid source directory —
+        # stream it in place (a symlink to a directory inside the link
+        # dir lists zero FILES, so the availableNow replay would
+        # silently emit zero batches — the r11 probe caught exactly
+        # that on bench_sf1; the default trigger still takes every part
+        # file in ONE batch, so the single-batch oracles' premise is
+        # unchanged).
         src_dir = target
     else:
-        link_dir = scratch_path(
-            f"stream_events_{os.path.basename(os.path.normpath(sf_dir))}"
-        )
+        # The driver's testdata ships events.parquet as a single FILE:
+        # expose it through a scratch symlink dir (testdata itself is
+        # read-only).
+        link_dir = scratch_path(f"stream_events_{_tag(sf_dir)}")
         os.makedirs(link_dir, exist_ok=True)
         link = os.path.join(link_dir, "events.parquet")
         # lexists (not exists): a dangling link must be replaced, not
@@ -150,19 +153,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             os.symlink(target, link)
         src_dir = link_dir
-    schema, ts_expr = _events_source_shape(sf_dir)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src_dir)
-    )
-    return raw.selectExpr(
+    return reader.load(src_dir).selectExpr(
         "event_id", ts_expr, "user_id", "event_type", "value", "props"
     )
 
 
-def _events_split_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Ingest-once ts-range split of events.parquet into `n_files`
+def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Ingest-once ts-range split of events.parquet into _N_SPLIT_FILES
     parquet files with staggered mtimes.
 
     Why: a single-file replay is ONE micro-batch, and in append mode a
@@ -175,15 +172,13 @@ def _events_split_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str
     ts order because the file source orders files by modification time.
     """
     src = f"{sf_dir}/events.parquet"
-    path = scratch_path(
-        f"stream_events_split_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    path = scratch_path(f"stream_events_split_{_tag(sf_dir)}")
 
     schema, ts_expr = _events_source_shape(sf_dir)
 
     def write(p: str) -> None:
         raw = spark.read.schema(schema).parquet(src)
-        raw.repartitionByRange(n_files, "ts").write.mode("overwrite").parquet(p)
+        raw.repartitionByRange(_N_SPLIT_FILES, "ts").write.mode("overwrite").parquet(p)
         parts = sorted(
             f for f in os.listdir(p) if f.startswith("part-")
         )
@@ -193,26 +188,7 @@ def _events_split_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str
             os.utime(fp, (base + i, base + i))
 
     return ensure_written(
-        path, stat_fingerprint(src, n=n_files, ts_expr=ts_expr), write
-    )
-
-
-def _events_stream_batched(
-    spark: SparkSession, sf_dir: str, n_files: int = 4
-) -> DataFrame:
-    """events as a MULTI-BATCH stream (one file-per-trigger over the
-    ts-range split) — required by append-mode watermark semantics."""
-    apply_runtime_confs(spark)
-    split = _events_split_dir(spark, sf_dir, n_files)
-    schema, ts_expr = _events_source_shape(sf_dir)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split)
-    )
-    return raw.selectExpr(
-        "event_id", ts_expr, "user_id", "event_type", "value", "props"
+        path, stat_fingerprint(src, n=_N_SPLIT_FILES, ts_expr=ts_expr), write
     )
 
 
@@ -244,30 +220,21 @@ def watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exercised in tests/test_streaming.py with an out-of-order
     two-batch replay.
     """
-    ev = _events_stream_batched(spark, sf_dir).withWatermark("ts", "10 minutes")
+    ev = _events_stream(spark, sf_dir, batched=True).withWatermark(
+        "ts", "10 minutes"
+    )
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    name = _fresh_memory_sink(spark, "wm")
-    ckpt = scratch_sink(f"ckpt_wm_{os.path.basename(os.path.normpath(sf_dir))}")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _run_to_memory(agg, "wm", sf_dir).select(
         F.col("w.start").alias("window_start"), "n_events"
     )
 
 
 def foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch parquet append + read-back invariant counts."""
-    out = scratch_sink(f"febatch_{os.path.basename(os.path.normpath(sf_dir))}")
-    ckpt = scratch_sink(f"ckpt_febatch_{os.path.basename(os.path.normpath(sf_dir))}")
+    out = scratch_sink(f"febatch_{_tag(sf_dir)}")
+    ckpt = scratch_sink(f"ckpt_febatch_{_tag(sf_dir)}")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -308,9 +275,8 @@ def commit_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 / 0 / 1 — and the sink holds each event exactly once, because a
     rolled-back attempt publishes nothing (stm.clj:103-106).
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = scratch_sink(f"ledger_sink_{tag}")
-    ckpt = scratch_sink(f"ckpt_ledger_{tag}")
+    out = scratch_sink(f"ledger_sink_{_tag(sf_dir)}")
+    ckpt = scratch_sink(f"ckpt_ledger_{_tag(sf_dir)}")
     attempts: dict[int, int] = {}
     commits: dict[int, int] = {}
     rollbacks: dict[int, int] = {}
@@ -332,7 +298,7 @@ def commit_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             rollbacks[batch_id] = rollbacks.get(batch_id, 0) + 1
             raise
 
-    ev = _events_stream_batched(spark, sf_dir).select(
+    ev = _events_stream(spark, sf_dir, batched=True).select(
         "event_id", "event_type", "value"
     )
     for attempt in (1, 2):
@@ -369,22 +335,13 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Multi-batch replay for the same reason as watermark_tumbling:
     append-mode session windows only emit once a later batch's
     watermark closes them."""
-    ev = _events_stream_batched(spark, sf_dir).withWatermark("ts", "10 minutes")
+    ev = _events_stream(spark, sf_dir, batched=True).withWatermark(
+        "ts", "10 minutes"
+    )
     agg = ev.groupBy(
         F.session_window("ts", "30 minutes").alias("sw"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = _fresh_memory_sink(spark, "sess")
-    ckpt = scratch_sink(f"ckpt_sess_{os.path.basename(os.path.normpath(sf_dir))}")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _run_to_memory(agg, "sess", sf_dir).select(
         "user_id",
         F.col("sw.start").alias("session_start"),
         F.col("sw.end").alias("session_end"),
@@ -408,6 +365,41 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_parquet_append(ev, "dedup_true")
 
 
+def _run_to_memory(
+    stream_df: DataFrame, prefix: str, sf_dir: str, mode: str = "append"
+) -> DataFrame:
+    """Run `stream_df` to drain (availableNow) into a memory sink named
+    `<prefix>_<uuid8>`, checkpointed at `ckpt_<prefix>_<sf tag>`, and
+    return the sink table.
+
+    Earlier sinks of THIS prefix in the session are dropped first: a
+    memory sink's rows live in the driver JVM until the view is
+    dropped, so repeated invocations (bench warm+timed runs, the test
+    suite, a long driver session) would otherwise pin one result-sized
+    table per run. Safe because every caller materializes its result
+    before the next invocation starts (driver collect / bench count),
+    and the uuid suffix keeps concurrent queries on distinct names."""
+    spark = stream_df.sparkSession
+    for t in spark.catalog.listTables():
+        if t.isTemporary and t.name.startswith(prefix + "_"):
+            try:
+                spark.catalog.dropTempView(t.name)
+            except Exception:
+                pass  # concurrent drop: the goal state is already met
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = scratch_sink(f"ckpt_{prefix}_{_tag(sf_dir)}")
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(name)
+
+
 def _run_to_parquet_append(stream_df: DataFrame, tag: str) -> DataFrame:
     """Scale-true sink for unbounded streaming output: append to a
     parquet directory (executor-side writes, exactly-once via the sink
@@ -429,74 +421,30 @@ def _run_to_parquet_append(stream_df: DataFrame, tag: str) -> DataFrame:
 
 
 def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator: per-user totals via applyInPandasWithState
-    (the arbitrary-state path the built-in aggregations can't express —
-    per-key state mirrors the reference's per-txn lifecycle state,
-    events.clj:8-27).
+    """Per-user running totals (count + value sum) as a NATIVE streaming
+    aggregation: the per-user state lives in the JVM state store
+    (StateStoreSave), not a Python state machine — per-key state
+    mirrors the reference's per-txn lifecycle state (events.clj:8-27),
+    and a count plus a sum with no timeout is a plain fold that
+    groupBy().agg() expresses directly.
 
-    The accumulator is an exact INTEGER-MICROS fold (r11, the
-    rows-only→hash upgrade the r10 verdict asked for — the same
-    quantization treatment session/funnel state got): each value snaps
-    to floor(v·1e6 + 0.5) and the state carries int64 micros, so the
-    running total is order- and batch-split-independent and a second
-    engine replays it from the batch table (int64 headroom: ~9.2e12
-    in total value per user before the micros fold wraps — a bound a
-    per-user accumulator never meets in practice; the float .sum()
-    this replaced was pairwise-order-dependent and could never
-    hash-match). The final division by 1e6 is one correctly-rounded
-    double op shared by both engines."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total_q", LongType())]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        n, total_q = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            vq = np.floor(
-                pdf["value"].to_numpy(dtype=np.float64) * 1e6 + 0.5
-            ).astype(np.int64)
-            total_q += int(vq.sum())
-        state.update((n, total_q))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total_q / 1e6],
-            }
+    The sum is an exact INTEGER-MICROS fold: each value snaps to
+    floor(v·1e6 + 0.5) as a bigint, so the running total is order- and
+    batch-split-independent and a second engine replays it from the
+    batch table (int64 headroom: ~9.2e12 in total value per user). The
+    final division by 1e6 is one correctly-rounded double op shared by
+    both engines. Update mode emits each user's latest totals."""
+    totals = (
+        _events_stream(spark, sf_dir)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            (F.sum(F.floor(F.col("value") * 1e6 + 0.5)) / 1e6).alias(
+                "total_value"
+            ),
         )
-
-    ev = _events_stream(spark, sf_dir).select("user_id", "ts", "value")
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = _fresh_memory_sink(spark, "stateful")
-    ckpt = scratch_sink(f"ckpt_stateful_{os.path.basename(os.path.normpath(sf_dir))}")
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(totals, "stateful", sf_dir, mode="update")
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,11 +487,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NOTE: the newer transformWithStateInPandas API (typed ValueState /
 # timers / TTL, Spark 4) was evaluated here but its driver-side state
-# server needs a working google.protobuf, which this container lacks
-# (ImportError: cannot import name 'descriptor'); installs are not
-# permitted. Arbitrary-state coverage therefore stays on
-# applyInPandasWithState (stateful_running_totals above), which speaks
-# the classic Arrow protocol and runs everywhere.
+# server needs a working google.protobuf, which is not a dependency of
+# this project (ImportError: cannot import name 'descriptor').
+# Arbitrary-state coverage therefore stays on applyInPandasWithState
+# (session_timeout_totals and funnel_stream below — the two jobs no
+# native operator expresses), which speaks the classic Arrow protocol
+# and runs everywhere.
 
 
 def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +506,15 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch ts-split source so the watermark actually advances
     between micro-batches and timeouts fire; sessions still open at
     stream end deliberately never emit (they are live state, not
-    results)."""
+    results).
+
+    Why not native session_window + watermark: its windows close at
+    wm >= end where EventTimeTimeout fires at wm > timeout, so it emits
+    a session whose last-seen + 30 min equals the final watermark, and
+    it never emits a non-last session closed by an event inside the
+    final 10-minute delay. Both break the oracle —
+    tests/test_streaming.py::test_session_timeout_matches_oracle_at_edges.
+    """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = StructType(
@@ -631,7 +588,7 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    ev = _events_stream_batched(spark, sf_dir).select(
+    ev = _events_stream(spark, sf_dir, batched=True).select(
         "user_id", "ts"
     ).withWatermark("ts", "10 minutes")
     result = ev.groupBy("user_id").applyInPandasWithState(
@@ -641,20 +598,7 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = _fresh_memory_sink(spark, "sesstimeout")
-    ckpt = scratch_sink(
-        f"ckpt_sesstimeout_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(result, "sesstimeout", sf_dir)
 
 
 def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,6 +630,11 @@ def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time order across batches, which the ts-split replay
     guarantees (a production stream with bounded disorder buffers per
     key until the watermark, the standard discipline).
+
+    Why not a native operator: attempts restart in event time and the
+    job emits one row per COMPLETED attempt — an ordered per-key state
+    machine, not a window, a session or a dedup, so no built-in
+    streaming aggregation expresses it.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -766,7 +715,7 @@ def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             state.setTimeoutTimestamp(gc_ms)
 
     ev = (
-        _events_stream_batched(spark, sf_dir)
+        _events_stream(spark, sf_dir, batched=True)
         .select("user_id", "ts", "event_type")
         .withWatermark("ts", "10 minutes")
     )
@@ -777,20 +726,7 @@ def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = _fresh_memory_sink(spark, "funnel")
-    ckpt = scratch_sink(
-        f"ckpt_funnel_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_memory(result, "funnel", sf_dir)
 
 
 def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,12 +749,8 @@ def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials merge order-independently; double sums would drift)."""
     from opusdb_spark.operators import rollup
 
-    store = scratch_sink(
-        f"rollup_stream_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    ckpt = scratch_sink(
-        f"ckpt_rollup_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    store = scratch_sink(f"rollup_stream_{_tag(sf_dir)}")
+    ckpt = scratch_sink(f"ckpt_rollup_{_tag(sf_dir)}")
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch_id makes the fold idempotent: foreachBatch is
@@ -826,7 +758,7 @@ def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # without the high-water-mark skip would double-count its days
         rollup.refresh_rollup(spark, store, batch_df, batch_id=batch_id)
 
-    ev = _events_stream_batched(spark, sf_dir).select(
+    ev = _events_stream(spark, sf_dir, batched=True).select(
         "ts", "event_type", "value", "user_id"
     )
     q = (

@@ -135,8 +135,8 @@ PROBE = [
     # ivfpq); plus the two r11 hash-upgraded paths with corpus-shaped
     # work — the integer-grid bucket cosine sweep rides the existing
     # llm_embedding_neardup slot above, and the integer-micros
-    # stateful totals are a second applyInPandasWithState path at
-    # volume
+    # stateful totals are a native streaming aggregation (state-store
+    # fold) at volume
     "stream_watermark_late",
     "stream_foreachbatch_sink",
     "llm_pq_recall_eval",

@@ -2084,6 +2084,31 @@ def test_opusdb_log_stream_reads_exact_delta(spark, tmp_path):
     assert set(all_recs) == {f"x{i}" for i in range(75)}
 
 
+def test_opusdb_log_missing_path_fails_batch_but_streams_empty(spark, tmp_path):
+    """A batch scan of a log that is not there is an error; only the
+    stream reader treats a not-yet-created log as an empty stream (a
+    tail may start before the first append). Both readers and the
+    writer require a path."""
+    from opusdb_spark.sources import opusdb_log as olog
+
+    missing = str(tmp_path / "absent.log")
+    olog.register(spark)
+    with pytest.raises(Exception, match="absent.log"):
+        spark.read.format("opusdb_log").option("path", missing).load().count()
+    with pytest.raises(FileNotFoundError):
+        olog.OpusdbLogReader({"path": missing}).partitions()
+    tail = olog.OpusdbLogStreamReader({"path": missing})
+    rows, end = tail.read(tail.initialOffset())
+    assert list(rows) == [] and end == {}
+    for cls in (
+        olog.OpusdbLogReader,
+        olog.OpusdbLogWriter,
+        olog.OpusdbLogStreamReader,
+    ):
+        with pytest.raises(ValueError, match="requires a path"):
+            cls({})
+
+
 def test_mmr_select_matches_numpy_greedy(spark):
     """mmr_select's picks must equal an independent numpy greedy MMR
     (same lambda, same id tie-break) on the sf0.001 corpus."""

@@ -182,10 +182,7 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from opusdb_spark.streaming.jobs import (
-        _events_source_shape,
-        _events_stream_batched,
-    )
+    from opusdb_spark.streaming.jobs import _events_source_shape, _events_stream
 
     sf_dir = str(tmp_path / "sfnanos")
     os.makedirs(sf_dir)
@@ -212,7 +209,7 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
     schema, ts_expr = _events_source_shape(sf_dir)
     assert "timestamp_micros" in ts_expr, "nanos must take the int64 path"
 
-    stream = _events_stream_batched(spark, sf_dir, n_files=2)
+    stream = _events_stream(spark, sf_dir, batched=True)
     name = f"nanos_{uuid.uuid4().hex[:8]}"
     q = (
         stream.writeStream.format("memory")
@@ -229,6 +226,58 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
         for i in range(n)
     ]
     assert [r.ts for r in got] == want
+
+
+def test_stateful_totals_keep_state_in_the_native_store(spark):
+    """stream_stateful_true is a native streaming aggregation: every
+    progress report names only StateStoreSave state operators (no
+    applyInPandasWithState Python state machine), and after the replay
+    the store holds exactly one state row per distinct user."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from opusdb_spark.streaming import jobs
+    from opusdb_spark.tables import table
+    from tests.conftest import SF_SMALL
+
+    started, ended, progress = set(), set(), []
+
+    def ours(name):
+        return bool(name) and name.startswith("stateful_")
+
+    class Watch(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            if ours(event.name):
+                started.add(event.id)
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if ours(p.name):
+                progress.append(
+                    [(o.operatorName, o.numRowsTotal) for o in p.stateOperators]
+                )
+
+        def onQueryTerminated(self, event):
+            ended.add(event.id)
+
+    watch = Watch()
+    spark.streams.addListener(watch)
+    try:
+        jobs.stateful_running_totals(spark, SF_SMALL).count()
+        # listener events arrive asynchronously; a query's progress
+        # events are all delivered before its termination event
+        deadline = time.monotonic() + 60
+        while not (started and started <= ended) and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(watch)
+    assert started and started <= ended, "listener never saw the query end"
+    assert progress and all(progress), progress
+    names = {name for ops in progress for name, _ in ops}
+    assert names == {"stateStoreSave"}, names
+    n_users = table(spark, SF_SMALL, "events").select("user_id").distinct().count()
+    assert [rows for _, rows in progress[-1]] == [n_users]
 
 
 def test_commit_ledger_commit_once_rollback_per_retry(spark):
