@@ -30,8 +30,8 @@ locally it bounds how small a per-query number can meaningfully be.
 
 TPC-H drift post-mortem (r12, VERDICT r11 ask #3): the sf0.1 TPC-H
 total slid 15.09 (r8) → 17.15 → 20.05 → 19.48 s on byte-identical
-session confs and query SQL (git-verified). scripts/tpch_profile.py
-measured 12-20 JOBS per query — ~10 of them parquet footer/schema
+session confs and query SQL (git-verified). scripts/isolate.py
+'tpch_q*' measured 12-20 JOBS per query — ~10 of them parquet footer/schema
 reads from register_views re-resolving all ten tables per build — so
 the block's wall was (job count) × (per-job floor), and the "drift"
 was floor history: 273 total jobs × 55/71/79 ms per-job cost fits
@@ -52,7 +52,9 @@ import json
 import os
 import sys
 import time
+import uuid
 from pathlib import Path
+from typing import NamedTuple
 
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
@@ -341,7 +343,8 @@ def ensure_scaled(
 
 
 # Steady-state timing discipline, applied IDENTICALLY to every timed
-# loop (headline, TPC-H sf0.1, sf1 ladder, TPC-H sf1, streaming): one
+# loop (headline, TPC-H sf0.1, sf1 ladder, TPC-H sf1 through
+# time_section; the streaming slot through time_query alone): one
 # untimed warmup (codegen + JIT + parquet footers + one-time ingest
 # layouts), then time FRESH builds of the query and keep the minimum.
 # Rebuilding gives new RDD lineage, so no shuffle-stage reuse — each
@@ -357,56 +360,69 @@ def ensure_scaled(
 _RUNS = 2
 _MAX_RUNS = 5
 TIMING = f"warmup+best_of_{_RUNS}_adaptive"
+# best-of-3 on the sf1 ladder (vs 2 elsewhere): it carries the
+# shuffle-heaviest plans, whose r7 run-to-run spreads (0.5-1.0 s on
+# join_sort_merge / llm_semdedup) were wide enough to mask real
+# regressions; a third sample tightens the minimum for ~30 s total.
+LADDER_RUNS = 3
 
 
-def time_query(spark, build, runs: int = _RUNS) -> tuple[float, int]:
-    """Warmup once, then best-of-`runs` fresh builds → (sec, rows),
-    resampling noisy keys.
+class Timing(NamedTuple):
+    """One key's steady-state timing (see time_query)."""
+
+    sec: float
+    rows: int
+    spread: float
+    spread_worst: float
+    n_jobs: int
+    n_stages: int
+    n_tasks: int
+
+
+def time_query(spark, build, runs: int = _RUNS) -> Timing:
+    """Warmup once, then best-of-`runs` fresh builds, resampling noisy
+    keys.
 
     Noise protocol (r10, VERDICT r9 §5: best-of-2 was refuted by
     llm_decontaminate's 8.49 s spread against a 5.04 s best — one
     number with its error bar wider than itself is unusable for
     round-over-round comparison): after the base runs, keep
     resampling (cap `_MAX_RUNS`) while the two BEST runs disagree by
-    more than max(50% of best, 0.2 s). `LAST_SPREAD` publishes
-    second_best − best — the reproducibility of the minimum actually
-    reported — rather than worst − best, which a single outlier (GC,
-    writeback) pins arbitrarily high no matter how many clean samples
-    agree. Cross-round deltas below the spread are noise, not
-    regressions."""
-    global LAST_SPREAD, LAST_SPREAD_WORST, LAST_N_JOBS
+    more than max(50% of best, 0.2 s). `spread` is second_best − best
+    — the reproducibility of the minimum actually reported — rather
+    than worst − best, which a single outlier (GC, writeback) pins
+    arbitrarily high no matter how many clean samples agree.
+    Cross-round deltas below the spread are noise, not regressions.
+    `spread_worst` keeps the pre-r10 worst − best definition (ADVICE
+    r10) so spread deltas across the protocol change stay
+    interpretable from the artifact.
+
+    Job/stage/task counts (VERDICT r12 ask #1): wall ≈ n_jobs ×
+    per-job floor + compute, and the r12 post-mortem proved job-count
+    × floor swings masquerade as plan drift. The counts are a property
+    of the BUILD (identical across runs on a warm session), so the
+    last run's are published; -1 marks a status-tracker hiccup."""
     build().count()
     times: list[float] = []
     n = 0
+    group = ""
     sc = spark.sparkContext
-    st = sc.statusTracker()
 
     def one_run() -> None:
-        nonlocal n
+        nonlocal n, group
         # Drop any .cache() a prior run populated (cache lookup is by
         # logical plan, so the rebuilt query would hit it) — each timed
         # run must recompute everything itself.
         spark.catalog.clearCache()
-        # Job-count the timed window (VERDICT r12 ask #1): wall ≈
-        # n_jobs × per-job floor + compute, and the r12 post-mortem
-        # proved job-count × floor swings masquerade as plan drift.
-        # Counting per run via a job group costs microseconds; the
-        # count is a property of the BUILD (identical across runs on
-        # a warm session), so the last run's count is published.
         # Group names are globally unique: the status tracker keys job
         # ids by group NAME for the app's lifetime, so a reused name
         # would accumulate other queries' jobs into the count.
-        _SEQ[0] += 1
-        group = f"bench_run_{_SEQ[0]}"
+        group = f"bench_run_{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         t0 = time.perf_counter()
         n = build().count()
         times.append(time.perf_counter() - t0)
         sc.setJobGroup("bench_idle", "bench_idle")
-        try:
-            globals()["LAST_N_JOBS"] = len(st.getJobIdsForGroup(group))
-        except Exception:
-            globals()["LAST_N_JOBS"] = -1  # tracker hiccup: mark unknown
 
     for _ in range(runs):
         one_run()
@@ -415,19 +431,31 @@ def time_query(spark, build, runs: int = _RUNS) -> tuple[float, int]:
         if len(ts) >= 2 and (ts[1] - ts[0]) <= max(0.5 * ts[0], 0.2):
             break
         one_run()
+    st = sc.statusTracker()
+    try:
+        job_ids = st.getJobIdsForGroup(group)
+        stage_ids = {
+            sid
+            for jid in job_ids
+            if (job := st.getJobInfo(jid)) is not None
+            for sid in job.stageIds
+        }
+        n_tasks = sum(
+            stage.numTasks
+            for sid in stage_ids
+            if (stage := st.getStageInfo(sid)) is not None
+        )
+        counts = (len(job_ids), len(stage_ids), n_tasks)
+    except Exception:
+        counts = (-1, -1, -1)  # tracker hiccup: mark unknown
     ts = sorted(times)
-    LAST_SPREAD = round((ts[1] - ts[0]) if len(ts) >= 2 else 0.0, 4)
-    # Transition aid (ADVICE r10): spreads before r10 meant worst−best;
-    # publish that definition too so round-over-round spread deltas
-    # across the protocol change stay interpretable from the artifact.
-    LAST_SPREAD_WORST = round((ts[-1] - ts[0]) if len(ts) >= 2 else 0.0, 4)
-    return round(ts[0], 4), n
-
-
-LAST_SPREAD = 0.0
-LAST_SPREAD_WORST = 0.0
-LAST_N_JOBS = -1
-_SEQ = [0]
+    return Timing(
+        round(ts[0], 4),
+        n,
+        round((ts[1] - ts[0]) if len(ts) >= 2 else 0.0, 4),
+        round((ts[-1] - ts[0]) if len(ts) >= 2 else 0.0, 4),
+        *counts,
+    )
 
 
 def measure_floor_ms(spark, jobs: int = 11) -> float:
@@ -450,79 +478,67 @@ def measure_floor_ms(spark, jobs: int = 11) -> float:
     return round(costs[len(costs) // 2] * 1000, 1)
 
 
-def run_ladder(spark, qs, sf1_dir: str) -> dict:
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    spreads_w: dict[str, float] = {}
-    lineitem_rows = spark.read.parquet(f"{sf1_dir}/lineitem.parquet").count()
-    # PREPARE PHASE (r8, the BENCH_r07 late-ladder anomaly): several
-    # ladder queries build multi-GB ingest-once artifacts (minhash
-    # signatures, winnowing fingerprints, trade edges, the sf1 ANN
-    # index) on their first run. In r7's driver bench — a fresh
-    # container with an empty .scratch — those builds ran inside the
-    # interleaved warmup, and the dirty-page writeback they queued
-    # landed in the immediately-following timed windows: every
-    # late-ladder query came in 2-6× over this VM's in-order replay
-    # (events_revenue_pareto 7.46 s vs 1.22 s, llm_substring_dedup
-    # 4.98 vs 1.19, tpch_q18 5.48 vs 3.20) while early-ladder and
-    # headline numbers matched to the millisecond (sf1 agg_q1 0.631 vs
-    # 0.629). Running every query once UP FRONT pays all artifact
-    # builds before any timing starts, and the sync() fence flushes
-    # their writeback out of the timed section.
-    for name in SF1_LADDER:
+def time_section(spark, qs, names, sf_dir: str, runs: int = _RUNS) -> dict:
+    """Time registry keys `names` at `sf_dir` as one section: prepare
+    every key once, fence the writeback, measure the section's own
+    floor, then time_query each key. Returns per-key maps (`queries`,
+    `spread`, `spread_worst`, `n_jobs`, `n_stages`, `n_tasks`) plus
+    `floor_ms`.
+
+    PREPARE PHASE (r8, the BENCH_r07 late-ladder anomaly; r9 for the
+    headline's near-constant ~70 ms adder): many keys build ingest-once
+    artifacts (minhash signatures, winnowing fingerprints, trade edges,
+    the staged ANN index and its PQ codebooks) on their first run. In a
+    fresh container those builds ran inside the interleaved warmups,
+    and the dirty-page writeback they queued landed in the immediately
+    following timed windows: every late-ladder key came in 2-6× over
+    an in-order replay (events_revenue_pareto 7.46 s vs 1.22 s,
+    tpch_q18 5.48 vs 3.20) while early keys matched to the
+    millisecond. Running every key once UP FRONT pays all artifact
+    builds before any timing starts, and the sync() fence flushes their
+    writeback out of the timed section. The floor is probed right
+    where the timed section starts (r12: the r8→r11 "TPC-H drift" was
+    per-job window cost × job count — with a local floor in the
+    artifact, such drift is attributable from the file alone)."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    for name in names:
         t0 = time.perf_counter()
-        qs[name](spark, sf1_dir).count()
+        qs[name](spark, sf_dir).count()
         print(
-            f"# sf1 prepare {name}: {time.perf_counter() - t0:.3f}s",
+            f"# {tag} prepare {name}: {time.perf_counter() - t0:.3f}s",
             file=sys.stderr,
         )
     try:
         os.sync()
     except (AttributeError, OSError):
         pass  # non-POSIX: timing proceeds without the writeback fence
-    # The ladder's own floor (r12): completes the per-section floor
-    # coverage (headline start/end, tpch, streaming) — sf1 walls on
-    # this VM swing with the same per-job window cost.
-    sf1_floor_ms = measure_floor_ms(spark)
-    print(f"# sf1 floor_ms: {sf1_floor_ms}", file=sys.stderr)
-    n_jobs: dict[str, int] = {}
-    for name in SF1_LADDER:
-        # best-of-3 here (vs 2 elsewhere): the sf1 ladder carries the
-        # shuffle-heaviest plans, whose r7 run-to-run spreads (0.5-1.0 s
-        # on join_sort_merge / llm_semdedup) were wide enough to mask
-        # real regressions; a third sample tightens the minimum for
-        # ~30 s total.
-        timings[name], n = time_query(
-            spark, lambda: qs[name](spark, sf1_dir), runs=3
+    floor_ms = measure_floor_ms(spark)
+    print(f"# {tag} floor_ms: {floor_ms}", file=sys.stderr)
+    timed: dict[str, Timing] = {}
+    for name in names:
+        t = timed[name] = time_query(
+            spark, lambda: qs[name](spark, sf_dir), runs=runs
         )
-        spreads[name] = LAST_SPREAD
-        spreads_w[name] = LAST_SPREAD_WORST
-        n_jobs[name] = LAST_N_JOBS
         print(
-            f"# sf1 {name}: {timings[name]:.3f}s (spread "
-            f"{LAST_SPREAD:.3f}s, {n} rows, {LAST_N_JOBS} jobs)",
+            f"# {tag} {name}: {t.sec:.3f}s (spread {t.spread:.3f}s, worst "
+            f"{t.spread_worst:.3f}s, {t.rows} rows, {t.n_jobs} jobs, "
+            f"{t.n_stages} stages, {t.n_tasks} tasks)",
             file=sys.stderr,
         )
-    q1 = timings.get("agg_q1", 0.0)
-    return {
-        "queries": timings,
-        "floor_ms": sf1_floor_ms,
-        # second_best−best (r10 definition) plus the pre-r10
-        # worst−best definition for cross-round comparability
-        # (ADVICE r10): deltas below the spread are run-to-run
-        # noise, not regressions
-        "spread": spreads,
-        "spread_worst": spreads_w,
-        # Per-slot JOB COUNTS (VERDICT r12 ask #1): the sf1 slots that
-        # rebuild/read .scratch stores inside the timed window pay
-        # multiple write/collect/footer jobs per run, so their walls
-        # carry an n_jobs × per-job-floor term that swings with the
-        # window. With n_jobs in the artifact, an above-spread delta
-        # decomposes as Δwall ≈ n_jobs × Δfloor without re-running.
-        "n_jobs": n_jobs,
-        "lineitem_rows": lineitem_rows,
-        "q1_rows_per_sec": int(lineitem_rows / q1) if q1 else 0,
-    }
+    section = {"queries": {k: t.sec for k, t in timed.items()}}
+    for f in ("spread", "spread_worst", "n_jobs", "n_stages", "n_tasks"):
+        section[f] = {k: getattr(t, f) for k, t in timed.items()}
+    section["floor_ms"] = floor_ms
+    return section
+
+
+def run_ladder(spark, qs, sf1_dir: str) -> dict:
+    lineitem_rows = spark.read.parquet(f"{sf1_dir}/lineitem.parquet").count()
+    out = time_section(spark, qs, SF1_LADDER, sf1_dir, runs=LADDER_RUNS)
+    q1 = out["queries"].get("agg_q1", 0.0)
+    out["lineitem_rows"] = lineitem_rows
+    out["q1_rows_per_sec"] = int(lineitem_rows / q1) if q1 else 0
+    return out
 
 
 # The driver tail-captures only the LAST ~2000 chars of stdout and
@@ -747,95 +763,33 @@ def main() -> None:
     # Warm the JVM + parquet footers with one light action.
     qs["agg_invariant"](spark, sf_dir).collect()
 
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    spreads_w: dict[str, float] = {}
     lineitem_rows = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # PREPARE PHASE (r9, the BENCH_r08 uniform-adder finding): the r8
-    # driver bench read 10/10 r7-shared headline keys slower by a
-    # near-constant ~70 ms while big queries and TPC-H stayed flat —
-    # the same mechanism the r8 ladder fix diagnosed, one level up. In
-    # a fresh container the headline warmups build the ingest-once
-    # artifacts (minhash signatures, the staged ANN index — which
-    # since r8 also trains PQ codebooks into the same directory, so
-    # the build writes MORE bytes than r7's), and their dirty-page
-    # writeback drains inside the timed windows that follow,
-    # inflating every small query by a near-constant absolute delta.
-    # Pay all artifact builds up front and fence the writeback out of
-    # the timed section, exactly like run_ladder.
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
-        print(
-            f"# prepare {name}: {time.perf_counter() - t0:.3f}s",
-            file=sys.stderr,
-        )
-    try:
-        os.sync()
-    except (AttributeError, OSError):
-        pass  # non-POSIX: timing proceeds without the writeback fence
-    # Calibrate this window's scheduling floor right where the timed
-    # section starts (after the writeback fence, before any timed key).
-    floor_ms = measure_floor_ms(spark)
-    print(f"# floor_ms: {floor_ms}", file=sys.stderr)
-    for name in HEADLINE:
-        timings[name], n = time_query(spark, lambda: qs[name](spark, sf_dir))
-        spreads[name] = LAST_SPREAD
-        spreads_w[name] = LAST_SPREAD_WORST
-        print(
-            f"# {name}: {timings[name]:.3f}s (spread {LAST_SPREAD:.3f}s, "
-            f"{n} rows)",
-            file=sys.stderr,
-        )
-
+    head = time_section(spark, qs, HEADLINE, sf_dir)
     # Bracket the timed section: a floor that DRIFTED between the two
     # probes marks an unstable window (the r11 local repro: headline
     # 2x inflated by suite-writeback contention while the START floor
     # read only 1.2x — the end probe catches mid-section drift).
     floor_end_ms = measure_floor_ms(spark)
     print(f"# floor_end_ms: {floor_end_ms}", file=sys.stderr)
-    total = round(sum(timings.values()), 4)
-    q1_rows_per_sec = int(lineitem_rows / timings["agg_q1"]) if timings["agg_q1"] else 0
+    q1 = head["queries"]["agg_q1"]
     out = {
         "metric": "headline_queries_total_time",
-        "value": total,
+        "value": round(sum(head["queries"].values()), 4),
         "unit": "sec",
         "timing": TIMING,
-        "queries": timings,
-        "spread": spreads,
-        "spread_worst": spreads_w,
+        **head,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "q1_rows_per_sec": q1_rows_per_sec,
-        "floor_ms": floor_ms,
+        "q1_rows_per_sec": int(lineitem_rows / q1) if q1 else 0,
         "floor_end_ms": floor_end_ms,
     }
     # Classic TPC-H suite subtotal (separate section — headline total
     # stays comparable across rounds). Same timing discipline.
     if os.environ.get("SPARK_GRAFT_TPCH", "1") != "0":
-        tpch = {}
-        tpch_spreads = {}
-        tpch_spreads_w = {}
-        # The block's own floor (r12): the r8→r11 "TPC-H drift" was
-        # per-job window cost × job count — with a local floor in the
-        # artifact, the next such drift is attributable from the file.
-        tpch_floor_ms = measure_floor_ms(spark)
-        print(f"# tpch floor_ms: {tpch_floor_ms}", file=sys.stderr)
-        for name in sorted(k for k in qs if k.startswith("tpch_q")):
-            tpch[name], n = time_query(spark, lambda: qs[name](spark, sf_dir))
-            tpch_spreads[name] = LAST_SPREAD
-            tpch_spreads_w[name] = LAST_SPREAD_WORST
-            print(
-                f"# tpch {name}: {tpch[name]:.3f}s (spread "
-                f"{LAST_SPREAD:.3f}s, {n} rows)",
-                file=sys.stderr,
-            )
-        out["tpch"] = {
-            "queries": tpch,
-            "spread": tpch_spreads,
-            "spread_worst": tpch_spreads_w,
-            "floor_ms": tpch_floor_ms,
-            "total": round(sum(tpch.values()), 4),
-        }
+        tpch = time_section(
+            spark, qs, sorted(k for k in qs if k.startswith("tpch_q")), sf_dir
+        )
+        tpch["total"] = round(sum(tpch["queries"].values()), 4)
+        out["tpch"] = tpch
     # Streaming at volume (VERDICT r5 §7): replay the full events table
     # through the EventTimeTimeout session operator (multi-batch
     # ts-split replay, Python stateful processing, bounded state) and
@@ -861,25 +815,25 @@ def main() -> None:
         events_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
         n_batches = events_stream_n_batches(spark, sf_dir)
         stream_floor_ms = measure_floor_ms(spark)
-        sec, n = time_query(
+        t = time_query(
             spark, lambda: qs["stream_session_timeout"](spark, sf_dir)
         )
-        rows_per_sec = int(events_rows / sec) if sec else 0
+        rows_per_sec = int(events_rows / t.sec) if t.sec else 0
         out["streaming"] = {
             "query": "stream_session_timeout",
-            "sec": sec,
-            "spread": LAST_SPREAD,
-            "spread_worst": LAST_SPREAD_WORST,
+            "sec": t.sec,
+            "spread": t.spread,
+            "spread_worst": t.spread_worst,
             "floor_ms": stream_floor_ms,
             "n_batches": n_batches,
             "events_rows": events_rows,
             "rows_per_sec": rows_per_sec,
-            "sessions_closed": n,
+            "sessions_closed": t.rows,
         }
         print(
-            f"# streaming stream_session_timeout: {sec:.3f}s "
-            f"(spread {LAST_SPREAD:.3f}s, floor {stream_floor_ms} ms, "
-            f"{n_batches} batches, {events_rows} events -> {n} closed "
+            f"# streaming stream_session_timeout: {t.sec:.3f}s "
+            f"(spread {t.spread:.3f}s, floor {stream_floor_ms} ms, "
+            f"{n_batches} batches, {events_rows} events -> {t.rows} closed "
             f"sessions, {rows_per_sec} rows/s)",
             file=sys.stderr,
         )
@@ -891,27 +845,17 @@ def main() -> None:
     ):
         sf1_dir = ensure_sf1(spark, sf_dir)
         out["sf1"] = run_ladder(spark, qs, sf1_dir)
-        tpch_sf1: dict[str, float] = {}
-        for name in TPCH_SF1:
-            tpch_sf1[name], n = time_query(
-                spark, lambda: qs[name](spark, sf1_dir)
-            )
-            print(
-                f"# sf1 tpch {name}: {tpch_sf1[name]:.3f}s ({n} rows)",
-                file=sys.stderr,
-            )
-        out["sf1"]["tpch"] = {
-            "queries": tpch_sf1,
-            "total": round(sum(tpch_sf1.values()), 4),
-        }
+        tpch_sf1 = time_section(spark, qs, TPCH_SF1, sf1_dir)
+        tpch_sf1["total"] = round(sum(tpch_sf1["queries"].values()), 4)
+        out["sf1"]["tpch"] = tpch_sf1
     emit(out)
     # Teardown: release the graph family's loop-invariant persisted
     # handles (one per sf_dir touched — sf0.1 AND sf1 here) before
     # stopping; clearCache() inside time_query drops cached *data* but
     # the DataFrame handles would stay registered for process lifetime.
-    from opusdb_spark.queries.graph import release_graph_caches
+    from opusdb_spark.operators.cache import release_loop_caches
 
-    release_graph_caches()
+    release_loop_caches()
     spark.stop()
 
 

@@ -24,18 +24,15 @@ from opusdb_spark.tables import table
 
 # Loop-invariant caches: one live handle per (query, sf_dir), shared
 # implementation in operators/cache.py (ADVICE r4: persist without
-# unpersist; ADVICE r6: wire the release hook into teardown — done in
-# tests/conftest.py's session fixture and bench.py main).
-from opusdb_spark.operators.cache import loop_cache, release_loop_caches
+# unpersist; ADVICE r6: wire the release hook into teardown — done by
+# calling operators.cache.release_loop_caches from tests/conftest.py's
+# session fixture, bench.py main, scripts/isolate.py and
+# scripts/scale_probe.py).
+from opusdb_spark.operators.cache import loop_cache
 
 
 def _loop_cache(key: str, sf_dir: str, df: DataFrame) -> DataFrame:
     return loop_cache(f"graph:{key}:{sf_dir}", df)
-
-
-def release_graph_caches() -> None:
-    """Unpersist every live loop-invariant cache (teardown hook)."""
-    release_loop_caches()
 
 # Directed nation→nation trade edges: supplier's nation ships to
 # customer's nation, weighted by decimal-exact extended price. This is

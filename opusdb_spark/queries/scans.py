@@ -23,8 +23,6 @@ from opusdb_spark.sources.formats import list_store_files, scratch_sink
 from opusdb_spark.registry import register
 from opusdb_spark.tables import table
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-
 
 @register(
     "scan_full",

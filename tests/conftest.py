@@ -28,9 +28,9 @@ def spark():
     # Bound executor memory across the suite: drop the graph family's
     # loop-invariant persisted handles before tearing the session down
     # (graph.py keeps one live handle per (query, sf_dir) otherwise).
-    from opusdb_spark.queries.graph import release_graph_caches
+    from opusdb_spark.operators.cache import release_loop_caches
 
-    release_graph_caches()
+    release_loop_caches()
     s.stop()
 
 

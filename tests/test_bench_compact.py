@@ -16,7 +16,11 @@ instrumentation survive the trims.
 
 from __future__ import annotations
 
+import ast
 import json
+from pathlib import Path
+
+import pytest
 
 import bench
 
@@ -122,29 +126,87 @@ def test_compact_line_survives_missing_sections():
         assert len(json.dumps(line)) <= bench._FINAL_LINE_BUDGET
 
 
-def test_time_query_counts_jobs():
-    """time_query's job-group instrumentation (r13): after a timed
-    build, LAST_N_JOBS must hold the run's job count (≥1; the exact
-    number is AQE's business — even range().count() is 2 stage-jobs).
-    The load-bearing property is STABILITY: group names are unique per
-    run (the status tracker accumulates ids per group NAME for the
-    app's lifetime), so a repeat of the same build must report the
-    SAME count — a reused name would double it."""
+@pytest.fixture(scope="module")
+def local2():
     from opusdb_spark.session import get_spark
 
     spark = get_spark(
         app_name="njobs-test", master="local[2]", shuffle_partitions=2
     )
-    try:
-        bench.time_query(spark, lambda: spark.range(100), runs=1)
-        first = bench.LAST_N_JOBS
-        assert first >= 1, first
-        bench.time_query(spark, lambda: spark.range(100), runs=1)
-        assert bench.LAST_N_JOBS == first, (
-            "job-group name reuse leaked a prior run's jobs into the count"
-        )
-    finally:
-        spark.stop()
+    yield spark
+    spark.stop()
+
+
+def test_time_query_counts_jobs(local2):
+    """time_query's job-group instrumentation (r13): the returned
+    record's n_jobs must hold the run's job count (≥1; the exact
+    number is AQE's business — even range().count() is 2 stage-jobs),
+    and its stages and tasks come from the same group. The
+    load-bearing property is STABILITY: group names are unique per
+    run (the status tracker accumulates ids per group NAME for the
+    app's lifetime), so a repeat of the same build must report the
+    SAME count — a reused name would double it."""
+    first = bench.time_query(local2, lambda: local2.range(100), runs=1)
+    assert first.n_jobs >= 1, first
+    assert first.n_stages >= 1, first
+    assert first.n_tasks >= first.n_stages, first
+    again = bench.time_query(local2, lambda: local2.range(100), runs=1)
+    assert again.n_jobs == first.n_jobs, (
+        "job-group name reuse leaked a prior run's jobs into the count"
+    )
+
+
+def test_time_section_prepares_and_times_every_key(local2):
+    """time_section runs each key once (prepare), then time_query's
+    warm-up plus at least `runs` timed builds, and reports every key in
+    every per-key map next to a positive section floor."""
+    calls = {"a": 0, "b": 0, "c": 0}
+
+    def builder(name):
+        def build(s, _sf_dir):
+            calls[name] += 1
+            return s.range(10)
+
+        return build
+
+    qs = {k: builder(k) for k in calls}
+    runs = 2
+    sec = bench.time_section(local2, qs, list(calls), "stub_sf", runs=runs)
+    for f in ("queries", "spread", "spread_worst", "n_jobs", "n_stages",
+              "n_tasks"):
+        assert set(sec[f]) == set(calls), f
+    assert sec["floor_ms"] > 0
+    for k, n in calls.items():
+        assert n >= 1 + 1 + runs, (k, n)
+
+
+def test_scripts_use_only_existing_bench_names():
+    """Every `bench.<name>` attribute and `from bench import <name>` in
+    scripts/*.py must exist on bench: scripts run by hand, so a renamed
+    or removed harness name (as when time_query's results moved from
+    module globals into its return value) would otherwise break them
+    silently until someone next runs one."""
+    seen, missing = 0, []
+    for path in sorted((Path(bench.__file__).parent / "scripts").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "bench"
+            ):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom) and node.module == "bench":
+                names = [a.name for a in node.names]
+            else:
+                continue
+            seen += len(names)
+            missing += [
+                f"{path.name}:{node.lineno}: bench.{n}"
+                for n in names
+                if not hasattr(bench, n)
+            ]
+    assert seen, "no script references bench — the scan found nothing"
+    assert not missing, missing
 
 
 def test_scaled_table_layout_policy():
