@@ -26,12 +26,25 @@ Scale notes: every operation is a window over `partitionBy(key)` — one
 hash shuffle on the key, no driver state. At 100 TB the versions table
 is written partitioned/bucketed by key so these windows are
 shuffle-free local sorts.
+
+The write-point clock is the reference's AtomicLong WRITE_POINT
+(stm.clj:12): when `versions` is a bare parquet scan its high-water
+mark is already in the files' row-group statistics, so a commit reads
+it from the footers on the driver and stamps the new point as a
+literal. Any other plan (a projection, a filter, an in-memory frame),
+a non-local file or a row group without min/max takes a one-row
+`max` aggregate instead.
 """
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+from opusdb_spark.sources import formats
 
 MAX_HISTORY = 16  # reference stm.clj:10
 
@@ -134,15 +147,51 @@ def retain(
     )
 
 
+def _footer_write_point(versions: DataFrame, version: str) -> int | None:
+    """max(version) + 1 from the row-group statistics of the files a
+    bare parquet scan reads, or None when the plan is anything else, a
+    file is not local, or the footers cannot answer (see
+    formats.column_range)."""
+    plan = versions._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    if not isinstance(versions.schema[version].dataType, IntegralType):
+        return None
+    files = []
+    for uri in versions.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        files.append(unquote(u.path))
+    rng = formats.column_range(files, version)
+    return None if rng is None else rng[1] + 1
+
+
 def _at_next_write_point(
     versions: DataFrame, rows: DataFrame, version: str
 ) -> DataFrame:
     """`versions` plus `rows` stamped with ONE new write point,
     max(existing) + 1 (1 on an empty history) — the single WRITE_POINT
-    bump per committing transaction (stm.clj:42-43). The next point is
-    a one-row aggregate broadcast-crossjoined onto `rows`."""
-    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = rows.crossJoin(F.broadcast(nxt)).withColumnRenamed("_wp", version)
+    bump per committing transaction (stm.clj:42-43).
+
+    The reference reads that clock from an AtomicLong (stm.clj:12). The
+    analogue here is the parquet footer: on a bare scan the next point
+    comes from row-group `max` statistics and is stamped as a literal
+    of the version column's type, so the commit runs no clock job. Any
+    other input (a derived plan, a non-local file, a row group without
+    min/max, an empty history) stamps a one-row aggregate,
+    broadcast-crossjoined onto `rows`."""
+    nxt = _footer_write_point(versions, version)
+    if nxt is not None:
+        dtype = versions.schema[version].dataType
+        stamped = rows.withColumn(version, F.lit(nxt).cast(dtype))
+    else:
+        agg = versions.agg(
+            (F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp")
+        )
+        stamped = rows.crossJoin(F.broadcast(agg)).withColumnRenamed(
+            "_wp", version
+        )
     return versions.unionByName(stamped.select(*versions.columns))
 
 

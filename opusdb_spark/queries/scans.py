@@ -19,7 +19,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from opusdb_spark.sources.formats import list_store_files, scratch_sink
+from opusdb_spark.sources.formats import (
+    column_range,
+    list_store_files,
+    scratch_sink,
+)
 from opusdb_spark.registry import register
 from opusdb_spark.tables import table
 
@@ -293,8 +297,6 @@ def sink_clustered_write(spark, sf_dir):
     fraction of the table a clustered scan never opens. At 100 TB this
     ordering decides whether a date-bounded query reads 1/84th of the
     files or all of them."""
-    import pyarrow.parquet as pq
-
     base = os.path.basename(os.path.normpath(sf_dir))
     out = scratch_sink(f"clustered_{base}")
     li = table(spark, sf_dir, "lineitem").select(
@@ -310,15 +312,8 @@ def sink_clustered_write(spark, sf_dir):
     n_files, n_overlap = 0, 0
     for fpath, _ in list_store_files(out, recursive=False):
         n_files += 1
-        md = pq.ParquetFile(fpath).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        ci = names.index("l_shipdate")
-        mins, maxs = [], []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        if min(mins) <= hi and max(maxs) >= lo:
+        f_lo, f_hi = column_range([fpath], "l_shipdate")
+        if f_lo <= hi and f_hi >= lo:
             n_overlap += 1
     rows_back = (
         spark.read.parquet(out)
@@ -711,8 +706,6 @@ def scan_manifest_prune(spark, sf_dir):
     import json
     from datetime import datetime
 
-    import pyarrow.parquet as pq
-
     from opusdb_spark.sources.formats import (
         ensure_written,
         scratch_path,
@@ -732,22 +725,12 @@ def scan_manifest_prune(spark, sf_dir):
         ).write.mode("overwrite").parquet(path)
         entries = []
         for fpath, _ in list_store_files(path, recursive=False):
-            f = os.path.basename(fpath)
-            md = pq.ParquetFile(fpath).metadata
-            names = [
-                md.schema.column(i).name for i in range(md.num_columns)
-            ]
-            ci = names.index("l_shipdate")
-            mins, maxs = [], []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
+            f_lo, f_hi = column_range([fpath], "l_shipdate")
             entries.append(
                 {
-                    "file": f,
-                    "min": min(mins).isoformat(),
-                    "max": max(maxs).isoformat(),
+                    "file": os.path.basename(fpath),
+                    "min": f_lo.isoformat(),
+                    "max": f_hi.isoformat(),
                 }
             )
         with open(os.path.join(path, "_manifest.json"), "w") as fh:
@@ -868,7 +851,6 @@ def sink_zorder_write(spark, sf_dir):
     on the other), which is what makes multi-predicate scans at 100 TB
     viable without duplicate layouts. Bucket bounds come from one
     min/max aggregate (broadcast); rows are proven conserved."""
-    import pyarrow.parquet as pq
     from datetime import datetime
 
     base = os.path.basename(os.path.normpath(sf_dir))
@@ -913,17 +895,8 @@ def sink_zorder_write(spark, sf_dir):
         n_files, n_hit = 0, 0
         for fpath, _ in list_store_files(out, recursive=False):
             n_files += 1
-            md = pq.ParquetFile(fpath).metadata
-            names = [
-                md.schema.column(i).name for i in range(md.num_columns)
-            ]
-            ci = names.index(col)
-            mins, maxs = [], []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            if min(mins) <= hi and max(maxs) >= lo:
+            f_lo, f_hi = column_range([fpath], col)
+            if f_lo <= hi and f_hi >= lo:
                 n_hit += 1
         return n_files, n_hit
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from opusdb_spark import mvcc
 from opusdb_spark.operators import skew
 from opusdb_spark.registry import register
+from opusdb_spark.sources import formats
 from opusdb_spark.tables import table
 
 
@@ -23,32 +24,6 @@ def _versions(spark, sf_dir):
         F.col("event_id").alias("write_point"),
         "value",
     )
-
-
-def _write_point_bounds(sf_dir) -> tuple[int, int] | None:
-    """(lo, hi) of the write-point clock from parquet FOOTER statistics —
-    a driver-side metadata read, not a Spark job. This is the honest
-    100 TB shape: the reference keeps WRITE_POINT as an AtomicLong
-    (stm.clj:12), so the clock's range is commit-time metadata; in a
-    lakehouse the same numbers live in file footers / table-format
-    manifests. Returns None when statistics are absent (caller falls
-    back to a bounds pre-pass)."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        ci = names.index("event_id")
-        los, his = [], []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            if st is None or not st.has_min_max:
-                return None
-            los.append(st.min)
-            his.append(st.max)
-        return (min(los), max(his)) if los else None
-    except Exception:
-        return None
 
 
 @register(
@@ -97,7 +72,7 @@ def mvcc_conservation(spark, sf_dir):
     return mvcc.conservation(
         _versions(spark, sf_dir),
         decimal=True,
-        bounds=_write_point_bounds(sf_dir),
+        bounds=formats.column_range([f"{sf_dir}/events.parquet"], "event_id"),
     )
 
 

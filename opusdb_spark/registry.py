@@ -119,9 +119,11 @@ def _load() -> None:
 # one formats.read_store memo (the rollup store's version sidecar and
 # the ANN index's private handle cache are gone), and ensure_written
 # publishes their stores atomically; stream_stateful_true is now a
-# native streaming aggregation instead of applyInPandasWithState.
-# Values are unchanged by construction, and a fresh verdict confirms
-# it.
+# native streaming aggregation instead of applyInPandasWithState;
+# mvcc_txn_rollback is the one key whose append_versions input is a
+# bare parquet scan, so its write point is now a footer-statistics
+# literal instead of a max aggregate. Values are unchanged by
+# construction, and a fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -141,6 +143,8 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "llm_embedding_neardup",
     # per-user totals: native groupBy().agg() state store
     "stream_stateful_true",
+    # write-point clock from parquet footers (mvcc._footer_write_point)
+    "mvcc_txn_rollback",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

@@ -2,7 +2,10 @@
 
 Readers always take a schema: at 100 TB, schema inference is a full
 extra pass over the data (and CSV/JSON inference can mis-type columns
-partition-by-partition). Writers default to snappy parquet; the
+partition-by-partition). For parquet stores the schema comes from the
+footers Spark wrote (`read_store`), and row-group min/max statistics
+answer range questions (`column_range`) — driver-side metadata reads,
+no Spark job. Writers default to snappy parquet; the
 partitioned writer lays out hive-style directories so downstream
 filters on the partition column become partition-pruned scans
 (Catalyst prunes directories before listing files).
@@ -10,6 +13,8 @@ filters on the partition column become partition-pruned scans
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import weakref
@@ -77,8 +82,6 @@ def ensure_written(path: str, fingerprint: dict, write_fn) -> str:
     that read_store's stat tag cannot miss. `write_fn(p)` must write
     only under the `p` it is given.
     """
-    import json
-
     # normalize through JSON before comparing: the stored side has
     # round-tripped (tuples→lists, int keys→str), and comparing the
     # raw dict against it would silently rebuild on EVERY call
@@ -180,6 +183,47 @@ def stat_mtime_ns(path: str) -> int:
     return os.stat(path).st_mtime_ns
 
 
+def footer(path: str):
+    """Parquet footer (pyarrow FileMetaData) of one local file, the one
+    driver-side footer read. Memoized on (path, mtime_ns, size): data
+    files are immutable once published, so a store that grows by
+    appends re-reads only its new files."""
+    st = os.stat(path)
+    return _read_footer(path, st.st_mtime_ns, st.st_size)
+
+
+@functools.lru_cache(maxsize=4096)
+def _read_footer(path: str, mtime_ns: int, size: int):
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path)
+
+
+def column_range(files, column: str) -> tuple | None:
+    """(lo, hi) of `column` over `files` from row-group min/max
+    statistics — a footer read, no Spark job. Row groups without rows
+    add nothing. None when a footer is unreadable or lacks the column,
+    when a non-empty row group lacks min/max, or when no row group
+    holds a row: the caller then needs a data pass."""
+    lo = hi = None
+    try:
+        for path in files:
+            md = footer(path)
+            ci = md.schema.names.index(column)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(ci).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+    except (OSError, ValueError):  # unreadable footer, absent column
+        return None
+    return None if lo is None else (lo, hi)
+
+
 def _parse_bytes_conf(raw: str, default: int) -> int:
     """Spark bytes-conf string ("134217728b", "128mb", "64k") -> int."""
     raw = raw.strip().lower()
@@ -267,6 +311,68 @@ _STORE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
+# The footer key Spark's writer stores its row schema under, and the
+# key its own schema inference reads first.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(t):
+    """Spark's DataType.asNullable over a schema's JSON form: a file
+    source's relation schema is always the nullable one."""
+    if not isinstance(t, dict):
+        return t
+    t = dict(t)
+    kind = t.get("type")
+    if kind == "struct":
+        t["fields"] = [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]
+    elif kind == "array":
+        t.update(containsNull=True, elementType=_as_nullable(t["elementType"]))
+    elif kind == "map":
+        t.update(
+            valueContainsNull=True,
+            keyType=_as_nullable(t["keyType"]),
+            valueType=_as_nullable(t["valueType"]),
+        )
+    return t
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark's inference gives a FLAT Spark-written store,
+    taken from the row-metadata key of every visible data file's footer
+    instead of from a footer-read job. None — infer instead — when the
+    path is a file; when it has any subdirectory (hive partitions
+    carry partition columns, `_temporary` is a write in flight, and a
+    streaming file sink's `_spark_metadata` log makes Spark read the
+    log and keep non-nullable fields); when any file lacks the key (a
+    pyarrow-written file); or when files disagree beyond nullability
+    (inference would take one file's schema)."""
+    files = []
+    try:
+        with os.scandir(path) as it:
+            for e in it:
+                if e.is_dir():
+                    return None
+                if not e.name.startswith(("_", ".")):
+                    files.append(e.path)
+    except OSError:  # a file, or gone since the stat tag
+        return None
+    schema = None
+    for f in files:
+        try:
+            raw = (footer(f).metadata or {}).get(_SPARK_ROW_METADATA)
+        except (OSError, ValueError):
+            return None
+        if raw is None:
+            return None
+        s = _as_nullable(json.loads(raw))
+        if schema is not None and s != schema:
+            return None
+        schema = s
+    return None if schema is None else StructType.fromJson(schema)
+
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Memoized `spark.read.parquet`, the one handle memo: tables.table,
@@ -274,7 +380,13 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     in-place-refreshed store) all read through it. Invalidation is
     store_stat_tag: a rebuild (new inode), a same-tick rewrite (child
     stats) and a dynamic-partition refresh (the `day=X` dir is
-    replaced and `_SUCCESS` rewritten) all miss the memo."""
+    replaced and `_SUCCESS` rewritten) all miss the memo.
+
+    On a miss, a flat Spark-written store is read with the schema from
+    its footers (`_footer_schema`): no inference job, so an append to a
+    store costs its next read only the new file's footer. Any other
+    layout — a single file, partitioned or sink-logged dirs, files
+    without Spark's key, disagreeing files — keeps Spark's inference."""
     tag = store_stat_tag(path)
     if tag is None:
         return spark.read.parquet(path)  # surface the read error as-is
@@ -282,7 +394,9 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     key = os.path.abspath(path)
     hit = cache.get(key)
     if hit is None or hit[0] != tag:
-        hit = (tag, spark.read.parquet(path))
+        schema = _footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        hit = (tag, reader.parquet(path))
         cache[key] = hit
     return hit[1]
 

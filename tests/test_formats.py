@@ -1,6 +1,9 @@
 """ensure_written publishes a store atomically: a build killed midway
 leaves the previous complete store or no store, never a partial one,
-and the next call publishes a complete store (pure Python, no Spark)."""
+and the next call publishes a complete store (pure Python, no Spark).
+read_store takes a flat Spark-written store's schema from its footers
+(no job) and every other layout's from Spark's own inference; either
+way the schema equals a plain spark.read.parquet."""
 
 from __future__ import annotations
 
@@ -12,8 +15,12 @@ import sys
 import textwrap
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from opusdb_spark.sources import formats
 from opusdb_spark.sources.formats import ensure_written
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -122,3 +129,102 @@ def test_matching_fingerprint_skips_build_and_rebuild_is_new_inode(tmp_path):
     assert _contents(path) == ({"k": [1, 3]}, ["b.parquet"])
     assert os.stat(path).st_ino != ino
     assert os.listdir(tmp_path) == ["store"]
+
+
+def test_read_store_takes_schema_from_footers_without_a_job(spark, tmp_path):
+    """After an append whose footers differ from the first write only in
+    nullability, read_store resolves the store with 0 jobs and the
+    schema inference would give."""
+    p = str(tmp_path / "store")
+    spark.range(3).select(
+        F.col("id").alias("k"), F.lit("a").alias("s")
+    ).coalesce(1).write.parquet(p)
+    spark.createDataFrame(
+        [(7, None)], "k long, s string"
+    ).coalesce(1).write.mode("append").parquet(p)
+    raw = {
+        formats.footer(f).metadata[formats._SPARK_ROW_METADATA]
+        for f, _ in formats.list_store_files(p)
+    }
+    assert len(raw) == 2, "fixture footers must differ (in nullability)"
+
+    sc = spark.sparkContext
+    sc.setJobGroup("footer_schema_probe", "read_store after append")
+    try:
+        df = formats.read_store(spark, p)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    assert sc.statusTracker().getJobIdsForGroup("footer_schema_probe") == [], (
+        "read_store inferred the schema of a flat Spark-written store"
+    )
+    assert df.schema == spark.read.parquet(p).schema
+    assert sorted(r.k for r in df.collect()) == [0, 1, 2, 7]
+
+
+def _pyarrow_dir(spark, p):
+    os.makedirs(p)
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2], pa.int32()), "s": ["a", None]}),
+        os.path.join(p, "part-0.parquet"),
+    )
+    return p
+
+
+def _hive_partitioned(spark, p):
+    spark.range(6).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("day")
+    ).write.partitionBy("day").parquet(p)
+    return p
+
+
+def _stream_sink(spark, p):
+    # the file sink's _spark_metadata log makes Spark read through the
+    # log, where the non-nullable `one` column stays non-nullable
+    src = p + "_src"
+    spark.range(4).select(F.col("id").alias("k")).write.parquet(src)
+    q = (
+        spark.readStream.schema("k long").parquet(src)
+        .select("k", F.lit(1).alias("one"))
+        .writeStream.format("parquet")
+        .option("checkpointLocation", p + "_chk")
+        .trigger(availableNow=True)
+        .start(p)
+    )
+    try:
+        assert q.awaitTermination(120), "the availableNow stream hung"
+    finally:
+        q.stop()
+    assert os.path.isdir(os.path.join(p, "_spark_metadata"))
+    assert not spark.read.parquet(p).schema["one"].nullable
+    return p
+
+
+def _types_differ(spark, p):
+    spark.createDataFrame([(1,)], "k long").write.parquet(p)
+    spark.createDataFrame([(2,)], "k int").write.mode("append").parquet(p)
+    return p
+
+
+def _single_file(spark, p):
+    spark.range(3).select(F.col("id").alias("k")).coalesce(1).write.parquet(p)
+    (f, _), = formats.list_store_files(p)
+    return f
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _pyarrow_dir,
+        _hive_partitioned,
+        _stream_sink,
+        _types_differ,
+        _single_file,
+    ],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_read_store_falls_back_to_inference(spark, tmp_path, build):
+    """Layouts the footer key cannot describe exactly keep Spark's
+    inference, and the schema equals a plain spark.read.parquet."""
+    p = build(spark, str(tmp_path / "store"))
+    assert formats._footer_schema(p) is None
+    assert formats.read_store(spark, p).schema == spark.read.parquet(p).schema

@@ -7,6 +7,9 @@ history (stm.clj:47-50), single write-point bump per commit
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from opusdb_spark import mvcc
@@ -42,20 +45,164 @@ def test_retain_caps_history(spark):
     assert got == [(1, 20), (1, 30), (2, 15)], "oldest version of ref 1 dropped"
 
 
-def test_append_versions_single_write_point(spark):
-    versions = _versions(spark)
+def test_append_versions_single_write_point(spark, tmp_path):
+    """In memory the clock is the max aggregate; read back from parquet
+    it comes from the footers. Both give one bumped write point."""
+    _versions(spark).write.parquet(str(tmp_path / "v"))
+    stored = spark.read.parquet(str(tmp_path / "v"))
     updates = spark.createDataFrame(
         [(1, 111.0), (2, 222.0)], "ref_id long, value double"
     )
-    out = mvcc.append_versions(versions, updates)
-    new_rows = {
-        r.ref_id: (r.write_point, r.value)
-        for r in out.join(versions, ["ref_id", "write_point"], "left_anti").collect()
-    }
-    assert new_rows == {1: (31, 111.0), 2: (31, 222.0)}, (
-        "all updates in a commit share one bumped write point"
+    for versions in (_versions(spark), stored):
+        out = mvcc.append_versions(versions, updates)
+        new_rows = {
+            r.ref_id: (r.write_point, r.value)
+            for r in out.join(
+                versions, ["ref_id", "write_point"], "left_anti"
+            ).collect()
+        }
+        assert new_rows == {1: (31, 111.0), 2: (31, 222.0)}, (
+            "all updates in a commit share one bumped write point"
+        )
+        assert mvcc.latest(out).count() == 2
+
+
+_NEW_KEY = 10**9
+
+
+def _next_point(versions):
+    """Write point append_versions stamps on a one-row update."""
+    upd = versions.sparkSession.createDataFrame(
+        [(_NEW_KEY, 0.5)], "ref_id long, value double"
     )
-    assert mvcc.latest(out).count() == 2
+    out = mvcc.append_versions(versions, upd)
+    return out.filter(F.col("ref_id") == _NEW_KEY).first().write_point, out
+
+
+def _store_multi_file(spark, p):
+    for lo in (1, 40, 7):  # three files, the max in the middle one
+        spark.range(lo, lo + 5).select(
+            F.col("id").alias("ref_id"),
+            F.col("id").alias("write_point"),
+            F.lit(1.0).alias("value"),
+        ).coalesce(1).write.mode("append").parquet(p)
+    return spark.read.parquet(p)
+
+
+def _store_with_empty_file(spark, p):
+    _versions(spark).write.parquet(p)
+    spark.createDataFrame(
+        [], "ref_id long, write_point long, value double"
+    ).write.mode("append").parquet(p)
+    from opusdb_spark.sources.formats import footer, list_store_files
+
+    assert any(
+        footer(f).num_row_groups == 0 for f, _ in list_store_files(p)
+    ), "fixture must hold a file with 0 row groups"
+    return spark.read.parquet(p)
+
+
+def _store_negative(spark, p):
+    spark.createDataFrame(
+        [(1, -10, 1.0), (2, -3, 2.0), (1, -7, 3.0)],
+        "ref_id long, write_point long, value double",
+    ).write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def _store_int_version(spark, p):
+    spark.createDataFrame(
+        [(1, 4, 1.0), (2, 9, 2.0)],
+        "ref_id long, write_point int, value double",
+    ).write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def _store_derived(spark, p):
+    # the max row is filtered away: footers of the scanned files would
+    # overstate the clock of this frame
+    _versions(spark).write.parquet(p)
+    return (
+        spark.read.parquet(p)
+        .filter(F.col("write_point") < 30)
+        .select("ref_id", "write_point", "value")
+    )
+
+
+def _store_no_statistics(spark, p):
+    import os
+
+    os.makedirs(p)
+    pq.write_table(
+        pa.table(
+            {
+                "ref_id": pa.array([1, 2], pa.int64()),
+                "write_point": pa.array([5, 12], pa.int64()),
+                "value": pa.array([1.0, 2.0]),
+            }
+        ),
+        os.path.join(p, "part-0.parquet"),
+        write_statistics=False,
+    )
+    return spark.read.parquet(p)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _store_multi_file,
+        _store_with_empty_file,
+        _store_negative,
+        _store_int_version,
+        _store_derived,
+        _store_no_statistics,
+    ],
+    ids=lambda f: f.__name__[len("_store_"):],
+)
+def test_footer_clock_matches_aggregate(spark, tmp_path, build):
+    """Whichever path stamps the next write point — row-group statistics
+    of a bare scan, or the max aggregate for derived frames and files
+    without statistics — it equals max(write_point) + 1 over the frame,
+    in the version column's type."""
+    versions = build(spark, str(tmp_path / "v"))
+    hi = versions.agg(F.max("write_point")).first()[0]
+    got, out = _next_point(versions)
+    assert got == hi + 1
+    assert out.schema["write_point"].dataType == (
+        versions.schema["write_point"].dataType
+    )
+
+
+def test_merge_and_append_on_bare_scan_is_one_job(spark, tmp_path):
+    """A bank commit — merge over the store's bare scan, then append the
+    new write point — runs exactly one job: the write. The clock comes
+    from footers, not from an aggregate job."""
+    p = str(tmp_path / "bank")
+    spark.range(100).select(
+        F.col("id").alias("ref_id"),
+        F.lit(1).cast("long").alias("write_point"),
+        F.lit(10).cast("long").alias("value"),
+        F.lit(False).alias("_deleted"),
+    ).coalesce(1).write.parquet(p)
+    changes = spark.createDataFrame(
+        [(3, 5, "upsert"), (4, 15, "upsert")],
+        "ref_id long, value long, _op string",
+    )
+    versions = spark.read.parquet(p)  # the inference job runs here
+    sc = spark.sparkContext
+    sc.setJobGroup("footer_clock_commit", "merge + append")
+    try:
+        merged = mvcc.merge(versions, changes)
+        merged.filter(F.col("write_point") == 2).coalesce(1).write.mode(
+            "append"
+        ).parquet(p)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    jobs = sc.statusTracker().getJobIdsForGroup("footer_clock_commit")
+    assert len(jobs) == 1, jobs
+    new = spark.read.parquet(p).filter(F.col("write_point") == 2)
+    got = {(r.ref_id, r.write_point, r.value) for r in new.collect()}
+    assert got == {(3, 2, 5), (4, 2, 15)}
 
 
 def test_conservation_invariant_on_transfers(spark):
