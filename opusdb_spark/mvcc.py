@@ -198,7 +198,6 @@ def _at_next_write_point(
 def append_versions(
     versions: DataFrame,
     updates: DataFrame,
-    key: str = "ref_id",
     version: str = "write_point",
 ) -> DataFrame:
     """Commit a batch of updates as ONE new write point.
@@ -206,6 +205,8 @@ def append_versions(
     `updates` carries (key, value...) without a version column; every
     update row gets write_point = max(existing) + 1 — the analog of the
     single WRITE_POINT bump per committing transaction (stm.clj:42-43).
+    No key column is named: the stamp does not look at keys, and
+    readers such as `latest(..., key)` name theirs.
     Returns the new versions DataFrame; writing it (or just the new
     rows, mode="append") is the commit, atomic per Spark job.
     """
@@ -234,7 +235,6 @@ def read_own_writes(
 def merge(
     versions: DataFrame,
     changes: DataFrame,
-    key: str = "ref_id",
     version: str = "write_point",
 ) -> DataFrame:
     """MERGE a change-set as ONE committed write point (upsert+delete).
@@ -255,9 +255,12 @@ def merge(
     (single Spark job commit).
 
     Returns the new versions DataFrame with a `_deleted` flag column.
-    Read the post-merge state with `latest(...).filter(~_deleted)`;
-    older snapshots still see the pre-merge values — deletes are
-    versions, not in-place erasure, exactly like the history vector.
+    No key column is named here, as in append_versions: the one-row-
+    per-key rule above is the caller's, and the key matters only to
+    readers. Read the post-merge state with
+    `latest(...).filter(~_deleted)`; older snapshots still see the
+    pre-merge values — deletes are versions, not in-place erasure,
+    exactly like the history vector.
     """
     if "_deleted" not in versions.columns:
         versions = versions.withColumn("_deleted", F.lit(False))

@@ -30,7 +30,6 @@ the score is identical to the groupBy-sum formulation bit-for-bit).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
@@ -47,7 +46,7 @@ from opusdb_spark.operators.similarity import (
     _assign_udf,
     ivf_centroids,
     lsh_buckets_np,
-    lsh_signatures_arrow,
+    lsh_signatures,
 )
 from opusdb_spark.sources import formats
 
@@ -67,9 +66,7 @@ _PQ_LLOYD_ITERS = 8
 def index_dir_for(sf_dir: str) -> str:
     """Stable per-corpus index location (full-path hash, not basename —
     two corpora sharing a basename must not share an index)."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return formats.scratch_path(f"ann_index_{base}_{tag}")
+    return formats.corpus_scratch_path("ann_index", sf_dir)
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -177,10 +174,9 @@ def _build_index(
 
     # lsh: one row per (vector, hash table), partitioned by bucket.
     # Bucket ids come from the Arrow/numpy signature kernel (one matmul
-    # per batch) — the corpus-wide build never evaluates the
-    # interpreted HOF expression tree. Each row also carries the FULL
-    # signature array (`sig_all`, N_TABLES small longs — noise next to
-    # the 128-double vector): a bucket-local consumer can then decide
+    # per batch). Each row also carries the FULL signature array
+    # (`sig_all`, N_TABLES small longs — noise next to the 128-double
+    # vector): a bucket-local consumer can then decide
     # cross-table questions (e.g. "is this table the pair's FIRST
     # collision?") without joining back to sigs/, which is what lets
     # the near-dup sweep emit every candidate pair exactly once and
@@ -188,7 +184,7 @@ def _build_index(
     # stream to dedupe (layout v4).
     bits = int(fingerprint.get("bits_per_table", BITS_PER_TABLE))
     lsh = base.withColumn(
-        "sig_all", lsh_signatures_arrow(vec_col, bits)
+        "sig_all", lsh_signatures(vec_col, bits)
     ).select(
         id_col,
         vec_col,
@@ -206,12 +202,13 @@ def _build_index(
     )
 
     # sigs: (id → table_id, bucket), range-partitioned + sorted by id.
-    # A probe's bucket list is then a stat-pruned lookup of L tiny rows
-    # — NOT a re-evaluation of the signature expressions, whose
-    # interpreted higher-order-function tree costs ~2s per execution
-    # regardless of row count. Signatures are an ingest artifact; the
-    # probe path only reads. (Derived from the already-written lsh/
-    # table so the expensive expressions run exactly once.)
+    # An in-corpus probe's bucket list is then a stat-pruned lookup of
+    # L tiny rows: exactly the buckets the batched build wrote, immune
+    # to the GEMM-vs-GEMV ulp edge a re-hash can hit (_probe_buckets).
+    # The llm_simsearch_lsh oracle joins this same store, so a second
+    # engine replays the probe without the plane model. (Derived from
+    # the already-written lsh/ table so the signatures are computed
+    # exactly once.)
     (
         spark.read.parquet(os.path.join(index_dir, "lsh"))
         .select(id_col, "table_id", "bucket")
@@ -463,8 +460,9 @@ def lsh_probe(
     """ANN top-k from the persisted LSH index: literal (table_id, bucket)
     predicates → the scan lists only the probe's L bucket directories
     (PartitionFilters; everything else is never read). Pass `probe_id`
-    for an in-corpus probe to read its buckets from the sigs/ store
-    instead of re-evaluating the signature expressions."""
+    for an in-corpus probe to read its buckets from the sigs/ store —
+    the buckets the build wrote, which a driver-side re-hash matches
+    only up to the ulp edge _probe_buckets notes."""
     if probe_id is not None:
         buckets = stored_buckets(spark, index_dir, probe_id, id_col)
     else:

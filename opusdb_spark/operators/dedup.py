@@ -7,6 +7,11 @@ buckets). All are built so the only shuffles are on hash/band keys:
 at 100 TB no operator compares all pairs — candidate generation is
 always bucket-local (band join / fingerprint join), which is the
 standard web-scale dedup shape.
+
+MinHash signatures and SimHash fingerprints have one implementation
+each: an Arrow-batched numpy pandas UDF (`minhash_signatures`,
+`simhash_fingerprints`). The stored variants persist their output once
+per corpus, and every dedup query reads that store.
 """
 
 from __future__ import annotations
@@ -38,107 +43,15 @@ _B = [_rng.randrange(0, _MERSENNE) for _ in range(N_MINHASH)]
 from opusdb_spark.operators.skew import spread
 
 
-def shingles(df: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
-    """Character k-shingles per doc: (doc_id, shingle) distinct pairs."""
-    return (
-        df.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))
-                    ),
-                    lambda i: F.col(text_col).substr(i, F.lit(k)),
-                )
-            ).alias("shingle"),
-        )
-        .filter(F.length("shingle") == k)
-        .distinct()
-    )
-
-
-def _shingle_hash_array(text_col: str, k: int) -> F.Column:
-    """array<long> of pmod(hash(char k-gram), p) per row — a narrow
-    projection (no explode). Duplicate shingles are harmless: min()
-    absorbs them."""
-    grams = F.filter(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))),
-            lambda i: F.col(text_col).substr(i, F.lit(k)),
-        ),
-        lambda s: F.length(s) == k,
-    )
-    return F.transform(
-        grams, lambda s: F.pmod(F.hash(s).cast("long"), F.lit(_MERSENNE))
-    )
-
-
-def _word_gram_hash_array(text_col: str, n: int) -> F.Column:
-    """array<long> of pmod(xxhash64(word n-gram), p) per row. Word grams
-    are the standard web-dedup unit: ~6× fewer shingles than char-5
-    grams at equal text length, so 6× less signature work per byte."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-        (lambda ws: lambda i: F.pmod(F.xxhash64(F.slice(ws, i, n)).cast("long"), F.lit(_MERSENNE)))(words),
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", k: int = 3, unit: str = "word"
-) -> DataFrame:
-    """(doc_id, sig: array<long>) — N_MINHASH affine-permutation minima.
-
-    h_i(x) = (a_i * x + b_i) mod p over the shingle hash; the (a_i, b_i)
-    are fixed constants so signatures are deterministic across runs and
-    partitionings. The whole signature is ONE array fold per row
-    (aggregate carrying all N_MINHASH running minima) — zero shuffles,
-    which at 100 TB means signature computation is embarrassingly
-    parallel map-work co-located with the parquet scan. `unit` picks the
-    shingle granularity: "word" n-grams (web-dedup standard) or "char"
-    k-grams (robust for unsegmented scripts).
-    """
-    # Wordless/empty docs are excluded up front: they would all share
-    # one degenerate signature, collide in every band, and the band
-    # self-join would emit O(m²) pairs for m empty docs — the exact
-    # blowup this module exists to avoid. Route empties through
-    # exact_dedup_keep_min instead.
-    docs = docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-    grams = (
-        _word_gram_hash_array(text_col, k)
-        if unit == "word"
-        else _shingle_hash_array(text_col, k)
-    )
-    a_lit = F.array(*[F.lit(a) for a in _A])
-    b_lit = F.array(*[F.lit(b) for b in _B])
-    sig = F.aggregate(
-        F.col("hs"),
-        F.array_repeat(F.lit(_MERSENNE).cast("long"), N_MINHASH),
-        lambda acc, h: F.transform(
-            acc,
-            lambda m, i: F.least(
-                m,
-                (h * F.element_at(a_lit, i + 1) + F.element_at(b_lit, i + 1))
-                % _MERSENNE,
-            ),
-        ),
-    )
-    return (
-        docs.select("doc_id", grams.alias("hs"))
-        .filter(F.size("hs") > 0)
-        .select("doc_id", sig.alias("sig"))
-    )
-
-
 def _make_sig_udf():
     """Arrow-batched MinHash signature UDF: numpy computes all N_MINHASH
     permutation minima per doc as one (grams × perms) matrix op.
 
-    Measured ~7× faster end-to-end than the expression fold: Catalyst
-    higher-order functions evaluate interpreted (~µs per element-lambda
-    call) and their large expression trees add per-execution plan
-    serialization cost, while this plan is a tiny serialized closure and
-    the compute is vectorized C. crc32 keeps gram hashing deterministic
+    Measured ~7× faster end-to-end than a Catalyst expression fold of
+    the same math: higher-order functions evaluate interpreted (~µs per
+    element-lambda call) and their large expression trees add
+    per-execution plan serialization cost, while this plan is a tiny
+    serialized closure and the compute is vectorized C. crc32 keeps gram hashing deterministic
     across runs, partitions, and executors (Python's builtin hash is
     salted per process — never use it here).
     """
@@ -163,11 +76,19 @@ def _make_sig_udf():
     return sig_udf
 
 
-def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, sig) via the Arrow/numpy UDF — the default fast path.
-    Same shape as minhash_signatures(); hash family differs (crc32 vs
-    xxhash64 base) so signatures are not interchangeable between the
-    two implementations. Empty docs excluded (see minhash_signatures)."""
+def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, sig: array<long>) — N_MINHASH affine-permutation minima
+    over crc32 word 3-gram hashes, via the Arrow/numpy UDF.
+
+    h_i(x) = (a_i * x + b_i) mod p; the (a_i, b_i) are fixed constants,
+    so signatures are deterministic across runs and partitionings. Zero
+    shuffles: signature computation is map work co-located with the
+    scan.
+
+    Wordless/empty docs are excluded up front: they would all share one
+    degenerate signature, collide in every band, and the band self-join
+    would emit O(m²) pairs for m empty docs. Route empties through
+    exact_dedup_keep_min instead."""
     return docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
         "doc_id", _make_sig_udf()(text_col).alias("sig")
     )
@@ -228,7 +149,6 @@ def minhash_signatures_stored(
     docs: DataFrame,
     store_path: str,
     fingerprint: dict,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Signatures as an INGEST artifact: computed once per corpus,
     persisted to parquet, and shared by every dedup query against it
@@ -238,11 +158,13 @@ def minhash_signatures_stored(
     Fingerprint-guarded like the ANN index: unchanged source → reuse."""
     from opusdb_spark.sources.formats import ensure_written, read_store
 
-    sig_fn = minhash_signatures_arrow if impl == "arrow" else minhash_signatures
+    # "impl" stays in the fingerprint so existing stores keep matching
     ensure_written(
         store_path,
-        {**fingerprint, "impl": impl, "n_minhash": N_MINHASH},
-        lambda p: sig_fn(spread(docs)).write.mode("overwrite").parquet(p),
+        {**fingerprint, "impl": "arrow", "n_minhash": N_MINHASH},
+        lambda p: minhash_signatures(spread(docs))
+        .write.mode("overwrite")
+        .parquet(p),
     )
     return read_store(spark, store_path)
 
@@ -329,21 +251,17 @@ def lsh_incremental_pairs(
 def minhash_lsh_dedup(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
-    impl: str = "arrow",
     sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs with estimated Jaccard ≥ threshold.
 
     Candidates from LSH bands, then the signature-estimated Jaccard
     (fraction of agreeing minhashes) filters false positives. Returns
-    (doc_a, doc_b, est_jaccard). impl="arrow" (default) computes
-    signatures with the numpy pandas-UDF; impl="expr" uses the pure
-    Catalyst-expression fold (no Python workers in the plan). Pass
-    `sig` (e.g. from minhash_signatures_stored) to reuse precomputed
-    signatures — the production shape.
+    (doc_a, doc_b, est_jaccard). Pass `sig` (e.g. from
+    minhash_signatures_stored) to reuse precomputed signatures — the
+    production shape.
     """
     if sig is None:
-        sig_fn = minhash_signatures_arrow if impl == "arrow" else minhash_signatures
         # loop_cache, NOT bare cache() or localCheckpoint: sig is read
         # 3× below (bands + both sides of the estimate join) so it
         # must materialize once. A bare cache() is pinned for the
@@ -357,7 +275,7 @@ def minhash_lsh_dedup(
         # and unpersists it deterministically on the next invocation.
         from opusdb_spark.operators.cache import loop_cache
 
-        sig = loop_cache("dedup:minhash_sig", sig_fn(spread(docs)))
+        sig = loop_cache("dedup:minhash_sig", minhash_signatures(spread(docs)))
     pairs = lsh_candidate_pairs(sig)
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -381,54 +299,12 @@ def minhash_lsh_dedup(
     return est.filter(F.col("est_jaccard") >= jaccard_threshold)
 
 
-def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per doc from word-level features.
-
-    Each word hashes to 64 bits; bit b of the fingerprint is 1 iff the
-    sum over words of ±1 (by bit b) is positive. All 64 bit-sums are ONE
-    array fold per row (aggregate carrying 64 running counts) — zero
-    shuffles, pure map-side work at any scale.
-    """
-    docs = docs.filter(F.length(F.trim(F.col(text_col))) > 0)
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    plus_minus = F.transform(
-        F.col("wh"),
-        lambda h: F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long"))
-                for b in range(64)
-            ]
-        ),
-    )
-    bit_counts = F.aggregate(
-        F.col("pm"),
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, v: F.zip_with(acc, v, lambda a, x: a + x),
-    )
-    fingerprint = F.lit(0).cast("long")
-    for b in range(64):
-        bit = F.when(F.element_at(F.col("bits"), b + 1) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fingerprint = fingerprint.bitwiseXOR(F.shiftleft(bit, b))
-    return (
-        docs.select("doc_id", hashes.alias("wh"))
-        .select("doc_id", plus_minus.alias("pm"))
-        .select("doc_id", bit_counts.alias("bits"))
-        .select("doc_id", fingerprint.alias("simhash"))
-    )
-
-
 def _make_simhash_udf():
     """Arrow-batched SimHash UDF: numpy computes the 64 bit-sums per doc
-    as one (words × 64) matrix op. Same rationale as _make_sig_udf —
-    the expression-fold variant's 64-way when-chain evaluates
-    interpreted per element and its tree adds ~2s fixed cost per
-    execution. crc32 over two salts yields a deterministic 64-bit word
+    as one (words × 64) matrix op. Same rationale as _make_sig_udf: a
+    Catalyst fold needs a 64-way when-chain that evaluates interpreted
+    per element and adds a large expression tree to every execution.
+    crc32 over two salts yields a deterministic 64-bit word
     hash (never Python's salted builtin hash)."""
     from zlib import crc32
 
@@ -458,11 +334,13 @@ def _make_simhash_udf():
     return sh_udf
 
 
-def simhash_fingerprints_arrow(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash) via the Arrow/numpy UDF — the default fast
-    path. Same shape as simhash_fingerprints(); hash family differs
-    (crc32×2 vs xxhash64) so fingerprints are not interchangeable
-    between the two implementations. Empty docs excluded (degenerate
+def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, simhash) — 64-bit SimHash per doc from word features,
+    via the Arrow/numpy UDF.
+
+    Each word hashes to 64 bits; bit b of the fingerprint is 1 iff the
+    sum over words of ±1 (by bit b) is positive. Zero shuffles, pure
+    map-side work at any scale. Empty docs excluded (degenerate
     fingerprint 0 would collide in every block — same O(m²) blowup the
     MinHash path guards against)."""
     return docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
@@ -475,17 +353,18 @@ def simhash_fingerprints_stored(
     docs: DataFrame,
     store_path: str,
     fingerprint: dict,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SimHash fingerprints as an INGEST artifact (see
     minhash_signatures_stored — same ingest-once/query-many contract)."""
     from opusdb_spark.sources.formats import ensure_written, read_store
 
-    fp_fn = simhash_fingerprints_arrow if impl == "arrow" else simhash_fingerprints
+    # "impl" stays in the fingerprint so existing stores keep matching
     ensure_written(
         store_path,
-        {**fingerprint, "impl": impl, "bits": 64},
-        lambda p: fp_fn(spread(docs)).write.mode("overwrite").parquet(p),
+        {**fingerprint, "impl": "arrow", "bits": 64},
+        lambda p: simhash_fingerprints(spread(docs))
+        .write.mode("overwrite")
+        .parquet(p),
     )
     return read_store(spark, store_path)
 

@@ -117,34 +117,6 @@ def _bucketed_rank(
     return ranked, counts.select(*sel)
 
 
-def with_global_rank(
-    df: DataFrame,
-    order_cols: list[Column],
-    split_col: Column,
-    *,
-    descending: bool,
-    out: str = "_rank",
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Add 1-based global rank under ``order_cols`` (a total order).
-
-    ``split_col`` is a numeric expression monotone in the leading order
-    column, used for range bucketing; ``descending`` says whether that
-    leading expression sorts descending. Ties in ``split_col`` land in
-    one bucket, so the in-bucket window's tie-break keeps the rank
-    exact.
-    """
-    uniq = _split_points(df, split_col, n_buckets)
-    ranked, offsets = _bucketed_rank(
-        df, order_cols, split_col, uniq, descending
-    )
-    return (
-        ranked.join(F.broadcast(offsets), "_b")
-        .withColumn(out, F.col("_off") + F.col("_lr"))
-        .drop("_b", "_lr", "_off")
-    )
-
-
 def ntile_from_rank(rank: Column, total: Column, n: int) -> Column:
     """Exact SQL NTILE(n) from a 1-based rank and the row count.
 

@@ -1,17 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-  - brute-force cosine top-k — the exact baseline. Feature-parallel
-    (posexplode + keyed agg) with exact-decimal dot products so scores
-    hash-match a SQL oracle bit-for-bit.
-  - LSH-bucketed ANN — the 100 TB path: random-hyperplane signatures
-    bucket the vectors; candidates come only from the probe's exact
-    (table_id, bucket) matches across L tables (OR-amplification
-    supplies the recall; no multiprobe of neighboring buckets is
-    implemented), turning full-scan scoring into a bucket scan.
-
-No driver-side loops: the probe vector stays a 1-row DataFrame that
-gets broadcast, never collected.
+Three parts:
+  - Exact cosine top-k (`cosine_topk`, `cosine_topk_batch`) — the
+    baseline ANN recall is measured against. Exact-decimal dot
+    products, so scores hash-match a SQL oracle bit-for-bit. The probe
+    vector stays a 1-row DataFrame that gets broadcast, never
+    collected.
+  - The ANN models: the random-hyperplane LSH plane matrix and its
+    Arrow/numpy bucket kernel (`lsh_signatures`), and the IVF coarse
+    quantizer (`ivf_centroids`, `_assign_udf`). Candidates come only
+    from the probe's exact (table_id, bucket) matches across L tables
+    (OR-amplification supplies the recall; no multiprobe of
+    neighboring buckets is implemented). operators/ann_index.py
+    persists the index these models build and runs every ANN probe.
+  - Embedding-space operators: SemDeDup, k-means inertia,
+    Mahalanobis outliers, MMR and hard negatives.
 """
 
 from __future__ import annotations
@@ -173,40 +176,13 @@ def adaptive_bits_per_table(n_vectors: int) -> int:
     )
 
 
-def _plane_sign(i, plane: int) -> F.Column:
-    """Deterministic ±1 weight of component i under hyperplane `plane`
-    (derived from hash — no stored model, identical across runs)."""
-    return F.when(F.pmod(F.hash(i, F.lit(plane)), F.lit(2)) == 0, 1.0).otherwise(-1.0)
-
-
-def _table_signature(vec_col: str, table_id: int) -> F.Column:
-    """b-bit signature of a vector under table `table_id`'s planes."""
-    def weighted(plane: int):
-        # closure (not a default arg): pyspark derives lambda arity from
-        # the signature, so extra params break higher-order functions
-        return lambda x, i: x.cast("double") * _plane_sign(i, plane)
-
-    sig = F.lit(0).cast("long")
-    for b in range(BITS_PER_TABLE):
-        plane = table_id * BITS_PER_TABLE + b
-        proj = F.aggregate(
-            F.transform(F.col(vec_col), weighted(plane)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig.bitwiseXOR(
-            F.shiftleft(F.when(proj > 0, F.lit(1).cast("long")).otherwise(0), b)
-        )
-    return sig
-
-
 def lsh_plane_matrix(
     dim: int, bits_per_table: int = BITS_PER_TABLE
 ) -> "np.ndarray":
     """±1 hyperplane matrix (N_TABLES*bits_per_table × dim) from a
-    fixed-seed RNG — the stored-model analog of the hash-derived signs
-    (same role as the IVF centroids: deterministic, model-sized,
-    shareable between the distributed build and a driver-side probe).
+    fixed-seed RNG — the LSH model (same role as the IVF centroids:
+    deterministic, model-sized, shareable between the distributed
+    build and a driver-side probe).
     Row-major generation makes smaller-bit matrices a PREFIX of larger
     ones, so the default-bit matrix is unchanged by the adaptive-bit
     feature."""
@@ -238,12 +214,10 @@ def lsh_buckets_np(
     return out
 
 
-def lsh_signatures_arrow(vec_col: str, bits_per_table: int = BITS_PER_TABLE):
+def lsh_signatures(vec_col: str, bits_per_table: int = BITS_PER_TABLE):
     """pandas_udf: embedding array → array<long> of N_TABLES bucket
-    ids. One numpy matmul per Arrow batch — the fast path for the
-    corpus-wide index build (the interpreted higher-order-function
-    expression tree costs ~2s per evaluation regardless of row count;
-    same Arrow-vs-HOF trade the MinHash signatures measured at ~7×)."""
+    ids. One numpy matmul per Arrow batch (lsh_buckets_np) — the
+    corpus-wide index build's signature kernel."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -259,53 +233,12 @@ def lsh_signatures_arrow(vec_col: str, bits_per_table: int = BITS_PER_TABLE):
     return sig_udf(vec_col)
 
 
-def _bucketed(df: DataFrame, vec_col: str) -> DataFrame:
-    """Explode each vector to its L (table_id, bucket) rows."""
-    return df.select(
-        "*",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table_id"),
-                        _table_signature(vec_col, t).alias("bucket"),
-                    )
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("*", "tb.table_id", "tb.bucket").drop("tb")
-
-
-def lsh_topk(
-    emb: DataFrame,
-    probe_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k: score only vectors colliding with the probe in ≥1 of
-    the L hash tables — candidate generation is an equi-join on
-    (table_id, bucket), never a full scan of scored pairs."""
-    bucketed = _bucketed(emb, vec_col)
-    probe_buckets = bucketed.filter(F.col(id_col) == probe_id).select(
-        "table_id", "bucket"
-    )
-    candidate_ids = (
-        bucketed.join(F.broadcast(probe_buckets), ["table_id", "bucket"], "left_semi")
-        .select(id_col)
-        .distinct()
-    )
-    candidates = emb.join(candidate_ids, id_col, "left_semi")
-    return cosine_topk(candidates, probe_id, k, id_col, vec_col)
-
-
 # ----------------------------------------------------------------- IVF
 # Inverted-file ANN: a coarse k-means quantizer partitions vectors into
 # cells; a probe scores only the vectors in its n_probe nearest cells.
 # Centroids are driver-side model state (n_cells × dim floats — tiny,
 # like any k-means model); vector assignment is a vectorized Arrow UDF
-# map. At 100 TB the assigned table is written partitioned by cell, so
+# map. ann_index writes the assigned table partitioned by cell, so
 # a probe reads n_probe/n_cells of the data and the cell scan is a
 # partition-pruned parquet read.
 
@@ -372,37 +305,6 @@ def ivf_centroids(
     for r in means:
         cents[r["cell"]] = [d["m"] for d in r["dm"]]
     return cents
-
-
-def ivf_topk(
-    emb: DataFrame,
-    probe_id: int,
-    k: int = 10,
-    n_cells: int = N_CELLS,
-    n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """ANN top-k via IVF: exact cosine over only the probe's n_probe
-    nearest cells. The probe's cell list is a 1-row broadcast (the
-    probe vector itself is never collected). Pass `centroids` to reuse
-    a trained quantizer — the normal production shape, where one index
-    serves every probe."""
-    cents = centroids if centroids is not None else ivf_centroids(
-        emb, n_cells, id_col, vec_col
-    )
-    assigned = emb.select(
-        id_col, vec_col, _assign_udf(cents, 1)(vec_col)[0].alias("cell")
-    )
-    probe_cells = (
-        emb.filter(F.col(id_col) == probe_id)
-        .select(F.explode(_assign_udf(cents, n_probe)(vec_col)).alias("cell"))
-    )
-    candidates = assigned.join(F.broadcast(probe_cells), "cell", "left_semi").drop(
-        "cell"
-    )
-    return cosine_topk(candidates, probe_id, k, id_col, vec_col)
 
 
 def cosine_topk_batch(

@@ -1,89 +1,20 @@
-"""Pure-Python reader for Spark's serialized Count-Min Sketch.
+"""DDSketch primitives: the log-bucket algebra of the mergeable
+quantile sketch, as Spark columns and as DuckDB SQL text.
 
-`F.count_min_sketch(...)` returns the byte form produced by
-`org.apache.spark.util.sketch.CountMinSketchImpl.writeTo` — a public,
-VERSIONED on-disk format (version int, totalCount, depth, width, the
-depth hash coefficients, then the depth×width counter table, all
-big-endian via DataOutputStream). Parsing it here keeps the probe free
-of any `spark._jvm` reach: the JVM accessor is a private PySpark
-surface that a minor upgrade can rename, while the byte format is
-pinned by its own version tag (we refuse anything but V1 loudly).
-
-The long-item estimate reproduces the stream-lib hash Spark uses:
-    h = hashA[i] * item            (64-bit two's-complement wrap)
-    h += h >> 32                   (arithmetic shift)
-    h &= (2^31 - 1)                ("mod 2^31-1" fast path)
-    bucket = h % width
-and the estimate is min over rows — never an under-count, which the
-tests pin against both the exact counts and the JVM's own probe.
+Shared by queries/sketches.py (the standalone quantile-sketch query)
+and operators/rollup.py (the store's mergeable quantile column): ONE
+definition of the bucket algebra, so a store-served quantile can never
+drift from the ad-hoc sketch.
 """
 
 from __future__ import annotations
 
-import struct
-
-_PRIME_MODULUS = (1 << 31) - 1
-_MASK64 = (1 << 64) - 1
-
-
-def _s64(x: int) -> int:
-    """Wrap to 64-bit two's-complement (Java long semantics)."""
-    x &= _MASK64
-    return x - (1 << 64) if x >= (1 << 63) else x
-
-
-class CountMinSketch:
-    """Parsed V1 sketch: estimate counts for long items without the JVM."""
-
-    def __init__(self, data: bytes):
-        off = 0
-
-        def read(fmt: str):
-            nonlocal off
-            vals = struct.unpack_from(">" + fmt, data, off)
-            off += struct.calcsize(">" + fmt)
-            return vals if len(vals) > 1 else vals[0]
-
-        version = read("i")
-        if version != 1:
-            raise ValueError(
-                f"unsupported CountMinSketch serialization version {version}"
-            )
-        self.total_count = read("q")
-        self.depth = read("i")
-        self.width = read("i")
-        self.hash_a = list(read("q" * self.depth))
-        self.table = [
-            list(read("q" * self.width)) for _ in range(self.depth)
-        ]
-        if off != len(data):
-            raise ValueError(
-                f"trailing bytes in sketch payload ({len(data) - off})"
-            )
-
-    def _bucket(self, item: int, row: int) -> int:
-        h = _s64(self.hash_a[row] * item)
-        h = _s64(h + (h >> 32))
-        h &= _PRIME_MODULUS
-        return h % self.width
-
-    def estimate_long(self, item: int) -> int:
-        return min(
-            self.table[row][self._bucket(item, row)]
-            for row in range(self.depth)
-        )
-
-
-# ------------------------------------------------ DDSketch primitives
-# Shared by queries/sketches.py (the standalone quantile-sketch query)
-# and operators/rollup.py (the store's mergeable quantile column): ONE
-# definition of the bucket algebra so a store-served quantile can never
-# drift from the ad-hoc sketch. gamma = 1.02 → relative error
-# alpha = (gamma-1)/(gamma+1) ≈ 0.99% on quantile values. The ln
-# quotient rounds to 6dp before ceil (the repo's libm contract — Java
-# and DuckDB ln() may differ in the final ulp; the round absorbs it).
 import math as _math
 
+# gamma = 1.02 → relative error alpha = (gamma-1)/(gamma+1) ≈ 0.99% on
+# quantile values. The ln quotient rounds to 6dp before ceil (the
+# repo's libm contract — Java and DuckDB ln() may differ in the final
+# ulp; the round absorbs it).
 DD_GAMMA = 1.02
 DD_LN_GAMMA = _math.log(DD_GAMMA)  # 0.019802627296179712
 # sentinel bucket for non-positive values (log-buckets need v > 0):

@@ -628,9 +628,7 @@ def agg_countmin_topk(spark, sf_dir):
     word_hash48_sql — same family as the KMV sketch and document
     fingerprints), so DuckDB rebuilds the identical sketch cell-for-
     cell and replays every estimate (_countmin_oracle) — the same
-    replay-the-algebra treatment the KMV set ops got in r9. The
-    Python parser for Spark's native sketch bytes remains pinned
-    bit-identical to the JVM probe in tests/test_operators.py."""
+    replay-the-algebra treatment the KMV set ops got in r9."""
     li = table(spark, sf_dir, "lineitem").select("l_partkey")
     key = "CAST(l_partkey AS STRING)"
     cells = F.array(

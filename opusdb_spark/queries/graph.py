@@ -89,13 +89,10 @@ def _trade_edges(spark, sf_dir) -> DataFrame:
     ann_index/minhash-signature ingest pattern; VERDICT r6 perf item
     5). At 100 TB this is the difference between a per-query corpus
     pass and a 625-row scan."""
-    import hashlib
-    import os
-
     from opusdb_spark.sources.formats import (
+        corpus_scratch_path,
         ensure_written,
         read_store,
-        scratch_path,
         stat_fingerprint,
     )
 
@@ -120,10 +117,8 @@ def _trade_edges(spark, sf_dir) -> DataFrame:
             )
         )
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     store = ensure_written(
-        scratch_path(f"trade_edges_{base}_{tag}"),
+        corpus_scratch_path("trade_edges", sf_dir),
         stat_fingerprint(
             *(
                 f"{sf_dir}/{t}.parquet"

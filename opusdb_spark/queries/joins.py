@@ -661,20 +661,15 @@ def join_partition_pruned(spark, sf_dir):
 
     The partitioned copy is materialized ONCE (fingerprint-guarded) —
     the ingest/query split; only the pruned read happens per query."""
-    import hashlib
-
     from opusdb_spark.sources import (
+        corpus_scratch_path,
         ensure_written,
         read_store,
-        scratch_path,
         stat_fingerprint,
         write_partitioned,
     )
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    out = scratch_path(
-        f"dpp_orders_{os.path.basename(os.path.normpath(sf_dir))}_{tag}"
-    )
+    out = corpus_scratch_path("dpp_orders", sf_dir)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -1064,12 +1059,10 @@ def mv_join_incremental(spark, sf_dir):
     partners are ≡ 0 mod 13 by the join equality) and ΔO reads only
     bk17=0, so neither delta branch ever scans the full dimension.
     All four prunes and the broadcast are plan-pinned."""
-    import hashlib
-
     from opusdb_spark.sources import (
+        corpus_scratch_path,
         ensure_written,
         read_store,
-        scratch_path,
         stat_fingerprint,
     )
 
@@ -1080,10 +1073,8 @@ def mv_join_incremental(spark, sf_dir):
     )
     d_l = F.col("l_orderkey") % 13 == 0
     d_o = F.col("o_orderkey") % 17 == 0
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    view_store = scratch_path(f"mv_join_{base}_{tag}")
-    fact_store = scratch_path(f"mv_fact_{base}_{tag}")
+    view_store = corpus_scratch_path("mv_join", sf_dir)
+    fact_store = corpus_scratch_path("mv_fact", sf_dir)
 
     def build_view(p):
         (
@@ -1147,7 +1138,7 @@ def mv_join_incremental(spark, sf_dir):
     # reads into partition-pruned directory scans instead of full
     # orders scans (the r10 probe put the ΔL ⋈ full-O shuffle as the
     # residual cost after the fact side was pruned)
-    dim_store = scratch_path(f"mv_dim_{base}_{tag}")
+    dim_store = corpus_scratch_path("mv_dim", sf_dir)
 
     def build_dim(p):
         (

@@ -141,17 +141,12 @@ def _minhash_sigs(spark, sf_dir):
     """Ingest-once MinHash signature store for this corpus, shared by
     every dedup query (fuzzy pairs / clustering / pipeline) — the
     signature column is written at ingest, not recomputed per query."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     return dedup.minhash_signatures_stored(
         spark,
         table(spark, sf_dir, "documents"),
-        scratch_path(f"minhash_sigs_{base}_{tag}"),
+        corpus_scratch_path("minhash_sigs", sf_dir),
         stat_fingerprint(f"{sf_dir}/documents.parquet"),
     )
 
@@ -159,17 +154,12 @@ def _minhash_sigs(spark, sf_dir):
 def _simhash_fps(spark, sf_dir):
     """Ingest-once SimHash fingerprint store for this corpus (same
     contract as _minhash_sigs)."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     return dedup.simhash_fingerprints_stored(
         spark,
         table(spark, sf_dir, "documents"),
-        scratch_path(f"simhash_fps_{base}_{tag}"),
+        corpus_scratch_path("simhash_fps", sf_dir),
         stat_fingerprint(f"{sf_dir}/documents.parquet"),
     )
 
@@ -178,17 +168,12 @@ def _minhash_pairs(spark, sf_dir, threshold: float = 0.5):
     """Ingest-once near-dup PAIR GRAPH for this corpus (band join +
     estimate run once per (corpus, threshold); fuzzy listing,
     clustering, and the pipeline all read the same parquet)."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     return dedup.minhash_pairs_stored(
         spark,
         table(spark, sf_dir, "documents"),
-        scratch_path(f"minhash_pairs_{base}_{tag}"),
+        corpus_scratch_path("minhash_pairs", sf_dir),
         stat_fingerprint(f"{sf_dir}/documents.parquet"),
         jaccard_threshold=threshold,
         sig=_minhash_sigs(spark, sf_dir),
@@ -200,17 +185,12 @@ def _minhash_components(spark, sf_dir, threshold: float = 0.5):
     (same contract as _minhash_pairs — the components are as
     corpus-shaped as the pairs, so the O(log n) star rounds run at
     ingest and cluster queries are a parquet read + groupBy)."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     return dedup.components_stored(
         spark,
         _minhash_pairs(spark, sf_dir, threshold),
-        scratch_path(f"minhash_components_{base}_{tag}"),
+        corpus_scratch_path("minhash_components", sf_dir),
         # n_minhash rides in the fingerprint: the pair graph rebuilds
         # when the signature hyperparams change, and the derived
         # components must go stale WITH it, not serve the old graph
@@ -232,19 +212,11 @@ def _oracle_sf_dir() -> str:
 
 
 def _oracle_scratch(prefix: str) -> str:
-    """Scratch-store path of the oracle corpus's ingest artifact,
-    replicating the `{prefix}_{basename}_{md5tag}` naming the Spark
-    query helpers use — ONE place for the scheme on the oracle side
-    (it was previously copy-pasted per builder)."""
-    import hashlib
-    import os
+    """Scratch-store path of the oracle corpus's ingest artifact — the
+    same formats.corpus_scratch_path the Spark query helpers use."""
+    from opusdb_spark.sources.formats import corpus_scratch_path
 
-    from opusdb_spark.sources.formats import scratch_path
-
-    sf_dir = _oracle_sf_dir()
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return scratch_path(f"{prefix}_{base}_{tag}")
+    return corpus_scratch_path(prefix, _oracle_sf_dir())
 
 
 def _fuzzy_oracle() -> str:
@@ -3390,14 +3362,9 @@ def _maha_model_dir(sf_dir: str) -> str:
     convention: numpy-only math (matrix inversion) runs once at
     ingest and is PERSISTED, so a second engine can replay the
     scoring from the artifact without replaying the inversion."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path
 
-    from opusdb_spark.sources.formats import scratch_path
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return scratch_path(f"maha_model_{base}_{tag}")
+    return corpus_scratch_path("maha_model", sf_dir)
 
 
 def _ensure_maha_model(spark, sf_dir: str) -> str:
@@ -3610,17 +3577,12 @@ def _winnow_fps(spark, sf_dir):
     self-join sides) — without the store, Spark re-runs the gram
     hashing per reference (3 corpus passes; BENCH r7: 6.0 s → 2.1 s at
     sf1)."""
-    import hashlib
-    import os
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
     return dedup.winnow_fingerprints_stored(
         spark,
         table(spark, sf_dir, "documents"),
-        scratch_path(f"winnow_fps_{base}_{tag}"),
+        corpus_scratch_path("winnow_fps", sf_dir),
         stat_fingerprint(f"{sf_dir}/documents.parquet"),
         k=_WIN_K,
         w=_WIN_W,

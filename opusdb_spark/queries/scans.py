@@ -1024,19 +1024,15 @@ def scan_delete_vectors(spark, sf_dir):
     rows (never rewrites data files); every read pays one broadcast
     anti-join (plan-pinned) — the standard merge-on-read trade. The
     sidecar build happens once at ingest (fingerprint-guarded)."""
-    import hashlib
-
     from opusdb_spark.sources.formats import (
+        corpus_scratch_path,
         ensure_written,
-        scratch_path,
         stat_fingerprint,
         store_layout_fingerprint,
     )
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(sf_dir))
-    store = scratch_path(f"dv_orders_{base}_{tag}")
-    sidecar = scratch_path(f"dv_sidecar_{base}_{tag}")
+    store = corpus_scratch_path("dv_orders", sf_dir)
+    sidecar = corpus_scratch_path("dv_sidecar", sf_dir)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )

@@ -8,6 +8,7 @@ opusdb_spark/streaming/jobs.py.
 """
 
 from opusdb_spark.sources.formats import (  # noqa: F401
+    corpus_scratch_path,
     ensure_written,
     read_csv,
     read_json,

@@ -14,6 +14,7 @@ filters on the partition column become partition-pruned scans
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import shutil
@@ -46,6 +47,15 @@ def scratch_path(name: str) -> str:
     path = os.path.join(_SCRATCH, name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
+
+
+def corpus_scratch_path(prefix: str, sf_dir: str) -> str:
+    """scratch_path of a per-corpus store: `<prefix>_<basename>_<tag>`,
+    where tag is the first 8 hex digits of md5(abspath(sf_dir)) — two
+    corpora sharing a basename never share a store."""
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    base = os.path.basename(os.path.normpath(sf_dir))
+    return scratch_path(f"{prefix}_{base}_{tag}")
 
 
 _MARKER = "_fingerprint.json"

@@ -17,7 +17,10 @@ instrumentation survive the trims.
 from __future__ import annotations
 
 import ast
+import importlib
+import importlib.util
 import json
+import types
 from pathlib import Path
 
 import pytest
@@ -206,6 +209,66 @@ def test_scripts_use_only_existing_bench_names():
                 if not hasattr(bench, n)
             ]
     assert seen, "no script references bench — the scan found nothing"
+    assert not missing, missing
+
+
+# Repo packages whose names the frozen benchmark and the scripts use.
+_REPO_PACKAGES = ("opusdb_spark", "tests")
+
+
+def test_benchmark_and_scripts_use_only_existing_package_names():
+    """Every opusdb_spark/tests name that perfbench/*.py and scripts/*.py
+    import, reach as `<module>.<attr>` on an imported module, or hand
+    to a wrapper as `(module, "attr")` must exist. perfbench/ is frozen
+    (the benchmark runs it unchanged on both sides of a change), so a
+    deletion that removes a name it uses would otherwise break the
+    benchmark only at run time."""
+    root = Path(bench.__file__).parent
+    paths = sorted((root / "perfbench").glob("*.py"))
+    paths += sorted((root / "scripts").glob("*.py"))
+    resolved, missing = set(), []
+
+    def check(path, node, mod, attr):
+        """The object `mod.attr` names (a submodule is imported), or
+        None after recording it as missing."""
+        ref = f"{mod.__name__}.{attr}"
+        if hasattr(mod, "__path__") and importlib.util.find_spec(ref):
+            importlib.import_module(ref)
+        if hasattr(mod, attr):
+            resolved.add((path.parent.name, ref))
+            return getattr(mod, attr)
+        missing.append(f"{path.parent.name}/{path.name}:{node.lineno}: {ref}")
+        return None
+
+    for path in paths:
+        tree = ast.parse(path.read_text(), str(path))
+        bound = {}  # local name -> repo module it is bound to
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module and not node.level:
+                if node.module.split(".")[0] not in _REPO_PACKAGES:
+                    continue
+                mod = importlib.import_module(node.module)
+                for a in node.names:
+                    sub = check(path, node, mod, a.name)
+                    if isinstance(sub, types.ModuleType):
+                        bound[a.asname or a.name] = sub
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in bound
+            ):
+                check(path, node, bound[node.value.id], node.attr)
+            elif (
+                isinstance(node, ast.Call)
+                and len(node.args) >= 2
+                and isinstance(node.args[0], ast.Name)
+                and node.args[0].id in bound
+                and isinstance(node.args[1], ast.Constant)
+                and isinstance(node.args[1].value, str)
+            ):
+                check(path, node, bound[node.args[0].id], node.args[1].value)
+    assert {d for d, _ in resolved} == {"perfbench", "scripts"}, resolved
     assert not missing, missing
 
 

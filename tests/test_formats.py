@@ -3,7 +3,8 @@ leaves the previous complete store or no store, never a partial one,
 and the next call publishes a complete store (pure Python, no Spark).
 read_store takes a flat Spark-written store's schema from its footers
 (no job) and every other layout's from Spark's own inference; either
-way the schema equals a plain spark.read.parquet."""
+way the schema equals a plain spark.read.parquet. corpus_scratch_path
+keeps the per-corpus store names the inline formula gave."""
 
 from __future__ import annotations
 
@@ -228,3 +229,25 @@ def test_read_store_falls_back_to_inference(spark, tmp_path, build):
     p = build(spark, str(tmp_path / "store"))
     assert formats._footer_schema(p) is None
     assert formats.read_store(spark, p).schema == spark.read.parquet(p).schema
+
+
+
+def test_corpus_scratch_path_keeps_store_names():
+    """corpus_scratch_path must name a store exactly as the inline
+    `<prefix>_<basename>_<md5(abspath)[:8]>` formula it replaced did,
+    for any spelling of the corpus dir: a different name would orphan
+    every store already built and rebuild it."""
+    import hashlib
+
+    from tests.conftest import SF_SMALL
+
+    for sf_dir in (SF_SMALL, SF_SMALL + "/", os.path.relpath(SF_SMALL)):
+        tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+        base = os.path.basename(os.path.normpath(sf_dir))
+        for prefix in ("minhash_sigs", "ann_index", "dv_orders", "mv_join"):
+            want = formats.scratch_path(f"{prefix}_{base}_{tag}")
+            assert formats.corpus_scratch_path(prefix, sf_dir) == want
+    twin = os.path.join("elsewhere", os.path.basename(SF_SMALL))
+    assert formats.corpus_scratch_path("ann_index", twin) != (
+        formats.corpus_scratch_path("ann_index", SF_SMALL)
+    ), "corpora sharing a basename must not share a store"

@@ -201,26 +201,6 @@ def test_simhash_deterministic_across_partitioning(spark):
     assert a == b
 
 
-def test_simhash_arrow_near_dups_and_determinism(spark):
-    """The Arrow/numpy fingerprint path must behave like a SimHash:
-    identical text → identical fingerprint, one-word edit → within
-    Hamming 3, unrelated text never pairs; and fingerprints must be
-    partition-independent (crc32, not Python's salted hash)."""
-    docs = _docs_fixture(spark)
-    a = {r.doc_id: r.simhash for r in dedup.simhash_fingerprints_arrow(docs.repartition(1)).collect()}
-    b = {r.doc_id: r.simhash for r in dedup.simhash_fingerprints_arrow(docs.repartition(7)).collect()}
-    assert a == b
-    pairs = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_near_dups(
-            docs, max_hamming=3, fp=dedup.simhash_fingerprints_arrow(docs)
-        ).collect()
-    }
-    assert pairs.get((1, 2)) == 0
-    assert (1, 3) in pairs
-    assert not any(4 in p for p in pairs)
-
-
 # ----------------------------------------------------------------- skew
 
 
@@ -356,18 +336,6 @@ def test_cosine_topk_self_similarity(spark):
     assert rows[3].cosine == pytest.approx(-1.0)
 
 
-def test_lsh_topk_recall_on_real_embeddings(spark):
-    """ANN must at least recover the brute-force top-1 and mostly agree
-    on the top-10 for these well-spread synthetic vectors."""
-    from opusdb_spark.tables import table
-
-    emb = table(spark, SF, "embeddings")
-    exact = [r.vec_id for r in similarity.cosine_topk(emb, 0, 10).collect()]
-    approx = [r.vec_id for r in similarity.lsh_topk(emb, 0, 10).collect()]
-    assert exact[0] == approx[0], "top-1 must survive LSH bucketing"
-    assert len(set(exact) & set(approx)) >= 5, "recall@10 collapsed"
-
-
 def test_pack_sequences_matches_reference_and_respects_capacity(spark):
     """Greedy packing: distributed applyInPandas result must equal the
     sequential reference per group; no sequence exceeds capacity unless
@@ -410,8 +378,8 @@ def test_pack_sequences_matches_reference_and_respects_capacity(spark):
 
 def test_stored_probe_buckets_match_signature_expressions(spark):
     """The sigs/ store lookup (the production probe path) must return
-    exactly the buckets the signature expressions compute — and the two
-    lsh_probe paths must therefore return identical top-k rows."""
+    exactly the buckets the numpy signature kernel computes — and the
+    two lsh_probe paths must therefore return identical top-k rows."""
     from opusdb_spark.operators import ann_index
     from opusdb_spark.tables import table
 
@@ -434,12 +402,20 @@ def test_stored_probe_buckets_match_signature_expressions(spark):
     assert via_store == via_expr
 
 
-def test_ivf_topk_recall_on_real_embeddings(spark):
+def test_ivf_probe_recall_on_real_embeddings(spark):
+    from opusdb_spark.operators import ann_index
     from opusdb_spark.tables import table
 
     emb = table(spark, SF, "embeddings")
+    idx = ann_index.ensure_index(
+        spark, emb, ann_index.index_dir_for(SF), ann_index.source_fingerprint(SF)
+    )
+    vec = ann_index.fetch_vector(spark, idx, 0)
     exact = [r.vec_id for r in similarity.cosine_topk(emb, 0, 10).collect()]
-    approx = [r.vec_id for r in similarity.ivf_topk(emb, 0, 10).collect()]
+    approx = [
+        r.vec_id
+        for r in ann_index.ivf_probe(spark, idx, vec, 10, exclude_id=0).collect()
+    ]
     assert exact[0] == approx[0], "top-1 must survive IVF cell pruning"
     assert len(set(exact) & set(approx)) >= 5, "recall@10 collapsed"
 
@@ -1089,7 +1065,7 @@ def test_incremental_pairs_match_batch_pairs_cross_subset(spark):
     from opusdb_spark.tables import table
 
     docs = table(spark, SF, "documents")
-    sigs = dedup.minhash_signatures_arrow(dedup.spread(docs))
+    sigs = dedup.minhash_signatures(dedup.spread(docs))
     sigs = sigs.localCheckpoint(eager=False)
     batch = sigs.filter(F.col("doc_id") % 10 == 0)
     base = sigs.filter(F.col("doc_id") % 10 != 0)
@@ -1577,54 +1553,6 @@ def test_global_ntile_matches_native_ntile(spark, n_rows):
     g = {r["id"]: r["seg"] for r in got.select("id", "seg").collect()}
     w = {r["id"]: r["seg"] for r in want.collect()}
     assert g == w
-
-
-def test_global_rank_is_total_and_exact(spark):
-    from opusdb_spark.operators.ranking import with_global_rank
-
-    df = spark.range(200).select(
-        F.col("id"), (F.col("id") % 7).cast("long").alias("metric")
-    )
-    got = with_global_rank(
-        df,
-        [F.asc("metric"), F.asc("id")],
-        F.col("metric"),
-        descending=False,
-        out="rk",
-        n_buckets=4,
-    )
-    rows = sorted(
-        got.select("metric", "id", "rk").collect(),
-        key=lambda r: (r["metric"], r["id"]),
-    )
-    assert [r["rk"] for r in rows] == list(range(1, 201))
-
-
-def test_countmin_python_reader_matches_jvm(spark):
-    """operators/sketch.py parses the V1 byte format and reproduces the
-    stream-lib long hash: estimates must be bit-identical to the JVM's
-    own CountMinSketch probe for the same bytes (the query no longer
-    touches spark._jvm; this test is where the cross-check lives)."""
-    from opusdb_spark.operators.sketch import CountMinSketch
-
-    li = spark.range(0, 5000).select(
-        (F.col("id") % 97).alias("k")
-    )
-    sk_bytes = bytes(
-        li.agg(
-            F.count_min_sketch("k", F.lit(0.01), F.lit(0.99), F.lit(7)).alias(
-                "sk"
-            )
-        ).first()["sk"]
-    )
-    py = CountMinSketch(sk_bytes)
-    jvm = spark._jvm
-    jv = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        jvm.java.io.ByteArrayInputStream(sk_bytes)
-    )
-    assert py.total_count == jv.totalCount()
-    for k in range(97):
-        assert py.estimate_long(k) == int(jv.estimateCount(k)), k
 
 
 # ---------------------------------------- perceptual-hash image dedup
