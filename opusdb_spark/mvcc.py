@@ -4,7 +4,7 @@ The reference's data model is a set of versioned cells: a ref holds a
 history vector of `{:value :write-point}` entries, newest last, capped
 at 16 (reference stm.clj:153-158, stm.clj:10). Its read rules are the
 behaviors this module re-expresses over an immutable DataFrame of
-versions `(key, write_point, value...)`:
+versions `(ref_id, write_point, value...)`:
 
 - `latest`    = deref outside a transaction — newest committed version
                 (stm.clj:161-162)
@@ -47,6 +47,8 @@ from pyspark.sql.types import IntegralType
 from opusdb_spark.sources import formats
 
 MAX_HISTORY = 16  # reference stm.clj:10
+# the versions table's columns: (ref_id, write_point, value...)
+KEY, VERSION, VALUE = "ref_id", "write_point", "value"
 
 # conservation(): clock spans at or under this run the running sum as a
 # plain single-partition window (one task sorting ≤4M narrow rows —
@@ -57,11 +59,9 @@ MAX_HISTORY = 16  # reference stm.clj:10
 _SINGLE_SORT_MAX_VERSIONS = 1 << 22
 
 
-def latest(
-    versions: DataFrame, key: str = "ref_id", version: str = "write_point"
-) -> DataFrame:
+def latest(versions: DataFrame) -> DataFrame:
     """Newest version per key (deref outside a txn, stm.clj:161-162)."""
-    w = Window.partitionBy(key).orderBy(F.col(version).desc())
+    w = Window.partitionBy(KEY).orderBy(F.col(VERSION).desc())
     return (
         versions.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -69,27 +69,15 @@ def latest(
     )
 
 
-def snapshot(
-    versions: DataFrame,
-    read_point,
-    key: str = "ref_id",
-    version: str = "write_point",
-) -> DataFrame:
+def snapshot(versions: DataFrame, read_point) -> DataFrame:
     """State as of `read_point`: newest version with version ≤ read_point
     per key (find-version, stm.clj:55-65). Keys born after the
     read-point are absent — exactly the nil/GC'd case (stm.clj:172-174).
     """
-    return latest(versions.filter(F.col(version) <= read_point), key, version)
+    return latest(versions.filter(F.col(VERSION) <= read_point))
 
 
-def snapshot_diff(
-    versions: DataFrame,
-    old_point,
-    new_point,
-    key: str = "ref_id",
-    version: str = "write_point",
-    value: str = "value",
-) -> DataFrame:
+def snapshot_diff(versions: DataFrame, old_point, new_point) -> DataFrame:
     """Time-travel diff: what changed between the snapshots at
     `old_point` and `new_point` (old < new). Each key visible at
     `new_point` is classified 'insert' (born after `old_point`) or
@@ -102,16 +90,10 @@ def snapshot_diff(
     two window passes + a join. At 100 TB that halves the shuffle and
     avoids materializing either snapshot.
     """
-    both = versions.filter(F.col(version) <= new_point).groupBy(key).agg(
-        F.max(
-            F.when(
-                F.col(version) <= old_point,
-                F.struct(F.col(version).alias("wp"), F.col(value).alias("v")),
-            )
-        ).alias("_old"),
-        F.max(
-            F.struct(F.col(version).alias("wp"), F.col(value).alias("v"))
-        ).alias("_new"),
+    wp_v = F.struct(F.col(VERSION).alias("wp"), F.col(VALUE).alias("v"))
+    both = versions.filter(F.col(VERSION) <= new_point).groupBy(KEY).agg(
+        F.max(F.when(F.col(VERSION) <= old_point, wp_v)).alias("_old"),
+        F.max(wp_v).alias("_new"),
     )
     return (
         both.filter(
@@ -119,7 +101,7 @@ def snapshot_diff(
             | (F.col("_old.wp") != F.col("_new.wp"))
         )
         .select(
-            key,
+            KEY,
             F.when(F.col("_old").isNull(), F.lit("insert"))
             .otherwise(F.lit("update"))
             .alias("op"),
@@ -131,15 +113,10 @@ def snapshot_diff(
     )
 
 
-def retain(
-    versions: DataFrame,
-    n: int = MAX_HISTORY,
-    key: str = "ref_id",
-    version: str = "write_point",
-) -> DataFrame:
+def retain(versions: DataFrame, n: int = MAX_HISTORY) -> DataFrame:
     """Bounded history: newest n versions per key (stm.clj:42-53).
     Run as the retention pass when compacting a versions table."""
-    w = Window.partitionBy(key).orderBy(F.col(version).desc())
+    w = Window.partitionBy(KEY).orderBy(F.col(VERSION).desc())
     return (
         versions.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
@@ -147,15 +124,15 @@ def retain(
     )
 
 
-def _footer_write_point(versions: DataFrame, version: str) -> int | None:
-    """max(version) + 1 from the row-group statistics of the files a
+def _footer_write_point(versions: DataFrame) -> int | None:
+    """max(write_point) + 1 from the row-group statistics of the files a
     bare parquet scan reads, or None when the plan is anything else, a
     file is not local, or the footers cannot answer (see
     formats.column_range)."""
     plan = versions._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
-    if not isinstance(versions.schema[version].dataType, IntegralType):
+    if not isinstance(versions.schema[VERSION].dataType, IntegralType):
         return None
     files = []
     for uri in versions.inputFiles():
@@ -163,13 +140,11 @@ def _footer_write_point(versions: DataFrame, version: str) -> int | None:
         if u.scheme != "file":
             return None
         files.append(unquote(u.path))
-    rng = formats.column_range(files, version)
+    rng = formats.column_range(files, VERSION)
     return None if rng is None else rng[1] + 1
 
 
-def _at_next_write_point(
-    versions: DataFrame, rows: DataFrame, version: str
-) -> DataFrame:
+def _at_next_write_point(versions: DataFrame, rows: DataFrame) -> DataFrame:
     """`versions` plus `rows` stamped with ONE new write point,
     max(existing) + 1 (1 on an empty history) — the single WRITE_POINT
     bump per committing transaction (stm.clj:42-43).
@@ -181,44 +156,35 @@ def _at_next_write_point(
     other input (a derived plan, a non-local file, a row group without
     min/max, an empty history) stamps a one-row aggregate,
     broadcast-crossjoined onto `rows`."""
-    nxt = _footer_write_point(versions, version)
+    nxt = _footer_write_point(versions)
     if nxt is not None:
-        dtype = versions.schema[version].dataType
-        stamped = rows.withColumn(version, F.lit(nxt).cast(dtype))
+        dtype = versions.schema[VERSION].dataType
+        stamped = rows.withColumn(VERSION, F.lit(nxt).cast(dtype))
     else:
         agg = versions.agg(
-            (F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp")
+            (F.coalesce(F.max(VERSION), F.lit(0)) + 1).alias("_wp")
         )
         stamped = rows.crossJoin(F.broadcast(agg)).withColumnRenamed(
-            "_wp", version
+            "_wp", VERSION
         )
     return versions.unionByName(stamped.select(*versions.columns))
 
 
-def append_versions(
-    versions: DataFrame,
-    updates: DataFrame,
-    version: str = "write_point",
-) -> DataFrame:
+def append_versions(versions: DataFrame, updates: DataFrame) -> DataFrame:
     """Commit a batch of updates as ONE new write point.
 
     `updates` carries (key, value...) without a version column; every
     update row gets write_point = max(existing) + 1 — the analog of the
     single WRITE_POINT bump per committing transaction (stm.clj:42-43).
     No key column is named: the stamp does not look at keys, and
-    readers such as `latest(..., key)` name theirs.
+    readers such as `latest` partition by `ref_id`.
     Returns the new versions DataFrame; writing it (or just the new
     rows, mode="append") is the commit, atomic per Spark job.
     """
-    return _at_next_write_point(versions, updates, version)
+    return _at_next_write_point(versions, updates)
 
 
-def read_own_writes(
-    versions: DataFrame,
-    pending: DataFrame,
-    key: str = "ref_id",
-    version: str = "write_point",
-) -> DataFrame:
+def read_own_writes(versions: DataFrame, pending: DataFrame) -> DataFrame:
     """The in-transaction deref order: write-set first, then committed
     history (reference stm.clj:169-171; pinned behavior
     stm_test.clj:196-202).
@@ -229,14 +195,10 @@ def read_own_writes(
     (anyone holding only `versions`) still see the committed state,
     because nothing here mutates or publishes.
     """
-    return latest(_at_next_write_point(versions, pending, version), key, version)
+    return latest(_at_next_write_point(versions, pending))
 
 
-def merge(
-    versions: DataFrame,
-    changes: DataFrame,
-    version: str = "write_point",
-) -> DataFrame:
+def merge(versions: DataFrame, changes: DataFrame) -> DataFrame:
     """MERGE a change-set as ONE committed write point (upsert+delete).
 
     `changes` carries (key, value..., _op) with _op in ('upsert',
@@ -265,15 +227,12 @@ def merge(
     if "_deleted" not in versions.columns:
         versions = versions.withColumn("_deleted", F.lit(False))
     rows = changes.withColumn("_deleted", F.col("_op") == "delete").drop("_op")
-    return _at_next_write_point(versions, rows, version)
+    return _at_next_write_point(versions, rows)
 
 
 def conservation(
     versions: DataFrame,
-    value: str = "value",
-    version: str = "write_point",
     decimal: bool = False,
-    key: str = "ref_id",
     n_ranges: int = 64,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
@@ -325,12 +284,12 @@ def conservation(
     bounds cost nothing but a few empty ranges. Without bounds a
     min/max pre-pass runs (one extra action).
     """
-    w_key = Window.partitionBy(key).orderBy(version)
-    delta = F.col(value) - F.coalesce(F.lag(value).over(w_key), F.lit(0))
+    w_key = Window.partitionBy(KEY).orderBy(VERSION)
+    delta = F.col(VALUE) - F.coalesce(F.lag(VALUE).over(w_key), F.lit(0))
     if decimal:
         delta = delta.cast("decimal(27,6)")
     deltas = versions.withColumn("_delta", delta)
-    per_wp = deltas.groupBy(version).agg(F.sum("_delta").alias("_wp_delta"))
+    per_wp = deltas.groupBy(VERSION).agg(F.sum("_delta").alias("_wp_delta"))
     if bounds is not None:
         lo, hi = bounds
     else:
@@ -338,10 +297,10 @@ def conservation(
         # arithmetic on the version value: deterministic under any
         # partitioning, retry-safe (unlike spark_partition_id after a
         # sampled repartitionByRange).
-        lo, hi = per_wp.agg(F.min(version), F.max(version)).first()
+        lo, hi = per_wp.agg(F.min(VERSION), F.max(VERSION)).first()
         if lo is None:
             return per_wp.select(
-                version, F.lit(None).cast("double").alias("total")
+                VERSION, F.lit(None).cast("double").alias("total")
             )
     span = hi - lo + 1
     if span <= _SINGLE_SORT_MAX_VERSIONS or n_ranges <= 1:
@@ -352,15 +311,15 @@ def conservation(
         # pays off past this threshold; under it, it's three extra
         # exchanges for nothing.
         w_all = (
-            Window.orderBy(version)
+            Window.orderBy(VERSION)
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         total = F.sum("_wp_delta").over(w_all)
         if decimal:
             total = total.cast("double")
-        return per_wp.select(version, total.alias("total"))
+        return per_wp.select(VERSION, total.alias("total"))
     width = max(1, -(-span // n_ranges))
-    grp = ((F.col(version) - F.lit(lo)) / F.lit(width)).cast("long")
+    grp = ((F.col(VERSION) - F.lit(lo)) / F.lit(width)).cast("long")
     grouped = per_wp.withColumn("_grp", grp)
     # Exclusive prefix sum over the ≤ n_ranges per-range totals. The
     # partition-less window is deliberate and safe: its input is the
@@ -385,12 +344,12 @@ def conservation(
     )
     w_local = (
         Window.partitionBy("_grp")
-        .orderBy(version)
+        .orderBy(VERSION)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     total = F.col("_off") + F.sum("_wp_delta").over(w_local)
     if decimal:
         total = total.cast("double")
     return grouped.join(F.broadcast(offsets), "_grp").select(
-        version, total.alias("total")
+        VERSION, total.alias("total")
     )

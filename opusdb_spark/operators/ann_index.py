@@ -23,9 +23,11 @@ index with LITERAL predicates on the partition columns: the scan plans
 show `PartitionFilters`, i.e. static partition pruning — only the
 probe's buckets/cells are listed and read (pinned in tests/test_plans.py).
 
-Scoring matches operators/similarity.cosine_topk exactly: per-row
-decimal-accumulated dot products (decimal addition is associative, so
-the score is identical to the groupBy-sum formulation bit-for-bit).
+Scoring IS operators/similarity.cosine_topk's: every probe scores
+through `similarity._cosine` against a literal probe
+(`similarity._literal_probe`), and `ivf_probe` ranks with the same
+two-phase `similarity._topk`, so an exact score is the same double
+here, in cosine_topk and in the SQL oracle.
 """
 
 from __future__ import annotations
@@ -40,10 +42,17 @@ from pyspark.sql import functions as F
 
 from opusdb_spark.operators.similarity import (
     BITS_PER_TABLE,
+    ID,
     N_CELLS,
     N_PROBE,
     N_TABLES,
+    VEC,
     _assign_udf,
+    _cosine,
+    _dec_fold,
+    _literal_probe,
+    _top_by,
+    _topk,
     ivf_centroids,
     lsh_buckets_np,
     lsh_signatures,
@@ -129,12 +138,7 @@ def source_fingerprint(sf_dir: str) -> dict:
 
 
 def ensure_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    index_dir: str,
-    fingerprint: dict,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark: SparkSession, emb: DataFrame, index_dir: str, fingerprint: dict
 ) -> str:
     """Build the index unless an identical build already exists.
 
@@ -147,27 +151,22 @@ def ensure_index(
     return formats.ensure_written(
         index_dir,
         fingerprint,
-        lambda p: _build_index(spark, emb, p, fingerprint, id_col, vec_col),
+        lambda p: _build_index(spark, emb, p, fingerprint),
     )
 
 
 def _build_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    index_dir: str,
-    fingerprint: dict,
-    id_col: str,
-    vec_col: str,
+    spark: SparkSession, emb: DataFrame, index_dir: str, fingerprint: dict
 ) -> None:
     """Write every index store under `index_dir` (ensure_written's
     staging dir, never the published index)."""
-    base = emb.select(id_col, vec_col)
+    base = emb.select(ID, VEC)
 
     # by_id: range-partitioned + sorted so id-equality probes prune via
     # row-group min/max stats (the parquet form of a PK lookup).
     (
-        base.repartitionByRange(F.col(id_col))
-        .sortWithinPartitions(id_col)
+        base.repartitionByRange(F.col(ID))
+        .sortWithinPartitions(ID)
         .write.mode("overwrite")
         .parquet(os.path.join(index_dir, "by_id"))
     )
@@ -183,11 +182,9 @@ def _build_index(
     # aggregate it map-side instead of shuffling a pair-count-sized
     # stream to dedupe (layout v4).
     bits = int(fingerprint.get("bits_per_table", BITS_PER_TABLE))
-    lsh = base.withColumn(
-        "sig_all", lsh_signatures(vec_col, bits)
-    ).select(
-        id_col,
-        vec_col,
+    lsh = base.withColumn("sig_all", lsh_signatures(bits)).select(
+        ID,
+        VEC,
         "sig_all",
         F.posexplode("sig_all").alias("table_id", "bucket"),
     )
@@ -211,21 +208,19 @@ def _build_index(
     # exactly once.)
     (
         spark.read.parquet(os.path.join(index_dir, "lsh"))
-        .select(id_col, "table_id", "bucket")
-        .repartitionByRange(F.col(id_col))
-        .sortWithinPartitions(id_col)
+        .select(ID, "table_id", "bucket")
+        .repartitionByRange(F.col(ID))
+        .sortWithinPartitions(ID)
         .write.mode("overwrite")
         .parquet(os.path.join(index_dir, "sigs"))
     )
 
     # ivf: train the coarse quantizer, persist the model, partition the
     # assignment by cell.
-    cents = ivf_centroids(emb, N_CELLS, id_col, vec_col)
+    cents = ivf_centroids(emb, N_CELLS)
     with open(os.path.join(index_dir, "centroids.json"), "w") as f:
         json.dump(cents.tolist(), f)
-    assigned = base.select(
-        id_col, vec_col, _assign_udf(cents, 1)(vec_col)[0].alias("cell")
-    )
+    assigned = base.select(ID, VEC, _assign_udf(cents, 1)(VEC)[0].alias("cell"))
     (
         # cluster by the partition key first — same tiny-files reasoning
         # as the lsh/ write above (n_cells × n_tasks files otherwise)
@@ -243,12 +238,11 @@ def _build_index(
     # (read the assignment back from the just-written ivf/ store: the
     # assign UDF already ran once for that write — never twice)
     ivf_store = spark.read.parquet(os.path.join(index_dir, "ivf")).select(
-        id_col, vec_col, "cell"
+        ID, VEC, "cell"
     )
     sample = (
         ivf_store.orderBy(
-            F.pmod(F.hash(F.col(id_col)), F.lit(997)).asc(),
-            F.col(id_col).asc(),
+            F.pmod(F.hash(F.col(ID)), F.lit(997)).asc(), F.col(ID).asc()
         )
         .limit(_PQ_SAMPLE)
         .collect()
@@ -263,9 +257,7 @@ def _build_index(
         json.dump(codebooks.tolist(), f)
     (
         ivf_store.select(
-            id_col,
-            "cell",
-            _pq_encode_udf(cents, codebooks)(vec_col, "cell").alias("codes"),
+            ID, "cell", _pq_encode_udf(cents, codebooks)(VEC, "cell").alias("codes")
         )
         .repartition(F.col("cell"))
         .write.mode("overwrite")
@@ -279,15 +271,13 @@ def load_centroids(index_dir: str) -> np.ndarray:
         return np.array(json.load(f), dtype=np.float64)
 
 
-def fetch_vector(
-    spark: SparkSession, index_dir: str, probe_id: int, id_col: str = "vec_id"
-) -> list[float]:
+def fetch_vector(spark: SparkSession, index_dir: str, probe_id: int) -> list[float]:
     """Probe-vector fetch by id from the sorted store — a stat-pruned
     single-row read (the only per-probe driver collect, and it is one
     row; a serving deployment would have the query vector in hand)."""
     row = (
         formats.read_store(spark, os.path.join(index_dir, "by_id"))
-        .filter(F.col(id_col) == probe_id)
+        .filter(F.col(ID) == probe_id)
         .first()
     )
     if row is None:
@@ -295,90 +285,14 @@ def fetch_vector(
     return [float(x) for x in row[1]]
 
 
-def _score_against(vec_col: str, probe_vec: list[float]):
-    """Exact-decimal cosine of each row's vector vs a literal probe.
-
-    The fold is similarity._dec_fold — ONE shared definition of the
-    accumulator precision/rounding, so probe scores stay bit-identical
-    to cosine_topk (and its SQL oracle) by construction rather than by
-    two hand-synchronized copies."""
-    from opusdb_spark.operators.similarity import _dec_fold as dec_fold
-
-    p = F.array(*[F.lit(float(x)).cast("double") for x in probe_vec])
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    dot = dec_fold(F.zip_with(x, p, lambda a, b: a * b))
-    nx = dec_fold(F.zip_with(x, x, lambda a, b: a * b))
-    # same decimal fold for the probe norm (a literal expression —
-    # constant-folded once) so scores are bit-identical to the
-    # cosine_topk formulation, which decimal-sums every term.
-    np_ = dec_fold(F.zip_with(p, p, lambda a, b: a * b))
-    # zero-norm guard (same contract as similarity.cosine_topk): an
-    # unguarded 0/0 yields NaN, and Spark sorts NaN ABOVE every real
-    # double — a zero-filled garbage vector would rank #1 in the
-    # descending top-k. NULL instead; callers' orderBy(desc) puts NULLs
-    # last, so degenerate vectors can never displace true neighbors.
-    return F.when((nx > 0) & (np_ > 0), dot / F.sqrt(nx * np_))
-
-
-def _exact_topk_pooled(
-    cands: DataFrame,
-    probe_vec: list[float],
-    k: int,
-    id_col: str,
-    vec_col: str,
-    prefilter: int = 100,
-) -> DataFrame:
-    """Exact top-k vs a literal probe, two-phase (cosine_topk's shape
-    applied to a candidate frame): every candidate computes an
-    APPROXIMATE cosine with plain double folds, only the top
-    max(prefilter, 10k) pool (TakeOrderedAndProject — partition-local
-    heads, one tiny final merge) is re-scored with _score_against, and
-    the final top-k orders on the exact value. So the only BigDecimal
-    arithmetic runs on a pool-sized input, never the probed cells —
-    at sf1 the IVF candidate set is ~1/4 of the corpus and the three
-    64-term decimal folds per row dominated the probe (interleaved A/B
-    in commit 13e4f2e, OPTIMIZATION_r13.md).
-
-    Safety is similarity.cosine_topk's adjudicated margin argument
-    verbatim: float32 component products are exact in double, so
-    |approx − exact| ≤ ~1e-10 for 64 dims, and a true top-k member can
-    only be cut if ≥ prefilter−k candidates tie within that margin —
-    unreachable for real embeddings; exact duplicates rank identically
-    in both phases and share the id tie-break. The probe norm enters
-    the approx score as a POSITIVE CONSTANT (any value yields the same
-    candidate order), so the pool choice needs no norm fold at all."""
-    p = F.array(*[F.lit(float(x)).cast("double") for x in probe_vec])
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    fdot = F.aggregate(
-        F.zip_with(x, p, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    fnx = F.aggregate(
-        F.transform(x, lambda a: a * a),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    fnp = sum(float(v) * float(v) for v in probe_vec)
-    approx = (
-        F.when(fnx > 0, fdot / F.sqrt(fnx * F.lit(fnp)))
-        if fnp > 0
-        else F.lit(None).cast("double")
-    )
-    pool = (
-        cands.select(id_col, vec_col, approx.alias("_ac"))
-        .filter(F.col("_ac").isNotNull())
-        .orderBy(F.desc("_ac"), F.asc(id_col))
-        .limit(max(prefilter, 10 * k))
-    )
-    return (
-        pool.select(
-            id_col, _score_against(vec_col, probe_vec).alias("cosine")
-        )
-        .filter(F.col("cosine").isNotNull())
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+def _nearest_cells(index_dir: str, probe_vec: list[float], n_probe: int):
+    """(centroids, probe as float64, the probe's n_probe nearest cells
+    by cosine against the centroid model) — driver-side, model-sized."""
+    cents = load_centroids(index_dir)
+    cn = cents / (np.linalg.norm(cents, axis=1, keepdims=True) + 1e-12)
+    v = np.asarray(probe_vec, dtype=np.float64)
+    vn = v / (np.linalg.norm(v) + 1e-12)
+    return cents, v, [int(c) for c in np.argsort(-(cn @ vn))[:n_probe]]
 
 
 def index_bits(index_dir: str | None) -> int:
@@ -431,7 +345,7 @@ def _probe_buckets(
 
 
 def stored_buckets(
-    spark: SparkSession, index_dir: str, probe_id: int, id_col: str = "vec_id"
+    spark: SparkSession, index_dir: str, probe_id: int
 ) -> list[tuple[int, int]]:
     """The probe's L (table_id, bucket) pairs from the persisted sigs/
     store — a stat-pruned read of L rows. The production lookup path
@@ -439,7 +353,7 @@ def stored_buckets(
     _probe_buckets (one signature evaluation)."""
     rows = (
         formats.read_store(spark, os.path.join(index_dir, "sigs"))
-        .filter(F.col(id_col) == probe_id)
+        .filter(F.col(ID) == probe_id)
         .collect()
     )
     if not rows:
@@ -453,8 +367,6 @@ def lsh_probe(
     probe_vec: list[float],
     k: int = 10,
     exclude_id: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probe_id: int | None = None,
 ) -> DataFrame:
     """ANN top-k from the persisted LSH index: literal (table_id, bucket)
@@ -464,7 +376,7 @@ def lsh_probe(
     the buckets the build wrote, which a driver-side re-hash matches
     only up to the ulp edge _probe_buckets notes."""
     if probe_id is not None:
-        buckets = stored_buckets(spark, index_dir, probe_id, id_col)
+        buckets = stored_buckets(spark, index_dir, probe_id)
     else:
         buckets = _probe_buckets(spark, probe_vec, index_dir)
     cond = None
@@ -474,17 +386,13 @@ def lsh_probe(
     cands = (
         formats.read_store(spark, os.path.join(index_dir, "lsh"))
         .filter(cond)
-        .select(id_col, vec_col)
-        .dropDuplicates([id_col])
+        .select(ID, VEC)
+        .dropDuplicates([ID])
     )
     if exclude_id is not None:
-        cands = cands.filter(F.col(id_col) != exclude_id)
-    return (
-        cands.select(id_col, _score_against(vec_col, probe_vec).alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+        cands = cands.filter(F.col(ID) != exclude_id)
+    cosine = _cosine(VEC, *_literal_probe(probe_vec), _dec_fold)
+    return _top_by(cands.select(ID, cosine.alias("cosine")), "cosine", k)
 
 
 def ivf_probe(
@@ -494,29 +402,23 @@ def ivf_probe(
     k: int = 10,
     n_probe: int = N_PROBE,
     exclude_id: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k from the persisted IVF index: the probe's n_probe
     nearest cells are computed driver-side against the tiny centroid
     model, then read as literal cell predicates (PartitionFilters).
-    Candidate scoring is the two-phase pooled shape (approx double
-    prefilter, exact decimal rescore of the pool — _exact_topk_pooled):
-    the probed cells are a corpus-fraction-sized set, so they must not
-    pay per-row BigDecimal folds."""
-    cents = load_centroids(index_dir)
-    cn = cents / (np.linalg.norm(cents, axis=1, keepdims=True) + 1e-12)
-    v = np.asarray(probe_vec, dtype=np.float64)
-    vn = v / (np.linalg.norm(v) + 1e-12)
-    cells = [int(c) for c in np.argsort(-(cn @ vn))[:n_probe]]
+    Candidates rank through cosine_topk's two-phase `_topk` (approx
+    double prefilter, exact decimal rescore of the pool): the probed
+    cells are a corpus-fraction-sized set, so they must not pay per-row
+    BigDecimal folds."""
+    _, _, cells = _nearest_cells(index_dir, probe_vec, n_probe)
     cands = (
         formats.read_store(spark, os.path.join(index_dir, "ivf"))
         .filter(F.col("cell").isin(cells))
-        .select(id_col, vec_col)
+        .select(ID, VEC)
     )
     if exclude_id is not None:
-        cands = cands.filter(F.col(id_col) != exclude_id)
-    return _exact_topk_pooled(cands, probe_vec, k, id_col, vec_col)
+        cands = cands.filter(F.col(ID) != exclude_id)
+    return _topk(cands, *_literal_probe(probe_vec), k)
 
 
 # ----------------------------------------------------------- IVF-PQ
@@ -611,8 +513,6 @@ def ivfpq_probe(
     n_probe: int = N_PROBE,
     rerank: int = 50,
     exclude_id: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k over the COMPRESSED code store: the probe's n_probe
     cells are partition-pruned (same as ivf_probe), but the candidate
@@ -624,19 +524,15 @@ def ivfpq_probe(
     EXACTLY against the stat-pruned by_id store, so PQ's quantization
     error costs recall only if a true neighbor falls outside the
     rerank pool, never final-score accuracy."""
-    cents = load_centroids(index_dir)
+    cents, v, cells = _nearest_cells(index_dir, probe_vec, n_probe)
     books = load_codebooks(index_dir)
     d = books.shape[2]
-    cn = cents / (np.linalg.norm(cents, axis=1, keepdims=True) + 1e-12)
-    v = np.asarray(probe_vec, dtype=np.float64)
-    vn = v / (np.linalg.norm(v) + 1e-12)
-    cells = [int(c) for c in np.argsort(-(cn @ vn))[:n_probe]]
 
     pq = formats.read_store(spark, os.path.join(index_dir, "pq")).filter(
         F.col("cell").isin(cells)
     )
     if exclude_id is not None:
-        pq = pq.filter(F.col(id_col) != exclude_id)
+        pq = pq.filter(F.col(ID) != exclude_id)
     adc = None
     for c in cells:
         r = v - cents[c]
@@ -653,8 +549,8 @@ def ivfpq_probe(
             else adc.when(F.col("cell") == c, expr)
         )
     cand = (
-        pq.select(id_col, adc.alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        pq.select(ID, adc.alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc(ID))
         .limit(rerank)
     )
     pool = {int(r[0]): float(r[1]) for r in cand.collect()}
@@ -665,29 +561,20 @@ def ivfpq_probe(
         return (
             formats.read_store(spark, os.path.join(index_dir, "by_id"))
             .select(
-                id_col,
+                ID,
                 F.lit(None).cast("double").alias("cosine"),
                 F.lit(None).cast("double").alias("adc_dist"),
             )
             .limit(0)
         )
+    lut_adc = F.create_map(*[F.lit(x) for kv in pool.items() for x in kv])
     exact = (
         formats.read_store(spark, os.path.join(index_dir, "by_id"))
-        .filter(F.col(id_col).isin(list(pool)))
+        .filter(F.col(ID).isin(list(pool)))
         .select(
-            id_col, _score_against(vec_col, probe_vec).alias("cosine")
+            ID,
+            _cosine(VEC, *_literal_probe(probe_vec), _dec_fold).alias("cosine"),
+            F.round(lut_adc[F.col(ID)], 6).alias("adc_dist"),
         )
-        .filter(F.col("cosine").isNotNull())
     )
-    lut_adc = F.create_map(
-        *[F.lit(x) for kv in pool.items() for x in kv]
-    )
-    return (
-        exact.select(
-            id_col,
-            "cosine",
-            F.round(lut_adc[F.col(id_col)], 6).alias("adc_dist"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_by(exact, "cosine", k)

@@ -1,34 +1,44 @@
 """Similarity search over embedding columns (array<float>).
 
-Three parts:
-  - Exact cosine top-k (`cosine_topk`, `cosine_topk_batch`) — the
-    baseline ANN recall is measured against. Exact-decimal dot
-    products, so scores hash-match a SQL oracle bit-for-bit. The probe
-    vector stays a 1-row DataFrame that gets broadcast, never
-    collected.
-  - The ANN models: the random-hyperplane LSH plane matrix and its
-    Arrow/numpy bucket kernel (`lsh_signatures`), and the IVF coarse
-    quantizer (`ivf_centroids`, `_assign_udf`). Candidates come only
-    from the probe's exact (table_id, bucket) matches across L tables
-    (OR-amplification supplies the recall; no multiprobe of
-    neighboring buckets is implemented). operators/ann_index.py
-    persists the index these models build and runs every ANN probe.
-  - Embedding-space operators: SemDeDup, k-means inertia,
-    Mahalanobis outliers, MMR and hard negatives.
+One cosine scorer: `_cosine_of` is the only cosine expression and
+`_cosine` feeds it array folds, with the fold as its one knob —
+`_double_fold` for the approximate prefilter and MMR relevance,
+`_dec_fold` for every exact score — and `_topk` is the only two-phase
+top-k. Exact top-k (`cosine_topk`), the ANN probes
+(operators/ann_index.py), MMR and SemDeDup all score through them, so
+an exact score is the same double wherever it is computed and
+hash-matches the SQL oracle bit-for-bit. The batched probes
+(`cosine_topk_batch`, `hard_negatives`) are the same algebra as grouped
+decimal sums over one flatten (`_flat`).
+
+Also here: the ANN models (the random-hyperplane LSH plane matrix and
+its Arrow bucket kernel `lsh_signatures`, the IVF coarse quantizer
+`ivf_centroids`/`_assign_udf`), which operators/ann_index.py persists
+and probes, and the embedding-space operators: SemDeDup, k-means
+inertia, Mahalanobis outliers, MMR and hard negatives. Every function
+reads the embeddings table's columns `vec_id`, `embedding` and `label`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+ID, VEC, LABEL = "vec_id", "embedding", "label"
 DEC12 = "decimal(27,12)"
+# accumulator is (37,12), NOT (38,12): a (38,12)+(27,12) add hits the
+# 38-precision cap and Spark sheds a scale digit (result (38,11)),
+# silently rounding EVERY step at 1e-11; (37,12)+(27,12) yields (38,12)
+# at full scale, and the cast back to (37,12) is an identity for any
+# sum below 1e25
+_DEC_ACC = "decimal(37,12)"
+_POOL_MIN = 100  # two-phase top-k pool: max(_POOL_MIN, 10k) candidates
 
 
-def _flat(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, i, x): one row per vector component, 1-based position.
+def _flat(df: DataFrame, *carry: str) -> DataFrame:
+    """(id, *carry, i, x): one row per vector component, 1-based position.
     spread() first: the explode is a dim× per-row fan-out feeding
     compute-dense consumers, and the embeddings table is small on disk
     — a single-split scan would serialize everything downstream on one
@@ -36,119 +46,156 @@ def _flat(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     from opusdb_spark.operators.skew import spread
 
     return spread(df).select(
-        F.col(id_col),
-        F.posexplode(vec_col).alias("pos", "xf"),
+        F.col(ID), *carry, F.posexplode(VEC).alias("pos", "xf")
     ).select(
-        id_col, (F.col("pos") + 1).alias("i"), F.col("xf").cast("double").alias("x")
+        ID,
+        *carry,
+        (F.col("pos") + 1).alias("i"),
+        F.col("xf").cast("double").alias("x"),
     )
 
 
-def _dec_fold(products: F.Column) -> F.Column:
+def _dec_sum(c: Column) -> Column:
+    """Order-independent grouped sum of per-row doubles at the
+    oracle's 1e-12 quantization, as double."""
+    return F.sum(c.cast(DEC12)).cast("double")
+
+
+def _double_fold(products) -> Column:
+    """Sequential left-fold double sum from 0.0 — the fold DuckDB's
+    list_reduce replays bit-for-bit (premise pinned in
+    tests/test_properties.py). Plain double adds, no BigDecimal, but
+    only approximately equal to the exact decimal sum."""
+    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _dec_fold(products) -> Column:
     """Exact left-fold decimal sum of an array of doubles, as double.
 
     Decimal addition is associative and exact, so the fold equals the
     order-independent SUM(CAST(.. AS DECIMAL)) the SQL oracle computes
     — per-element cast first, identical rounding to the grouped-sum
-    formulation this replaces."""
-    # accumulator is (37,12), NOT (38,12): a (38,12)+(27,12) add hits
-    # the 38-precision cap and Spark sheds a scale digit (result
-    # (38,11)), silently rounding EVERY step at 1e-11; (37,12)+(27,12)
-    # yields (38,12) at full scale, and the cast back to (37,12) is an
-    # identity for any sum below 1e25
+    formulation."""
     return F.aggregate(
         products,
-        F.lit("0").cast("decimal(37,12)"),
-        lambda acc, v: (acc + v.cast(DEC12)).cast("decimal(37,12)"),
+        F.lit("0").cast(_DEC_ACC),
+        lambda acc, v: (acc + v.cast(DEC12)).cast(_DEC_ACC),
     ).cast("double")
 
 
-def cosine_topk(
-    emb: DataFrame,
-    probe_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    prefilter: int = 100,
-) -> DataFrame:
+def _dot(a, b, fold) -> Column:
+    """Σ a·b of two array columns under `fold`. Components are cast to
+    double INSIDE the lambda (HOF lambdas run interpreted, so a
+    separate cast `transform` would be one more pass per element);
+    float32 products are exact in double (24+24 < 53 mantissa bits),
+    so `fold` alone decides exactness: `_dec_fold` is the oracle's
+    exact sum, `_double_fold` the cheap approximation, |approx − exact|
+    ≤ ~1e-10 at 64 dims."""
+    return fold(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
+
+
+def _norm2(arr, fold) -> Column:
+    """Σ a² of an array column under `fold` (same casts as `_dot`)."""
+    return fold(F.transform(arr, lambda a: a.cast("double") * a.cast("double")))
+
+
+def _cosine_of(dot, nx, np_) -> Column:
+    """The one cosine expression: dot / √(nx·np), NULL unless both
+    norms are positive. Zero-norm vectors (failed encodes are often
+    zero-filled in real embedding dumps) have no defined cosine: the
+    conditional makes the division row-lazy (no ANSI 0/0 abort), and
+    every caller drops the NULL — an unguarded 0/0 is NaN, which Spark
+    sorts above every real double.
+
+    Catalyst does not share `nx`/`np_` between the condition and the
+    division, so a caller whose norms are higher-order folds evaluated
+    on many rows projects them first (semdedup_drops)."""
+    return F.when((nx > 0) & (np_ > 0), dot / F.sqrt(nx * np_))
+
+
+def _cosine(vec, probe, probe_norm: Column, fold) -> Column:
+    """Cosine of array column `vec` against array `probe`, whose Σ p²
+    is `probe_norm`, with both sums under `fold`."""
+    return _cosine_of(_dot(vec, probe, fold), _norm2(vec, fold), probe_norm)
+
+
+def _literal_probe(probe_vec: list[float]) -> tuple[Column, Column]:
+    """A driver-side probe vector as a literal array plus its exact
+    Σ p², the norm being `_dec_fold`'s recurrence unrolled over the
+    literal products — same operations in the same order, so the value
+    equals `_norm2(p, _dec_fold)`, and Catalyst folds it to ONE
+    constant (a higher-order function over a literal array is never
+    constant-folded and would be re-evaluated on every candidate row).
+
+    Both are SQL text: one parse instead of ~400 Column calls through
+    py4j, which cost ~1 ms each on 4 vCPUs (measured 400 ms per probe
+    built as Columns vs 0.7 ms as text). repr() round-trips a double exactly
+    and Spark parses a `D` literal back to the same double."""
+    xs = [f"{float(x)!r}D" for x in probe_vec]
+    norm = f"CAST('0' AS {_DEC_ACC})"
+    for x in xs:
+        norm = f"CAST({norm} + CAST({x} * {x} AS {DEC12}) AS {_DEC_ACC})"
+    return F.expr(f"array({', '.join(xs)})"), F.expr(f"CAST({norm} AS DOUBLE)")
+
+
+def _top_by(df: DataFrame, score: str, n: int) -> DataFrame:
+    """The n rows with the highest non-NULL `score`, ties by lower id —
+    TakeOrderedAndProject: partition-local heads, one tiny merge."""
+    return (
+        df.filter(F.col(score).isNotNull())
+        .orderBy(F.desc(score), F.asc(ID))
+        .limit(n)
+    )
+
+
+def _topk(cands: DataFrame, probe, probe_norm: Column, k: int) -> DataFrame:
+    """Exact cosine top-k of `cands` (id, vector and any columns that
+    `probe`/`probe_norm` read) as (vec_id, cosine).
+
+    Two phases: every candidate computes an APPROXIMATE cosine with
+    double folds (no BigDecimal arithmetic), only the top
+    max(_POOL_MIN, 10k) pool is re-scored with decimal folds, and the
+    top-k orders on the exact value — so BigDecimal arithmetic runs on
+    a pool-sized input, never the corpus or the probed cells. Measured
+    sf0.1 A/B (2,000×64-dim): 3-fold decimal scan 1.11s → probe-norm
+    hoist 0.80s → two-phase 0.61s, bit-identical results; at sf1 the
+    IVF candidate set is ~1/4 of the corpus and its per-row decimal
+    folds dominated the probe (commit 13e4f2e, OPTIMIZATION_r13.md).
+
+    Why the pool is safe: |approx − exact| ≤ ~1e-10 for 64 dims (see
+    _cosine), so a true top-k member can only be cut if ≥ pool−k
+    candidates score within that margin of the kth cosine; the 10×
+    overfetch makes that near-tie pile-up unreachable for real
+    embeddings (exact duplicates rank identically in both phases and
+    share the id tie-break)."""
+    pool = _top_by(
+        cands.withColumn("_ac", _cosine(VEC, probe, probe_norm, _double_fold)),
+        "_ac",
+        max(_POOL_MIN, 10 * k),
+    )
+    return _top_by(
+        pool.select(ID, _cosine(VEC, probe, probe_norm, _dec_fold).alias("cosine")),
+        "cosine",
+        k,
+    )
+
+
+def cosine_topk(emb: DataFrame, probe_id: int, k: int = 10) -> DataFrame:
     """Exact cosine top-k neighbors of `probe_id` (excluded from results).
 
-    Shuffle-free two-phase formulation: the probe's single row (with
-    its norm pre-folded ONCE — r3 evaluated it per candidate row) is
-    broadcast, and every candidate computes an APPROXIMATE cosine with
-    plain double folds (whole-stage-codegen arithmetic); the top
-    `max(prefilter, 10k)` by approximate score — TakeOrderedAndProject,
-    partition-local heads only — are exactly re-scored with decimal
-    folds and the final top-k ordered on the exact value. The exact
-    phase runs on a candidate-sized input, so the corpus pass never
-    pays BigDecimal arithmetic: measured sf0.1 A/B (2,000×64-dim):
-    3-fold decimal scan 1.11s → probe-norm hoist 0.80s → two-phase
-    0.61s, bit-identical results.
-
-    Why the prefilter is safe: float32 component products are EXACT in
-    double (24+24 < 53 mantissa bits), so the approximate sum differs
-    from the decimal sum only by double-summation rounding and the
-    oracle's per-element 1e-12 quantization — |approx − exact| ≤ ~1e-10
-    for 64 dims. A true top-k member can only be cut if ≥ prefilter−k
-    candidates score within that margin of the kth cosine; the 10×
-    overfetch makes the required near-tie pile-up unreachable for real
-    embeddings (exact duplicates rank identically in both phases and
-    share the id tie-break). Dot products and norms in the exact phase
-    are decimal sums over per-component double products → deterministic
-    under any partitioning (and equal to the DuckDB oracle's
-    formulation)."""
-    probe = emb.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("_pvec")
+    Shuffle-free: the probe's single row, with its norm folded ONCE, is
+    broadcast against the corpus and `_topk` scores every other row.
+    Dot products and norms in the exact phase are decimal sums over
+    per-component double products → deterministic under any
+    partitioning, and equal to the DuckDB oracle's formulation."""
+    probe = emb.filter(F.col(ID) == probe_id).select(F.col(VEC).alias("_pvec"))
+    probe = probe.select("_pvec", _norm2("_pvec", _dec_fold).alias("_np"))
+    cands = (
+        emb.filter(F.col(ID) != probe_id)
+        .select(ID, VEC)
+        .crossJoin(F.broadcast(probe))
     )
-    probe = probe.select(
-        "_pvec",
-        _dec_fold(
-            F.transform("_pvec", lambda b: b.cast("double") * b.cast("double"))
-        ).alias("_np"),
-    )
-    scored = emb.filter(F.col(id_col) != probe_id).crossJoin(
-        F.broadcast(probe)
-    )
-    fdot = F.aggregate(
-        F.zip_with(
-            vec_col, "_pvec", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    fnx = F.aggregate(
-        F.transform(vec_col, lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # zero-norm vectors (failed encodes are often zero-filled in real
-    # embedding dumps) have no defined cosine: the conditional makes the
-    # division row-lazy (no ANSI 0/0 abort) and the NULLs are dropped
-    approx = F.when(
-        (fnx > 0) & (F.col("_np") > 0), fdot / F.sqrt(fnx * F.col("_np"))
-    )
-    cand = (
-        scored.select(id_col, vec_col, "_pvec", "_np", approx.alias("_ac"))
-        .filter(F.col("_ac").isNotNull())
-        .orderBy(F.desc("_ac"), F.asc(id_col))
-        .limit(max(prefilter, 10 * k))
-    )
-    dot = _dec_fold(
-        F.zip_with(
-            vec_col, "_pvec", lambda a, b: a.cast("double") * b.cast("double")
-        )
-    )
-    nx = _dec_fold(
-        F.transform(vec_col, lambda a: a.cast("double") * a.cast("double"))
-    )
-    cosine = F.when(
-        (nx > 0) & (F.col("_np") > 0), dot / F.sqrt(nx * F.col("_np"))
-    )
-    return (
-        cand.select(id_col, cosine.alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _topk(cands, "_pvec", F.col("_np"), k)
 
 
 # OR-amplified random-hyperplane LSH: L independent tables of b bits.
@@ -214,15 +261,12 @@ def lsh_buckets_np(
     return out
 
 
-def lsh_signatures(vec_col: str, bits_per_table: int = BITS_PER_TABLE):
-    """pandas_udf: embedding array → array<long> of N_TABLES bucket
+def lsh_signatures(bits_per_table: int = BITS_PER_TABLE) -> Column:
+    """pandas_udf over `embedding` → array<long> of N_TABLES bucket
     ids. One numpy matmul per Arrow batch (lsh_buckets_np) — the
     corpus-wide index build's signature kernel."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<long>")
+    @F.pandas_udf("array<long>")
     def sig_udf(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype=object)
@@ -230,7 +274,7 @@ def lsh_signatures(vec_col: str, bits_per_table: int = BITS_PER_TABLE):
         B = lsh_buckets_np(X, bits_per_table)
         return pd.Series(list(B))
 
-    return sig_udf(vec_col)
+    return sig_udf(VEC)
 
 
 # ----------------------------------------------------------------- IVF
@@ -264,12 +308,7 @@ def _assign_udf(centroids: np.ndarray, n: int = 1):
     return assign
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    n_cells: int = N_CELLS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def ivf_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> np.ndarray:
     """Train the coarse quantizer: deterministic pseudo-random seed pick
     (hash-ordered, so the same corpus always yields the same model) plus
     one distributed Lloyd step (assign → per-cell mean via posexplode +
@@ -278,20 +317,18 @@ def ivf_centroids(
 
     emb = spread(emb)  # dim× fan-out; see skew.spread
     seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.pmod(F.hash(F.col(id_col)), F.lit(997)).asc(), F.col(id_col).asc())
+        emb.select(ID, VEC)
+        .orderBy(F.pmod(F.hash(F.col(ID)), F.lit(997)).asc(), F.col(ID).asc())
         .limit(n_cells)
         .collect()
     )
     cents = np.array([list(r[1]) for r in seeds], dtype=np.float64)
-    assigned = emb.select(
-        vec_col, _assign_udf(cents, 1)(vec_col)[0].alias("cell")
-    )
+    assigned = emb.select(VEC, _assign_udf(cents, 1)(VEC)[0].alias("cell"))
     # decimal-summed mean: double partial-sum order varies with
     # partitioning, and the model must be identical however the input
     # was split (the determinism the cache in queries/llm.py relies on)
     means = (
-        assigned.select("cell", F.posexplode(vec_col).alias("dim", "xf"))
+        assigned.select("cell", F.posexplode(VEC).alias("dim", "xf"))
         .groupBy("cell", "dim")
         .agg(
             (
@@ -308,11 +345,7 @@ def ivf_centroids(
 
 
 def cosine_topk_batch(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, probe_ids: list[int], k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k for a MODEL-SIZED probe set in ONE corpus
     pass: the flattened probe components (|probes| × dim rows)
@@ -322,35 +355,30 @@ def cosine_topk_batch(
     dot products as cosine_topk, so scores are order-independent."""
     from pyspark.sql import Window
 
-    flat = _flat(emb, id_col, vec_col)
-    probe = flat.filter(F.col(id_col).isin(list(probe_ids))).select(
-        F.col(id_col).alias("probe_id"), "i", F.col("x").alias("p")
+    flat = _flat(emb)
+    probe = flat.filter(F.col(ID).isin(list(probe_ids))).select(
+        F.col(ID).alias("probe_id"), "i", F.col("x").alias("p")
     )
     pnorm = probe.groupBy("probe_id").agg(
-        F.sum((F.col("p") * F.col("p")).cast(DEC12)).cast("double").alias("np")
+        _dec_sum(F.col("p") * F.col("p")).alias("np")
     )
     scored = (
         flat.join(F.broadcast(probe), "i")
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .groupBy("probe_id", id_col)
+        .filter(F.col(ID) != F.col("probe_id"))
+        .groupBy("probe_id", ID)
         .agg(
-            F.sum((F.col("x") * F.col("p")).cast(DEC12)).cast("double").alias("dot"),
-            F.sum((F.col("x") * F.col("x")).cast(DEC12)).cast("double").alias("nx"),
+            _dec_sum(F.col("x") * F.col("p")).alias("dot"),
+            _dec_sum(F.col("x") * F.col("x")).alias("nx"),
         )
         .join(F.broadcast(pnorm), "probe_id")
         .select(
             "probe_id",
-            id_col,
-            # same zero-norm guard as cosine_topk: row-lazy conditional
-            # division, NULL (dropped) where cosine is undefined
-            F.when(
-                (F.col("nx") > 0) & (F.col("np") > 0),
-                F.col("dot") / F.sqrt(F.col("nx") * F.col("np")),
-            ).alias("cosine"),
+            ID,
+            _cosine_of(F.col("dot"), F.col("nx"), F.col("np")).alias("cosine"),
         )
         .filter(F.col("cosine").isNotNull())
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(ID))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
@@ -358,18 +386,12 @@ def cosine_topk_batch(
     )
 
 
-def semdedup_drops(
-    emb: DataFrame,
-    tau: float,
-    cluster_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup-style semantic dedup: within each cluster, a vector is
-    DROPPED when a lower-id vector in the same cluster has cosine
-    similarity > tau. Returns one row per dropped vector with its
-    smallest qualifying duplicate and that pair's exact cosine —
-    (cluster, vec_id, dup_of, cosine).
+def semdedup_drops(emb: DataFrame, tau: float) -> DataFrame:
+    """SemDeDup-style semantic dedup: within each `label` cluster, a
+    vector is DROPPED when a lower-id vector in the same cluster has
+    cosine similarity > tau. Returns one row per dropped vector with
+    its smallest qualifying duplicate and that pair's exact cosine —
+    (label, vec_id, dup_of, cosine).
 
     Scale shape (the whole point of clustering first): candidate pairs
     are generated per cluster, so the pairwise cost is sum(|cluster|^2),
@@ -383,16 +405,13 @@ def semdedup_drops(
     decimal summation error is ~1e-10 for 64 dims, so no true hit can
     fall below the margin. Candidates carry their two vectors out of
     the kernel, and only this hit-sized set pays the exact decimal
-    rescore that makes the result hash-stable against the SQL oracle —
-    no corpus re-join, no BigDecimal on the full pair set."""
-    import pandas as pd
-
-    id_f = emb.schema[id_col].dataType.simpleString()
-    c_f = emb.schema[cluster_col].dataType.simpleString()
-    v_f = emb.schema[vec_col].dataType.simpleString()
+    rescore (`_cosine_of`) that makes the result hash-stable against the
+    SQL oracle — no corpus re-join, no BigDecimal on the full pair set."""
+    id_f = emb.schema[ID].dataType.simpleString()
+    c_f = emb.schema[LABEL].dataType.simpleString()
+    v_f = emb.schema[VEC].dataType.simpleString()
     out_schema = (
-        f"{cluster_col} {c_f}, {id_col} {id_f}, dup_of {id_f}, "
-        f"_va {v_f}, _vb {v_f}"
+        f"{LABEL} {c_f}, {ID} {id_f}, dup_of {id_f}, _va {v_f}, _vb {v_f}"
     )
     # The carried-out vectors must round-trip the DECLARED element type:
     # a hard-coded float32 downcast under an array<double> schema would
@@ -401,65 +420,56 @@ def semdedup_drops(
     margin = tau - 1e-6
 
     def cluster_pairs(key, pdf):
-        ids = pdf[id_col].to_numpy()
+        ids = pdf[ID].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        X = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        X = np.stack(pdf[VEC].to_numpy()[order]).astype(np.float64)
         n = np.sqrt((X * X).sum(axis=1))
         ok = n > 0  # zero-norm vectors have no defined cosine
         ids, X, n = ids[ok], X[ok], n[ok]
         if len(ids) < 2:
             return pd.DataFrame(
-                {
-                    cluster_col: [],
-                    id_col: [],
-                    "dup_of": [],
-                    "_va": [],
-                    "_vb": [],
-                }
+                {LABEL: [], ID: [], "dup_of": [], "_va": [], "_vb": []}
             )
         S = (X @ X.T) / np.outer(n, n)
         ai, bi = np.nonzero(np.triu(S > margin, k=1))  # ids sorted: a < b
         return pd.DataFrame(
             {
-                cluster_col: np.full(len(ai), key[0]),
-                id_col: ids[bi],
+                LABEL: np.full(len(ai), key[0]),
+                ID: ids[bi],
                 "dup_of": ids[ai],
                 "_va": [X[i].astype(vec_np_dtype) for i in ai],
                 "_vb": [X[i].astype(vec_np_dtype) for i in bi],
             }
         )
 
-    cand = emb.select(cluster_col, id_col, vec_col).groupBy(
-        cluster_col
-    ).applyInPandas(cluster_pairs, out_schema)
-    dot = _dec_fold(
-        F.zip_with(
-            "_va", "_vb", lambda x, y: x.cast("double") * y.cast("double")
-        )
+    cand = emb.select(LABEL, ID, VEC).groupBy(LABEL).applyInPandas(
+        cluster_pairs, out_schema
     )
-    n2a = _dec_fold(
-        F.transform("_va", lambda x: x.cast("double") * x.cast("double"))
-    )
-    n2b = _dec_fold(
-        F.transform("_vb", lambda x: x.cast("double") * x.cast("double"))
-    )
-    hits = cand.select(
-        cluster_col,
-        id_col,
+    sums = cand.select(
+        LABEL,
+        ID,
         "dup_of",
-        (dot / F.sqrt(n2a * n2b)).alias("cosine"),
-    ).filter(F.col("cosine") > tau)
+        _dot("_va", "_vb", _dec_fold).alias("_dot"),
+        _norm2("_va", _dec_fold).alias("_na"),
+        _norm2("_vb", _dec_fold).alias("_nb"),
+    )
+    cosine = _cosine_of(F.col("_dot"), F.col("_na"), F.col("_nb"))
+    scored = sums.select(LABEL, ID, "dup_of", cosine.alias("cosine"))
+    hit = F.when(F.col("cosine") > tau, F.struct("dup_of", "cosine"))
     return (
-        hits.groupBy(cluster_col, id_col)
-        .agg(F.min(F.struct("dup_of", "cosine")).alias("_best"))
+        # the tau test rides inside the aggregate: a filter on `cosine`
+        # would be pushed below both projections and re-run every fold
+        scored.groupBy(LABEL, ID)
+        .agg(F.min(hit).alias("_best"))
+        .filter(F.col("_best").isNotNull())
         .select(
-            cluster_col,
-            id_col,
+            LABEL,
+            ID,
             F.col("_best.dup_of").alias("dup_of"),
             F.col("_best.cosine").alias("cosine"),
         )
-        .orderBy(cluster_col, id_col)
+        .orderBy(LABEL, ID)
     )
 
 
@@ -475,11 +485,7 @@ def kmeans_seed_order_sql(id_sql: str) -> str:
 
 
 def kmeans_inertia(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, k: int = 8, iters: int = 5
 ) -> list[tuple[int, float, int]]:
     """Classic Lloyd k-means for `iters` iterations, returning the
     model-sized convergence trace [(iteration, inertia, n_moved_cells)].
@@ -507,11 +513,8 @@ def kmeans_inertia(
 
     emb = spread(emb)  # dim× fan-out per iteration; see skew.spread
     seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(
-            F.expr(kmeans_seed_order_sql(id_col)).asc(),
-            F.col(id_col).asc(),
-        )
+        emb.select(ID, VEC)
+        .orderBy(F.expr(kmeans_seed_order_sql(ID)).asc(), F.col(ID).asc())
         .limit(k)
         .collect()
     )
@@ -519,15 +522,13 @@ def kmeans_inertia(
     trace: list[tuple[int, float, int]] = []
     for it in range(iters):
         d2s = [
-            F.aggregate(
+            _double_fold(
                 F.zip_with(
-                    vec_col,
+                    VEC,
                     F.array(*[F.lit(v) for v in c]),
                     lambda a, b: (a.cast("double") - b)
                     * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
+                )
             )
             for c in cents
         ]
@@ -540,12 +541,12 @@ def kmeans_inertia(
             )
         )
         assigned = emb.select(
-            vec_col,
+            VEC,
             best.getField("cell").alias("cell"),
             best.getField("sqd").alias("sqd"),
         )
         flat = assigned.select(
-            "cell", "sqd", F.posexplode(vec_col).alias("dim0", "x")
+            "cell", "sqd", F.posexplode(VEC).alias("dim0", "x")
         )
         rows = (
             flat.groupBy("cell", "dim0")
@@ -618,8 +619,6 @@ def mmr_select(
     probe_id: int,
     k: int = 10,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pool_n: int = 1024,
 ) -> DataFrame:
     """Greedy Maximal Marginal Relevance: iteratively pick the vector
@@ -657,65 +656,40 @@ def mmr_select(
     near-duplicate corpus where divergence is demonstrated and its
     regret asserted within the bound.
 
-    Exactness: the in-pool rounds run driver-side with SEQUENTIAL
-    left-fold double sums starting at 0.0 — the same fold F.aggregate
-    performs and the same fold DuckDB's list_reduce performs
-    (premise property-pinned in tests/test_properties.py), so the
-    DuckDB oracle replays every cosine, every running max, and every
-    arg-max tie-break (score DESC, id ASC, IEEE ==) bit-for-bit."""
+    Exactness: rel is `_cosine` under `_double_fold`, and the in-pool
+    rounds run driver-side with the same SEQUENTIAL left-fold double
+    sums starting at 0.0 (`fold_dot`) — the fold DuckDB's list_reduce
+    performs too (premise property-pinned in tests/test_properties.py),
+    so the DuckDB oracle replays every cosine, every running max, and
+    every arg-max tie-break (score DESC, id ASC, IEEE ==) bit-for-bit."""
     import math
 
     from opusdb_spark.operators.skew import spread
 
+    def fold_dot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s += x * y
+        return s
+
     emb = spread(emb)  # HOF cosine fan-out on a small-on-disk table
-    probe = emb.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("_pvec")
-    )
-    fdot = F.aggregate(
-        F.zip_with(
-            vec_col, "_pvec", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    fnx = F.aggregate(
-        F.transform(vec_col, lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probe = probe.select(
-        "_pvec",
-        F.aggregate(
-            F.transform("_pvec", lambda b: b.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("_np"),
-    )
-    rel = F.when(
-        (fnx > 0) & (F.col("_np") > 0), fdot / F.sqrt(fnx * F.col("_np"))
-    )
-    pool_rows = (
-        emb.filter(F.col(id_col) != probe_id)
+    probe = emb.filter(F.col(ID) == probe_id).select(F.col(VEC).alias("_pvec"))
+    probe = probe.select("_pvec", _norm2("_pvec", _double_fold).alias("_np"))
+    rel = _cosine(VEC, "_pvec", F.col("_np"), _double_fold)
+    # TakeOrderedAndProject: partition-local top-pool_n heads, one
+    # pool-sized driver result — the ONLY corpus-shaped work
+    pool_rows = _top_by(
+        emb.filter(F.col(ID) != probe_id)
         .crossJoin(F.broadcast(probe))
-        .select(
-            id_col,
-            vec_col,
-            fnx.alias("_nx"),
-            rel.alias("_rel"),
-        )
-        .filter(F.col("_rel").isNotNull())
-        # TakeOrderedAndProject: partition-local top-pool_n heads, one
-        # pool-sized driver result — the ONLY corpus-shaped work
-        .orderBy(F.desc("_rel"), F.asc(id_col))
-        .limit(pool_n)
-        .collect()
-    )
+        .select(ID, VEC, rel.alias("_rel")),
+        "_rel",
+        pool_n,
+    ).collect()
     # pool state: [id, vec(list[float]), nx, rel, maxsim]
-    pool = [
-        [r[id_col], [float(x) for x in r[vec_col]], float(r["_nx"]),
-         float(r["_rel"]), 0.0]
-        for r in pool_rows
-    ]
+    pool = []
+    for r in pool_rows:
+        v = [float(x) for x in r[VEC]]
+        pool.append([r[ID], v, fold_dot(v, v), float(r["_rel"]), 0.0])
     picks = []
     for rank in range(min(k, len(pool_rows))):
         best = None
@@ -731,15 +705,10 @@ def mmr_select(
         if best is None:
             break
         picks.append((rank + 1, best[0], float(best_score)))
-        sel_vec, sel_id = best[1], best[0]
-        sn = 0.0
-        for x in sel_vec:  # sequential left fold, matches list_reduce
-            sn += x * x
+        sel_id, sel_vec, sn = best[0], best[1], best[2]
         pool = [c for c in pool if c[0] != sel_id]
         for c in pool:
-            sdot = 0.0
-            for a, b in zip(c[1], sel_vec):
-                sdot += a * b
+            sdot = fold_dot(c[1], sel_vec)
             sim = (
                 sdot / math.sqrt(c[2] * sn)
                 if (c[2] > 0 and sn > 0)
@@ -749,17 +718,12 @@ def mmr_select(
                 c[4] = sim
     spark = emb.sparkSession
     return spark.createDataFrame(
-        picks, f"rank int, {id_col} long, mmr_score double"
+        picks, f"rank int, {ID} long, mmr_score double"
     )
 
 
 def hard_negatives(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
+    emb: DataFrame, probe_ids: list[int], k: int = 3
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each probe,
     the k most cosine-similar vectors with a DIFFERENT label — similar
@@ -775,42 +739,26 @@ def hard_negatives(
     neighbors."""
     from pyspark.sql import Window
 
-    from opusdb_spark.operators.skew import spread
-
-    emb = spread(emb)
-    flat = emb.select(
-        id_col, label_col, F.posexplode(vec_col).alias("pos", "xf")
-    ).select(
-        id_col,
-        label_col,
-        (F.col("pos") + 1).alias("i"),
-        F.col("xf").cast("double").alias("x"),
-    )
-    probe = flat.filter(F.col(id_col).isin(list(probe_ids))).select(
-        F.col(id_col).alias("probe_id"),
-        F.col(label_col).alias("_plabel"),
+    flat = _flat(emb, LABEL)
+    probe = flat.filter(F.col(ID).isin(list(probe_ids))).select(
+        F.col(ID).alias("probe_id"),
+        F.col(LABEL).alias("_plabel"),
         "i",
         F.col("x").alias("p"),
     )
     pn = probe.groupBy("probe_id").agg(
-        F.sum((F.col("p") * F.col("p")).cast(DEC12))
-        .cast("double")
-        .alias("np")
+        _dec_sum(F.col("p") * F.col("p")).alias("np")
     )
     scored = (
         flat.join(F.broadcast(probe), "i")
         .filter(
-            (F.col(id_col) != F.col("probe_id"))
-            & (F.col(label_col) != F.col("_plabel"))
+            (F.col(ID) != F.col("probe_id"))
+            & (F.col(LABEL) != F.col("_plabel"))
         )
-        .groupBy("probe_id", id_col, label_col)
+        .groupBy("probe_id", ID, LABEL)
         .agg(
-            F.sum((F.col("x") * F.col("p")).cast(DEC12))
-            .cast("double")
-            .alias("dot"),
-            F.sum((F.col("x") * F.col("x")).cast(DEC12))
-            .cast("double")
-            .alias("n2"),
+            _dec_sum(F.col("x") * F.col("p")).alias("dot"),
+            _dec_sum(F.col("x") * F.col("x")).alias("n2"),
         )
     )
     sims = (
@@ -818,24 +766,22 @@ def hard_negatives(
         .filter((F.col("n2") > 0) & (F.col("np") > 0))
         .select(
             "probe_id",
-            id_col,
-            label_col,
+            ID,
+            LABEL,
             (F.col("dot") / F.sqrt(F.col("n2") * F.col("np"))).alias(
                 "cosine"
             ),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(ID))
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "probe_id",
             "rank",
-            F.col(id_col).alias("negative_id"),
-            F.col(label_col).alias("negative_label"),
+            F.col(ID).alias("negative_id"),
+            F.col(LABEL).alias("negative_label"),
             "cosine",
         )
         .orderBy("probe_id", "rank")

@@ -122,8 +122,11 @@ def _load() -> None:
 # native streaming aggregation instead of applyInPandasWithState;
 # mvcc_txn_rollback is the one key whose append_versions input is a
 # bare parquet scan, so its write point is now a footer-statistics
-# literal instead of a max aggregate. Values are unchanged by
-# construction, and a fresh verdict confirms it.
+# literal instead of a max aggregate. The ANN probe keys and
+# llm_semdedup now score through the one cosine expression
+# (similarity._cosine_of: casts inside the lambdas, a literal probe's
+# norm folded to a constant, the zero-norm guard in semdedup). Values
+# are unchanged by construction, and a fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -134,6 +137,7 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "events_rollup_incremental",
     "stream_rollup_maintain",
     # ANN index: ensure_index = ensure_written; probes via read_store
+    # and similarity._cosine
     "llm_simsearch_lsh",
     "llm_simsearch_ivf",
     "llm_simsearch_ivfpq",
@@ -141,6 +145,8 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "llm_pq_recall_eval",
     "llm_pq_compression",
     "llm_embedding_neardup",
+    # SemDeDup rescore: similarity._cosine_of
+    "llm_semdedup",
     # per-user totals: native groupBy().agg() state store
     "stream_stateful_true",
     # write-point clock from parquet footers (mvcc._footer_write_point)

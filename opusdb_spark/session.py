@@ -15,8 +15,8 @@ from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Runtime confs every query path needs, applied defensively to *any*
-# session handed to us (the driver owns the session in `entry()`).
+# Runtime confs every query path needs, applied to *any* session handed
+# to us (the driver owns the session in `entry()`).
 RUNTIME_CONFS = {
     # events.parquet stores TIMESTAMP(NANOS); Spark refuses it unless
     # read as int64 nanos (converted to timestamp_ntz in tables.py).
@@ -63,11 +63,10 @@ RUNTIME_CONFS = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
+    """Set every RUNTIME_CONFS key on `spark`. Each is a runtime SQL
+    conf, so a failure to set one is a real fault and raises."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable at runtime on this build — best effort
+        spark.conf.set(k, v)
     return spark
 
 

@@ -16,6 +16,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from opusdb_spark.plans import explain_str  # noqa: E402
 from opusdb_spark.registry import queries  # noqa: E402
 from opusdb_spark.session import get_spark  # noqa: E402
 
@@ -30,9 +31,7 @@ def main() -> None:
     qs = queries()
     for name in names:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_str(df)
         path = out_dir / f"{name}_{suffix}.txt"
         path.write_text(plan)
         print(f"wrote {path} ({len(plan)} chars)")

@@ -19,6 +19,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import inspect
 import json
 import types
 from pathlib import Path
@@ -219,14 +220,36 @@ _REPO_PACKAGES = ("opusdb_spark", "tests")
 def test_benchmark_and_scripts_use_only_existing_package_names():
     """Every opusdb_spark/tests name that perfbench/*.py and scripts/*.py
     import, reach as `<module>.<attr>` on an imported module, or hand
-    to a wrapper as `(module, "attr")` must exist. perfbench/ is frozen
-    (the benchmark runs it unchanged on both sides of a change), so a
-    deletion that removes a name it uses would otherwise break the
-    benchmark only at run time."""
+    to a wrapper as `(module, "attr")` must exist, and every call of
+    such a name as `f(...)` or `<module>.f(...)` must bind to its
+    signature (positional arity and keyword names). perfbench/ is
+    frozen (the benchmark runs it unchanged on both sides of a change),
+    so a deletion, rename or dropped parameter would otherwise break
+    the benchmark only at run time."""
     root = Path(bench.__file__).parent
     paths = sorted((root / "perfbench").glob("*.py"))
     paths += sorted((root / "scripts").glob("*.py"))
-    resolved, missing = set(), []
+    resolved, missing, bound_calls, unbound = set(), [], set(), []
+
+    def check_call(path, node, fn):
+        """Bind the call's positional count and keyword names to `fn`;
+        calls that splat `*args`/`**kwargs` cannot be checked."""
+        if any(isinstance(a, ast.Starred) for a in node.args) or any(
+            k.arg is None for k in node.keywords
+        ):
+            return
+        try:
+            sig = inspect.signature(fn)
+        except (TypeError, ValueError):  # not a callable with a signature
+            return
+        try:
+            sig.bind_partial(*node.args, **{k.arg: k for k in node.keywords})
+        except TypeError as e:
+            unbound.append(
+                f"{path.parent.name}/{path.name}:{node.lineno}: "
+                f"{fn.__module__}.{fn.__qualname__}: {e}"
+            )
+        bound_calls.add((path.parent.name, f"{fn.__module__}.{fn.__qualname__}"))
 
     def check(path, node, mod, attr):
         """The object `mod.attr` names (a submodule is imported), or
@@ -243,6 +266,7 @@ def test_benchmark_and_scripts_use_only_existing_package_names():
     for path in paths:
         tree = ast.parse(path.read_text(), str(path))
         bound = {}  # local name -> repo module it is bound to
+        names = {}  # local name -> repo object imported by name
         for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom) and node.module and not node.level:
                 if node.module.split(".")[0] not in _REPO_PACKAGES:
@@ -252,7 +276,20 @@ def test_benchmark_and_scripts_use_only_existing_package_names():
                     sub = check(path, node, mod, a.name)
                     if isinstance(sub, types.ModuleType):
                         bound[a.asname or a.name] = sub
+                    elif callable(sub):
+                        names[a.asname or a.name] = sub
         for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                if isinstance(f, ast.Name) and f.id in names:
+                    check_call(path, node, names[f.id])
+                elif (
+                    isinstance(f, ast.Attribute)
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id in bound
+                    and callable(getattr(bound[f.value.id], f.attr, None))
+                ):
+                    check_call(path, node, getattr(bound[f.value.id], f.attr))
             if (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
@@ -270,6 +307,8 @@ def test_benchmark_and_scripts_use_only_existing_package_names():
                 check(path, node, bound[node.args[0].id], node.args[1].value)
     assert {d for d, _ in resolved} == {"perfbench", "scripts"}, resolved
     assert not missing, missing
+    assert {d for d, _ in bound_calls} == {"perfbench", "scripts"}, bound_calls
+    assert not unbound, unbound
 
 
 def test_scaled_table_layout_policy():

@@ -995,9 +995,13 @@ def test_cosine_topk_batch_matches_single_probe(spark):
 
 
 def test_ivf_full_probe_equals_brute_force(spark):
-    """Probing ALL cells makes IVF exhaustive: its top-k must equal the
-    brute-force ground truth exactly — pins that the persisted index
-    partitions the corpus without loss or duplication."""
+    """Probing ALL cells makes IVF exhaustive: its top-k (vec_id, cosine)
+    rows must equal the brute-force ground truth exactly — pins that
+    the persisted index partitions the corpus without loss or
+    duplication, and that a literal probe scores to the same doubles
+    as the broadcast probe row. LSH returns a different candidate set,
+    but every id it shares with the exact top-k must carry the same
+    cosine: one scorer, one number."""
     from opusdb_spark.operators import ann_index
     from opusdb_spark.tables import table
 
@@ -1009,10 +1013,19 @@ def test_ivf_full_probe_equals_brute_force(spark):
     full = ann_index.ivf_probe(
         spark, idx, vec, k=10, n_probe=similarity.N_CELLS, exclude_id=0
     )
-    exact = similarity.cosine_topk(emb, 0, 10)
-    assert [r.vec_id for r in full.collect()] == [
-        r.vec_id for r in exact.collect()
+    exact = similarity.cosine_topk(emb, 0, 50).collect()
+    assert [(r.vec_id, r.cosine) for r in full.collect()] == [
+        (r.vec_id, r.cosine) for r in exact[:10]
     ]
+    lsh = {
+        r.vec_id: r.cosine
+        for r in ann_index.lsh_probe(
+            spark, idx, vec, 50, exclude_id=0, probe_id=0
+        ).collect()
+    }
+    shared = [(r.vec_id, r.cosine) for r in exact if r.vec_id in lsh]
+    assert shared, "LSH shares no id with the exact top-50"
+    assert shared == [(i, lsh[i]) for i, _ in shared]
 
 
 def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
@@ -1026,7 +1039,6 @@ def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
     from pyspark.sql import functions as _F
 
     from opusdb_spark.operators import ann_index
-    from opusdb_spark.operators.ann_index import _score_against
     from opusdb_spark.sources.formats import read_store
     from opusdb_spark.tables import table
 
@@ -1048,7 +1060,12 @@ def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
         read_store(spark, os.path.join(idx, "ivf"))
         .filter(_F.col("cell").isin(cells))
         .filter(_F.col("vec_id") != 0)
-        .select("vec_id", _score_against("embedding", vec).alias("cosine"))
+        .select(
+            "vec_id",
+            similarity._cosine(
+                "embedding", *similarity._literal_probe(vec), similarity._dec_fold
+            ).alias("cosine"),
+        )
         .filter(_F.col("cosine").isNotNull())
         .orderBy(_F.desc("cosine"), _F.asc("vec_id"))
         .limit(10)
@@ -1056,6 +1073,26 @@ def test_ivf_pooled_scoring_equals_full_decimal_scan(spark):
     got = [(r.vec_id, r.cosine) for r in pooled.collect()]
     want = [(r.vec_id, r.cosine) for r in full.collect()]
     assert got == want and got, "pooled probe diverged from full scan"
+
+
+def test_literal_probe_norm_is_one_folded_constant(spark):
+    """A literal probe's exact norm must equal the decimal fold the
+    broadcast probe row computes, and Catalyst must fold it to one
+    constant: a higher-order function over a literal array is never
+    constant-folded, so that form would re-run a 64-term decimal fold
+    on every candidate of the approximate phase."""
+    from opusdb_spark.tables import table
+
+    row = table(spark, SF, "embeddings").filter(F.col("vec_id") == 0).first()
+    p, norm = similarity._literal_probe(row.embedding)
+    df = spark.range(1).select(
+        norm.alias("lit"),
+        similarity._norm2(p, similarity._dec_fold).alias("hof"),
+    )
+    plan = df.select("lit")._jdf.queryExecution().optimizedPlan().toString()
+    assert "aggregate" not in plan and "lambda" not in plan, plan
+    row = df.first()
+    assert row.lit == row.hof > 0
 
 
 def test_incremental_pairs_match_batch_pairs_cross_subset(spark):
