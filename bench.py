@@ -791,9 +791,9 @@ def main() -> None:
         tpch["total"] = round(sum(tpch["queries"].values()), 4)
         out["tpch"] = tpch
     # Streaming at volume (VERDICT r5 §7): replay the full events table
-    # through the EventTimeTimeout session operator (multi-batch
-    # ts-split replay, Python stateful processing, bounded state) and
-    # report throughput — turns "bounded state" from a claim into a
+    # through the event-time-timeout session fold (multi-batch ts-split
+    # replay, a foreachBatch fold over a parquet state table, bounded
+    # state) and report throughput — turns "bounded state" from a claim into a
     # rows/s number. Best-of-2 like every other loop (r8: the single
     # timed replay landed right after the 18-query TPC-H block and
     # read 8.1k rows/s where isolation measures 12-14k — one number,
@@ -803,12 +803,8 @@ def main() -> None:
     # micro-batch count (a batching change — split-store staleness, a
     # repartition bug — cannot masquerade as throughput drift). Its
     # wall follows the floor: the 4-micro-batch replay's plan is
-    # small, and most worker time used to be a fixed per-task tax —
-    # pyspark's setup_spark_files re-read pyspark.zip's directory once
-    # per zipimporter (100-300 ms a task on CPython 3.11). The repo's
-    # worker daemon (opusdb_spark/pyworker.py) skips re-reads of an
-    # unchanged archive, halving the perfbench stream_replay
-    # micro-batch (median 1.27 s -> 0.69 s, 4 vCPUs).
+    # small, and each batch is one SQL statement and one parquet
+    # write (two Spark jobs), with no Python worker.
     if os.environ.get("SPARK_GRAFT_STREAM", "1") != "0":
         from opusdb_spark.streaming.jobs import events_stream_n_batches
 

@@ -138,14 +138,13 @@ def _literal_probe(probe_vec: list[float]) -> tuple[Column, Column]:
     return F.expr(f"array({', '.join(xs)})"), F.expr(f"CAST({norm} AS DOUBLE)")
 
 
-def _top_by(df: DataFrame, score: str, n: int) -> DataFrame:
-    """The n rows with the highest non-NULL `score`, ties by lower id —
-    TakeOrderedAndProject: partition-local heads, one tiny merge."""
-    return (
-        df.filter(F.col(score).isNotNull())
-        .orderBy(F.desc(score), F.asc(ID))
-        .limit(n)
-    )
+def _top_by(df: DataFrame, score: str, n: int, drop_null: bool = True) -> DataFrame:
+    """The n rows with the highest `score`, ties by lower id —
+    TakeOrderedAndProject: partition-local heads, one tiny merge.
+    NULL scores are dropped, or with `drop_null=False` sort last."""
+    if drop_null:
+        df = df.filter(F.col(score).isNotNull())
+    return df.orderBy(F.desc(score), F.asc(ID)).limit(n)
 
 
 def _topk(cands: DataFrame, probe, probe_norm: Column, k: int) -> DataFrame:
@@ -167,11 +166,16 @@ def _topk(cands: DataFrame, probe, probe_norm: Column, k: int) -> DataFrame:
     candidates score within that margin of the kth cosine; the 10×
     overfetch makes that near-tie pile-up unreachable for real
     embeddings (exact duplicates rank identically in both phases and
-    share the id tie-break)."""
+    share the id tie-break).
+
+    The pool keeps NULL approximate scores (sorted last, and dropped by
+    the exact phase): a NULL filter there is pushed below the
+    projection, so every candidate would evaluate the cosine twice."""
     pool = _top_by(
         cands.withColumn("_ac", _cosine(VEC, probe, probe_norm, _double_fold)),
         "_ac",
         max(_POOL_MIN, 10 * k),
+        drop_null=False,
     )
     return _top_by(
         pool.select(ID, _cosine(VEC, probe, probe_norm, _dec_fold).alias("cosine")),
@@ -525,7 +529,9 @@ def kmeans_inertia(
             _double_fold(
                 F.zip_with(
                     VEC,
-                    F.array(*[F.lit(v) for v in c]),
+                    # the centroid as one SQL-text literal, as in
+                    # _literal_probe: one parse, not dim py4j calls
+                    F.expr(f"array({', '.join(f'{v!r}D' for v in c)})"),
                     lambda a, b: (a.cast("double") - b)
                     * (a.cast("double") - b),
                 )

@@ -418,15 +418,15 @@ def stream_rollup_maintain(spark, sf_dir):
 
 @register(
     "stream_session_timeout",
-    # Hash-oracled since r10: the update function splits sessions on
+    # Hash-oracled since r10: the session fold splits sessions on
     # EVENT-TIME gaps (strictly > 30 min), so every non-final session
     # per user emits exactly once whether it closes in-batch or by
     # timeout; the user's FINAL session emits iff the final watermark
-    # strictly exceeds last_seen + 30 min (EventTimeTimeout fires only
-    # when wm > timeout — pinned by the strict-boundary premise test
-    # in tests/test_streaming.py; watermark milliseconds floor from
-    # the max event's microseconds). Integer timestamps and counts
-    # only, so the whole emitted set replays set-wise.
+    # strictly exceeds last_seen + 30 min (EventTimeTimeout's rule,
+    # wm > timeout — pinned by the strict-boundary premise test in
+    # tests/test_streaming.py; watermark milliseconds floor from the
+    # max event's microseconds). Integer timestamps and counts only,
+    # so the whole emitted set replays set-wise.
     oracle="""
         WITH e AS (
             SELECT user_id, epoch_us(ts) AS t,
@@ -468,14 +468,13 @@ def stream_rollup_maintain(spark, sf_dir):
     tags=("streaming", "state"),
 )
 def stream_session_timeout(spark, sf_dir):
-    """TRUE streaming sessions closed by EventTimeTimeout state
-    eviction: per-user session state is GC'd when the watermark passes
-    last-seen + 30 min and the closed session emits — the
-    bounded-state discipline that keeps arbitrary stateful operators
-    viable on unbounded streams (streaming/jobs.py
-    session_timeout_totals). Hash-checked since r10 against batch gap
-    sessionization + the strict final-watermark timeout rule (see
-    oracle note)."""
+    """TRUE streaming sessions closed by event-time timeout: a user's
+    open session leaves the state and emits once the watermark passes
+    last-seen + 30 min — the bounded-state discipline that keeps
+    stateful streams viable, here a foreachBatch fold over a versioned
+    state table (streaming/jobs.py session_timeout_totals).
+    Hash-checked since r10 against batch gap sessionization + the
+    strict final-watermark timeout rule (see oracle note)."""
     return stream_jobs.session_timeout_totals(spark, sf_dir)
 
 

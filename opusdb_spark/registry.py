@@ -125,8 +125,13 @@ def _load() -> None:
 # literal instead of a max aggregate. The ANN probe keys and
 # llm_semdedup now score through the one cosine expression
 # (similarity._cosine_of: casts inside the lambdas, a literal probe's
-# norm folded to a constant, the zero-norm guard in semdedup). Values
-# are unchanged by construction, and a fresh verdict confirms it.
+# norm folded to a constant, the zero-norm guard in semdedup).
+# stream_session_timeout is a foreachBatch fold over a parquet state
+# table instead of applyInPandasWithState; the two-phase top-k
+# (llm_similarity_topk and the IVF probe keys) no longer filters NULL
+# approximate scores, and emb_kmeans builds its centroid literals as
+# SQL text. Values are unchanged by construction, and a fresh verdict
+# confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -151,6 +156,11 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "stream_stateful_true",
     # write-point clock from parquet footers (mvcc._footer_write_point)
     "mvcc_txn_rollback",
+    # session fold over a state table (streaming/jobs.py _fold_sessions)
+    "stream_session_timeout",
+    # top-k pool keeps NULL approximate scores; centroid literals as text
+    "llm_similarity_topk",
+    "emb_kmeans",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

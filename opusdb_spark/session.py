@@ -147,6 +147,12 @@ def get_spark(
         # any cwd.
         .config("spark.python.daemon.module", "opusdb_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
+        # Off: with it on, every Column method and F.col also sets and
+        # clears the Python call site over py4j (measured on 4 vCPUs:
+        # `c + 1` ~1 ms → 0.14 ms, `F.col` ~1.4 ms → 0.31 ms). What is
+        # lost: a DataFrame error no longer names the Python line that
+        # built the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -78,7 +78,7 @@ PROBE = [
     # iterative / stateful families (round-8 additions): ntile prefix
     # machinery, per-iteration corpus passes (k-means), merge-loop
     # driver collects (BPE train + apply), and the stateful
-    # applyInPandasWithState session-timeout path at 10× event volume
+    # session-timeout fold at 10× event volume
     "events_rfm_segments",
     "emb_kmeans",
     "llm_bpe_train",
@@ -122,7 +122,7 @@ PROBE = [
     # round-10: previously unprobed families (VERDICT r9 ask #8) —
     # the Arrow audio-featurization pass and the true stateful
     # streaming funnel (session_timeout's 9.9 precedent says measure
-    # every applyInPandasWithState path at volume)
+    # every stateful streaming path at volume)
     "multimodal_audio_energy",
     "stream_funnel_true",
     # round-11: the r10 oracle-upgrade batch's own query paths

@@ -22,3 +22,12 @@ def test_runtime_confs_are_modifiable_and_applied(spark):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def test_dataframe_debugging_is_off(spark):
+    """get_spark turns off PySpark's DataFrame call-site capture, which
+    costs a py4j round trip on every Column method."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

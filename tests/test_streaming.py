@@ -458,6 +458,154 @@ def test_session_timeout_matches_oracle_at_edges(spark, tmp_path):
     )
 
 
+def _fold_stream(spark, sf_dir):
+    from opusdb_spark.streaming import jobs
+
+    return jobs._events_stream(spark, sf_dir, batched=True).select("user_id", "ts")
+
+
+def _oracle_sessions(sf_dir):
+    from opusdb_spark.registry import oracle_sql
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    want = sorted(con.execute(oracle_sql()["stream_session_timeout"]).fetchall())
+    con.close()
+    return want
+
+
+_KILL_AFTER_COMMIT = """
+import os, signal, sys
+from opusdb_spark.session import get_spark
+from opusdb_spark.streaming import jobs
+
+sf_dir, root, kill_at = sys.argv[1], sys.argv[2], int(sys.argv[3])
+spark = get_spark(app_name="fold-kill", master="local[2]", shuffle_partitions=2)
+commit = jobs._commit_batch
+
+
+def commit_then_die(staging, root, batch_id, clock):
+    commit(staging, root, batch_id, clock)
+    if batch_id == kill_at:  # the JVM shares this process group
+        os.killpg(0, signal.SIGKILL)
+
+
+jobs._commit_batch = commit_then_die
+jobs._fold_sessions(
+    jobs._events_stream(spark, sf_dir, batched=True).select("user_id", "ts"), root
+)
+sys.exit(3)  # the stream drained without reaching the kill
+"""
+
+
+def test_session_fold_survives_kill_after_commit(spark, tmp_path):
+    """SIGKILL the streaming process (Python and its JVM) right after
+    the session fold commits batch 1, before Spark records the batch in
+    its commit log; a restart on the same root replays batch 1 and
+    drains the rest. The emitted sessions equal the oracle: none lost,
+    none twice."""
+    import subprocess
+    import sys
+
+    from opusdb_spark.streaming import jobs
+    from tests.conftest import SF_SMALL
+
+    root = str(tmp_path / "fold")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _KILL_AFTER_COMMIT, SF_SMALL, root, "1"],
+        cwd=repo, env=env, start_new_session=True, capture_output=True,
+        timeout=300,
+    )
+    assert proc.returncode == -9, proc.stderr.decode()[-2000:]
+    assert jobs._committed_batch(root, 1) is not None
+    assert jobs._committed_batch(root, 2) is None
+    commits = os.path.join(root, "_checkpoint", "commits")
+    assert not os.path.exists(os.path.join(commits, "1"))
+
+    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+    assert os.path.exists(os.path.join(commits, "1"))  # batch 1 re-ran
+    got = [tuple(r) for r in jobs._emitted_sessions(spark, root).collect()]
+    assert len(got) == len(set(got))
+    assert sorted(got) == _oracle_sessions(SF_SMALL)
+
+
+def test_session_fold_replay_of_committed_batch_changes_nothing(spark, tmp_path):
+    """foreachBatch is at-least-once: a batch id that Spark re-runs
+    after the fold committed it must leave the fold's table as it was."""
+    from opusdb_spark.streaming import jobs
+    from tests.conftest import SF_SMALL
+
+    root = str(tmp_path / "fold")
+    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+
+    def snapshot():
+        return sorted(
+            (os.path.relpath(p, root), os.stat(p).st_mtime_ns)
+            for d, _, fs in os.walk(root)
+            if not os.path.relpath(d, root).startswith("_")
+            for p in (os.path.join(d, f) for f in fs)
+        )
+
+    before = snapshot()
+    emitted = sorted(tuple(r) for r in jobs._emitted_sessions(spark, root).collect())
+    last = max(int(n[2:]) for n in os.listdir(root) if n.startswith("b="))
+    commits = os.path.join(root, "_checkpoint", "commits")
+    for name in (str(last), f".{last}.crc"):  # the log entry and its checksum
+        os.unlink(os.path.join(commits, name))
+
+    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+    assert os.path.exists(os.path.join(commits, str(last)))  # it re-ran
+    assert snapshot() == before
+    assert sorted(tuple(r) for r in jobs._emitted_sessions(spark, root).collect()) == emitted
+
+
+def test_session_fold_drops_events_behind_the_watermark(spark, tmp_path):
+    """An event at or below the watermark the previous batch left (its
+    clock minus the 10-min delay) is late: the fold drops it, as the
+    stateful operator did, and an event 1 us above it is kept."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opusdb_spark.streaming import jobs
+
+    minute = 60_000_000
+    t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    wm = t0 + 110 * minute  # batch 0's clock t0 + 2h, less 10 min
+    batches = [
+        [(1, t0 + 120 * minute)],
+        [(2, t0), (3, wm), (4, wm + 1)],
+        [(5, t0 + 600 * minute)],  # times out every earlier session
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    base = os.stat(str(src)).st_mtime
+    for i, rows in enumerate(batches):
+        p = str(src / f"{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": pa.array([u for u, _ in rows], pa.int64()),
+                    "ts": pa.array([t for _, t in rows], pa.timestamp("us")),
+                }
+            ),
+            p,
+        )
+        os.utime(p, (base + i, base + i))
+    events = (
+        spark.readStream.schema("user_id long, ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    root = str(tmp_path / "fold")
+    jobs._fold_sessions(events, root)
+    got = sorted(tuple(r) for r in jobs._emitted_sessions(spark, root).collect())
+    assert got == [(1, t0 + 120 * minute, t0 + 120 * minute, 1), (4, wm + 1, wm + 1, 1)]
+
+
 def test_stream_funnel_matches_restartable_reference(spark):
     """The streaming funnel's per-user (view, click, purchase) triple
     must equal the RESTARTABLE event-time reference exactly: an
