@@ -792,9 +792,9 @@ def main() -> None:
         out["tpch"] = tpch
     # Streaming at volume (VERDICT r5 §7): replay the full events table
     # through the event-time-timeout session fold (multi-batch ts-split
-    # replay, a foreachBatch fold over a parquet state table, bounded
-    # state) and report throughput — turns "bounded state" from a claim into a
-    # rows/s number. Best-of-2 like every other loop (r8: the single
+    # replay, a foreachBatch fold over a parquet state table) and report
+    # throughput — turns the state-eviction path into a rows/s number.
+    # Best-of-2 like every other loop (r8: the single
     # timed replay landed right after the 18-query TPC-H block and
     # read 8.1k rows/s where isolation measures 12-14k — one number,
     # no spread, maximum ladder-position exposure).

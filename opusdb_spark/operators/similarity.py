@@ -131,20 +131,36 @@ def _literal_probe(probe_vec: list[float]) -> tuple[Column, Column]:
     py4j, which cost ~1 ms each on 4 vCPUs (measured 400 ms per probe
     built as Columns vs 0.7 ms as text). repr() round-trips a double exactly
     and Spark parses a `D` literal back to the same double."""
-    xs = [f"{float(x)!r}D" for x in probe_vec]
     norm = f"CAST('0' AS {_DEC_ACC})"
-    for x in xs:
+    for x in _double_literals(probe_vec):
         norm = f"CAST({norm} + CAST({x} * {x} AS {DEC12}) AS {_DEC_ACC})"
-    return F.expr(f"array({', '.join(xs)})"), F.expr(f"CAST({norm} AS DOUBLE)")
+    return _literal_array(probe_vec), F.expr(f"CAST({norm} AS DOUBLE)")
 
 
-def _top_by(df: DataFrame, score: str, n: int, drop_null: bool = True) -> DataFrame:
-    """The n rows with the highest `score`, ties by lower id —
+def _double_literals(vec: list[float]) -> list[str]:
+    """Each value of `vec` as an exact SQL double literal (`<repr>D`)."""
+    return [f"{float(x)!r}D" for x in vec]
+
+
+def _literal_array(vec: list[float]) -> Column:
+    """A driver-side vector as one SQL-text array literal: one parse,
+    not one py4j Column call per value."""
+    return F.expr(f"array({', '.join(_double_literals(vec))})")
+
+
+def _top_by(df: DataFrame, score: str, n: int) -> DataFrame:
+    """The n rows with the highest non-NULL `score`, ties by lower id —
     TakeOrderedAndProject: partition-local heads, one tiny merge.
-    NULL scores are dropped, or with `drop_null=False` sort last."""
-    if drop_null:
-        df = df.filter(F.col(score).isNotNull())
-    return df.orderBy(F.desc(score), F.asc(ID)).limit(n)
+
+    NULLs are dropped AFTER the limit: `desc` sorts them last, so the
+    rows kept are the same, and Catalyst never pushes a filter through
+    a Limit. Filtered first, the filter is pushed below the projection
+    that computes `score`, and every row evaluates the score twice."""
+    return (
+        df.orderBy(F.desc(score), F.asc(ID))
+        .limit(n)
+        .filter(F.col(score).isNotNull())
+    )
 
 
 def _topk(cands: DataFrame, probe, probe_norm: Column, k: int) -> DataFrame:
@@ -166,16 +182,11 @@ def _topk(cands: DataFrame, probe, probe_norm: Column, k: int) -> DataFrame:
     candidates score within that margin of the kth cosine; the 10×
     overfetch makes that near-tie pile-up unreachable for real
     embeddings (exact duplicates rank identically in both phases and
-    share the id tie-break).
-
-    The pool keeps NULL approximate scores (sorted last, and dropped by
-    the exact phase): a NULL filter there is pushed below the
-    projection, so every candidate would evaluate the cosine twice."""
+    share the id tie-break)."""
     pool = _top_by(
         cands.withColumn("_ac", _cosine(VEC, probe, probe_norm, _double_fold)),
         "_ac",
         max(_POOL_MIN, 10 * k),
-        drop_null=False,
     )
     return _top_by(
         pool.select(ID, _cosine(VEC, probe, probe_norm, _dec_fold).alias("cosine")),
@@ -529,9 +540,7 @@ def kmeans_inertia(
             _double_fold(
                 F.zip_with(
                     VEC,
-                    # the centroid as one SQL-text literal, as in
-                    # _literal_probe: one parse, not dim py4j calls
-                    F.expr(f"array({', '.join(f'{v!r}D' for v in c)})"),
+                    _literal_array(c),
                     lambda a, b: (a.cast("double") - b)
                     * (a.cast("double") - b),
                 )

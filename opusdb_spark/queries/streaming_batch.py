@@ -470,9 +470,9 @@ def stream_rollup_maintain(spark, sf_dir):
 def stream_session_timeout(spark, sf_dir):
     """TRUE streaming sessions closed by event-time timeout: a user's
     open session leaves the state and emits once the watermark passes
-    last-seen + 30 min — the bounded-state discipline that keeps
-    stateful streams viable, here a foreachBatch fold over a versioned
-    state table (streaming/jobs.py session_timeout_totals).
+    last-seen + 30 min, here a foreachBatch fold over a versioned
+    state table (streaming/jobs.py session_timeout_totals; its table
+    is bounded per replay only, see there).
     Hash-checked since r10 against batch gap sessionization + the
     strict final-watermark timeout rule (see oracle note)."""
     return stream_jobs.session_timeout_totals(spark, sf_dir)

@@ -127,11 +127,11 @@ def _load() -> None:
 # (similarity._cosine_of: casts inside the lambdas, a literal probe's
 # norm folded to a constant, the zero-norm guard in semdedup).
 # stream_session_timeout is a foreachBatch fold over a parquet state
-# table instead of applyInPandasWithState; the two-phase top-k
-# (llm_similarity_topk and the IVF probe keys) no longer filters NULL
-# approximate scores, and emb_kmeans builds its centroid literals as
-# SQL text. Values are unchanged by construction, and a fresh verdict
-# confirms it.
+# table instead of applyInPandasWithState; every top-k (`_top_by`:
+# llm_similarity_topk, the ANN probe keys, llm_mmr_select's pool) drops
+# NULL scores after its limit instead of before, and emb_kmeans builds
+# its centroid literals as SQL text. Values are unchanged by
+# construction, and a fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -158,8 +158,9 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "mvcc_txn_rollback",
     # session fold over a state table (streaming/jobs.py _fold_sessions)
     "stream_session_timeout",
-    # top-k pool keeps NULL approximate scores; centroid literals as text
+    # top-k drops NULL scores after the limit; centroid literals as text
     "llm_similarity_topk",
+    "llm_mmr_select",
     "emb_kmeans",
 )
 

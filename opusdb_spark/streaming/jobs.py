@@ -635,10 +635,14 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted once the clock's watermark passes last-seen + 30 min — the
     state-GC half of arbitrary stateful processing, kept here as a
     fold over a versioned state table (`_fold_sessions`): the
-    reference's bounded per-key history (stm.clj:42-53), where only
-    the newest committed batch is ever read back as state. Runs over
-    the multi-batch ts-split source; sessions still open at stream end
-    deliberately never emit (they are live state, not results).
+    reference's per-key history (stm.clj:42-53), where only the newest
+    committed batch is ever read back as state. The table itself is
+    not bounded: every batch's dir is kept, because its emitted
+    sessions live there, so it grows by batches × open sessions; it is
+    bounded per replay only, as each run starts from an empty root
+    (`scratch_sink`). Runs over the multi-batch ts-split source;
+    sessions still open at stream end deliberately never emit (they
+    are live state, not results).
 
     Why not native session_window + watermark: its windows close at
     wm >= end where EventTimeTimeout fires at wm > timeout, so it emits

@@ -1095,6 +1095,21 @@ def test_literal_probe_norm_is_one_folded_constant(spark):
     assert row.lit == row.hof > 0
 
 
+def test_top_by_evaluates_score_once(spark):
+    """`_top_by`'s NULL filter must stay above the limit: pushed below
+    the projection that computes the score, it makes every row evaluate
+    the score (a higher-order-function cosine in every caller) twice.
+    NULL scores are still dropped, even where fewer than n rows score."""
+    df = spark.range(6).select(
+        F.col("id").alias("vec_id"),
+        F.when(F.col("id") % 2 == 0, F.sqrt(F.col("id") + 0.5)).alias("s"),
+    )
+    top = similarity._top_by(df, "s", 5)
+    plan = top._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.upper().count("SQRT(") == 1, plan
+    assert [r.vec_id for r in top.collect()] == [4, 2, 0]
+
+
 def test_incremental_pairs_match_batch_pairs_cross_subset(spark):
     """The incremental path must find exactly the batch-vs-corpus edges
     the full batch dedup finds: restricting the full pair graph to
