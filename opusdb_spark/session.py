@@ -153,6 +153,15 @@ def get_spark(
         # lost: a DataFrame error no longer names the Python line that
         # built the failing expression.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache (static, so set before the JVM starts).
+        # The default 100 is split over Guava's 4 LRU segments, ~25
+        # classes each, while one perfbench interactive_bank round uses
+        # ~100 distinct classes: every query recompiled 3-17 classes on
+        # each run (9 ms median, 44 ms p95 per Janino compile, plus JIT
+        # of each new class), and the first round after a set-up paid
+        # 0.4-0.9 s more than later rounds on 4 vCPUs. At 1000 a
+        # repeated query compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -31,3 +31,25 @@ def test_dataframe_debugging_is_off(spark):
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+
+
+def test_repeated_query_compiles_nothing_after_100_others(spark):
+    """get_spark sizes the generated-class cache past Spark's default
+    100 entries, so a query re-run after 150 other distinct compiled
+    plans hits the cache instead of recompiling its classes."""
+    jvm = spark.sparkContext._jvm
+    metrics = getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics$")
+    compiled = metrics.__getattr__("MODULE$").METRIC_COMPILATION_TIME()
+
+    def run(i: int) -> None:
+        # A long literal is inlined in the generated code: one class
+        # per i. execute() compiles the stage without running a job.
+        df = spark.range(2, numPartitions=1).selectExpr(f"id * {i}L + 7L AS v")
+        df._jdf.queryExecution().executedPlan().execute()
+
+    run(0)
+    for i in range(1, 151):
+        run(i)
+    before = compiled.getCount()
+    run(0)
+    assert compiled.getCount() == before
