@@ -8,8 +8,9 @@ top-k. Exact top-k (`cosine_topk`), the ANN probes
 (operators/ann_index.py), MMR and SemDeDup all score through them, so
 an exact score is the same double wherever it is computed and
 hash-matches the SQL oracle bit-for-bit. The batched probes
-(`cosine_topk_batch`, `hard_negatives`) are the same algebra as grouped
-decimal sums over one flatten (`_flat`).
+(`cosine_topk_batch`, `hard_negatives`) are one batched top-k,
+`_probe_topk`: the same algebra as grouped decimal sums over one
+flatten (`_flat`), scored by `_cosine_of`.
 
 Also here: the ANN models (the random-hyperplane LSH plane matrix and
 its Arrow bucket kernel `lsh_signatures`, the IVF coarse quantizer
@@ -359,28 +360,38 @@ def ivf_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> np.ndarray:
     return cents
 
 
-def cosine_topk_batch(
-    emb: DataFrame, probe_ids: list[int], k: int = 10
+def _probe_topk(
+    emb: DataFrame,
+    probe_ids: list[int],
+    k: int,
+    carry: tuple[str, ...],
+    pair: Column,
 ) -> DataFrame:
     """Exact cosine top-k for a MODEL-SIZED probe set in ONE corpus
-    pass: the flattened probe components (|probes| × dim rows)
-    broadcast against the corpus, scores aggregate per (probe, vector),
-    and a per-probe group-limit window takes each top-k — the ground
-    truth an ANN recall evaluation compares against. Same exact-decimal
-    dot products as cosine_topk, so scores are order-independent."""
+    pass, as (probe_id, vec_id, *carry, cosine, rank): the flattened
+    probe components (|probes| × dim rows, each `carry` column riding
+    as `probe_<col>`) broadcast against the corpus, the (probe,
+    candidate) pairs that pass `pair` aggregate their dot and Σx² in
+    one grouped decimal sum (one shuffle), and a per-probe group-limit
+    window takes each top-k by `_cosine_of`, ties by lower id. Same
+    exact-decimal dot products as cosine_topk, so scores are
+    order-independent."""
     from pyspark.sql import Window
 
-    flat = _flat(emb)
+    flat = _flat(emb, *carry)
     probe = flat.filter(F.col(ID).isin(list(probe_ids))).select(
-        F.col(ID).alias("probe_id"), "i", F.col("x").alias("p")
+        F.col(ID).alias("probe_id"),
+        *[F.col(c).alias(f"probe_{c}") for c in carry],
+        "i",
+        F.col("x").alias("p"),
     )
     pnorm = probe.groupBy("probe_id").agg(
         _dec_sum(F.col("p") * F.col("p")).alias("np")
     )
     scored = (
         flat.join(F.broadcast(probe), "i")
-        .filter(F.col(ID) != F.col("probe_id"))
-        .groupBy("probe_id", ID)
+        .filter(pair)
+        .groupBy("probe_id", ID, *carry)
         .agg(
             _dec_sum(F.col("x") * F.col("p")).alias("dot"),
             _dec_sum(F.col("x") * F.col("x")).alias("nx"),
@@ -389,16 +400,27 @@ def cosine_topk_batch(
         .select(
             "probe_id",
             ID,
+            *carry,
             _cosine_of(F.col("dot"), F.col("nx"), F.col("np")).alias("cosine"),
         )
         .filter(F.col("cosine").isNotNull())
     )
     w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(ID))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
+
+
+def cosine_topk_batch(
+    emb: DataFrame, probe_ids: list[int], k: int = 10
+) -> DataFrame:
+    """Exact cosine top-k of each probe in `probe_ids` (the probe
+    itself excluded) as (probe_id, vec_id, cosine), in one corpus pass
+    (`_probe_topk`) — the ground truth an ANN recall evaluation
+    compares against."""
+    return _probe_topk(
+        emb, probe_ids, k, (), F.col(ID) != F.col("probe_id")
+    ).drop("rank")
 
 
 def semdedup_drops(emb: DataFrame, tau: float) -> DataFrame:
@@ -744,60 +766,17 @@ def hard_negatives(
     the k most cosine-similar vectors with a DIFFERENT label — similar
     enough to be hard, labeled differently so they are negatives.
 
-    Same one-corpus-pass shape as cosine_topk_batch (model-sized probe
-    components broadcast, exact decimal dots, per-probe group-limit
-    window); the label rides in the flatten projection (no corpus
-    self-join) and the candidate norm folds inside the SAME
-    per-(probe, candidate) aggregate as the dot product, so the whole
-    scoring costs one shuffle. The label filter applies BEFORE the
-    top-k so negatives are never crowded out by same-label
-    neighbors."""
-    from pyspark.sql import Window
-
-    flat = _flat(emb, LABEL)
-    probe = flat.filter(F.col(ID).isin(list(probe_ids))).select(
-        F.col(ID).alias("probe_id"),
-        F.col(LABEL).alias("_plabel"),
-        "i",
-        F.col("x").alias("p"),
+    One corpus pass (`_probe_topk`, as cosine_topk_batch); the label
+    rides in the flatten projection (no corpus self-join), and the
+    label filter applies BEFORE the top-k so negatives are never
+    crowded out by same-label neighbors."""
+    pair = (F.col(ID) != F.col("probe_id")) & (
+        F.col(LABEL) != F.col(f"probe_{LABEL}")
     )
-    pn = probe.groupBy("probe_id").agg(
-        _dec_sum(F.col("p") * F.col("p")).alias("np")
-    )
-    scored = (
-        flat.join(F.broadcast(probe), "i")
-        .filter(
-            (F.col(ID) != F.col("probe_id"))
-            & (F.col(LABEL) != F.col("_plabel"))
-        )
-        .groupBy("probe_id", ID, LABEL)
-        .agg(
-            _dec_sum(F.col("x") * F.col("p")).alias("dot"),
-            _dec_sum(F.col("x") * F.col("x")).alias("n2"),
-        )
-    )
-    sims = (
-        scored.join(F.broadcast(pn), "probe_id")
-        .filter((F.col("n2") > 0) & (F.col("np") > 0))
-        .select(
-            "probe_id",
-            ID,
-            LABEL,
-            (F.col("dot") / F.sqrt(F.col("n2") * F.col("np"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc(ID))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "probe_id",
-            "rank",
-            F.col(ID).alias("negative_id"),
-            F.col(LABEL).alias("negative_label"),
-            "cosine",
-        )
-        .orderBy("probe_id", "rank")
-    )
+    return _probe_topk(emb, probe_ids, k, (LABEL,), pair).select(
+        "probe_id",
+        "rank",
+        F.col(ID).alias("negative_id"),
+        F.col(LABEL).alias("negative_label"),
+        "cosine",
+    ).orderBy("probe_id", "rank")

@@ -1,7 +1,7 @@
 """Python worker daemon: `pyspark.daemon` behind a stat-guarded zip cache.
 
 Every Python task (pandas and plain UDFs, `mapInPandas`,
-`applyInPandas`, `applyInPandasWithState`) starts with pyspark's
+`applyInPandas`) starts with pyspark's
 `worker_util.setup_spark_files`, which ends in
 `importlib.invalidate_caches()`. On CPython < 3.13 that call makes
 every `zipimporter` in `sys.path_importer_cache` re-read its archive's

@@ -487,10 +487,10 @@ def _funnel_oracle() -> str:
     user's event sequence through the IDENTICAL transition function
     and accumulates the same conversion triples. This is the
     second-engine version of the pure-Python restartable reference the
-    tests pin, and it also certifies the operator's own design claim:
-    state GC (EventTimeTimeout past deadline + allowance) is
-    semantically invisible, because the replay has no GC at all and
-    still matches bit-for-bit."""
+    tests pin, and it also certifies the fold's own design claim: its
+    carry rule (an open attempt is dropped once the watermark passes
+    view + 7 days + the allowance) is semantically invisible, because
+    the replay drops nothing and still matches bit-for-bit."""
     w_us = 7 * 24 * 3600 * 1000000
     expired = f"(s.t1 IS NOT NULL AND e.t - s.t1 > {w_us})"
     t1r = f"(CASE WHEN {expired} THEN NULL ELSE s.t1 END)"
@@ -549,20 +549,20 @@ def _funnel_oracle() -> str:
     tags=("streaming", "state"),
 )
 def stream_funnel_true(spark, sf_dir):
-    """TRUE streaming ordered funnel (rows-only): a per-user state
-    machine advances view → click → purchase across micro-batches,
-    emitting one CONVERSION EVENT per completed attempt; an attempt
-    expires in EVENT TIME (any event > 7 days after its view resets
-    the machine — batch-boundary-independent by construction), and
-    EventTimeTimeout GC's idle incomplete attempts past the deadline +
-    allowance so abandoned users cannot pin state (streaming/jobs.py
-    funnel_stream). The single-attempt batch twin is
-    events_funnel_conversion; the full conversion multiset is pinned
-    against a pure-Python restartable reference in
-    tests/test_streaming.py AND, since r10, hash-checked against a
-    DuckDB recursive-CTE replay of the state machine itself
-    (_funnel_oracle) — which also proves the GC-is-invisible design
-    claim, since the replay has no GC and still matches."""
+    """TRUE streaming ordered funnel: a per-user state machine
+    advances view → click → purchase across micro-batches, emitting
+    one CONVERSION EVENT per completed attempt; an attempt expires in
+    EVENT TIME (any event > 7 days after its view resets the machine —
+    batch-boundary-independent by construction). It runs as a fold
+    over a parquet state table (streaming/jobs.py funnel_stream), which
+    stops carrying an idle attempt once the watermark passes its view
+    + 7 days + the allowance, so abandoned users cannot pin state. The
+    single-attempt batch twin is events_funnel_conversion; the full
+    conversion multiset is pinned against a pure-Python restartable
+    reference in tests/test_streaming.py AND, since r10, hash-checked
+    against a DuckDB recursive-CTE replay of the state machine itself
+    (_funnel_oracle) — which also proves the carry rule invisible,
+    since the replay drops nothing and still matches."""
     return (
         stream_jobs.funnel_stream(spark, sf_dir)
         .orderBy("user_id", "view_us")

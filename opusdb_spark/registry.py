@@ -130,8 +130,12 @@ def _load() -> None:
 # table instead of applyInPandasWithState; every top-k (`_top_by`:
 # llm_similarity_topk, the ANN probe keys, llm_mmr_select's pool) drops
 # NULL scores after its limit instead of before, and emb_kmeans builds
-# its centroid literals as SQL text. Values are unchanged by
-# construction, and a fresh verdict confirms it.
+# its centroid literals as SQL text. stream_funnel_true is the second
+# fold over a parquet state table (streaming/jobs.py _fold) instead of
+# applyInPandasWithState, and the batched top-k keys (emb_hard_negatives,
+# emb_truncated_recall and the recall evals) share one scorer,
+# similarity._probe_topk. Values are unchanged by construction, and a
+# fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -162,6 +166,10 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "llm_similarity_topk",
     "llm_mmr_select",
     "emb_kmeans",
+    # funnel fold over a state table; one batched top-k (_probe_topk)
+    "stream_funnel_true",
+    "emb_hard_negatives",
+    "emb_truncated_recall",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

@@ -15,11 +15,12 @@ nothing here assumes a bounded input except the final `.awaitTermination`.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
+from typing import Callable, NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -485,59 +486,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_parquet_append(joined, "ssj_true")
 
 
-# NOTE: the newer transformWithStateInPandas API (typed ValueState /
-# timers / TTL, Spark 4) needs a working google.protobuf for its state
-# server, which is not a dependency of this project, so funnel_stream's
-# ordered per-user state machine stays on applyInPandasWithState
-# (classic Arrow protocol, runs everywhere).
-
-# The session fold (session_timeout_totals): a session ends at an
-# event-time gap over 30 min, and its clock lags the newest event by
-# the 10-min watermark delay.
-_GAP_US = 30 * 60 * 1_000_000
+# The stateful jobs below are folds over a versioned state table
+# (`_fold`): a job's per-key state is rows of a parquet table, one
+# committed dir per micro-batch, not a stateful operator's store. Event
+# time lags the newest event by the 10-min watermark delay.
 _DELAY_MS = 10 * 60 * 1000
-# One committed batch of the fold, `<root>/b=<batch id>/c=<clock us>`:
-# every session the batch's fold produced; `is_last` marks each user's
-# open (last) session.
-_FOLD_SCHEMA = "user_id long, start_us long, last_us long, n long, is_last boolean"
 
 
-def _timed_out(clock_ms: str) -> str:
-    """SQL predicate: a last session whose event-time timeout has fired
-    at a clock of `clock_ms`, EventTimeTimeout's strict `watermark >
-    last-seen + gap` in milliseconds."""
-    return f"last_us div 1000 + {_GAP_US // 1000} < {clock_ms} - {_DELAY_MS}"
+class _Fold(NamedTuple):
+    """One job as a fold (`_fold`). `step` is one SQL statement over
+    `{state}`, the rows the previous batch carried, and `{batch}`, the
+    batch's events; it returns rows of `schema`, whose `last_us` holds
+    the time of an event seen, so its max is the newest event so far.
+    `carried` and `emitted` map a batch's clock in ms, as SQL, to a
+    predicate on the rows that batch wrote: carried rows are the next
+    batch's state, emitted rows are results, projected to `columns`."""
 
-
-# The union of the carried sessions and the batch's events, sessionized
-# with the oracle's shape: ordered by start, a row opens a new session
-# where its start is more than the gap past the running max of the
-# earlier rows' last-seen (for bare events, the previous event).
-_FOLD_SQL = f"""
-WITH u AS (
-    SELECT user_id, start_us, last_us, n FROM {{state}}
-    UNION ALL
-    SELECT user_id, unix_micros(ts), unix_micros(ts), 1 FROM {{batch}}
-), w AS (
-    SELECT *, CASE WHEN start_us - MAX(last_us) OVER (
-                        PARTITION BY user_id ORDER BY start_us, last_us
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        > {_GAP_US}
-                   THEN 1 ELSE 0 END AS brk
-    FROM u
-), s AS (
-    SELECT *,
-           SUM(brk) OVER (PARTITION BY user_id ORDER BY start_us, last_us
-                          ROWS UNBOUNDED PRECEDING) AS sid,
-           SUM(brk) OVER (PARTITION BY user_id ORDER BY start_us, last_us
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND UNBOUNDED FOLLOWING) AS last_sid
-    FROM w
-)
-SELECT user_id, MIN(start_us) AS start_us, MAX(last_us) AS last_us,
-       SUM(n) AS n, sid = last_sid AS is_last
-FROM s GROUP BY user_id, sid, last_sid
-"""
+    schema: str
+    step: str
+    carried: Callable[[str], str]
+    emitted: Callable[[str], str]
+    columns: tuple[str, ...]
 
 
 def _committed_batch(root: str, batch_id: int) -> tuple[str, int | None] | None:
@@ -563,23 +532,21 @@ def _commit_batch(staging: str, root: str, batch_id: int, clock: int | None) -> 
     os.rename(staging, os.path.join(final, f"c={'none' if clock is None else clock}"))
 
 
-def _fold_sessions(events: DataFrame, root: str) -> None:
-    """Fold the `(user_id, ts)` stream `events` into sessions under
-    `root`, to drain (availableNow), checkpointed at `root/_checkpoint`.
+def _fold(fold: _Fold, events: DataFrame, root: str) -> None:
+    """Fold the event stream `events` (`ts` plus what `fold.step` reads)
+    into the table under `root`, to drain (availableNow), checkpointed
+    at `root/_checkpoint`.
 
-    Batch k reads the state and clock that batch k-1 committed. Its
-    events at or below that clock's watermark are late and dropped,
-    as a stateful operator drops them; the rest are unioned with the
-    state's open sessions and sessionized in one statement, and every
-    session produced is written, in one write, to `b=<k>/c=<clock>`,
-    where the clock is the newest last-seen written (the newest event
-    so far, whose session never times out, so it is always carried).
-    A batch's emitted sessions are its non-last ones plus the last ones
-    its clock has timed out; the rest are the next state. A batch id
-    that is already committed is skipped, so the at-least-once replay
-    of foreachBatch after a restart writes nothing twice."""
+    Batch k reads the rows and clock that batch k-1 committed. Its
+    events at or below that clock's watermark are late and dropped, as
+    a stateful operator drops them; the step runs over the rest and the
+    rows carried at that clock, and everything it returns is written,
+    in one write, to `b=<k>/c=<clock>`, where the clock is the newest
+    `last_us` so far. A batch id that is already committed is skipped,
+    so the at-least-once replay of foreachBatch after a restart writes
+    nothing twice."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         if _committed_batch(root, batch_id) is not None:
             return
         spark = batch_df.sparkSession  # the stream's clone of the session
@@ -588,23 +555,25 @@ def _fold_sessions(events: DataFrame, root: str) -> None:
             raise RuntimeError(f"{root}: batch {batch_id - 1} is not committed")
         prev_dir, clock = prev or (None, None)
         if clock is None:
-            state = spark.createDataFrame([], _FOLD_SCHEMA)
+            state = spark.createDataFrame([], fold.schema)
         else:
-            state = spark.read.schema(_FOLD_SCHEMA).parquet(prev_dir).where(
-                f"is_last AND NOT ({_timed_out(str(clock // 1000))})"
+            state = spark.read.schema(fold.schema).parquet(prev_dir).where(
+                fold.carried(str(clock // 1000))
             )
             wm_us = (clock // 1000 - _DELAY_MS) * 1000
             batch_df = batch_df.where(f"unix_micros(ts) > {wm_us}")
         staging = os.path.join(root, f"_b={batch_id}")
         shutil.rmtree(staging, ignore_errors=True)  # a killed attempt's write
-        spark.sql(_FOLD_SQL, state=state, batch=batch_df).write.parquet(staging)
+        spark.sql(fold.step, state=state, batch=batch_df).write.parquet(staging)
         # Spark's parquet writer keeps min/max of every long column, so
         # no range means no rows: the clock stays where it was
         rng = column_range([f for f, _ in list_store_files(staging)], "last_us")
-        _commit_batch(staging, root, batch_id, clock if rng is None else rng[1])
+        if rng is not None:
+            clock = rng[1] if clock is None else max(clock, rng[1])
+        _commit_batch(staging, root, batch_id, clock)
 
     q = (
-        events.writeStream.foreachBatch(fold)
+        events.writeStream.foreachBatch(step)
         .option("checkpointLocation", os.path.join(root, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
@@ -612,21 +581,74 @@ def _fold_sessions(events: DataFrame, root: str) -> None:
     q.awaitTermination()
 
 
-def _emitted_sessions(spark: SparkSession, root: str) -> DataFrame:
-    """Every session the committed batches under `root` emitted: one
-    scan, whose `b`/`c` partition columns give each row its batch's
-    clock."""
+def _emitted(fold: _Fold, spark: SparkSession, root: str) -> DataFrame:
+    """Every row the committed batches under `root` emitted: one scan,
+    whose `b`/`c` partition columns give each row its batch's clock."""
     return (
-        spark.read.schema(f"{_FOLD_SCHEMA}, b long, c long")
+        spark.read.schema(f"{fold.schema}, b long, c long")
         .parquet(root)
-        .where(f"NOT is_last OR {_timed_out('c div 1000')}")
-        .selectExpr(
-            "user_id",
-            "start_us AS session_start_us",
-            "last_us AS session_end_us",
-            "n AS n_events",
-        )
+        .where(fold.emitted("c div 1000"))
+        .selectExpr(*fold.columns)
     )
+
+
+# The session fold (session_timeout_totals): a session ends at an
+# event-time gap over 30 min. A committed batch holds every session the
+# batch's step produced; `is_last` marks each user's open (last) one.
+_GAP_US = 30 * 60 * 1_000_000
+
+
+def _timed_out(clock_ms: str) -> str:
+    """SQL predicate: a last session whose event-time timeout has fired
+    at a clock of `clock_ms`, EventTimeTimeout's strict `watermark >
+    last-seen + gap` in milliseconds."""
+    return f"last_us div 1000 + {_GAP_US // 1000} < {clock_ms} - {_DELAY_MS}"
+
+
+# The union of the carried sessions and the batch's events, sessionized
+# with the oracle's shape: ordered by start, a row opens a new session
+# where its start is more than the gap past the running max of the
+# earlier rows' last-seen (for bare events, the previous event).
+_SESSION_SQL = f"""
+WITH u AS (
+    SELECT user_id, start_us, last_us, n FROM {{state}}
+    UNION ALL
+    SELECT user_id, unix_micros(ts), unix_micros(ts), 1 FROM {{batch}}
+), w AS (
+    SELECT *, CASE WHEN start_us - MAX(last_us) OVER (
+                        PARTITION BY user_id ORDER BY start_us, last_us
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                        > {_GAP_US}
+                   THEN 1 ELSE 0 END AS brk
+    FROM u
+), s AS (
+    SELECT *,
+           SUM(brk) OVER (PARTITION BY user_id ORDER BY start_us, last_us
+                          ROWS UNBOUNDED PRECEDING) AS sid,
+           SUM(brk) OVER (PARTITION BY user_id ORDER BY start_us, last_us
+                          ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND UNBOUNDED FOLLOWING) AS last_sid
+    FROM w
+)
+SELECT user_id, MIN(start_us) AS start_us, MAX(last_us) AS last_us,
+       SUM(n) AS n, sid = last_sid AS is_last
+FROM s GROUP BY user_id, sid, last_sid
+"""
+
+_SESSIONS = _Fold(
+    schema="user_id long, start_us long, last_us long, n long, is_last boolean",
+    step=_SESSION_SQL,
+    carried=lambda c: f"is_last AND NOT ({_timed_out(c)})",
+    emitted=lambda c: f"NOT is_last OR {_timed_out(c)}",
+    columns=(
+        "user_id",
+        "start_us AS session_start_us",
+        "last_us AS session_end_us",
+        "n AS n_events",
+    ),
+)
+_fold_sessions = functools.partial(_fold, _SESSIONS)
+_emitted_sessions = functools.partial(_emitted, _SESSIONS)
 
 
 def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,12 +656,12 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (start, last-seen, count) extends while events arrive and is
     emitted once the clock's watermark passes last-seen + 30 min — the
     state-GC half of arbitrary stateful processing, kept here as a
-    fold over a versioned state table (`_fold_sessions`): the
-    reference's per-key history (stm.clj:42-53), where only the newest
-    committed batch is ever read back as state. The table itself is
-    not bounded: every batch's dir is kept, because its emitted
-    sessions live there, so it grows by batches × open sessions; it is
-    bounded per replay only, as each run starts from an empty root
+    fold over a versioned state table (`_fold`): the reference's
+    per-key history (stm.clj:42-53), where only the newest committed
+    batch is ever read back as state. The table itself is not bounded:
+    every batch's dir is kept, because its emitted sessions live
+    there, so it grows by batches × open sessions; it is bounded per
+    replay only, as each run starts from an empty root
     (`scratch_sink`). Runs over the multi-batch ts-split source;
     sessions still open at stream end deliberately never emit (they
     are live state, not results).
@@ -662,6 +684,72 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _emitted_sessions(spark, root)
 
 
+# The funnel fold (funnel_stream). A committed batch holds a row per
+# completed attempt (`purchase_us` set) and a row per user seen, with
+# the user's open attempt (`view_us`, `click_us`; NULL when none) and
+# newest event (`last_us`). An attempt lives 7 days from its view.
+_WINDOW_US = 7 * 24 * 3600 * 1_000_000
+_ATTEMPT = "struct<view_us: bigint, click_us: bigint, purchase_us: bigint>"
+
+# One event `e` (t, e) stepping the machine `a` (t1: the open view, t2:
+# its click, done: the completed attempts): an event more than 7 days
+# after the open view resets the machine, and may open a new attempt.
+_FUNNEL_STEP = f"""CASE
+    WHEN a.t1 IS NULL OR e.t - a.t1 > {_WINDOW_US} THEN named_struct(
+        't1', IF(e.e = 'view', e.t, NULL), 't2', CAST(NULL AS BIGINT),
+        'done', a.done)
+    WHEN a.t2 IS NULL THEN named_struct(
+        't1', a.t1, 't2', IF(e.e = 'click' AND e.t > a.t1, e.t, NULL),
+        'done', a.done)
+    WHEN e.e = 'purchase' AND e.t > a.t2 THEN named_struct(
+        't1', CAST(NULL AS BIGINT), 't2', CAST(NULL AS BIGINT),
+        'done', array_append(a.done, named_struct(
+            'view_us', a.t1, 'click_us', a.t2, 'purchase_us', e.t)))
+    ELSE a END"""
+
+# Per user, the carried attempt and the batch's events in (ts,
+# event_type) order, stepped by one aggregate(); the completed attempts
+# and the user's state row come out of one inline().
+_FUNNEL_SQL = f"""
+WITH u AS (
+    SELECT user_id, view_us, click_us, last_us, NULL AS ev FROM {{state}}
+    UNION ALL
+    SELECT user_id, NULL, NULL, unix_micros(ts),
+           struct(unix_micros(ts) AS t, event_type AS e) FROM {{batch}}
+), g AS (
+    SELECT user_id, MAX(last_us) AS last_us,
+           aggregate(array_sort(collect_list(ev)),
+                     named_struct('t1', MAX(view_us), 't2', MAX(click_us),
+                                  'done', CAST(array() AS array<{_ATTEMPT}>)),
+                     (a, e) -> {_FUNNEL_STEP}) AS m
+    FROM u GROUP BY user_id
+)
+SELECT user_id,
+       inline(array_append(m.done, CAST(named_struct(
+           'view_us', m.t1, 'click_us', m.t2, 'purchase_us', NULL)
+           AS {_ATTEMPT}))),
+       last_us
+FROM g
+"""
+
+# An open attempt is carried until the watermark passes view + 7 days +
+# the 10-min allowance. Past that, every event the fold admits is over
+# 7 days after the view and would reset the attempt anyway, so dropping
+# it changes no result; a row with no open attempt (NULL view) fails it.
+_FUNNEL = _Fold(
+    schema="user_id long, view_us long, click_us long, purchase_us long, last_us long",
+    step=_FUNNEL_SQL,
+    carried=lambda c: (
+        f"purchase_us IS NULL AND view_us div 1000 + "
+        f"{_WINDOW_US // 1000 + _DELAY_MS} >= {c} - {_DELAY_MS}"
+    ),
+    emitted=lambda c: "purchase_us IS NOT NULL",
+    columns=("user_id", "view_us", "click_us", "purchase_us"),
+)
+_fold_funnel = functools.partial(_fold, _FUNNEL)
+_emitted_conversions = functools.partial(_emitted, _FUNNEL)
+
+
 def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ordered funnel: per-user state machine advancing
     view → click → purchase (each step strictly after the previous,
@@ -681,113 +769,28 @@ def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stricter single-attempt spec — conversion from the user's FIRST
     view only; both specs are pinned against references.)
 
-    Bounded state is the point (the reference's bounded history,
-    stm.clj:47-50, in streaming form): state per user is two
-    timestamps, and EventTimeTimeout GC's an idle incomplete attempt
-    once the watermark passes its deadline PLUS the lateness
-    allowance — past that point any future event resets the attempt
-    anyway, so eviction is semantically invisible and an abandoned
-    funnel can never pin state forever. Exactness relies on per-user
-    event-time order across batches, which the ts-split replay
-    guarantees (a production stream with bounded disorder buffers per
-    key until the watermark, the standard discipline).
+    Kept as a fold over a versioned state table (`_fold`, as
+    session_timeout_totals): each batch steps every user's carried
+    attempt through the batch's events, in (ts, event_type) order, with
+    one SQL aggregate(). Bounded state is the point (the reference's
+    bounded history, stm.clj:47-50, in streaming form): the state per
+    user is two timestamps, carried only until the watermark passes
+    the view + 7 days + the lateness allowance — past that point any
+    admitted event resets the attempt anyway, so dropping it is
+    invisible and an abandoned funnel can never pin state. Exactness
+    relies on per-user event-time order across batches, which the
+    ts-split replay guarantees (a production stream with bounded
+    disorder buffers per key until the watermark, the standard
+    discipline).
 
-    Why not a native operator: attempts restart in event time and the
-    job emits one row per COMPLETED attempt — an ordered per-key state
-    machine, not a window, a session or a dedup, so no built-in
-    streaming aggregation expresses it.
+    Why not a native streaming operator: attempts restart in event
+    time and the job emits one row per COMPLETED attempt — an ordered
+    per-key state machine, not a window, a session or a dedup.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("view_us", LongType()),
-            StructField("click_us", LongType()),
-            StructField("purchase_us", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("t1_us", LongType()),
-            StructField("t2_us", LongType()),
-        ]
-    )
-    WINDOW_US = 7 * 24 * 3600 * 1000000
-
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # funnel expired un-completed: evict, emit nothing
-            state.remove()
-            return
-        t1, t2 = state.get if state.exists else (None, None)
-        rows = sorted(
-            (int(t), str(e))
-            for pdf in pdfs
-            for t, e in zip(
-                pdf["ts"].astype("datetime64[us]").astype("int64"),
-                pdf["event_type"],
-            )
-        )
-        completed = []
-        for t, etype in rows:
-            if t1 is not None and t - t1 > WINDOW_US:
-                # attempt expired in event time: reset, then let this
-                # event open a fresh attempt if it is a view
-                t1 = t2 = None
-            if t1 is None:
-                if etype == "view":
-                    t1 = t
-            elif t2 is None:
-                if etype == "click" and t > t1:
-                    t2 = t
-            elif etype == "purchase" and t > t2:
-                # a CONVERSION EVENT: emit it and reset the machine —
-                # one row per completed attempt, not per user (a
-                # remove-and-return here would lose the done marker at
-                # the next batch and re-emit the user's next attempt,
-                # the duplicate-emission bug this replaced)
-                completed.append((t1, t2, t))
-                t1 = t2 = None
-        if completed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(completed),
-                    "view_us": [c[0] for c in completed],
-                    "click_us": [c[1] for c in completed],
-                    "purchase_us": [c[2] for c in completed],
-                }
-            )
-        if t1 is None:
-            # no view yet: (None, None) carries no funnel info, and a
-            # stored no-op state could never time out — drop it
-            if state.exists:
-                state.remove()
-            return
-        state.update((t1, t2))
-        # GC once the watermark passes deadline + allowance: any event
-        # the allowance still admits (ts > wm - 10 min > deadline)
-        # would reset the attempt anyway, so eviction == reset and the
-        # emitted result cannot depend on batch timing
-        gc_ms = (t1 + WINDOW_US) // 1000 + 600_000
-        if gc_ms <= state.getCurrentWatermarkMs():
-            state.remove()
-        else:
-            state.setTimeoutTimestamp(gc_ms)
-
-    ev = (
-        _events_stream(spark, sf_dir, batched=True)
-        .select("user_id", "ts", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return _run_to_memory(result, "funnel", sf_dir)
+    root = scratch_sink(f"ckpt_funnel_{_tag(sf_dir)}")
+    events = _events_stream(spark, sf_dir, batched=True)
+    _fold_funnel(events.select("user_id", "ts", "event_type"), root)
+    return _emitted_conversions(spark, root)
 
 
 def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

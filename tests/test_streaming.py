@@ -228,23 +228,15 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
     assert [r.ts for r in got] == want
 
 
-def test_stateful_totals_keep_state_in_the_native_store(spark):
-    """stream_stateful_true is a native streaming aggregation: every
-    progress report names only StateStoreSave state operators (no
-    applyInPandasWithState Python state machine), and after the replay
-    the store holds exactly one state row per distinct user."""
+def _state_operators(spark, run, ours=lambda name: True):
+    """Run `run()` under a StreamingQueryListener; return, for every
+    progress report of a query whose name `ours` accepts, its state
+    operators as (operator name, rows total) pairs."""
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from opusdb_spark.streaming import jobs
-    from opusdb_spark.tables import table
-    from tests.conftest import SF_SMALL
-
     started, ended, progress = set(), set(), []
-
-    def ours(name):
-        return bool(name) and name.startswith("stateful_")
 
     class Watch(StreamingQueryListener):
         def onQueryStarted(self, event):
@@ -264,7 +256,7 @@ def test_stateful_totals_keep_state_in_the_native_store(spark):
     watch = Watch()
     spark.streams.addListener(watch)
     try:
-        jobs.stateful_running_totals(spark, SF_SMALL).count()
+        run()
         # listener events arrive asynchronously; a query's progress
         # events are all delivered before its termination event
         deadline = time.monotonic() + 60
@@ -273,11 +265,41 @@ def test_stateful_totals_keep_state_in_the_native_store(spark):
     finally:
         spark.streams.removeListener(watch)
     assert started and started <= ended, "listener never saw the query end"
-    assert progress and all(progress), progress
+    assert progress, "no progress report"
+    return progress
+
+
+def test_stateful_totals_keep_state_in_the_native_store(spark):
+    """stream_stateful_true is a native streaming aggregation: every
+    progress report names only StateStoreSave state operators (no
+    applyInPandasWithState Python state machine), and after the replay
+    the store holds exactly one state row per distinct user."""
+    from opusdb_spark.streaming import jobs
+    from opusdb_spark.tables import table
+    from tests.conftest import SF_SMALL
+
+    progress = _state_operators(
+        spark,
+        lambda: jobs.stateful_running_totals(spark, SF_SMALL).count(),
+        lambda name: bool(name) and name.startswith("stateful_"),
+    )
+    assert all(progress), progress
     names = {name for ops in progress for name, _ in ops}
     assert names == {"stateStoreSave"}, names
     n_users = table(spark, SF_SMALL, "events").select("user_id").distinct().count()
     assert [rows for _, rows in progress[-1]] == [n_users]
+
+
+def test_funnel_keeps_no_state_store(spark):
+    """stream_funnel_true is a fold over a parquet state table: no
+    progress report of its stream lists a state operator."""
+    from opusdb_spark.streaming import jobs
+    from tests.conftest import SF_SMALL
+
+    progress = _state_operators(
+        spark, lambda: jobs.funnel_stream(spark, SF_SMALL).count()
+    )
+    assert len(progress) > 1 and not any(progress), progress
 
 
 def test_commit_ledger_commit_once_rollback_per_retry(spark):
@@ -458,20 +480,37 @@ def test_session_timeout_matches_oracle_at_edges(spark, tmp_path):
     )
 
 
-def _fold_stream(spark, sf_dir):
+# Each fold of streaming/jobs.py: its name there, the event columns its
+# step reads, and the registry key whose oracle gives its emitted rows.
+_FOLDS = {
+    "sessions": ("_SESSIONS", "user_id,ts", "stream_session_timeout"),
+    "funnel": ("_FUNNEL", "user_id,ts,event_type", "stream_funnel_true"),
+}
+
+
+def _run_fold(spark, case, sf_dir, root):
     from opusdb_spark.streaming import jobs
 
-    return jobs._events_stream(spark, sf_dir, batched=True).select("user_id", "ts")
+    fold, cols, _ = _FOLDS[case]
+    events = jobs._events_stream(spark, sf_dir, batched=True)
+    jobs._fold(getattr(jobs, fold), events.select(*cols.split(",")), root)
 
 
-def _oracle_sessions(sf_dir):
+def _emitted_rows(spark, case, root):
+    from opusdb_spark.streaming import jobs
+
+    fold = getattr(jobs, _FOLDS[case][0])
+    return sorted(tuple(r) for r in jobs._emitted(fold, spark, root).collect())
+
+
+def _oracle_rows(case, sf_dir):
     from opusdb_spark.registry import oracle_sql
 
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
     )
-    want = sorted(con.execute(oracle_sql()["stream_session_timeout"]).fetchall())
+    want = sorted(con.execute(oracle_sql()[_FOLDS[case][2]]).fetchall())
     con.close()
     return want
 
@@ -481,31 +520,31 @@ import os, signal, sys
 from opusdb_spark.session import get_spark
 from opusdb_spark.streaming import jobs
 
-sf_dir, root, kill_at = sys.argv[1], sys.argv[2], int(sys.argv[3])
+sf_dir, root, kill_at, fold, cols = sys.argv[1:]
 spark = get_spark(app_name="fold-kill", master="local[2]", shuffle_partitions=2)
 commit = jobs._commit_batch
 
 
 def commit_then_die(staging, root, batch_id, clock):
     commit(staging, root, batch_id, clock)
-    if batch_id == kill_at:  # the JVM shares this process group
+    if batch_id == int(kill_at):  # the JVM shares this process group
         os.killpg(0, signal.SIGKILL)
 
 
 jobs._commit_batch = commit_then_die
-jobs._fold_sessions(
-    jobs._events_stream(spark, sf_dir, batched=True).select("user_id", "ts"), root
-)
+events = jobs._events_stream(spark, sf_dir, batched=True)
+jobs._fold(getattr(jobs, fold), events.select(*cols.split(",")), root)
 sys.exit(3)  # the stream drained without reaching the kill
 """
 
 
-def test_session_fold_survives_kill_after_commit(spark, tmp_path):
+@pytest.mark.parametrize("case", sorted(_FOLDS))
+def test_fold_survives_kill_after_commit(spark, tmp_path, case):
     """SIGKILL the streaming process (Python and its JVM) right after
-    the session fold commits batch 1, before Spark records the batch in
-    its commit log; a restart on the same root replays batch 1 and
-    drains the rest. The emitted sessions equal the oracle: none lost,
-    none twice."""
+    the fold commits batch 1, before Spark records the batch in its
+    commit log; a restart on the same root replays batch 1 and drains
+    the rest. The emitted rows equal the fold's oracle: none lost, none
+    twice."""
     import subprocess
     import sys
 
@@ -515,8 +554,9 @@ def test_session_fold_survives_kill_after_commit(spark, tmp_path):
     root = str(tmp_path / "fold")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    fold, cols, _ = _FOLDS[case]
     proc = subprocess.run(
-        [sys.executable, "-c", _KILL_AFTER_COMMIT, SF_SMALL, root, "1"],
+        [sys.executable, "-c", _KILL_AFTER_COMMIT, SF_SMALL, root, "1", fold, cols],
         cwd=repo, env=env, start_new_session=True, capture_output=True,
         timeout=300,
     )
@@ -526,21 +566,21 @@ def test_session_fold_survives_kill_after_commit(spark, tmp_path):
     commits = os.path.join(root, "_checkpoint", "commits")
     assert not os.path.exists(os.path.join(commits, "1"))
 
-    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+    _run_fold(spark, case, SF_SMALL, root)
     assert os.path.exists(os.path.join(commits, "1"))  # batch 1 re-ran
-    got = [tuple(r) for r in jobs._emitted_sessions(spark, root).collect()]
-    assert len(got) == len(set(got))
-    assert sorted(got) == _oracle_sessions(SF_SMALL)
+    got = _emitted_rows(spark, case, root)
+    assert got and len(got) == len(set(got))
+    assert got == _oracle_rows(case, SF_SMALL)
 
 
-def test_session_fold_replay_of_committed_batch_changes_nothing(spark, tmp_path):
+@pytest.mark.parametrize("case", sorted(_FOLDS))
+def test_fold_replay_of_committed_batch_changes_nothing(spark, tmp_path, case):
     """foreachBatch is at-least-once: a batch id that Spark re-runs
     after the fold committed it must leave the fold's table as it was."""
-    from opusdb_spark.streaming import jobs
     from tests.conftest import SF_SMALL
 
     root = str(tmp_path / "fold")
-    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+    _run_fold(spark, case, SF_SMALL, root)
 
     def snapshot():
         return sorted(
@@ -551,16 +591,16 @@ def test_session_fold_replay_of_committed_batch_changes_nothing(spark, tmp_path)
         )
 
     before = snapshot()
-    emitted = sorted(tuple(r) for r in jobs._emitted_sessions(spark, root).collect())
+    emitted = _emitted_rows(spark, case, root)
     last = max(int(n[2:]) for n in os.listdir(root) if n.startswith("b="))
     commits = os.path.join(root, "_checkpoint", "commits")
     for name in (str(last), f".{last}.crc"):  # the log entry and its checksum
         os.unlink(os.path.join(commits, name))
 
-    jobs._fold_sessions(_fold_stream(spark, SF_SMALL), root)
+    _run_fold(spark, case, SF_SMALL, root)
     assert os.path.exists(os.path.join(commits, str(last)))  # it re-ran
     assert snapshot() == before
-    assert sorted(tuple(r) for r in jobs._emitted_sessions(spark, root).collect()) == emitted
+    assert _emitted_rows(spark, case, root) == emitted
 
 
 def test_session_fold_drops_events_behind_the_watermark(spark, tmp_path):
@@ -606,6 +646,33 @@ def test_session_fold_drops_events_behind_the_watermark(spark, tmp_path):
     assert got == [(1, t0 + 120 * minute, t0 + 120 * minute, 1), (4, wm + 1, wm + 1, 1)]
 
 
+def _restartable_funnel(ev):
+    """The pure-Python restartable funnel reference over the pandas
+    frame `ev` (user_id, us: event time in µs, event_type): per user in
+    time order, an attempt opens at a view, any event > 7 days after
+    that view resets the machine (and may open a new attempt), and the
+    first purchase after the attempt's click completes it. Returns
+    every completed attempt as (user_id, view_us, click_us,
+    purchase_us)."""
+    window_us = 7 * 24 * 3600 * 1_000_000
+    want = []
+    for uid, g in ev.sort_values("us").groupby("user_id"):
+        t1 = t2 = None
+        for us, etype in zip(g["us"], g["event_type"]):
+            if t1 is not None and us - t1 > window_us:
+                t1 = t2 = None
+            if t1 is None:
+                if etype == "view":
+                    t1 = us
+            elif t2 is None:
+                if etype == "click" and us > t1:
+                    t2 = us
+            elif etype == "purchase" and us > t2:
+                want.append((uid, t1, t2, us))
+                t1 = t2 = None
+    return want
+
+
 def test_stream_funnel_matches_restartable_reference(spark):
     """The streaming funnel's per-user (view, click, purchase) triple
     must equal the RESTARTABLE event-time reference exactly: an
@@ -629,23 +696,102 @@ def test_stream_funnel_matches_restartable_reference(spark):
         ["user_id", "ts", "event_type"]
     ]
     ev["us"] = ev["ts"].astype("datetime64[us]").astype("int64")
-    window_us = 7 * 24 * 3600 * 1_000_000
-    want = []
-    for uid, g in ev.sort_values("us").groupby("user_id"):
-        t1 = t2 = None
-        for us, etype in zip(g["us"], g["event_type"]):
-            if t1 is not None and us - t1 > window_us:
-                t1 = t2 = None
-            if t1 is None:
-                if etype == "view":
-                    t1 = us
-            elif t2 is None:
-                if etype == "click" and us > t1:
-                    t2 = us
-            elif etype == "purchase" and us > t2:
-                want.append((uid, t1, t2, us))
-                t1 = t2 = None
+    want = _restartable_funnel(ev)
     assert got == sorted(want)
+
+
+def test_funnel_matches_reference_across_batch_edges(spark, tmp_path):
+    """The funnel fold equals the restartable reference on a hand-built
+    five-file log whose attempts cross every batch edge: view, click
+    and purchase in three batches; a reset (an event > 7 days after the
+    view) in a later batch than the view; an attempt no longer carried
+    once the watermark passes view + 7 days + 10 min, then a view that
+    opens a new one; a user converting twice; a click before any view.
+    Batch 1 also holds a click exactly at batch 0's watermark, which is
+    late and dropped, and a click 1 us above it, which is kept."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opusdb_spark.streaming import jobs
+
+    minute = 60_000_000
+    hour, day = 60 * minute, 24 * 60 * minute
+    t0 = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    wm0 = t0 + day - 10 * minute  # batch 0's newest event less 10 min
+    batches = [
+        [
+            (1, t0, "view"),
+            (2, t0, "view"),
+            (3, t0, "view"), (3, t0 + hour, "click"),
+            (4, t0 + hour, "view"), (4, t0 + 2 * hour, "click"),
+            (4, t0 + 3 * hour, "purchase"),
+            (5, t0 + hour, "click"),  # no view before it
+            (6, t0 + 2 * hour, "view"),
+            (9, t0 + day, "view"),
+        ],
+        [
+            (6, wm0, "click"),  # late: at the watermark
+            (6, wm0 + 1, "click"),
+            (1, t0 + day + hour, "click"),
+            (2, t0 + day + hour, "click"),
+            (4, t0 + day + 2 * hour, "view"), (4, t0 + day + 3 * hour, "click"),
+            (5, t0 + day + hour, "view"), (5, t0 + day + 2 * hour, "click"),
+            (9, t0 + 2 * day, "view"),
+        ],
+        [
+            (1, t0 + 3 * day, "purchase"),
+            (4, t0 + 3 * day, "purchase"),  # user 4's second conversion
+            (5, t0 + 3 * day, "purchase"),
+            (6, t0 + 3 * day, "purchase"),
+        ],
+        [
+            # user 2's attempt is still carried: this view resets it
+            (2, t0 + 7 * day + 5 * minute, "view"),
+            (2, t0 + 7 * day + 6 * minute, "click"),
+            # watermark t0 + 7d + 20 min: user 3's attempt is dropped
+            (9, t0 + 7 * day + 30 * minute, "view"),
+        ],
+        [
+            (2, t0 + 7 * day + 40 * minute, "purchase"),
+            (3, t0 + 8 * day, "view"), (3, t0 + 8 * day + minute, "click"),
+            (3, t0 + 8 * day + 2 * minute, "purchase"),
+        ],
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    base = os.stat(str(src)).st_mtime
+    for i, rows in enumerate(batches):
+        p = str(src / f"{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
+                    "ts": pa.array([t for _, t, _ in rows], pa.timestamp("us")),
+                    "event_type": [e for _, _, e in rows],
+                }
+            ),
+            p,
+        )
+        os.utime(p, (base + i, base + i))
+    events = (
+        spark.readStream.schema("user_id long, ts timestamp, event_type string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    root = str(tmp_path / "fold")
+    jobs._fold_funnel(events, root)
+    assert jobs._committed_batch(root, len(batches) - 1) is not None
+    got = sorted(tuple(r) for r in jobs._emitted_conversions(spark, root).collect())
+
+    ev = pd.DataFrame(
+        [r for rows in batches for r in rows], columns=["user_id", "us", "event_type"]
+    )
+    kept = ev[~((ev.user_id == 6) & (ev.us == wm0))]
+    assert got == sorted(_restartable_funnel(kept))
+    assert got != sorted(_restartable_funnel(ev))  # the late click mattered
+    assert [u for u, *_ in got] == [1, 2, 3, 4, 4, 5, 6]
+    assert (6, t0 + 2 * hour, wm0 + 1, t0 + 3 * day) in got
 
 
 def test_session_window_emits_at_watermark_equality(spark, tmp_path):
@@ -701,9 +847,12 @@ def test_event_time_timeout_is_strict_at_watermark_equality(spark, tmp_path):
     """Premise pin for stream_session_timeout's oracle: an
     EventTimeTimeout does NOT fire when the final watermark exactly
     equals the timeout timestamp — emission requires wm STRICTLY
-    greater. The oracle encodes `wm_ms > end_ms + gap`; if a Spark
-    upgrade made the timeout inclusive this fails here before it
-    fails as a red driver verdict."""
+    greater. No job runs a stateful operator with a timeout any more:
+    this pins the Spark rule that the session fold's `_timed_out`
+    (streaming/jobs.py) re-implements, and the oracle encodes as
+    `wm_ms > end_ms + gap`; if a Spark upgrade made the timeout
+    inclusive this fails here before it fails as a red driver
+    verdict."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
