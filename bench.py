@@ -51,8 +51,8 @@ from __future__ import annotations
 import json
 import os
 import sys
+import itertools
 import time
-import uuid
 from pathlib import Path
 from typing import NamedTuple
 
@@ -379,6 +379,16 @@ class Timing(NamedTuple):
     n_tasks: int
 
 
+def _job_ids_newest_first(spark):
+    """Ids of the jobs Spark's status store holds (it works with the UI
+    off), newest first, once every event posted so far is delivered."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    it = jsc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        yield it.next().jobId()
+
+
 def time_query(spark, build, runs: int = _RUNS) -> Timing:
     """Warmup once, then best-of-`runs` fresh builds, resampling noisy
     keys.
@@ -401,28 +411,26 @@ def time_query(spark, build, runs: int = _RUNS) -> Timing:
     per-job floor + compute, and the r12 post-mortem proved job-count
     × floor swings masquerade as plan drift. The counts are a property
     of the BUILD (identical across runs on a warm session), so the
-    last run's are published; -1 marks a status-tracker hiccup."""
+    last run's are published; -1 marks a status-tracker hiccup. They
+    cover every job the run started, in any thread: a stream's
+    micro-batches run under the stream's own job group, not the
+    caller's."""
     build().count()
     times: list[float] = []
     n = 0
-    group = ""
+    before = -1
     sc = spark.sparkContext
 
     def one_run() -> None:
-        nonlocal n, group
+        nonlocal n, before
         # Drop any .cache() a prior run populated (cache lookup is by
         # logical plan, so the rebuilt query would hit it) — each timed
         # run must recompute everything itself.
         spark.catalog.clearCache()
-        # Group names are globally unique: the status tracker keys job
-        # ids by group NAME for the app's lifetime, so a reused name
-        # would accumulate other queries' jobs into the count.
-        group = f"bench_run_{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
+        before = next(_job_ids_newest_first(spark), -1)
         t0 = time.perf_counter()
         n = build().count()
         times.append(time.perf_counter() - t0)
-        sc.setJobGroup("bench_idle", "bench_idle")
 
     for _ in range(runs):
         one_run()
@@ -433,7 +441,9 @@ def time_query(spark, build, runs: int = _RUNS) -> Timing:
         one_run()
     st = sc.statusTracker()
     try:
-        job_ids = st.getJobIdsForGroup(group)
+        job_ids = list(
+            itertools.takewhile(lambda j: j > before, _job_ids_newest_first(spark))
+        )
         stage_ids = {
             sid
             for jid in job_ids
@@ -807,8 +817,9 @@ def main() -> None:
     # write (two Spark jobs), with no Python worker.
     if os.environ.get("SPARK_GRAFT_STREAM", "1") != "0":
         from opusdb_spark.streaming.jobs import events_stream_n_batches
+        from opusdb_spark.tables import table
 
-        events_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+        events_rows = table(spark, sf_dir, "events").count()
         n_batches = events_stream_n_batches(spark, sf_dir)
         stream_floor_ms = measure_floor_ms(spark)
         t = time_query(

@@ -630,6 +630,7 @@ def stream_opusdb_log_tail(spark, sf_dir):
     sink (rows-only: side-effecting)."""
     from opusdb_spark.sources import opusdb_log as olog
     from opusdb_spark.sources.formats import scratch_sink as _sink
+    from opusdb_spark.streaming.jobs import drain
 
     base = os.path.basename(os.path.normpath(sf_dir))
     src = _sink(f"opusdb_log_tail_src_{base}")
@@ -643,7 +644,7 @@ def stream_opusdb_log_tail(spark, sf_dir):
     olog.register(spark)
 
     def run_batch():
-        q = (
+        drain(
             spark.readStream.format("opusdb_log")
             .option("path", src)
             .option("block_size", "400")
@@ -652,12 +653,9 @@ def stream_opusdb_log_tail(spark, sf_dir):
             .drop("_ignored")
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt,
         )
-        q.awaitTermination()
 
     run_batch()
     olog.append_log(

@@ -331,9 +331,9 @@ def stream_session_true(spark, sf_dir):
 def stream_dedup_true(spark, sf_dir):
     """TRUE streaming dropDuplicates(event_id) within a 1 h watermark,
     written through the exactly-once parquet sink and read back. The
-    source replays as one availableNow batch (single file), so no row
-    is watermark-late and the output must equal the source table
-    row-for-row — see the oracle note."""
+    source replays as one availableNow batch over the split store, so
+    no row is watermark-late and the output must equal the source
+    table row-for-row — see the oracle note."""
     return stream_jobs.dedup_stream(spark, sf_dir)
 
 
@@ -342,8 +342,8 @@ def stream_dedup_true(spark, sf_dir):
     # Hash-oracled since r11 (the r10 verdict ask): the native
     # streaming aggregation sums exact integer micros (floor(v·1e6 +
     # 0.5) per event — see streaming/jobs.py stateful_running_totals),
-    # so the running total is batch-split-independent, and the
-    # single-file availableNow replay (the dedup_true/join_true
+    # so the running total is batch-split-independent, and the one
+    # availableNow batch over the split store (the dedup_true/join_true
     # single-batch premise) emits each user exactly once in update
     # mode with the full-log totals — which this batch SQL recomputes
     # with the identical micros fold (integer sum, one int→double

@@ -134,8 +134,10 @@ def _load() -> None:
 # fold over a parquet state table (streaming/jobs.py _fold) instead of
 # applyInPandasWithState, and the batched top-k keys (emb_hard_negatives,
 # emb_truncated_recall and the recall evals) share one scorer,
-# similarity._probe_topk. Values are unchanged by construction, and a
-# fresh verdict confirms it.
+# similarity._probe_topk. The one-batch stream keys (stream_dedup_true,
+# stream_join_true, stream_foreachbatch_sink) replay the ts-split events
+# store, as the batched ones already did, instead of the events file.
+# Values are unchanged by construction, and a fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
     "events_rollup_daily",
@@ -170,6 +172,10 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "stream_funnel_true",
     "emb_hard_negatives",
     "emb_truncated_recall",
+    # one availableNow batch over the ts-split events store
+    "stream_dedup_true",
+    "stream_join_true",
+    "stream_foreachbatch_sink",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

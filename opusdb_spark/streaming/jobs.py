@@ -1,16 +1,19 @@
 """True Structured Streaming jobs (SURVEY §2B streaming family).
 
-The events parquet is replayed as a file-source stream — the exact
-shape of the reference's recovery scan over its WAL (log_mgr.clj:16-33):
-an append-only log re-read from disk and folded into state. Watermarks
-bound that state (the streaming analog of MAX_HISTORY truncation,
-stm.clj:47-50); foreachBatch gives per-batch atomic side-effects (the
-commit-hook analog, events.clj:18-22).
+Every job replays the events table as a file-source stream over one
+store, its ts-split copy (`_events_split_dir`, built once from
+`tables.table`) — the exact shape of the reference's recovery scan
+over its WAL (log_mgr.clj:16-33): an append-only log re-read from disk
+and folded into state. Watermarks bound that state (the streaming
+analog of MAX_HISTORY truncation, stm.clj:47-50); foreachBatch gives
+per-batch atomic side-effects (the commit-hook analog,
+events.clj:18-22).
 
-All jobs run with Trigger.availableNow against sf data and return the
-materialized result as a batch DataFrame for the rows-only check. At
-production scale the same code runs continuously with a real trigger;
-nothing here assumes a bounded input except the final `.awaitTermination`.
+Every job runs through `drain` (Trigger.availableNow) against sf data
+and returns the materialized result as a batch DataFrame for the
+rows-only check. At production scale the same code runs continuously
+with a real trigger; nothing here assumes a bounded input except
+`drain`.
 """
 
 from __future__ import annotations
@@ -23,148 +26,65 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.streaming import DataStreamWriter
 
 from opusdb_spark.session import apply_runtime_confs
 from opusdb_spark.sources.formats import (
     column_range,
+    corpus_scratch_path,
     ensure_written,
     list_store_files,
-    scratch_path,
     scratch_sink,
     stat_fingerprint,
 )
+from opusdb_spark.tables import table
 
 
-def _events_source_shape(sf_dir: str) -> tuple[StructType, str]:
-    """(stream schema, ts select-expr) matched to the parquet's actual
-    ts physical type.
-
-    The generator has shipped events.ts both as TIMESTAMP(NANOS)
-    (which Spark only reads as int64 under `nanosAsLong`) and as
-    TIMESTAMP(MICROS) (a native timestamp). An explicit LongType schema
-    over a MICROS column silently yields micros-as-int64, so the
-    conversion must be chosen from the file's metadata, exactly like
-    the batch loader's dtype guard (tables.py:46). `events.parquet`
-    may be a single file (driver testdata) or a Spark-written
-    DIRECTORY of part files (the bench/probe scaled corpora) — for a
-    directory any one footer is authoritative (one writer, one
-    schema)."""
-    import pyarrow.parquet as pq
-
-    path = f"{sf_dir}/events.parquet"
-    if os.path.isdir(path):
-        parts = list_store_files(path, recursive=False)
-        if not parts:
-            raise FileNotFoundError(f"no parquet parts under {path}")
-        path = parts[0][0]
-    ts_type = str(pq.read_schema(path).field("ts").type)
-    if ts_type.startswith("timestamp[ns"):
-        # TIMESTAMP(NANOS), tz or not: under `nanosAsLong=true`
-        # (session.py) Spark reads the column as BIGINT nanos, so the
-        # stream schema must say LongType and convert — declaring
-        # TimestampType here would fail the read outright.
-        ts_field, ts_expr = (
-            LongType(),
-            "timestamp_micros(ts div 1000) AS ts",
-        )
-    elif ts_type.startswith("timestamp"):
-        # MICROS/MILLIS: a native Spark timestamp; pass through.
-        ts_field, ts_expr = TimestampType(), "ts"
-    else:  # unannotated int64 — generator ships raw nanos
-        ts_field, ts_expr = (
-            LongType(),
-            "timestamp_micros(ts div 1000) AS ts",
-        )
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_field),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-    return schema, ts_expr
-
-
+# The events log as the stream reads it: the columns of
+# `tables.table(..., "events")`, with event time as TIMESTAMP (not NTZ)
+# for watermarks.
+_EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 _N_SPLIT_FILES = 4  # ts-range part files = micro-batches of a batched replay
 
 
 def _tag(sf_dir: str) -> str:
     """The corpus name (sf dir basename) that keys per-corpus scratch
-    paths: symlink dir, split store, sinks and checkpoints."""
+    sinks and checkpoints."""
     return os.path.basename(os.path.normpath(sf_dir))
 
 
 def _events_stream(
     spark: SparkSession, sf_dir: str, batched: bool = False
 ) -> DataFrame:
-    """events.parquet as a file-source stream with proper event-time ts.
+    """The events log as a file-source stream over its ts-split store.
 
     Event time must be TimestampType (not NTZ) for watermarks; session
     timezone is pinned to UTC by session.py so wall-clock values match
     the batch/NTZ path.
 
     `batched=False` replays the whole log as ONE availableNow
-    micro-batch (the single-batch premise of the dedup/join/stateful
-    oracles). `batched=True` replays the ts-range split one file per
-    trigger — a MULTI-BATCH stream, required by append-mode watermark
-    semantics (see _events_split_dir).
+    micro-batch over the split store's files (the single-batch premise
+    of the dedup/join/stateful oracles). `batched=True` replays it one
+    file per trigger — a MULTI-BATCH stream, required by append-mode
+    watermark semantics (see _events_split_dir).
     """
     apply_runtime_confs(spark)
-    schema, ts_expr = _events_source_shape(sf_dir)
-    reader = spark.readStream.schema(schema).format("parquet")
-    target = f"{sf_dir}/events.parquet"
+    reader = spark.readStream.schema(_EVENTS_SCHEMA).format("parquet")
     if batched:
         reader = reader.option("maxFilesPerTrigger", "1")
-        src_dir = _events_split_dir(spark, sf_dir)
-    elif os.path.isdir(target):
-        # FileStreamSource needs a *directory*. The bench/probe scaled
-        # corpora ship events.parquet as a Spark-written DIRECTORY of
-        # part files, which is already a valid source directory —
-        # stream it in place (a symlink to a directory inside the link
-        # dir lists zero FILES, so the availableNow replay would
-        # silently emit zero batches — the r11 probe caught exactly
-        # that on bench_sf1; the default trigger still takes every part
-        # file in ONE batch, so the single-batch oracles' premise is
-        # unchanged).
-        src_dir = target
-    else:
-        # The driver's testdata ships events.parquet as a single FILE:
-        # expose it through a scratch symlink dir (testdata itself is
-        # read-only).
-        link_dir = scratch_path(f"stream_events_{_tag(sf_dir)}")
-        os.makedirs(link_dir, exist_ok=True)
-        link = os.path.join(link_dir, "events.parquet")
-        # lexists (not exists): a dangling link must be replaced, not
-        # mistaken for absent; and two sf_dirs sharing a basename must
-        # not silently reuse each other's link.
-        if os.path.lexists(link):
-            if not os.path.islink(link) or os.readlink(link) != target:
-                os.unlink(link)
-                os.symlink(target, link)
-        else:
-            os.symlink(target, link)
-        src_dir = link_dir
-    return reader.load(src_dir).selectExpr(
-        "event_id", ts_expr, "user_id", "event_type", "value", "props"
-    )
+    return reader.load(_events_split_dir(spark, sf_dir))
 
 
 def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ingest-once ts-range split of events.parquet into _N_SPLIT_FILES
-    parquet files with staggered mtimes.
+    """Ingest-once ts-range split of the events table into
+    _N_SPLIT_FILES parquet files with staggered mtimes, read through
+    `tables.table` (the one place that adapts `events.ts`) with `ts`
+    cast to TIMESTAMP.
 
-    Why: a single-file replay is ONE micro-batch, and in append mode a
+    Why: an unbatched replay is ONE micro-batch, and in append mode a
     watermarked aggregation only emits a window when a LATER batch's
     watermark passes its end — so one batch emits nothing. Splitting the
     log into ts-ordered files and streaming with maxFilesPerTrigger=1
@@ -174,23 +94,22 @@ def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
     ts order because the file source orders files by modification time.
     """
     src = f"{sf_dir}/events.parquet"
-    path = scratch_path(f"stream_events_split_{_tag(sf_dir)}")
-
-    schema, ts_expr = _events_source_shape(sf_dir)
 
     def write(p: str) -> None:
-        raw = spark.read.schema(schema).parquet(src)
-        raw.repartitionByRange(_N_SPLIT_FILES, "ts").write.mode("overwrite").parquet(p)
-        parts = sorted(
-            f for f in os.listdir(p) if f.startswith("part-")
+        events = table(spark, sf_dir, "events").withColumn(
+            "ts", F.col("ts").cast("timestamp")
         )
+        events.repartitionByRange(_N_SPLIT_FILES, "ts").write.parquet(p)
+        parts = sorted(f for f in os.listdir(p) if f.startswith("part-"))
         base = os.stat(p).st_mtime
         for i, fname in enumerate(parts):
             fp = os.path.join(p, fname)
             os.utime(fp, (base + i, base + i))
 
     return ensure_written(
-        path, stat_fingerprint(src, n=_N_SPLIT_FILES, ts_expr=ts_expr), write
+        corpus_scratch_path("stream_events_split", sf_dir),
+        stat_fingerprint(src, n=_N_SPLIT_FILES, schema=_EVENTS_SCHEMA),
+        write,
     )
 
 
@@ -208,6 +127,25 @@ def events_stream_n_batches(spark: SparkSession, sf_dir: str) -> int:
     instead of masquerading as throughput drift."""
     split = _events_split_dir(spark, sf_dir)
     return sum(1 for f in os.listdir(split) if f.startswith("part-"))
+
+
+def drain(writer: DataStreamWriter, checkpoint: str) -> None:
+    """Start the query `writer` describes, checkpointed at `checkpoint`,
+    and wait while it processes every input available now
+    (Trigger.availableNow) and stops."""
+    q = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True)
+    q.start().awaitTermination()
+
+
+def _appender(out: str) -> Callable[[DataFrame, int], None]:
+    """A foreachBatch function that appends each batch, tagged with its
+    id as `batch_id`, to the parquet dir `out`."""
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        tagged = batch_df.withColumn("batch_id", F.lit(batch_id))
+        tagged.write.mode("append").parquet(out)
+
+    return append
 
 
 def watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,23 +173,11 @@ def watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch parquet append + read-back invariant counts."""
     out = scratch_sink(f"febatch_{_tag(sf_dir)}")
-    ckpt = scratch_sink(f"ckpt_febatch_{_tag(sf_dir)}")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
-        )
-
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ev.writeStream.foreachBatch(_appender(out)),
+        scratch_sink(f"ckpt_febatch_{_tag(sf_dir)}"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -282,6 +208,7 @@ def commit_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits: dict[int, int] = {}
     rollbacks: dict[int, int] = {}
     injected = {"done": False}
+    append = _appender(out)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         attempts[batch_id] = attempts.get(batch_id, 0) + 1
@@ -289,11 +216,7 @@ def commit_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             if batch_id == 1 and not injected["done"]:
                 injected["done"] = True
                 raise RuntimeError("injected mid-commit failure")
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(out)
-            )
+            append(batch_df, batch_id)
             commits[batch_id] = commits.get(batch_id, 0) + 1
         except Exception:
             rollbacks[batch_id] = rollbacks.get(batch_id, 0) + 1
@@ -303,14 +226,8 @@ def commit_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     for attempt in (1, 2):
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination()
+            drain(ev.writeStream.foreachBatch(write_batch), ckpt)
             break  # clean finish — no (further) retry needed
         except Exception:
             # The failed attempt killed the run; restarting from the
@@ -388,16 +305,10 @@ def _run_to_memory(
             except Exception:
                 pass  # concurrent drop: the goal state is already met
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_sink(f"ckpt_{prefix}_{_tag(sf_dir)}")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(mode),
+        scratch_sink(f"ckpt_{prefix}_{_tag(sf_dir)}"),
     )
-    q.awaitTermination()
     return spark.table(name)
 
 
@@ -408,16 +319,8 @@ def _run_to_parquet_append(stream_df: DataFrame, tag: str) -> DataFrame:
     clear-on-entry keeps repeated runs deterministic."""
     spark = stream_df.sparkSession
     out = scratch_sink(f"sink_{tag}")
-    ckpt = scratch_sink(f"ckpt_{tag}")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream_df.writeStream.format("parquet").option("path", out)
+    drain(writer.outputMode("append"), scratch_sink(f"ckpt_{tag}"))
     return spark.read.schema(stream_df.schema).parquet(out)
 
 
@@ -572,13 +475,7 @@ def _fold(fold: _Fold, events: DataFrame, root: str) -> None:
             clock = rng[1] if clock is None else max(clock, rng[1])
         _commit_batch(staging, root, batch_id, clock)
 
-    q = (
-        events.writeStream.foreachBatch(step)
-        .option("checkpointLocation", os.path.join(root, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events.writeStream.foreachBatch(step), os.path.join(root, "_checkpoint"))
 
 
 def _emitted(fold: _Fold, spark: SparkSession, root: str) -> DataFrame:
@@ -814,7 +711,6 @@ def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from opusdb_spark.operators import rollup
 
     store = scratch_sink(f"rollup_stream_{_tag(sf_dir)}")
-    ckpt = scratch_sink(f"ckpt_rollup_{_tag(sf_dir)}")
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch_id makes the fold idempotent: foreachBatch is
@@ -825,13 +721,10 @@ def rollup_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir, batched=True).select(
         "ts", "event_type", "value", "user_id"
     )
-    q = (
-        ev.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ev.writeStream.foreachBatch(fold_batch),
+        scratch_sink(f"ckpt_rollup_{_tag(sf_dir)}"),
     )
-    q.awaitTermination()
     r = rollup.read_rollup(spark, store)
     return r.select(
         "day",

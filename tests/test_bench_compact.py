@@ -160,6 +160,20 @@ def test_time_query_counts_jobs(local2):
     )
 
 
+def test_time_query_counts_a_streams_micro_batch_jobs(local2):
+    """A stream's micro-batches run under the stream's own job group,
+    not the caller's; time_query must count them too. The session fold
+    runs 2 Spark jobs per micro-batch, so a count below 2 per batch
+    missed some."""
+    from opusdb_spark.registry import queries
+    from opusdb_spark.streaming.jobs import events_stream_n_batches
+    from tests.conftest import SF_SMALL
+
+    fn = queries()["stream_session_timeout"]
+    t = bench.time_query(local2, lambda: fn(local2, SF_SMALL), runs=1)
+    assert t.n_jobs >= 2 * events_stream_n_batches(local2, SF_SMALL), t
+
+
 def test_time_section_prepares_and_times_every_key(local2):
     """time_section runs each key once (prepare), then time_query's
     warm-up plus at least `runs` timed builds, and reports every key in

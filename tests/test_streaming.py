@@ -174,15 +174,16 @@ def test_stream_stream_join_matches_batch_equivalent(spark):
 def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
     """TIMESTAMP(NANOS) events must stream through the int64-nanos
     conversion path: under `nanosAsLong=true` (session.py) Spark reads a
-    NANOS column as BIGINT, so the stream schema must declare LongType
-    and convert — declaring TimestampType fails the read (the r1
+    NANOS column as BIGINT, which `tables.table` converts, and the
+    split store the stream replays is built from that table (the r1
     testdata shipped exactly this shape)."""
     import datetime as dt
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from opusdb_spark.streaming.jobs import _events_source_shape, _events_stream
+    from opusdb_spark.sources.formats import corpus_scratch_path
+    from opusdb_spark.streaming.jobs import _events_stream
 
     sf_dir = str(tmp_path / "sfnanos")
     os.makedirs(sf_dir)
@@ -206,8 +207,6 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
         str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type)
         == "timestamp[ns]"
     )
-    schema, ts_expr = _events_source_shape(sf_dir)
-    assert "timestamp_micros" in ts_expr, "nanos must take the int64 path"
 
     stream = _events_stream(spark, sf_dir, batched=True)
     name = f"nanos_{uuid.uuid4().hex[:8]}"
@@ -220,6 +219,7 @@ def test_nanos_annotated_events_stream_roundtrips(spark, tmp_path):
     )
     q.awaitTermination()
     got = spark.table(name).orderBy("event_id").collect()
+    shutil.rmtree(corpus_scratch_path("stream_events_split", sf_dir))
     assert len(got) == n
     want = [
         dt.datetime(2020, 9, 13, 12, 26, 40) + dt.timedelta(minutes=i)
@@ -283,6 +283,7 @@ def test_stateful_totals_keep_state_in_the_native_store(spark):
         lambda: jobs.stateful_running_totals(spark, SF_SMALL).count(),
         lambda name: bool(name) and name.startswith("stateful_"),
     )
+    assert len(progress) == 1, "the unbatched replay is one micro-batch"
     assert all(progress), progress
     names = {name for ops in progress for name, _ in ops}
     assert names == {"stateStoreSave"}, names
@@ -406,6 +407,7 @@ def test_session_timeout_matches_oracle_at_edges(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from opusdb_spark.registry import oracle_sql
+    from opusdb_spark.sources.formats import corpus_scratch_path
     from opusdb_spark.streaming import jobs
 
     us, ms, minute = 1, 1_000, 60_000_000
@@ -452,8 +454,13 @@ def test_session_timeout_matches_oracle_at_edges(spark, tmp_path):
         # the watermark must advance between micro-batches
         assert jobs.events_stream_n_batches(spark, str(sf_dir)) > 1
     finally:
-        for d in (f"stream_events_split_{name}", f"ckpt_sesstimeout_{name}"):
-            shutil.rmtree(os.path.join(_SCRATCH, d), ignore_errors=True)
+        shutil.rmtree(
+            corpus_scratch_path("stream_events_split", str(sf_dir)),
+            ignore_errors=True,
+        )
+        shutil.rmtree(
+            os.path.join(_SCRATCH, f"ckpt_sesstimeout_{name}"), ignore_errors=True
+        )
 
     con = duckdb.connect()
     con.execute(
