@@ -48,10 +48,10 @@ from the artifact alone.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
-import itertools
 import time
 from pathlib import Path
 from typing import NamedTuple

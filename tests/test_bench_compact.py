@@ -142,21 +142,19 @@ def local2():
 
 
 def test_time_query_counts_jobs(local2):
-    """time_query's job-group instrumentation (r13): the returned
-    record's n_jobs must hold the run's job count (≥1; the exact
-    number is AQE's business — even range().count() is 2 stage-jobs),
-    and its stages and tasks come from the same group. The
-    load-bearing property is STABILITY: group names are unique per
-    run (the status tracker accumulates ids per group NAME for the
-    app's lifetime), so a repeat of the same build must report the
-    SAME count — a reused name would double it."""
+    """time_query's job instrumentation (r13): the returned record's
+    n_jobs must hold the run's job count (≥1; the exact number is
+    AQE's business — even range().count() is 2 stage-jobs), and its
+    stages and tasks come from the same jobs. The load-bearing
+    property is STABILITY: a repeat of the same build must report the
+    SAME count — a count that took in earlier runs' jobs would grow."""
     first = bench.time_query(local2, lambda: local2.range(100), runs=1)
     assert first.n_jobs >= 1, first
     assert first.n_stages >= 1, first
     assert first.n_tasks >= first.n_stages, first
     again = bench.time_query(local2, lambda: local2.range(100), runs=1)
     assert again.n_jobs == first.n_jobs, (
-        "job-group name reuse leaked a prior run's jobs into the count"
+        "a prior run's jobs leaked into the count"
     )
 
 
