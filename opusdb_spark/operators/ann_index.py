@@ -78,63 +78,32 @@ def index_dir_for(sf_dir: str) -> str:
     return formats.corpus_scratch_path("ann_index", sf_dir)
 
 
-def _parquet_num_rows(path: str) -> int:
-    """Row count from parquet FOOTER metadata (file or directory) — no
-    data read, no Spark job; used to size the LSH bucket space."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(f).num_rows
-            for f, _ in formats.list_store_files(path, recursive=False)
-        )
-    return pq.read_metadata(path).num_rows
-
-
 def source_fingerprint(sf_dir: str) -> dict:
-    """Stat-based fingerprint of the embeddings source + hyperparams.
-    bits_per_table scales with the corpus (similarity.
-    adaptive_bits_per_table) so bucket population — and with it every
-    Σ bucket² candidate join — stays bounded as the corpus grows; the
-    built value rides in the marker for probe-side signature
-    evaluation."""
+    """formats.stat_fingerprint of the embeddings table plus every
+    hyperparameter of the index. bits_per_table scales with the corpus
+    (similarity.adaptive_bits_per_table) so bucket population — and
+    with it every Σ bucket² candidate join — stays bounded as the
+    corpus grows; the built value rides in the marker for probe-side
+    signature evaluation (index_bits)."""
     from opusdb_spark.operators.similarity import adaptive_bits_per_table
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    n = _parquet_num_rows(src)
-    # directory-form sources (Spark-written part files): the dir
-    # inode's size/mtime miss an in-place part rewrite, so fingerprint
-    # the per-part (name, size) listing too
-    parts: list | None = None
-    if os.path.isdir(src):
-        # lists, NOT tuples: the marker round-trips through JSON, which
-        # has no tuple type — a tuple here would make json.load(marker)
-        # != fingerprint on EVERY call for directory-form sources, i.e.
-        # a silent full index rebuild per probe (caught by the r8 scale
-        # probe: 17 s "probes" that were 14 s of rebuild writes)
-        parts = [
-            [os.path.basename(p), s, formats.stat_mtime_ns(p)]
-            for p, s in formats.list_store_files(src, recursive=False)
-        ]
-    return {
-        "source": os.path.abspath(src),
-        "mtime_ns": st.st_mtime_ns,
-        "size": st.st_size,
-        "parts": parts,
-        "n_vectors": n,
-        "n_tables": N_TABLES,
-        "bits_per_table": adaptive_bits_per_table(n),
-        "n_cells": N_CELLS,
+    src = formats.table_path(sf_dir, "embeddings")
+    n = formats.num_rows(src)  # sizes the LSH bucket space
+    return formats.stat_fingerprint(
+        src,
+        n_vectors=n,
+        n_tables=N_TABLES,
+        bits_per_table=adaptive_bits_per_table(n),
+        n_cells=N_CELLS,
         # ALL the PQ knobs, not just the shape ones: codebooks trained
         # under a different sample size or Lloyd budget are different
         # models, and a stale marker would silently serve their codes
-        "pq_m": PQ_M,
-        "pq_ks": PQ_KS,
-        "pq_sample": _PQ_SAMPLE,
-        "pq_iters": _PQ_LLOYD_ITERS,
-        "layout": 5,  # v5: adds the pq/ code store; bump forces rebuild
-    }
+        pq_m=PQ_M,
+        pq_ks=PQ_KS,
+        pq_sample=_PQ_SAMPLE,
+        pq_iters=_PQ_LLOYD_ITERS,
+        layout=5,  # v5: adds the pq/ code store; bump forces rebuild
+    )
 
 
 def ensure_index(

@@ -144,60 +144,6 @@ def lsh_candidate_pairs(sig_df: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures_stored(
-    spark,
-    docs: DataFrame,
-    store_path: str,
-    fingerprint: dict,
-) -> DataFrame:
-    """Signatures as an INGEST artifact: computed once per corpus,
-    persisted to parquet, and shared by every dedup query against it
-    (fuzzy pairs, clustering, the end-to-end pipeline). At 100 TB
-    signatures are a column written at ingest — recomputing ~100 bytes
-    of minhashes per document for each of N dedup passes is pure waste.
-    Fingerprint-guarded like the ANN index: unchanged source → reuse."""
-    from opusdb_spark.sources.formats import ensure_written, read_store
-
-    # "impl" stays in the fingerprint so existing stores keep matching
-    ensure_written(
-        store_path,
-        {**fingerprint, "impl": "arrow", "n_minhash": N_MINHASH},
-        lambda p: minhash_signatures(spread(docs))
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return read_store(spark, store_path)
-
-
-def minhash_pairs_stored(
-    spark,
-    docs: DataFrame,
-    store_path: str,
-    fingerprint: dict,
-    jaccard_threshold: float = 0.5,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """The near-dup PAIR GRAPH as an INGEST artifact.
-
-    The LSH band join + signature-estimate pass is corpus-shaped work;
-    every downstream consumer (pair listing, clustering, the dedup
-    pipeline's keep-list) needs the same graph, so it is materialized
-    once per (corpus, threshold) and fingerprint-guarded like the
-    signature store and the ANN index. At 100 TB re-deriving the pair
-    graph per query would repeat the single most expensive dedup
-    shuffle; here it becomes one parquet read."""
-    from opusdb_spark.sources.formats import ensure_written, read_store
-
-    ensure_written(
-        store_path,
-        {**fingerprint, "threshold": jaccard_threshold, "n_minhash": N_MINHASH},
-        lambda p: minhash_lsh_dedup(docs, jaccard_threshold, sig=sig)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return read_store(spark, store_path)
-
-
 def lsh_incremental_pairs(
     new_sigs: DataFrame,
     base_sigs: DataFrame,
@@ -257,9 +203,9 @@ def minhash_lsh_dedup(
 
     Candidates from LSH bands, then the signature-estimated Jaccard
     (fraction of agreeing minhashes) filters false positives. Returns
-    (doc_a, doc_b, est_jaccard). Pass `sig` (e.g. from
-    minhash_signatures_stored) to reuse precomputed signatures — the
-    production shape.
+    (doc_a, doc_b, est_jaccard). Pass `sig` (e.g. the ingest-once
+    store queries/llm.py `_minhash_sigs` reads) to reuse precomputed
+    signatures — the production shape.
     """
     if sig is None:
         # loop_cache, NOT bare cache() or localCheckpoint: sig is read
@@ -348,27 +294,6 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_fingerprints_stored(
-    spark,
-    docs: DataFrame,
-    store_path: str,
-    fingerprint: dict,
-) -> DataFrame:
-    """SimHash fingerprints as an INGEST artifact (see
-    minhash_signatures_stored — same ingest-once/query-many contract)."""
-    from opusdb_spark.sources.formats import ensure_written, read_store
-
-    # "impl" stays in the fingerprint so existing stores keep matching
-    ensure_written(
-        store_path,
-        {**fingerprint, "impl": "arrow", "bits": 64},
-        lambda p: simhash_fingerprints(spread(docs))
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return read_store(spark, store_path)
-
-
 def simhash_near_dups(
     docs: DataFrame, max_hamming: int = 3, fp: DataFrame | None = None
 ) -> DataFrame:
@@ -377,8 +302,8 @@ def simhash_near_dups(
     Candidate generation: split the 64-bit fingerprint into 4 16-bit
     blocks; by pigeonhole, any pair within distance 3 agrees on ≥1 block,
     so the self-join key is (block_id, block_value) — bucket-local, no
-    all-pairs scan. Pass `fp` (e.g. from simhash_fingerprints_stored)
-    to reuse ingest-time fingerprints — the production shape.
+    all-pairs scan. Pass `fp` (e.g. from queries/llm.py
+    `_simhash_fps`) to reuse ingest-time fingerprints — the production shape.
 
     The 4-block scheme only GUARANTEES recall for max_hamming ≤ 3
     (pigeonhole over 4 blocks): at distance 4 a pair can differ in one
@@ -543,57 +468,7 @@ def neardup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     ).distinct()
 
 
-def components_stored(
-    spark,
-    pairs: DataFrame,
-    store_path: str,
-    fingerprint: dict,
-) -> DataFrame:
-    """Connected COMPONENTS as an INGEST artifact next to the pair
-    graph (same ensure_written contract as the signature store and the
-    pair store, minhash_pairs_stored). Components are corpus-shaped
-    exactly like the pairs — every consumer (cluster listing, keep-list
-    derivation, the dedup pipeline) needs the same partition of the
-    same graph — so the O(log n) star rounds run once per (corpus,
-    threshold) at ingest and every query against them is a parquet
-    read + groupBy, with zero iterative jobs at query time."""
-    from opusdb_spark.sources.formats import ensure_written, read_store
-
-    ensure_written(
-        store_path,
-        {**fingerprint, "algo": "large-small-star"},
-        lambda p: neardup_components(pairs).write.mode("overwrite").parquet(p),
-    )
-    return read_store(spark, store_path)
-
-
 # ------------------------------------------------ winnowing (MOSS)
-def winnow_fingerprints_stored(
-    spark,
-    docs: DataFrame,
-    store_path: str,
-    fingerprint: dict,
-    k: int = 4,
-    w: int = 4,
-) -> DataFrame:
-    """Winnow fingerprints as an INGEST artifact (same contract as
-    minhash_signatures_stored): the selection pass is corpus-shaped
-    compute written once per (corpus, k, w); every consumer — the
-    overlap share join, the corpus report — reads the ~2/(w+1)-density
-    parquet instead of re-hashing every gram. Fingerprint-guarded:
-    unchanged source → reuse."""
-    from opusdb_spark.sources.formats import ensure_written, read_store
-
-    ensure_written(
-        store_path,
-        {**fingerprint, "k": k, "w": w, "algo": "winnow_v1"},
-        lambda p: winnow_fingerprints(docs, k=k, w=w)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return read_store(spark, store_path)
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = 4,

@@ -329,24 +329,17 @@ def refresh_rollup(
 
 def ensured_store(spark: SparkSession, sf_dir: str, grain: str = "day") -> str:
     """The ingest-once rollup store for a corpus: built on first use,
-    fingerprinted against the raw events file so a corpus swap
+    fingerprinted against the raw events table so a corpus swap
     rebuilds it. ONE definition of the (name, fingerprint) pair so
     the queries sharing a store cannot fork it by bumping one copy."""
-    from opusdb_spark.sources.formats import (
-        ensure_written,
-        scratch_path,
-        stat_fingerprint,
-    )
+    from opusdb_spark.sources.formats import corpus_store
     from opusdb_spark.tables import table
 
-    src = f"{sf_dir}/events.parquet"
     tag = "daily" if grain == "day" else f"{grain}ly"
-    return ensure_written(
-        scratch_path(
-            f"rollup_{tag}_{os.path.basename(os.path.normpath(sf_dir))}"
-        ),
-        stat_fingerprint(src, v=5, grain=grain),
+    return corpus_store(
+        f"rollup_{tag}", sf_dir, ("events",),
         lambda p: build_rollup(table(spark, sf_dir, "events"), p, grain),
+        v=5, grain=grain,
     )
 
 

@@ -102,9 +102,11 @@ FP_MUL = 131  # multiplier: acc*p + h < 2^39, no 64-bit overflow
 
 def word_hash48_sql(word_sql: str, salt: str = "fp:") -> str:
     """ENGINE-PORTABLE 48-bit word hash (first 12 md5 hex digits as a
-    BIGINT via instr arithmetic — the same construction as the KMV
-    sketch hash). Written in the SQL subset Spark and DuckDB share, so
-    a fingerprint computed here is RECOMPUTABLE IN ANY ENGINE — the
+    BIGINT via instr arithmetic) — the one md5-bit hash: the KMV
+    sketch hashes users with it, and pipeline's 0..255 buckets and
+    (0,1) draws are its top 8 bits and its value over 2^48. Written
+    in the SQL subset Spark and DuckDB share, so a fingerprint
+    computed here is RECOMPUTABLE IN ANY ENGINE — the
     property that makes a document fingerprint useful as a stable
     cross-system identity (and lets the DuckDB oracle replay it
     bit-for-bit). xxhash64 would be ~2× cheaper per word but is

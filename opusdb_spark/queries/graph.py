@@ -89,12 +89,7 @@ def _trade_edges(spark, sf_dir) -> DataFrame:
     ann_index/minhash-signature ingest pattern; VERDICT r6 perf item
     5). At 100 TB this is the difference between a per-query corpus
     pass and a 625-row scan."""
-    from opusdb_spark.sources.formats import (
-        corpus_scratch_path,
-        ensure_written,
-        read_store,
-        stat_fingerprint,
-    )
+    from opusdb_spark.sources.formats import corpus_store, read_store
 
     def build(spark, sf_dir) -> DataFrame:
         l = table(spark, sf_dir, "lineitem")
@@ -117,20 +112,12 @@ def _trade_edges(spark, sf_dir) -> DataFrame:
             )
         )
 
-    store = ensure_written(
-        corpus_scratch_path("trade_edges", sf_dir),
-        stat_fingerprint(
-            *(
-                f"{sf_dir}/{t}.parquet"
-                for t in ("lineitem", "supplier", "orders", "customer")
-            )
-        ),
+    return read_store(spark, corpus_store(
+        "trade_edges", sf_dir, ("lineitem", "supplier", "orders", "customer"),
         lambda p: build(spark, sf_dir)
         .coalesce(1)  # 625 rows max — one file, no small-file litter
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return read_store(spark, store)
+        .write.parquet(p),
+    ))
 
 
 @register("graph_pagerank", oracle=_PAGERANK_ORACLE, tags=("graph",))

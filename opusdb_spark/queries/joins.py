@@ -661,24 +661,16 @@ def join_partition_pruned(spark, sf_dir):
 
     The partitioned copy is materialized ONCE (fingerprint-guarded) —
     the ingest/query split; only the pruned read happens per query."""
-    from opusdb_spark.sources import (
-        corpus_scratch_path,
-        ensure_written,
-        read_store,
-        stat_fingerprint,
-        write_partitioned,
-    )
+    from opusdb_spark.sources import corpus_store, read_store, write_partitioned
 
-    out = corpus_scratch_path("dpp_orders", sf_dir)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    ensure_written(
-        out,
-        stat_fingerprint(f"{sf_dir}/orders.parquet", layout="by_status"),
+    fact = read_store(spark, corpus_store(
+        "dpp_orders", sf_dir, ("orders",),
         lambda p: write_partitioned(orders, p, ["o_orderstatus"]),
-    )
-    fact = read_store(spark, out)
+        layout="by_status",
+    ))
     # the selective filter on the dim side is what entitles the fact
     # scan to a runtime dynamicpruning subquery on its partition column
     dim = spark.createDataFrame(
@@ -1059,12 +1051,7 @@ def mv_join_incremental(spark, sf_dir):
     partners are ≡ 0 mod 13 by the join equality) and ΔO reads only
     bk17=0, so neither delta branch ever scans the full dimension.
     All four prunes and the broadcast are plan-pinned."""
-    from opusdb_spark.sources import (
-        corpus_scratch_path,
-        ensure_written,
-        read_store,
-        stat_fingerprint,
-    )
+    from opusdb_spark.sources import corpus_store, read_store
 
     cols_l = ["l_orderkey", "l_linenumber", "l_extendedprice"]
     lt = table(spark, sf_dir, "lineitem").select(*cols_l)
@@ -1073,8 +1060,6 @@ def mv_join_incremental(spark, sf_dir):
     )
     d_l = F.col("l_orderkey") % 13 == 0
     d_o = F.col("o_orderkey") % 17 == 0
-    view_store = corpus_scratch_path("mv_join", sf_dir)
-    fact_store = corpus_scratch_path("mv_fact", sf_dir)
 
     def build_view(p):
         (
@@ -1095,19 +1080,12 @@ def mv_join_incremental(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(p, "_partials"))
 
-    ensure_written(
-        view_store,
+    view_store = corpus_store(
         # BOTH join inputs fingerprint the store: an orders.parquet
         # change with unchanged lineitem stats must invalidate the
         # base view, or a stale view serves wrong checksums
-        stat_fingerprint(
-            f"{sf_dir}/lineitem.parquet",
-            f"{sf_dir}/orders.parquet",
-            view="mv_join_base_partials",
-            dl=13,
-            do=17,
-        ),
-        build_view,
+        "mv_join", sf_dir, ("lineitem", "orders"), build_view,
+        view="mv_join_base_partials", dl=13, do=17,
     )
 
     def build_fact(p):
@@ -1125,12 +1103,9 @@ def mv_join_incremental(spark, sf_dir):
             .parquet(p)
         )
 
-    ensure_written(
-        fact_store,
-        stat_fingerprint(
-            f"{sf_dir}/lineitem.parquet", layout="mv_fact_late_bk17_v2"
-        ),
-        build_fact,
+    fact_store = corpus_store(
+        "mv_fact", sf_dir, ("lineitem",), build_fact,
+        layout="mv_fact_late_bk17_v2",
     )
     # the dimension side prunes too: ΔL's join partners all have
     # o_orderkey ≡ 0 (mod 13) and ΔO is o_orderkey ≡ 0 (mod 17), so a
@@ -1138,8 +1113,6 @@ def mv_join_incremental(spark, sf_dir):
     # reads into partition-pruned directory scans instead of full
     # orders scans (the r10 probe put the ΔL ⋈ full-O shuffle as the
     # residual cost after the fact side was pruned)
-    dim_store = corpus_scratch_path("mv_dim", sf_dir)
-
     def build_dim(p):
         (
             od.withColumn("bk13", F.pmod(F.col("o_orderkey"), F.lit(13)))
@@ -1152,12 +1125,9 @@ def mv_join_incremental(spark, sf_dir):
             .parquet(p)
         )
 
-    ensure_written(
-        dim_store,
-        stat_fingerprint(
-            f"{sf_dir}/orders.parquet", layout="mv_dim_bk13_bk17_v2"
-        ),
-        build_dim,
+    dim_store = corpus_store(
+        "mv_dim", sf_dir, ("orders",), build_dim,
+        layout="mv_dim_bk13_bk17_v2",
     )
     fact = read_store(spark, fact_store)
     dim = read_store(spark, dim_store)

@@ -14,7 +14,15 @@ from pyspark.sql import functions as F
 
 from opusdb_spark.operators import ann_index, dedup, similarity
 from opusdb_spark.operators import text as T
+from opusdb_spark.operators.skew import spread
 from opusdb_spark.registry import register
+from opusdb_spark.sources.formats import (
+    corpus_scratch_path,
+    corpus_store,
+    num_rows,
+    read_store,
+    table_path,
+)
 from opusdb_spark.tables import table
 
 
@@ -140,66 +148,56 @@ def llm_dedup_keep_best(spark, sf_dir):
 def _minhash_sigs(spark, sf_dir):
     """Ingest-once MinHash signature store for this corpus, shared by
     every dedup query (fuzzy pairs / clustering / pipeline) — the
-    signature column is written at ingest, not recomputed per query."""
-    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
-
-    return dedup.minhash_signatures_stored(
-        spark,
-        table(spark, sf_dir, "documents"),
-        corpus_scratch_path("minhash_sigs", sf_dir),
-        stat_fingerprint(f"{sf_dir}/documents.parquet"),
-    )
+    signature column is written at ingest, not recomputed per query.
+    ("impl" stays in the fingerprint so existing stores keep matching.)"""
+    docs = table(spark, sf_dir, "documents")
+    return read_store(spark, corpus_store(
+        "minhash_sigs", sf_dir, ("documents",),
+        lambda p: dedup.minhash_signatures(spread(docs)).write.parquet(p),
+        impl="arrow", n_minhash=dedup.N_MINHASH,
+    ))
 
 
 def _simhash_fps(spark, sf_dir):
     """Ingest-once SimHash fingerprint store for this corpus (same
     contract as _minhash_sigs)."""
-    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
-
-    return dedup.simhash_fingerprints_stored(
-        spark,
-        table(spark, sf_dir, "documents"),
-        corpus_scratch_path("simhash_fps", sf_dir),
-        stat_fingerprint(f"{sf_dir}/documents.parquet"),
-    )
+    docs = table(spark, sf_dir, "documents")
+    return read_store(spark, corpus_store(
+        "simhash_fps", sf_dir, ("documents",),
+        lambda p: dedup.simhash_fingerprints(spread(docs)).write.parquet(p),
+        impl="arrow", bits=64,
+    ))
 
 
 def _minhash_pairs(spark, sf_dir, threshold: float = 0.5):
     """Ingest-once near-dup PAIR GRAPH for this corpus (band join +
     estimate run once per (corpus, threshold); fuzzy listing,
     clustering, and the pipeline all read the same parquet)."""
-    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
-
-    return dedup.minhash_pairs_stored(
-        spark,
-        table(spark, sf_dir, "documents"),
-        corpus_scratch_path("minhash_pairs", sf_dir),
-        stat_fingerprint(f"{sf_dir}/documents.parquet"),
-        jaccard_threshold=threshold,
-        sig=_minhash_sigs(spark, sf_dir),
-    )
+    docs = table(spark, sf_dir, "documents")
+    sig = _minhash_sigs(spark, sf_dir)
+    return read_store(spark, corpus_store(
+        "minhash_pairs", sf_dir, ("documents",),
+        lambda p: dedup.minhash_lsh_dedup(docs, threshold, sig=sig)
+        .write.parquet(p),
+        threshold=threshold, n_minhash=dedup.N_MINHASH,
+    ))
 
 
 def _minhash_components(spark, sf_dir, threshold: float = 0.5):
     """Ingest-once CONNECTED COMPONENTS over the near-dup pair graph
     (same contract as _minhash_pairs — the components are as
     corpus-shaped as the pairs, so the O(log n) star rounds run at
-    ingest and cluster queries are a parquet read + groupBy)."""
-    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
-
-    return dedup.components_stored(
-        spark,
-        _minhash_pairs(spark, sf_dir, threshold),
-        corpus_scratch_path("minhash_components", sf_dir),
-        # n_minhash rides in the fingerprint: the pair graph rebuilds
-        # when the signature hyperparams change, and the derived
-        # components must go stale WITH it, not serve the old graph
-        stat_fingerprint(
-            f"{sf_dir}/documents.parquet",
-            threshold=threshold,
-            n_minhash=dedup.N_MINHASH,
-        ),
-    )
+    ingest and cluster queries are a parquet read + groupBy).
+    n_minhash rides in the fingerprint: the pair graph rebuilds when
+    the signature hyperparams change, and the derived components must
+    go stale WITH it, not serve the old graph."""
+    pairs = _minhash_pairs(spark, sf_dir, threshold)
+    return read_store(spark, corpus_store(
+        "minhash_components", sf_dir, ("documents",),
+        lambda p: dedup.neardup_components(pairs).write.parquet(p),
+        threshold=threshold, n_minhash=dedup.N_MINHASH,
+        algo="large-small-star",
+    ))
 
 
 def _oracle_sf_dir() -> str:
@@ -213,9 +211,7 @@ def _oracle_sf_dir() -> str:
 
 def _oracle_scratch(prefix: str) -> str:
     """Scratch-store path of the oracle corpus's ingest artifact — the
-    same formats.corpus_scratch_path the Spark query helpers use."""
-    from opusdb_spark.sources.formats import corpus_scratch_path
-
+    name formats.corpus_store gives the Spark query's store."""
     return corpus_scratch_path(prefix, _oracle_sf_dir())
 
 
@@ -410,8 +406,6 @@ def _word3grams(docs):
     exact-Jaccard dedup pass and the MinHash calibration eval. The scan
     is spread() first: gram hashing is ~100× per-row fan-out and a
     single-split scan would serialize it on one core."""
-    from opusdb_spark.operators.skew import spread
-
     docs = spread(docs)
     # r13 (guide §4.1, the llm_decontaminate finding): posexplode +
     # element_at projection instead of a transform() lambda — HOFs are
@@ -1574,9 +1568,10 @@ def llm_dedup_cluster(spark, sf_dir):
     canonical keeper. The step that turns pairwise dedup into an actual
     keep-list (rows-only: iterative, not SQL-expressible). The
     components come from the PERSISTED ingest store
-    (operators/dedup.py:components_stored — large-star/small-star CC,
-    O(log n) rounds, run once per corpus): at query time this is a
-    parquet read + one groupBy, no iterative jobs."""
+    (_minhash_components: operators/dedup.py neardup_components,
+    large-star/small-star CC, O(log n) rounds, run once per corpus):
+    at query time this is a parquet read + one groupBy, no iterative
+    jobs."""
     comp = _minhash_components(spark, sf_dir)
     return (
         comp.groupBy("component")
@@ -1605,8 +1600,6 @@ def llm_text_stats(spark, sf_dir):
     exact parity without decimal casts). spread() first: the n_words
     token walk is the expensive part and a single-split scan would
     serialize it (no-op at cluster scale)."""
-    from opusdb_spark.operators.skew import spread
-
     docs = spread(table(spark, sf_dir, "documents"))
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1723,8 +1716,6 @@ def llm_langid(spark, sf_dir):
     token several times, so the scan is spread() first (single-split
     scans serialize that map work on one core; no-op at cluster
     scale)."""
-    from opusdb_spark.operators.skew import spread
-
     docs = spread(table(spark, sf_dir, "documents"))
     return (
         docs.select("lang", T.predicted_lang(F.col("text")).alias("pred_lang"))
@@ -2022,8 +2013,6 @@ def llm_embedding_neardup(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from opusdb_spark.sources.formats import read_store
-
     idx = _ann_index(spark, sf_dir)
     bucketed = read_store(spark, os.path.join(idx, "lsh")).select(
         "vec_id", "embedding", "sig_all", "table_id", "bucket"
@@ -2297,12 +2286,7 @@ def _media_corpus_size(sf_dir: str, floor: int) -> int:
     query), floored so tiny fixtures still exercise every decoder
     branch. Corpus-sized since r12 (VERDICT r11 ask #6): with a fixed
     n the scale probe measured a constant, not the decode pass."""
-    import pyarrow.dataset as ds
-
-    n_docs = ds.dataset(
-        f"{sf_dir}/documents.parquet", format="parquet"
-    ).count_rows()
-    return max(floor, n_docs)
+    return max(floor, num_rows(table_path(sf_dir, "documents")))
 
 
 @register("multimodal_features", oracle=None, tags=("llm", "multimodal"))
@@ -2460,8 +2444,6 @@ def llm_bm25_topk(spark, sf_dir):
     sum with doc_id tie-break, so the top-20 set is deterministic in
     both engines.
     """
-    from opusdb_spark.operators.skew import spread
-
     # token explosion is ~100× per-row fan-out: widen a single-split
     # scan first (no-op at cluster scale — see skew.spread)
     docs = spread(table(spark, sf_dir, "documents"))
@@ -2920,8 +2902,6 @@ def llm_substring_dedup(spark, sf_dir):
     all-pairs step, and — unlike a naive shared-set + semi-join plan —
     the corpus is tokenized and exploded exactly once. Docs shorter
     than K tokens have no spans and are absent, same as the oracle."""
-    from opusdb_spark.operators.skew import spread
-
     # span hashing explodes each row ~100×: widen a single-split scan
     # first (no-op at cluster scale — see skew.spread)
     docs = spread(table(spark, sf_dir, "documents"))
@@ -3100,8 +3080,6 @@ def emb_covariance(spark, sf_dir):
     row expands 2,080×, so a single-split scan would serialize the
     whole expansion on one core (spread() widens it; no-op at cluster
     scale)."""
-    from opusdb_spark.operators.skew import spread
-
     emb = spread(table(spark, sf_dir, "embeddings"))
     dim = 64
     # One (i, j, x_i·x_j) row per upper-triangle pair: Generate #1
@@ -3356,33 +3334,25 @@ _MAHA_P_SCALE = 1048576.0  # 2^20
 _MAHA_DIV = 17592186044416.0  # 2^(12+12+20)
 
 
-def _maha_model_dir(sf_dir: str) -> str:
-    """Scratch path of the persisted Mahalanobis model (quantized
-    precision matrix + mean vector) for a corpus — the PQ-codebook
-    convention: numpy-only math (matrix inversion) runs once at
-    ingest and is PERSISTED, so a second engine can replay the
-    scoring from the artifact without replaying the inversion."""
-    from opusdb_spark.sources.formats import corpus_scratch_path
-
-    return corpus_scratch_path("maha_model", sf_dir)
-
-
 def _ensure_maha_model(spark, sf_dir: str) -> str:
-    """Build-and-persist the Mahalanobis model: covariance from
+    """Build-and-persist the Mahalanobis model (quantized precision
+    matrix + mean vector) of a corpus — the PQ-codebook convention:
+    numpy-only math (matrix inversion) runs once at ingest and is
+    PERSISTED, so a second engine can replay the scoring from the
+    artifact without replaying the inversion. Covariance from
     emb_covariance's hash-exact distributed plan, Tikhonov-regularized
     inverse (λ=1e-6·trace/dim), quantized to the 2^-20 grid, plus the
-    decimal-fold mean vector as doubles. Fingerprint-guarded."""
+    decimal-fold mean vector as doubles. Fingerprint-guarded on the
+    stat of the embeddings (not the path alone: a regenerated corpus
+    under the same path must retrain, not silently reuse a stale
+    model) and on the quantization."""
+    import os
+
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from opusdb_spark.sources.formats import ensure_written
-
-    path = _maha_model_dir(sf_dir)
-
     def write_fn(out: str) -> None:
-        import os
-
         rows = emb_covariance(spark, sf_dir).collect()
         dim = 64
         C = np.zeros((dim, dim))
@@ -3427,21 +3397,13 @@ def _ensure_maha_model(spark, sf_dir: str) -> str:
             os.path.join(out, "mu.parquet"),
         )
 
-    import os
-
-    from opusdb_spark.sources.formats import stat_fingerprint
-
-    # stat-based (not path-only): a regenerated corpus under the same
-    # path must retrain, not silently reuse a stale model — the same
-    # convention as the classifier model artifact
-    fingerprint = stat_fingerprint(
-        os.path.join(sf_dir, "embeddings.parquet"),
+    return corpus_store(
+        "maha_model", sf_dir, ("embeddings",), write_fn,
         d_scale=_MAHA_D_SCALE,
         p_scale=_MAHA_P_SCALE,
         lam_rule="1e-6*trace/dim",
         version=1,
     )
-    return ensure_written(path, fingerprint, write_fn)
 
 
 def _maha_oracle() -> str:
@@ -3456,7 +3418,7 @@ def _maha_oracle() -> str:
     kernel. Lazy (resolved at oracle access)."""
     import os
 
-    mdir = _maha_model_dir(_oracle_sf_dir())
+    mdir = _oracle_scratch("maha_model")
     return f"""
         WITH pmat AS (
             SELECT i, j, pq
@@ -3577,16 +3539,13 @@ def _winnow_fps(spark, sf_dir):
     self-join sides) — without the store, Spark re-runs the gram
     hashing per reference (3 corpus passes; BENCH r7: 6.0 s → 2.1 s at
     sf1)."""
-    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
-
-    return dedup.winnow_fingerprints_stored(
-        spark,
-        table(spark, sf_dir, "documents"),
-        corpus_scratch_path("winnow_fps", sf_dir),
-        stat_fingerprint(f"{sf_dir}/documents.parquet"),
-        k=_WIN_K,
-        w=_WIN_W,
-    )
+    docs = table(spark, sf_dir, "documents")
+    return read_store(spark, corpus_store(
+        "winnow_fps", sf_dir, ("documents",),
+        lambda p: dedup.winnow_fingerprints(docs, k=_WIN_K, w=_WIN_W)
+        .write.parquet(p),
+        k=_WIN_K, w=_WIN_W, algo="winnow_v1",
+    ))
 
 
 @register("llm_winnowing_overlap", oracle=_WINNOW_ORACLE, tags=("llm", "dedup"))

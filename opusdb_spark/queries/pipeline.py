@@ -30,14 +30,13 @@ from opusdb_spark.tables import table
 
 
 def _hash_bucket_sql(key_sql: str, salt: str) -> str:
-    """0..255 bucket from md5(salt || key) — same SQL evaluates
-    identically in Spark and DuckDB (md5/substr/instr agree), giving a
-    deterministic uniform hash both engines reproduce bit-for-bit.
-    Used for splits and sampling instead of rand()."""
-    h = f"md5(concat('{salt}', CAST({key_sql} AS STRING)))"
-    c1 = f"(instr('0123456789abcdef', substr({h}, 1, 1)) - 1)"
-    c2 = f"(instr('0123456789abcdef', substr({h}, 2, 1)) - 1)"
-    return f"({c1} * 16 + {c2})"
+    """0..255 bucket: the top 8 of the 48 md5 bits of
+    T.word_hash48_sql(salt || key), which Spark and DuckDB evaluate
+    identically — a deterministic uniform hash both engines reproduce
+    bit-for-bit. The quotient by 2^40 is exact in double. Used for
+    splits and sampling instead of rand()."""
+    h = T.word_hash48_sql(f"CAST({key_sql} AS STRING)", salt)
+    return f"CAST(floor(CAST({h} AS DOUBLE) / 1099511627776.0) AS INT)"
 
 
 # --------------------------------------------------------------- PII
@@ -4204,16 +4203,11 @@ def dq_referential_integrity(spark, sf_dir):
 
 # ------------------------------------------------- weighted sampling
 def _hash_unit_sql(key_sql: str, salt: str) -> str:
-    """Uniform u in (0,1) from the first 12 hex digits of
-    md5(salt || key) — 48 bits, exact in double, identical in both
-    engines (same instr/substr digit trick as _hash_bucket_sql)."""
-    h = f"md5(concat('{salt}', CAST({key_sql} AS STRING)))"
-    terms = " + ".join(
-        f"CAST(instr('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1 "
-        f"AS DOUBLE) * {16 ** (11 - i)}.0"
-        for i in range(12)
-    )
-    return f"((({terms}) + 0.5) / 281474976710656.0)"
+    """Uniform u in (0,1) from the 48 md5 bits of
+    T.word_hash48_sql(salt || key): (h + 0.5) / 2^48, exact in double,
+    identical in both engines."""
+    h = T.word_hash48_sql(f"CAST({key_sql} AS STRING)", salt)
+    return f"((CAST({h} AS DOUBLE) + 0.5) / 281474976710656.0)"
 
 
 _WSAMPLE_U = _hash_unit_sql("doc_id", "wsample:")
@@ -4608,11 +4602,9 @@ def _clf_score_oracle() -> str:
     import os
 
     from opusdb_spark.operators.classifier import N_BUCKETS
-    from opusdb_spark.queries.llm import _oracle_sf_dir
-    from opusdb_spark.sources.formats import scratch_path
+    from opusdb_spark.queries.llm import _oracle_scratch
 
-    base = os.path.basename(os.path.normpath(_oracle_sf_dir()))
-    model = os.path.join(scratch_path(f"clf_model_{base}"), "model.json")
+    model = os.path.join(_oracle_scratch("clf_model"), "model.json")
     bucket = _hash_bucket_sql("w", "clf:")
     return f"""
         WITH model AS (
@@ -4678,15 +4670,8 @@ def llm_quality_classifier_score(spark, sf_dir):
     import json
 
     from opusdb_spark.operators import classifier
-    from opusdb_spark.sources.formats import (
-        ensure_written,
-        scratch_path,
-        stat_fingerprint,
-    )
+    from opusdb_spark.sources.formats import corpus_store
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    model_dir = scratch_path(f"clf_model_{base}")
-    src = os.path.join(sf_dir, "documents.parquet")
     y = F.when(
         F.col("source").isin("src0", "src1", "src2"), 1
     ).otherwise(0)
@@ -4704,19 +4689,15 @@ def llm_quality_classifier_score(spark, sf_dir):
     # definition, and the training hyperparameters — a changed eta or
     # iteration count must retrain, not silently reuse a stale model
     # (ADVICE r4: fingerprint omitted hyperparameters).
-    ensure_written(
-        model_dir,
-        stat_fingerprint(
-            src,
-            v=classifier.TRAIN_VERSION,
-            bucket_expr=_CLF_BUCKET,
-            n_buckets=classifier.N_BUCKETS,
-            label="source in (src0,src1,src2)",
-            # the actual defaults _train runs with — read from the
-            # function so a changed default cannot drift past the cache
-            hyper=list(classifier.train_logreg.__defaults__),
-        ),
-        _train,
+    model_dir = corpus_store(
+        "clf_model", sf_dir, ("documents",), _train,
+        v=classifier.TRAIN_VERSION,
+        bucket_expr=_CLF_BUCKET,
+        n_buckets=classifier.N_BUCKETS,
+        label="source in (src0,src1,src2)",
+        # the actual defaults _train runs with — read from the
+        # function so a changed default cannot drift past the cache
+        hyper=list(classifier.train_logreg.__defaults__),
     )
     with open(os.path.join(model_dir, "model.json")) as fh:
         m = json.load(fh)

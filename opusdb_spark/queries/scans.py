@@ -704,15 +704,7 @@ def scan_manifest_prune(spark, sf_dir):
     import json
     from datetime import datetime
 
-    from opusdb_spark.sources.formats import (
-        ensure_written,
-        scratch_path,
-        stat_fingerprint,
-    )
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    layout = scratch_path(f"manifest_clustered_{base}")
-    src = os.path.join(sf_dir, "lineitem.parquet")
+    from opusdb_spark.sources.formats import corpus_store
 
     def _write(path):
         li = table(spark, sf_dir, "lineitem").select(
@@ -734,7 +726,9 @@ def scan_manifest_prune(spark, sf_dir):
         with open(os.path.join(path, "_manifest.json"), "w") as fh:
             json.dump(entries, fh)
 
-    ensure_written(layout, stat_fingerprint(src, v=1), _write)
+    layout = corpus_store(
+        "manifest_clustered", sf_dir, ("lineitem",), _write, v=1
+    )
 
     lo, hi = datetime(1996, 6, 1), datetime(1996, 7, 1)
     with open(os.path.join(layout, "_manifest.json")) as fh:
@@ -1023,26 +1017,23 @@ def scan_delete_vectors(spark, sf_dir):
     anti-join (plan-pinned) — the standard merge-on-read trade. The
     sidecar build happens once at ingest (fingerprint-guarded)."""
     from opusdb_spark.sources.formats import (
-        corpus_scratch_path,
-        ensure_written,
-        stat_fingerprint,
+        corpus_store,
+        read_store,
         store_layout_fingerprint,
     )
 
-    store = corpus_scratch_path("dv_orders", sf_dir)
-    sidecar = corpus_scratch_path("dv_sidecar", sf_dir)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    ensure_written(
-        store,
-        stat_fingerprint(f"{sf_dir}/orders.parquet", layout="dv_store"),
-        lambda p: orders.write.mode("overwrite").parquet(p),
+    store = corpus_store(
+        "dv_orders", sf_dir, ("orders",),
+        lambda p: orders.write.parquet(p),
+        layout="dv_store",
     )
 
     def build_sidecar(p):
         (
-            spark.read.parquet(store)
+            read_store(spark, store)
             .select(
                 F.col("_metadata.file_path").alias("file_path"),
                 F.col("_metadata.row_index").alias("row_index"),
@@ -1050,28 +1041,23 @@ def scan_delete_vectors(spark, sf_dir):
             )
             .filter(F.expr(_dv_delete_cond()))
             .select("file_path", "row_index")
-            .write.mode("overwrite")
-            .parquet(p)
+            .write.parquet(p)
         )
 
-    ensure_written(
-        sidecar,
+    sidecar = corpus_store(
+        "dv_sidecar", sf_dir, ("orders",), build_sidecar,
+        layout="dv_sidecar",
         # the sidecar's (file_path, row_index) positions are only
         # meaningful against ONE physical layout of the store — fold
         # the store's data-file listing into the fingerprint so ANY
         # store rebuild (even with unchanged sources: lost marker,
         # scratch cleanup, split-changing session conf) invalidates
         # the sidecar instead of suppressing the wrong rows
-        stat_fingerprint(
-            f"{sf_dir}/orders.parquet",
-            layout="dv_sidecar",
-            store_layout=store_layout_fingerprint(store),
-        ),
-        build_sidecar,
+        store_layout=store_layout_fingerprint(store),
     )
-    dv = spark.read.parquet(sidecar)
+    dv = read_store(spark, sidecar)
     live = (
-        spark.read.parquet(store)
+        read_store(spark, store)
         .select(
             F.col("_metadata.file_path").alias("file_path"),
             F.col("_metadata.row_index").alias("row_index"),

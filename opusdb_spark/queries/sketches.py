@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from opusdb_spark.operators.text import word_hash48_sql
 from opusdb_spark.registry import register
 from opusdb_spark.tables import table
 
@@ -182,23 +183,11 @@ def agg_ddsketch_quantiles(spark, sf_dir):
 
 
 # ------------------------------------------------------- KMV / theta
-# 48 md5 bits as a BIGINT in [0, 2^48) — the integer twin of
-# pipeline._hash_unit_sql, shared verbatim by both engines.
+# The user hash is text.word_hash48_sql: 48 md5 bits as a BIGINT in
+# [0, 2^48), shared verbatim by both engines.
 _KMV_K = 64
 _TWO48 = 281474976710656.0  # 2^48, exact in double
-
-
-def _h48_sql(key_sql: str, salt: str) -> str:
-    h = f"md5(concat('{salt}', CAST({key_sql} AS STRING)))"
-    terms = " + ".join(
-        f"CAST(instr('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1 "
-        f"AS BIGINT) * {16 ** (11 - i)}"
-        for i in range(12)
-    )
-    return f"({terms})"
-
-
-_KMV_H = _h48_sql("user_id", "kmv:")
+_KMV_H = word_hash48_sql("CAST(user_id AS STRING)", "kmv:")
 
 # The oracle replays the identical sketch algebra: same hash, same
 # survivor pre-filter (so even the improbable fewer-than-k-survivors
@@ -350,23 +339,14 @@ def _build_kmv_state(spark, sf_dir: str, path: str) -> None:
 
 def ensured_kmv_state(spark, sf_dir: str) -> str:
     """Ingest-once KMV sketch state for a corpus, fingerprinted against
-    the raw events file so a corpus swap rebuilds it — the same
+    the raw events table so a corpus swap rebuilds it — the same
     ingest/query split the rollup store and dedup signatures use."""
-    import os as _os
+    from opusdb_spark.sources.formats import corpus_store
 
-    from opusdb_spark.sources.formats import (
-        ensure_written,
-        scratch_path,
-        stat_fingerprint,
-    )
-
-    src = f"{sf_dir}/events.parquet"
-    return ensure_written(
-        scratch_path(
-            f"kmv_state_{_os.path.basename(_os.path.normpath(sf_dir))}"
-        ),
-        stat_fingerprint(src, v=1, k=_KMV_K),
+    return corpus_store(
+        "kmv_state", sf_dir, ("events",),
         lambda p: _build_kmv_state(spark, sf_dir, p),
+        v=1, k=_KMV_K,
     )
 
 

@@ -72,7 +72,9 @@ def mvcc_conservation(spark, sf_dir):
     return mvcc.conservation(
         _versions(spark, sf_dir),
         decimal=True,
-        bounds=formats.column_range([f"{sf_dir}/events.parquet"], "event_id"),
+        bounds=formats.column_range(
+            [formats.table_path(sf_dir, "events")], "event_id"
+        ),
     )
 
 

@@ -137,6 +137,13 @@ def _load() -> None:
 # similarity._probe_topk. The one-batch stream keys (stream_dedup_true,
 # stream_join_true, stream_foreachbatch_sink) replay the ts-split events
 # store, as the batched ones already did, instead of the events file.
+# Every per-corpus store is now built by formats.corpus_store: the
+# rollup, KMV, manifest and classifier stores are renamed from
+# `<prefix>_<basename>` to `<prefix>_<basename>_<md5 tag>`,
+# scan_delete_vectors reads its store and sidecar through read_store,
+# and the ts split cuts on (ts, event_id) row counts instead of a
+# sampled range partition, which moves every batched stream's batch
+# edges.
 # Values are unchanged by construction, and a fresh verdict confirms it.
 _RECENTLY_CHANGED: tuple[str, ...] = (
     # rollup store: read_rollup = read_store + grain cast
@@ -176,6 +183,14 @@ _RECENTLY_CHANGED: tuple[str, ...] = (
     "stream_dedup_true",
     "stream_join_true",
     "stream_foreachbatch_sink",
+    # stores named and built by formats.corpus_store; the split's cut
+    "agg_kmv_set_ops",
+    "scan_manifest_prune",
+    "llm_quality_classifier_score",
+    "scan_delete_vectors",
+    "stream_watermark_late",
+    "stream_session_true",
+    "stream_commit_ledger",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

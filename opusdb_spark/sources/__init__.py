@@ -8,14 +8,11 @@ opusdb_spark/streaming/jobs.py.
 """
 
 from opusdb_spark.sources.formats import (  # noqa: F401
-    corpus_scratch_path,
-    ensure_written,
+    corpus_store,
     read_csv,
     read_json,
     read_store,
-    scratch_path,
     scratch_sink,
-    stat_fingerprint,
     write_partitioned,
 )
 from opusdb_spark.tables import table, register_views  # noqa: F401

@@ -1,4 +1,4 @@
-"""Format readers/writers with explicit schemas.
+"""Format readers/writers with explicit schemas, and the ingest stores.
 
 Readers always take a schema: at 100 TB, schema inference is a full
 extra pass over the data (and CSV/JSON inference can mis-type columns
@@ -9,6 +9,14 @@ no Spark job. Writers default to snappy parquet; the
 partitioned writer lays out hive-style directories so downstream
 filters on the partition column become partition-pruned scans
 (Catalyst prunes directories before listing files).
+
+Every per-corpus ingest store (a layout, sketch state, model or index
+derived once from a corpus's tables) is built by `corpus_store`: it
+names the store (`corpus_scratch_path`), fingerprints it by the stat
+of the tables it derives from plus the parameters its content depends
+on (`stat_fingerprint`), and builds it once, atomically
+(`ensure_written`). No other module names, fingerprints or builds a
+store; per-run outputs go to `scratch_sink` instead.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ import hashlib
 import json
 import os
 import shutil
+import stat
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,8 +51,7 @@ def scratch_sink(name: str) -> str:
 
 def scratch_path(name: str) -> str:
     """Stable scratch path that is NOT cleared — for ingest-once
-    layouts (partitioned/bucketed copies, indexes) guarded by
-    `ensure_written`."""
+    stores guarded by `ensure_written`."""
     path = os.path.join(_SCRATCH, name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
@@ -56,6 +64,28 @@ def corpus_scratch_path(prefix: str, sf_dir: str) -> str:
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     base = os.path.basename(os.path.normpath(sf_dir))
     return scratch_path(f"{prefix}_{base}_{tag}")
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """Path of corpus table `name`: one parquet file, or a directory of
+    part files (a scaled corpus)."""
+    return f"{sf_dir}/{name}.parquet"
+
+
+def corpus_store(
+    prefix: str, sf_dir: str, tables: tuple[str, ...], write_fn, **params
+) -> str:
+    """The one way to build a per-corpus ingest store. The store is
+    `corpus_scratch_path(prefix, sf_dir)`, fingerprinted by the stat of
+    the corpus `tables` it derives from plus `params` (everything else
+    its content depends on), and `ensure_written` builds it with
+    `write_fn` only when that fingerprint changed. Returns its path;
+    read a parquet store back with `read_store`."""
+    return ensure_written(
+        corpus_scratch_path(prefix, sf_dir),
+        stat_fingerprint(*(table_path(sf_dir, t) for t in tables), **params),
+        write_fn,
+    )
 
 
 _MARKER = "_fingerprint.json"
@@ -115,11 +145,21 @@ def ensure_written(path: str, fingerprint: dict, write_fn) -> str:
 
 
 def stat_fingerprint(*files: str, **extra) -> dict:
-    """Stat-based source fingerprint for ensure_written markers."""
+    """Stat-based source fingerprint for ensure_written markers: per
+    source, `[mtime_ns, size]` of a file, or `[name, size, mtime_ns]`
+    of each data file of a directory-form table (the directory's own
+    stat misses an in-place part rewrite). Lists, not tuples: the
+    marker round-trips through JSON."""
     fp = dict(extra)
     for p in files:
         st = os.stat(p)
-        fp[os.path.abspath(p)] = [st.st_mtime_ns, st.st_size]
+        if stat.S_ISDIR(st.st_mode):
+            fp[os.path.abspath(p)] = [
+                [os.path.basename(f), size, stat_mtime_ns(f)]
+                for f, size in list_store_files(p, recursive=False)
+            ]
+        else:
+            fp[os.path.abspath(p)] = [st.st_mtime_ns, st.st_size]
     return fp
 
 
@@ -207,6 +247,17 @@ def _read_footer(path: str, mtime_ns: int, size: int):
     import pyarrow.parquet as pq
 
     return pq.read_metadata(path)
+
+
+def num_rows(path: str) -> int:
+    """Row count of a parquet file, or of the data files of a
+    directory-form table, from their footers — no Spark job."""
+    files = (
+        [f for f, _ in list_store_files(path, recursive=False)]
+        if os.path.isdir(path)
+        else [path]
+    )
+    return sum(footer(f).num_rows for f in files)
 
 
 def column_range(files, column: str) -> tuple | None:

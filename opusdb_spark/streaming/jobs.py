@@ -31,11 +31,11 @@ from pyspark.sql.streaming import DataStreamWriter
 from opusdb_spark.session import apply_runtime_confs
 from opusdb_spark.sources.formats import (
     column_range,
-    corpus_scratch_path,
-    ensure_written,
+    corpus_store,
     list_store_files,
+    num_rows,
     scratch_sink,
-    stat_fingerprint,
+    table_path,
 )
 from opusdb_spark.tables import table
 
@@ -92,24 +92,33 @@ def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
     incoming stream / WAL segment roll, log_mgr.clj:16-33), so the
     watermark advances and closed windows flush. mtimes are staggered in
     ts order because the file source orders files by modification time.
+
+    The cut comes from the data alone: one task writes the log sorted
+    on (ts, event_id) and rolls to a new file every ceil(n / files)
+    rows, n read from the footers. (A range repartition would sample
+    its boundaries with a seed taken from the RDD id, so they would
+    move with whatever the session ran before the build.)
     """
-    src = f"{sf_dir}/events.parquet"
 
     def write(p: str) -> None:
-        events = table(spark, sf_dir, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
+        n = num_rows(table_path(sf_dir, "events"))
+        (
+            table(spark, sf_dir, "events")
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .coalesce(1)
+            .sortWithinPartitions("ts", "event_id")
+            .write.option("maxRecordsPerFile", max(1, -(-n // _N_SPLIT_FILES)))
+            .parquet(p)
         )
-        events.repartitionByRange(_N_SPLIT_FILES, "ts").write.parquet(p)
         parts = sorted(f for f in os.listdir(p) if f.startswith("part-"))
         base = os.stat(p).st_mtime
         for i, fname in enumerate(parts):
             fp = os.path.join(p, fname)
             os.utime(fp, (base + i, base + i))
 
-    return ensure_written(
-        corpus_scratch_path("stream_events_split", sf_dir),
-        stat_fingerprint(src, n=_N_SPLIT_FILES, schema=_EVENTS_SCHEMA),
-        write,
+    return corpus_store(
+        "stream_events_split", sf_dir, ("events",), write,
+        n=_N_SPLIT_FILES, schema=_EVENTS_SCHEMA, cut="rows of (ts, event_id)",
     )
 
 
@@ -582,9 +591,11 @@ def session_timeout_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The funnel fold (funnel_stream). A committed batch holds a row per
-# completed attempt (`purchase_us` set) and a row per user seen, with
-# the user's open attempt (`view_us`, `click_us`; NULL when none) and
-# newest event (`last_us`). An attempt lives 7 days from its view.
+# completed attempt (`purchase_us` set), a row per open attempt
+# (`view_us`, `click_us`), each with its user's newest event
+# (`last_us`), and one clock row: the batch's newest event in
+# `last_us`, NULL elsewhere (none for an empty batch), so users with
+# no open attempt write nothing. An attempt lives 7 days from its view.
 _WINDOW_US = 7 * 24 * 3600 * 1_000_000
 _ATTEMPT = "struct<view_us: bigint, click_us: bigint, purchase_us: bigint>"
 
@@ -606,7 +617,7 @@ _FUNNEL_STEP = f"""CASE
 
 # Per user, the carried attempt and the batch's events in (ts,
 # event_type) order, stepped by one aggregate(); the completed attempts
-# and the user's state row come out of one inline().
+# and the open one come out of one inline().
 _FUNNEL_SQL = f"""
 WITH u AS (
     SELECT user_id, view_us, click_us, last_us, NULL AS ev FROM {{state}}
@@ -622,17 +633,20 @@ WITH u AS (
     FROM u GROUP BY user_id
 )
 SELECT user_id,
-       inline(array_append(m.done, CAST(named_struct(
+       inline(IF(m.t1 IS NULL, m.done, array_append(m.done, CAST(named_struct(
            'view_us', m.t1, 'click_us', m.t2, 'purchase_us', NULL)
-           AS {_ATTEMPT}))),
+           AS {_ATTEMPT})))),
        last_us
 FROM g
+UNION ALL
+SELECT NULL, NULL, NULL, NULL, MAX(unix_micros(ts)) FROM {{batch}}
+HAVING COUNT(*) > 0
 """
 
 # An open attempt is carried until the watermark passes view + 7 days +
 # the 10-min allowance. Past that, every event the fold admits is over
 # 7 days after the view and would reset the attempt anyway, so dropping
-# it changes no result; a row with no open attempt (NULL view) fails it.
+# it changes no result; the clock row (NULL view) fails it.
 _FUNNEL = _Fold(
     schema="user_id long, view_us long, click_us long, purchase_us long, last_us long",
     step=_FUNNEL_SQL,

@@ -48,7 +48,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from opusdb_spark.sources import formats
 
     apply_runtime_confs(spark)
-    df = formats.read_store(spark, f"{sf_dir}/{name}.parquet")
+    df = formats.read_store(spark, formats.table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(_EVENTS_TS_EXPR))
     return df

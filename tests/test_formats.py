@@ -4,7 +4,8 @@ and the next call publishes a complete store (pure Python, no Spark).
 read_store takes a flat Spark-written store's schema from its footers
 (no job) and every other layout's from Spark's own inference; either
 way the schema equals a plain spark.read.parquet. corpus_scratch_path
-keeps the per-corpus store names the inline formula gave."""
+keeps the per-corpus store names the inline formula gave, and only
+formats names and builds a store."""
 
 from __future__ import annotations
 
@@ -251,3 +252,80 @@ def test_corpus_scratch_path_keeps_store_names():
     assert formats.corpus_scratch_path("ann_index", twin) != (
         formats.corpus_scratch_path("ann_index", SF_SMALL)
     ), "corpora sharing a basename must not share a store"
+
+
+def test_only_formats_names_and_builds_stores():
+    """Every per-corpus store is named, fingerprinted and built by
+    formats.corpus_store: no other package module calls scratch_path
+    or ensure_written. The one exception is ann_index.ensure_index,
+    which builds an index in any dir it is handed (tests build their
+    own). Per-run scratch_sink outputs are not stores."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(formats.__file__).parents[1]
+    allowed = {("operators/ann_index.py", "ensure_index", "ensure_written")}
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "sources/formats.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name not in ("scratch_path", "ensure_written"):
+                continue
+            scope = node
+            while scope in parents and not isinstance(scope, ast.FunctionDef):
+                scope = parents[scope]
+            if (rel, getattr(scope, "name", None), name) not in allowed:
+                found.append(f"{rel}:{node.lineno}: {name}")
+    assert not found, found
+
+
+# Keys whose stores were once named by the corpus basename alone, and
+# the corpus_store prefix of each.
+_STORE_PREFIX = {
+    "events_rollup_daily": "rollup_daily",
+    "agg_kmv_set_ops": "kmv_state",
+    "scan_manifest_prune": "manifest_clustered",
+    "llm_quality_classifier_score": "clf_model",
+}
+
+
+def test_corpora_sharing_a_basename_keep_their_own_stores(spark, tmp_path):
+    """A twin of the corpus under another dir, with the same basename,
+    builds its own stores: running each key on the corpus, on the twin
+    and on the corpus again leaves the corpus's stores as the first
+    run built them (same inodes), not rebuilt by every switch."""
+    import shutil
+
+    from opusdb_spark.registry import registry
+    from tests.conftest import SF_SMALL
+
+    twin = tmp_path / "twin" / os.path.basename(os.path.normpath(SF_SMALL))
+    twin.parent.mkdir()
+    os.symlink(SF_SMALL, twin)
+    reg = registry()
+
+    def run(sf_dir):
+        for key in _STORE_PREFIX:
+            reg[key].fn(spark, sf_dir)
+        return {
+            prefix: os.stat(formats.corpus_scratch_path(prefix, sf_dir)).st_ino
+            for prefix in _STORE_PREFIX.values()
+        }
+
+    try:
+        first = run(SF_SMALL)
+        assert run(str(twin)).keys() == first.keys()
+        assert run(SF_SMALL) == first
+    finally:
+        for prefix in _STORE_PREFIX.values():
+            shutil.rmtree(
+                formats.corpus_scratch_path(prefix, str(twin)), ignore_errors=True
+            )

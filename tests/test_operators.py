@@ -861,33 +861,48 @@ def test_determinism_under_repartition(name, spark):
 
 
 def test_minhash_signature_store_is_ingest_once(spark, tmp_path):
-    """The persisted signature store must be written exactly once per
-    source fingerprint: a second call with the same fingerprint reads
-    the existing parquet instead of recomputing (the ingest/query
-    split the dedup family relies on)."""
+    """A corpus_store is written exactly once per fingerprint: a second
+    call with the same params reads the existing parquet instead of
+    recomputing (the ingest/query split the dedup family relies on),
+    and a changed param rebuilds it."""
     import os
-
-    from pyspark.sql import functions as F
+    import shutil
 
     from opusdb_spark.operators import dedup
+    from opusdb_spark.sources.formats import (
+        corpus_scratch_path,
+        corpus_store,
+        read_store,
+    )
 
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "pack my box with five dozen liquor jugs")],
         "doc_id long, text string",
     )
-    store = str(tmp_path / "sigs")
-    fp = {"src": "unit", "v": 1}
-    s1 = dedup.minhash_signatures_stored(spark, docs, store, fp)
-    assert s1.count() == 2
-    marker = os.path.join(store, "_fingerprint.json")
-    mtime1 = os.path.getmtime(marker)
-    s2 = dedup.minhash_signatures_stored(spark, docs, store, fp)
-    assert os.path.getmtime(marker) == mtime1, "store rewritten on reuse"
-    assert s2.count() == 2
-    # changed fingerprint -> rebuild
-    dedup.minhash_signatures_stored(spark, docs, store, {"src": "unit", "v": 2})
-    assert os.path.getmtime(marker) != mtime1
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    sf_dir = str(tmp_path)
+
+    def sigs(v):
+        return corpus_store(
+            "minhash_sigs", sf_dir, ("documents",),
+            lambda p: dedup.minhash_signatures(docs).write.parquet(p),
+            v=v,
+        )
+
+    try:
+        store = sigs(1)
+        assert read_store(spark, store).count() == 2
+        marker = os.path.join(store, "_fingerprint.json")
+        mtime1 = os.path.getmtime(marker)
+        assert sigs(1) == store
+        assert os.path.getmtime(marker) == mtime1, "store rewritten on reuse"
+        assert read_store(spark, store).count() == 2
+        # changed fingerprint -> rebuild
+        sigs(2)
+        assert os.path.getmtime(marker) != mtime1
+    finally:
+        shutil.rmtree(corpus_scratch_path("minhash_sigs", sf_dir), ignore_errors=True)
 
 
 def test_decontaminate_never_flags_benchmark_docs(spark):
@@ -2893,20 +2908,17 @@ def test_delete_vectors_sidecar_invalidates_on_store_rebuild(spark):
     re-shuffles (file_path, row_index) positions; the sidecar must be
     invalidated by the store's layout fingerprint, or the anti-join
     suppresses the wrong rows (advisor finding, r9)."""
-    import hashlib as _hl
     import json
     import os
     import shutil
 
-    from opusdb_spark.sources.formats import scratch_path, stat_fingerprint
+    from opusdb_spark.sources.formats import corpus_scratch_path, stat_fingerprint
     from opusdb_spark.tables import table as _table
 
     q = registry()["scan_delete_vectors"].fn
     expect = sorted(map(tuple, q(spark, SF).collect()))
 
-    tag = _hl.md5(os.path.abspath(SF).encode()).hexdigest()[:8]
-    base = os.path.basename(os.path.normpath(SF))
-    store = scratch_path(f"dv_orders_{base}_{tag}")
+    store = corpus_scratch_path("dv_orders", SF)
     # simulate a foreign rebuild: same sources, same (valid) marker,
     # DIFFERENT physical layout — positions now mean different rows
     shutil.rmtree(store)

@@ -604,13 +604,11 @@ def test_manifest_prune_scans_strict_file_subset(spark):
     skip — while the rows still equal the plain filtered scan."""
     import os
 
-    from opusdb_spark.sources.formats import scratch_path
+    from opusdb_spark.sources.formats import corpus_scratch_path
 
     df = _Q["scan_manifest_prune"].fn(spark, SF)
     n_read = len(df.inputFiles())
-    layout = scratch_path(
-        f"manifest_clustered_{os.path.basename(SF.rstrip('/'))}"
-    )
+    layout = corpus_scratch_path("manifest_clustered", SF)
     n_layout = len(
         [f for f in os.listdir(layout) if f.endswith(".parquet")]
     )

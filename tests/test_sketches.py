@@ -125,9 +125,11 @@ def test_kmv_set_relation_invariants(spark, tmp_path):
     """Structural truths the estimator must respect regardless of
     sampling error: identical sets → jaccard 1 and intersection ==
     union; disjoint sets → jaccard 0 and intersection 0."""
+    import shutil
     from datetime import datetime, timedelta
 
     from opusdb_spark.queries.sketches import agg_kmv_set_ops
+    from opusdb_spark.sources.formats import corpus_scratch_path
 
     t0 = datetime(2024, 1, 1)
     rows = []
@@ -144,6 +146,8 @@ def test_kmv_set_relation_invariants(spark, tmp_path):
     got = {
         (r["type_a"], r["type_b"]): r for r in agg_kmv_set_ops(spark, sf_dir).collect()
     }
+    # the store is named by the corpus path, unique to this tmp_path
+    shutil.rmtree(corpus_scratch_path("kmv_state", sf_dir))
     twins = got[("twin_a", "twin_b")]
     assert twins["est_jaccard"] == 1.0
     assert twins["est_intersect"] == twins["est_union"]

@@ -303,6 +303,38 @@ def test_funnel_keeps_no_state_store(spark):
     assert len(progress) > 1 and not any(progress), progress
 
 
+def test_events_split_cuts_on_the_data_alone(spark):
+    """Two builds of the ts-split store in one session, with unrelated
+    range-partitioned jobs between them, write the same files in the
+    same order, each holding the same rows in (ts, event_id) order.
+    The sf0.01 corpus, not sf0.001: a range partition samples every row
+    of sf0.001's one input split, so only the larger corpus shows a
+    sampled cut moving."""
+    import pyarrow.parquet as pq
+
+    from opusdb_spark.streaming import jobs
+    from tests.conftest import SF_ORACLE
+
+    def build():
+        split = jobs._events_split_dir(spark, SF_ORACLE)
+        names = sorted(f for f in os.listdir(split) if f.startswith("part-"))
+        files = [pq.read_table(os.path.join(split, f)).to_pylist() for f in names]
+        shutil.rmtree(split)
+        return files
+
+    first = build()
+    for n in (3, 7):
+        spark.range(10_000).repartitionByRange(n, "id").count()
+    second = build()
+    assert len(first) == jobs._N_SPLIT_FILES
+    assert first == second
+    rows = [r for f in first for r in f]
+    keys = [(r["ts"], r["event_id"]) for r in rows]
+    assert keys == sorted(keys) and len(set(keys)) == len(keys)
+    n = len(rows)
+    assert [len(f) for f in first[:-1]] == [-(-n // len(first))] * (len(first) - 1)
+
+
 def test_commit_ledger_commit_once_rollback_per_retry(spark):
     """Lifecycle-hook counts (events.clj:8-27; stm_test.clj:285-543):
     the commit hook fires ONCE per committed batch even when an attempt
@@ -789,6 +821,20 @@ def test_funnel_matches_reference_across_batch_edges(spark, tmp_path):
     root = str(tmp_path / "fold")
     jobs._fold_funnel(events, root)
     assert jobs._committed_batch(root, len(batches) - 1) is not None
+    # batch 0 writes a row per open attempt (users 1, 2, 3, 6, 9) and
+    # per completed one (user 4), and one clock row with its newest
+    # event; users with no attempt open (4 after its purchase, 5)
+    # write no state row
+    b0, clock0 = jobs._committed_batch(root, 0)
+    rows0 = pq.read_table(b0).to_pylist()
+    assert len(rows0) == 7
+    users0 = sorted(r["user_id"] for r in rows0 if r["user_id"] is not None)
+    assert users0 == [1, 2, 3, 4, 6, 9]
+    assert [r for r in rows0 if r["user_id"] is None] == [
+        {"user_id": None, "view_us": None, "click_us": None,
+         "purchase_us": None, "last_us": t0 + day}
+    ]
+    assert clock0 == t0 + day
     got = sorted(tuple(r) for r in jobs._emitted_conversions(spark, root).collect())
 
     ev = pd.DataFrame(
